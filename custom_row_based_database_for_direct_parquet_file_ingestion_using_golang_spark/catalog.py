@@ -18,11 +18,12 @@ from __future__ import annotations
 import datetime
 import json
 import os
-import tempfile
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from enum import Enum
 
 from pyspark.sql import types as T
+
+from .commit import write_json_atomic
 
 
 def parse_timestamp(text: str, decl: str) -> datetime.datetime:
@@ -124,14 +125,18 @@ class ColumnDef:
 class TableMeta:
     name: str
     columns: list[ColumnDef]
-    path: str
+    # The table's directory relative to the engine root, fixed at create
+    # time (tables.py); empty until the store creates it.
+    path: str = ""
     partition_by: list[str] = field(default_factory=list)
-    # Round-13: declared PRIMARY KEY — INFORMATIONAL, the warehouse
-    # precedent (Delta/Snowflake PKs are not enforced on plain appends;
-    # enforcing would cost a full-table anti-join per insert at 100 TB).
+    # Declared PRIMARY KEY — INFORMATIONAL, the warehouse precedent
+    # (Delta/Snowflake PKs are not enforced on plain appends; enforcing
+    # would cost a full-table anti-join per insert at 100 TB).
     # Used as the default conflict target by INSERT ... ON CONFLICT /
     # INSERT OR REPLACE|IGNORE, which DO check it where it matters.
     primary_key: list[str] = field(default_factory=list)
+    # The live data version: ``<path>/v<version>`` (tables.py).
+    version: int = 0
 
     @property
     def schema(self) -> T.StructType:
@@ -148,6 +153,7 @@ class TableMeta:
                 for c in self.columns
             ],
             "path": self.path,
+            "version": self.version,
             "partition_by": self.partition_by,
         }
         if self.primary_key:
@@ -164,18 +170,22 @@ class TableMeta:
                 else ColumnDef(c[0], c[1])
                 for c in d["columns"]
             ],
-            path=d["path"],
+            path=d.get("path", ""),
             partition_by=d.get("partition_by", []),
             primary_key=d.get("primary_key", []),
+            version=d.get("version", 0),
         )
 
 
 class Catalog:
-    """Persistent table registry: one JSON file per engine root.
+    """Persistent table registry: one JSON file per engine root, and the
+    commit point of every table change (tables.py).
 
-    Writes are atomic (temp file + ``os.replace``), mirroring the reference's
-    temp-file + rename durability pattern (``pkg/storage/storage.go:290-306``)
-    without its process-wide mutex — Spark jobs are the unit of isolation.
+    Each change computes the new registry, saves it with
+    ``write_json_atomic`` (the reference's temp-file + fsync + rename,
+    ``pkg/storage/storage.go:290-306``) and only then takes it as the
+    in-memory state, so a failed save changes nothing. No process-wide
+    mutex: Spark jobs are the unit of isolation.
     """
 
     def __init__(self, root: str):
@@ -183,9 +193,6 @@ class Catalog:
         self.path = os.path.join(root, "catalog.json")
         os.makedirs(root, exist_ok=True)
         self._tables: dict[str, TableMeta] = {}
-        self._load()
-
-    def _load(self) -> None:
         if os.path.exists(self.path):
             with open(self.path) as f:
                 raw = json.load(f)
@@ -194,40 +201,38 @@ class Catalog:
                 for name, d in raw.get("tables", {}).items()
             }
 
-    def _save(self) -> None:
-        payload = {"tables": {n: m.to_json() for n, m in self._tables.items()}}
-        fd, tmp = tempfile.mkstemp(dir=self.root, prefix=".catalog-")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(payload, f, indent=2, sort_keys=True)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, self.path)
-        finally:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
+    def _commit(self, tables: dict[str, TableMeta]) -> None:
+        write_json_atomic(
+            self.path, {"tables": {n: m.to_json() for n, m in tables.items()}}
+        )
+        self._tables = tables
 
     # -- reference DDL surface (SURVEY.md §2.2: D1-D3) --------------------
 
     def add_table(self, meta: TableMeta) -> None:
         if meta.name in self._tables:
             raise ValueError(f"table '{meta.name}' already exists")
-        self._tables[meta.name] = meta
-        self._save()
+        self._commit({**self._tables, meta.name: meta})
 
     def update_table(self, meta: TableMeta) -> None:
-        """Replace an existing table's metadata (schema evolution)."""
+        """Replace an existing table's metadata (schema evolution, a new
+        data version)."""
         if meta.name not in self._tables:
             raise KeyError(f"table '{meta.name}' does not exist")
-        self._tables[meta.name] = meta
-        self._save()
+        self._commit({**self._tables, meta.name: meta})
 
     def drop_table(self, name: str) -> TableMeta:
-        if name not in self._tables:
-            raise KeyError(f"table '{name}' does not exist")
-        meta = self._tables.pop(name)
-        self._save()
+        meta = self.get(name)
+        self._commit({n: m for n, m in self._tables.items() if n != name})
         return meta
+
+    def rename_table(self, old: str, new: str) -> None:
+        """One commit: the entry moves to ``new``, its directory stays."""
+        meta = self.get(old)
+        if new in self._tables:
+            raise ValueError(f"table '{new}' already exists")
+        tables = {n: m for n, m in self._tables.items() if n != old}
+        self._commit({**tables, new: replace(meta, name=new)})
 
     def get(self, name: str) -> TableMeta:
         if name not in self._tables:

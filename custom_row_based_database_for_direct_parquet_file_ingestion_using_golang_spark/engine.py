@@ -20,6 +20,7 @@ select.go:41-42 vs 516-597).
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import decimal
 import glob
@@ -40,6 +41,7 @@ from .catalog import (
     parse_timestamp as _parse_timestamp,
     spark_type_for,
 )
+from .commit import write_json_atomic
 from .tables import ParquetTableStore
 
 IMAGE_EXTENSIONS = (".jpg", ".jpeg", ".png", ".gif", ".bmp", ".tiff", ".webp")
@@ -157,10 +159,12 @@ def resolve_image(identifier: str, image_dir: str) -> str | None:
 class Engine:
     """A database engine instance rooted at a directory.
 
-    The root holds ``catalog.json`` plus one Parquet directory per table —
-    the Spark-native analogue of the reference's database directory
-    (``data/my_first_db`` with ``schema.json`` + ``<table>.dat`` files,
-    pkg/storage/storage.go:23-46).
+    The root holds ``catalog.json`` plus one versioned Parquet directory
+    per table (tables.py) — the Spark-native analogue of the reference's
+    database directory (``data/my_first_db`` with ``schema.json`` +
+    ``<table>.dat`` files, pkg/storage/storage.go:23-46). Opening an engine
+    recovers the root: whatever an interrupted commit left unreferenced is
+    deleted.
     """
 
     def __init__(
@@ -172,7 +176,7 @@ class Engine:
     ):
         self.spark = spark
         self.catalog = Catalog(root)
-        self.store = ParquetTableStore(spark, root, keep_snapshots=keep_snapshots)
+        self.store = ParquetTableStore(spark, self.catalog, keep_snapshots)
         self.image_dir = image_dir or ""
         from .macros import Macros
         from .matview import MaterializedViews
@@ -183,8 +187,8 @@ class Engine:
         self.vindexes = VectorIndexes(self)
         self.views = Views(self)
         self.macros = Macros(self)
-        # Round-14: PREPARE/EXECUTE statements — engine-scoped (the
-        # analog of DuckDB's connection scope), deliberately unpersisted
+        # PREPARE/EXECUTE statements — engine-scoped (the analog of
+        # DuckDB's connection scope), deliberately unpersisted
         self.prepared_statements: dict[str, dict] = {}
 
     def table_at(self, name: str, version: int) -> DataFrame:
@@ -237,17 +241,22 @@ class Engine:
         for k in primary_key or []:
             if k not in declared:
                 raise ValueError(f"PRIMARY KEY column '{k}' not in the table")
-        coldefs = self._coldefs(columns, defaults)
         meta = TableMeta(
             name=name,
-            columns=coldefs,
-            path=self.store.table_path(name),
+            columns=self._coldefs(columns, defaults),
             partition_by=partition_by or [],
             primary_key=primary_key or [],
         )
-        # Storage first, catalog second (no phantom entries on failure).
-        self.store.init_empty(name, meta.schema, meta.partition_by)
-        self.catalog.add_table(meta)
+        self._write_empty(meta)
+
+    def _write_empty(self, meta: TableMeta, keep: int | None = None) -> None:
+        """Commit an empty version of ``meta`` (a new table, TRUNCATE,
+        plain CREATE OR REPLACE). A partitioned table's empty write
+        partitions too: an unpartitioned part file beside later
+        ``col=value/`` directories would corrupt partition discovery once
+        it carried rows."""
+        empty = self.spark.createDataFrame([], meta.schema)
+        self.store.overwrite(meta.name, empty, meta.partition_by, meta, keep)
 
     def set_default(self, name: str, column: str, value: Any) -> None:
         """ALTER TABLE ... ALTER COLUMN c SET DEFAULT <lit> — catalog-only
@@ -266,8 +275,7 @@ class Engine:
                 cols.append(c)
         if not found:
             raise ValueError(f"no column '{column}' in '{name}'")
-        meta.columns = cols
-        self.catalog.update_table(meta)
+        self.catalog.update_table(dataclasses.replace(meta, columns=cols))
 
     def drop_default(self, name: str, column: str) -> None:
         """ALTER TABLE ... ALTER COLUMN c DROP DEFAULT — omitted inserts
@@ -283,8 +291,7 @@ class Engine:
                 cols.append(c)
         if not found:
             raise ValueError(f"no column '{column}' in '{name}'")
-        meta.columns = cols
-        self.catalog.update_table(meta)
+        self.catalog.update_table(dataclasses.replace(meta, columns=cols))
 
     def _coldefs(
         self,
@@ -307,7 +314,6 @@ class Engine:
     def drop_table(self, name: str) -> None:
         if name not in self.catalog and name in self.views:
             raise ValueError(f"'{name}' is a view — use DROP VIEW")
-        self.catalog.drop_table(name)
         self.store.drop(name)
 
     def add_column(self, name: str, column: str, decl: str) -> None:
@@ -323,12 +329,7 @@ class Engine:
             raise ValueError(f"column '{column}' already exists on '{name}'")
         ColumnDef(column, decl).spark_type  # validate the declared type
         self.catalog.update_table(
-            TableMeta(
-                name=meta.name,
-                columns=[*meta.columns, ColumnDef(column, decl)],
-                path=meta.path,
-                partition_by=meta.partition_by,
-            )
+            dataclasses.replace(meta, columns=[*meta.columns, ColumnDef(column, decl)])
         )
 
     def drop_column(self, name: str, column: str) -> None:
@@ -344,28 +345,14 @@ class Engine:
         remaining = [c for c in meta.columns if c.name != column]
         if not remaining:
             raise ValueError("cannot drop the last column")
-        self.catalog.update_table(
-            TableMeta(
-                name=meta.name,
-                columns=remaining,
-                path=meta.path,
-                partition_by=meta.partition_by,
-            )
-        )
+        self.catalog.update_table(dataclasses.replace(meta, columns=remaining))
 
     def rename_table(self, old: str, new: str) -> None:
-        """ALTER TABLE old RENAME TO new: one storage-directory rename (a
-        metadata op at any scale — no file rewrites) + the catalog entry.
-        Snapshots move with the table so time travel survives the rename.
-        Refused while a materialized view or vector index pins the old
-        name — their registries store the base-table name, and silently
-        re-pointing (or orphaning) them would corrupt the next refresh."""
-        import os
-        import shutil
-
-        meta = self.catalog.get(old)
-        if new in self.catalog:
-            raise ValueError(f"table '{new}' already exists")
+        """ALTER TABLE old RENAME TO new: one catalog commit — the entry
+        moves, its directory (and so its snapshots) stays. Refused while a
+        materialized view or vector index pins the old name — their
+        registries store the base-table name, and silently re-pointing (or
+        orphaning) them would corrupt the next refresh."""
         deps = [
             f"materialized view '{n}'"
             for n, m in self.mviews._load().items()
@@ -379,31 +366,16 @@ class Engine:
             raise ValueError(
                 f"cannot rename '{old}': referenced by {', '.join(deps)}"
             )
-        new_path = self.store.table_path(new)
-        os.rename(meta.path, new_path)
-        old_snaps = os.path.join(self.store.snapshots_dir, old)
-        if os.path.exists(old_snaps):
-            new_snaps = os.path.join(self.store.snapshots_dir, new)
-            shutil.rmtree(new_snaps, ignore_errors=True)
-            os.rename(old_snaps, new_snaps)
-        self.catalog.drop_table(old)
-        self.catalog.add_table(
-            TableMeta(
-                name=new,
-                columns=meta.columns,
-                path=new_path,
-                partition_by=meta.partition_by,
-            )
-        )
+        self.catalog.rename_table(old, new)
 
     def rename_column(self, table: str, old: str, new: str) -> None:
         """ALTER TABLE t RENAME COLUMN old TO new. Spark reads parquet
         columns BY NAME, so a catalog-only rename would silently read the
-        column as NULL — this is an honest copy-on-write rewrite through
-        the store's staging+swap (the same machinery UPDATE rides). At
-        100 TB that is a full-table rewrite; engines that avoid it (Delta
-        with column mapping) carry a name-indirection layer on every read
-        — a trade we document rather than take."""
+        column as NULL — this is a copy-on-write rewrite whose new version
+        and renamed schema commit together (the same commit UPDATE
+        rides). At 100 TB that is a full-table rewrite; engines that avoid
+        it (Delta with column mapping) carry a name-indirection layer on
+        every read — a trade we document rather than take."""
         meta = self.catalog.get(table)
         if old in meta.partition_by:
             raise ValueError(f"cannot rename partition column '{old}'")
@@ -412,28 +384,21 @@ class Engine:
         if any(c.name == new for c in meta.columns):
             raise ValueError(f"column '{new}' already exists on '{table}'")
         df = self.table(table).withColumnRenamed(old, new)
-        self.store.overwrite(table, df, meta.partition_by)
-        self.catalog.update_table(
-            TableMeta(
-                name=meta.name,
-                columns=[
-                    ColumnDef(new if c.name == old else c.name, c.decl)
-                    for c in meta.columns
-                ],
-                path=meta.path,
-                partition_by=meta.partition_by,
-            )
+        columns = [
+            dataclasses.replace(c, name=new) if c.name == old else c
+            for c in meta.columns
+        ]
+        self.store.overwrite(
+            table, df, meta.partition_by, dataclasses.replace(meta, columns=columns)
         )
 
     def truncate_table(self, name: str) -> None:
         """TRUNCATE: remove every row, keep schema + partitioning. An
-        empty staged write swapped in atomically — no scan of the old
-        data (DELETE without WHERE would plan one); with snapshot
-        retention on, the pre-truncate table retires as a version and
-        stays time-travelable."""
-        meta = self.catalog.get(name)
-        empty = self.spark.createDataFrame([], meta.schema)
-        self.store.overwrite(name, empty, meta.partition_by)
+        empty version committed — no scan of the old data (DELETE without
+        WHERE would plan one); with snapshot retention on, the
+        pre-truncate table retires as a version and stays
+        time-travelable."""
+        self._write_empty(self.catalog.get(name))
 
     def show_tables(self) -> list[str]:
         return self.catalog.show_tables()
@@ -581,11 +546,11 @@ class Engine:
         frame: DataFrame | None = None,
         returning: bool = False,
     ) -> int | tuple[int, DataFrame]:
-        """UPDATE via copy-on-write: read snapshot → conditional withColumn →
-        staged overwrite + atomic swap. No WHERE ⇒ all rows (reference
-        update.go:87-98). Returns the matched-row count.
+        """UPDATE via copy-on-write: read the live version → conditional
+        withColumn → commit the result as the next version. No WHERE ⇒ all
+        rows (reference update.go:87-98). Returns the matched-row count.
 
-        ``frame`` (round-12): an optional pre-built frame — the table plus
+        ``frame``: an optional pre-built frame — the table plus
         helper predicate columns (e.g. IN-subquery membership booleans the
         dialect materializes as joins). Helper columns never reach storage:
         the write projects the declared schema only."""
@@ -621,7 +586,7 @@ class Engine:
         # One select, not chained withColumn: every SET target evaluates
         # against the row's ORIGINAL values (standard SQL — ``SET a = b,
         # b = a`` swaps). Values may be plain literals (reference parity)
-        # or Columns (round-12 expression SET, e.g. ``SET v = v + 1``).
+        # or Columns (expression SET, e.g. ``SET v = v + 1``).
         targets = {}
         for cname, val in set_values.items():
             src = val if isinstance(val, Column) else F.lit(val)
@@ -637,10 +602,10 @@ class Engine:
         )
         ret: DataFrame | None = None
         if returning:
-            # Round-14 UPDATE ... RETURNING: the matched rows with their
-            # NEW values, materialized EAGERLY — the copy-on-write swap
-            # retires the old snapshot's files, so a lazy frame over
-            # them would break after the write.
+            # UPDATE ... RETURNING: the matched rows with their NEW
+            # values, materialized EAGERLY — the commit retires the old
+            # version's files, so a lazy frame over them would break
+            # after the write.
             ret = (
                 df.filter(F.col(mcol))
                 .select(*[F.col(c.name) for c in meta.columns])
@@ -663,7 +628,7 @@ class Engine:
     ) -> int | tuple[int, DataFrame]:
         """DELETE requires a predicate — parity with the reference's safety
         guard ('DELETE without WHERE is not allowed', delete.go:33).
-        ``frame`` as in :meth:`update` (round-12)."""
+        ``frame`` as in :meth:`update`."""
         from pyspark.sql import Observation
 
         if where is None:
@@ -678,8 +643,8 @@ class Engine:
         df = df.observe(obs, F.sum(F.when(cond, 1).otherwise(0)).alias("doomed"))
         ret: DataFrame | None = None
         if returning:
-            # Round-14 DELETE ... RETURNING: the doomed rows, materialized
-            # EAGERLY before the copy-on-write swap retires their files.
+            # DELETE ... RETURNING: the doomed rows, materialized EAGERLY
+            # before the commit retires their files.
             ret = (
                 df.filter(cond)
                 .select(*[F.col(c.name) for c in meta.columns])
@@ -749,7 +714,7 @@ class Engine:
                     try:
                         total += os.path.getsize(os.path.join(root, f))
                     except OSError:
-                        continue  # swapped out mid-walk — keep count and
+                        continue  # pruned mid-walk — keep count and
                         # bytes consistent by skipping both
                     n += 1
         return n, total
@@ -846,25 +811,37 @@ class Engine:
     def _register_ingested(
         self, name: str, df: DataFrame, partition_by: list[str] | None
     ) -> int:
-        from pyspark.sql import Observation
-
         if name in self.catalog:
             raise ValueError(f"table '{name}' already exists")
         if name in self.views:
             raise ValueError(f"'{name}' already exists as a view")
+        return self._write_frame(name, df, partition_by)
+
+    def _write_frame(
+        self,
+        name: str,
+        df: DataFrame,
+        partition_by: list[str] | None,
+        keep: int | None = None,
+    ) -> int:
+        """Commit ``df`` as the next version of ``name`` (a new table when
+        there is none) with the schema taken from the frame. The catalog
+        entry exists only once the write has finished, so a failed ingest
+        leaves no phantom entry. The row count rides the write via an
+        Observation — no second scan."""
+        from pyspark.sql import Observation
+
         meta = TableMeta(
             name=name,
-            columns=[ColumnDef(f.name, f.dataType.simpleString()) for f in df.schema.fields],
-            path=self.store.table_path(name),
+            columns=[
+                ColumnDef(f.name, f.dataType.simpleString())
+                for f in df.schema.fields
+            ],
             partition_by=partition_by or [],
         )
-        # Write FIRST, register after: a failed ingest must not leave a
-        # phantom catalog entry whose reads break every register_views().
-        # Row count rides the ingest write via Observation — no second scan.
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        self.store.overwrite(name, df, meta.partition_by)
-        self.catalog.add_table(meta)
+        self.store.overwrite(name, df, meta.partition_by, meta, keep)
         return int(obs.get["rows"] or 0)
 
     def create_table_from(
@@ -877,37 +854,17 @@ class Engine:
     def replace_table_from(
         self, name: str, df: DataFrame, partition_by: list[str] | None = None
     ) -> int:
-        """Atomic ``CREATE OR REPLACE TABLE ... AS SELECT`` (round-11,
-        ADVICE): the new result materializes FULLY in the store's staging
-        directory before the old table is touched (``store.overwrite``'s
-        staging+swap, the same machinery UPDATE/DELETE ride), and the
-        catalog entry flips only after the swap — a failed SELECT or a
-        failed write leaves the old table intact and readable. This also
-        makes the self-referencing CTAS natural: the staging write streams
-        from the old files while they still exist, so no driver-side
-        localCheckpoint materialization is needed. REPLACE keeps drop+
-        create history semantics: snapshots die with the old definition
-        (the rule ``drop_table`` applies — a replaced table must not
-        time-travel into pre-replace data whose schema may differ)."""
-        from pyspark.sql import Observation
-
+        """Atomic ``CREATE OR REPLACE TABLE ... AS SELECT``: the result is
+        written as a new version and commits together with its schema, so
+        a failed SELECT or a failed write leaves the old table intact and
+        readable. A self-referencing CTAS streams from the old version,
+        which stays until the commit. REPLACE keeps drop+create history
+        semantics: snapshots die with the old definition (a replaced table
+        must not time-travel into pre-replace data whose schema may
+        differ)."""
         if name not in self.catalog:
             return self._register_ingested(name, df, partition_by)
-        meta = TableMeta(
-            name=name,
-            columns=[
-                ColumnDef(f.name, f.dataType.simpleString())
-                for f in df.schema.fields
-            ],
-            path=self.store.table_path(name),
-            partition_by=partition_by or [],
-        )
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        self.store.overwrite(name, df, meta.partition_by)
-        self.catalog.update_table(meta)
-        self.store.vacuum(name, keep=0)
-        return int(obs.get["rows"] or 0)
+        return self._write_frame(name, df, partition_by, keep=0)
 
     def replace_table(
         self,
@@ -917,11 +874,10 @@ class Engine:
         primary_key: list[str] | None = None,
         defaults: dict[str, Any] | None = None,
     ) -> None:
-        """Atomic plain ``CREATE OR REPLACE TABLE`` (round-11, ADVICE):
-        validate the whole new definition BEFORE touching the existing
-        table, then swap in the new empty storage via staging — a bad
-        column spec (or a failed write) can no longer destroy both the
-        old and the new table the way drop-then-create could."""
+        """Atomic plain ``CREATE OR REPLACE TABLE``: validate the whole new
+        definition BEFORE touching the existing table, then commit an
+        empty version under it — a bad column spec (or a failed write)
+        leaves the old table as it was."""
         cols = [ColumnDef(n, t) for n, t in columns]
         for c in cols:
             c.spark_type  # raises on an unparseable declared type
@@ -936,14 +892,10 @@ class Engine:
         meta = TableMeta(
             name=name,
             columns=self._coldefs(columns, defaults),
-            path=self.store.table_path(name),
             partition_by=partition_by or [],
             primary_key=primary_key or [],
         )
-        empty = self.spark.createDataFrame([], meta.schema)
-        self.store.overwrite(name, empty, meta.partition_by)
-        self.catalog.update_table(meta)
-        self.store.vacuum(name, keep=0)
+        self._write_empty(meta, keep=0)
 
     def ingest_parquet(
         self, path: str, name: str, partition_by: list[str] | None = None
@@ -1065,16 +1017,13 @@ class Engine:
                 name, os.path.join(path, "tables", name), fmt, None
             )
             entry = meta.to_json()
-            entry.pop("path", None)  # paths are engine-root-relative noise
+            del entry["path"], entry["version"]  # storage state, not schema
             manifest["tables"][name] = entry
         manifest["views"] = [
             {"name": n, "sql": s} for n, s in self.views.items()
         ]
         manifest["macros"] = self.macros.items()  # creation order
-        tmp = os.path.join(path, ".manifest.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, os.path.join(path, "manifest.json"))
+        write_json_atomic(os.path.join(path, "manifest.json"), manifest)
         return total
 
     def import_database(self, path: str) -> int:
@@ -1106,7 +1055,7 @@ class Engine:
         created_macros: list[str] = []
         try:
             for name, entry in manifest["tables"].items():
-                meta = TableMeta.from_json(name, {**entry, "path": ""})
+                meta = TableMeta.from_json(name, entry)
                 self.create_table(
                     name,
                     [(c.name, c.decl) for c in meta.columns],

@@ -3,8 +3,7 @@
 ``CREATE [OR REPLACE] MACRO name(p1 [, p2 := default, ...]) AS expr``
 and the table form ``... AS TABLE SELECT ...`` store the macro's BODY
 as a dialect-lowered token list in a JSON registry (``macros.json``
-beside the catalog — the same atomic temp-file + rename durability
-pattern as the catalog/views/matview registries). Call sites expand by
+beside the catalog, saved atomically like every registry — commit.py). Call sites expand by
 TOKEN SUBSTITUTION before parsing: each parameter reference is replaced
 by the parenthesized argument tokens, which is equivalent to DuckDB's
 AST parameter substitution for this dialect's grammar (arguments are
@@ -30,36 +29,18 @@ it, so pushdown/pruning/codegen apply to the EXPANDED plan.
 
 from __future__ import annotations
 
-import json
-import os
 import re
+
+from .commit import JsonRegistry
 
 _IDENT = re.compile(r"[A-Za-z_][\w$]*\Z")
 
 
-class Macros:
+class Macros(JsonRegistry):
     """Registry for scalar and table macros."""
 
     def __init__(self, engine):
-        self.engine = engine
-        self.path = os.path.join(engine.store.root, "macros.json")
-
-    # -- persistence --------------------------------------------------------
-
-    def _load(self) -> dict:
-        if not os.path.exists(self.path):
-            return {}
-        with open(self.path) as f:
-            return json.load(f)
-
-    def _save(self, meta: dict) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, self.path)
-
-    def names(self) -> list[str]:
-        return sorted(self._load())
+        super().__init__(engine, "macros.json")
 
     def items(self) -> list[dict]:
         """Macro metas in REGISTRY (creation) order — EXPORT DATABASE

@@ -21,6 +21,10 @@ Materialize/Druid rollup segments or a Delta MERGE-based summary table):
     answer.
   * The view definition is persisted as the dialect SQL TEXT and re-parsed
     per refresh — no pickled plans, restart-safe.
+  * Every refresh writes the state to a fresh directory under
+    ``_matviews/`` and commits it by saving ``mvs.json`` (commit.py): a
+    kill leaves the old state or the new one, and the merge can read the
+    old state while the new one is written.
 
 Round-8 adds APPROX_COUNT_DISTINCT(col): the state is an HLL register
 array (p=8 → 256 ints per group, engine-portable md5 hashing from
@@ -37,10 +41,9 @@ to queries over the view.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, functions as F
+
+from .commit import ArtifactRegistry
 
 _DEC = "decimal(38,6)"
 
@@ -52,32 +55,11 @@ _HLL_RHO0 = 60 - _HLL_P + 1     # rho for w == 0 (53)
 _HLL_SCALE = 61 - _HLL_P        # integer harmonic-sum shift (53)
 
 
-class MaterializedViews:
+class MaterializedViews(ArtifactRegistry):
     """Registry + maintenance engine for materialized views."""
 
     def __init__(self, engine):
-        self.engine = engine
-        self.path = os.path.join(engine.store.root, "mvs.json")
-
-    # -- persistence --------------------------------------------------------
-
-    def _load(self) -> dict:
-        if not os.path.exists(self.path):
-            return {}
-        with open(self.path) as f:
-            return json.load(f)
-
-    def _save(self, meta: dict) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, self.path)
-
-    def names(self) -> list[str]:
-        return sorted(self._load())
-
-    def __contains__(self, name: str) -> bool:
-        return name in self._load()
+        super().__init__(engine, "mvs.json", "_matviews")
 
     # -- definition parsing --------------------------------------------------
 
@@ -149,9 +131,6 @@ class MaterializedViews:
                 "HAVING/ORDER/LIMIT to queries over the view"
             )
         return spec, clauses
-
-    def _state_path(self, name: str) -> str:
-        return self.engine.store.table_path(f"__mv__{name}")
 
     # -- partial-aggregate state ---------------------------------------------
 
@@ -305,14 +284,6 @@ class MaterializedViews:
     def _base_files(self, table: str) -> list[str]:
         return sorted(self.engine.table(table).inputFiles())
 
-    def _write_state(self, name: str, state: DataFrame) -> None:
-        # Copy-on-write via the store's staging+swap (state frames are tiny
-        # relative to the base, one file per group-partition is fine).
-        self.engine.store.overwrite(f"__mv__{name}", state, [])
-
-    def _read_state(self, name: str) -> DataFrame:
-        return self.engine.spark.read.parquet(self._state_path(name))
-
     def create(self, name: str, select_sql: str) -> None:
         meta = self._load()
         if name in meta:
@@ -324,13 +295,14 @@ class MaterializedViews:
         spec, clauses = self._parse(select_sql)
         base_df = self.engine.table(spec.table)  # raises on unknown table
         state = self._compute_state(base_df, spec, clauses)
-        self._write_state(name, state)
         meta[name] = {
             "sql": select_sql,
             "base": spec.table,
             "files": self._base_files(spec.table),
         }
-        self._save(meta)
+        # State frames are tiny relative to the base; one file per
+        # group-partition is fine.
+        self._commit_artifact(meta, name, state.write.parquet)
 
     def refresh(self, name: str) -> str:
         meta = self._load()
@@ -352,16 +324,14 @@ class MaterializedViews:
             )
             delta = self._compute_state(delta_df, spec, clauses)
             group = clauses.get("group_by", [])
-            merged = (
-                self._read_state(name)
+            # Reads the committed state, which stays until the new one
+            # commits.
+            state = (
+                self.engine.spark.read.parquet(entry["path"])
                 .unionByName(delta)
                 .groupBy(*group)
                 .agg(*self._merge_aggs(spec))
             )
-            # Materialize before the copy-on-write swap: the merged plan
-            # reads the CURRENT state directory, which overwrite() replaces.
-            merged = merged.localCheckpoint()
-            self._write_state(name, merged)
             mode = f"incremental (+{len(new)} file(s))"
         else:
             # A previously-seen file vanished: the base was rewritten
@@ -370,10 +340,9 @@ class MaterializedViews:
             state = self._compute_state(
                 self.engine.table(spec.table), spec, clauses
             )
-            self._write_state(name, state)
             mode = "full recompute (base was rewritten)"
         entry["files"] = self._base_files(spec.table)
-        self._save(meta)
+        self._commit_artifact(meta, name, state.write.parquet)
         return f"refreshed '{name}': {mode}"
 
     def read(self, name: str) -> DataFrame:
@@ -381,14 +350,11 @@ class MaterializedViews:
         if name not in meta:
             raise KeyError(f"no materialized view '{name}'")
         spec, clauses = self._parse(meta[name]["sql"])
-        return self._finalize(self._read_state(name), spec, clauses)
+        state = self.engine.spark.read.parquet(meta[name]["path"])
+        return self._finalize(state, spec, clauses)
 
     def drop(self, name: str) -> None:
         meta = self._load()
         if name not in meta:
             raise KeyError(f"no materialized view '{name}'")
-        del meta[name]
-        self._save(meta)
-        import shutil
-
-        shutil.rmtree(self._state_path(name), ignore_errors=True)
+        self._drop(meta, name)

@@ -77,19 +77,11 @@ def stopword_ratio_from_tokens(toks_lower: Column) -> Column:
     )
 
 
-def stopword_ratio(text: Column | str) -> Column:
-    return stopword_ratio_from_tokens(tokenize(F.lower(_c(text))))
-
-
 def mean_word_len_from_tokens(toks: Column) -> Column:
     total = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
     return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
         total.cast("double") / F.size(toks)
     )
-
-
-def mean_word_len(text: Column | str) -> Column:
-    return mean_word_len_from_tokens(tokenize(_c(text)))
 
 
 def quality_score_from_tokens(

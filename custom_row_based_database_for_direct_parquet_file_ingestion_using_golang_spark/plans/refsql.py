@@ -75,7 +75,7 @@ Round-7 extensions:
     ``WHEN NOT MATCHED [BY TARGET] THEN INSERT *``, and (round-8)
     ``WHEN NOT MATCHED BY SOURCE [AND <pred>] THEN DELETE`` — the full
     Delta-style CDC triad over copy-on-write storage (anti-join + union
-    plan, staged atomic swap, snapshot-retiring); source may be a table
+    plan, one commit, snapshot-retiring); source may be a table
     or ``(SELECT ...) AS a``. UPDATE SET * raises on duplicate join keys
     on either side (round-8 multi-match guard).
   * ``GROUP BY ALL`` (group on every non-aggregate SELECT item) and
@@ -8115,9 +8115,9 @@ class RefSQL:
                 # statement reads a relation (_table_df), including
                 # UPDATE ... FROM sources, IN (SELECT ...) predicates,
                 # and MERGE USING. A CTE reading the DML's own target
-                # sees the PRE-statement snapshot (the staged
-                # copy-on-write write streams from the old files — the
-                # self-referencing-CTAS machinery).
+                # sees the PRE-statement snapshot (the copy-on-write
+                # write streams from the old version, which stays until
+                # the commit — the self-referencing-CTAS machinery).
                 return {
                     "insert": self._insert,
                     "update": self._update,
@@ -8542,10 +8542,9 @@ class RefSQL:
             table = _unquote(cur.next())
             action = cur.next().lower()
             if action == "rename":
-                # Round-11: RENAME TO t2 (metadata-only directory move) /
-                # RENAME COLUMN a TO b (honest copy-on-write rewrite —
-                # parquet reads columns by name, so catalog-only would
-                # NULL the column out).
+                # RENAME TO t2 (catalog-only commit) / RENAME COLUMN a TO
+                # b (copy-on-write rewrite — parquet reads columns by
+                # name, so catalog-only would NULL the column out).
                 if cur.peek_kw() == "to":
                     cur.next()
                     new_name = _unquote(cur.next())
@@ -8662,11 +8661,11 @@ class RefSQL:
                 )
             )
         if verb == "truncate":
-            # Round-11: ``TRUNCATE [TABLE] t`` — remove every row, keep
-            # the declared schema and partitioning. Rides the store's
-            # staging+swap (and snapshot retention, so a retained
-            # pre-truncate version stays time-travelable) — the same
-            # machinery DELETE uses, minus the scan.
+            # ``TRUNCATE [TABLE] t`` — remove every row, keep the
+            # declared schema and partitioning. Commits an empty version
+            # (with snapshot retention, the pre-truncate version stays
+            # time-travelable) — the same commit DELETE uses, minus the
+            # scan.
             cur.expect_kw("truncate")
             if cur.peek_kw() == "table":
                 cur.next()
@@ -9174,7 +9173,7 @@ class RefSQL:
         Scale shape: DO NOTHING is ONE anti-join of the (small) batch
         against the key-pruned target scan + an append — no rewrite. DO
         UPDATE is ONE left join of the target against the batch (AQE
-        broadcasts the small side) into the staged copy-on-write swap +
+        broadcasts the small side) into one copy-on-write commit +
         one anti-join for the fresh rows — the same cost class as MERGE,
         with the batch never driver-collected."""
         from pyspark.sql import Observation, Window
@@ -9848,9 +9847,9 @@ class RefSQL:
         row with its source row (SCD1 — the source must expose all target
         columns); the optional ``AND <pred>`` filters which SOURCE rows
         participate (unqualified source column references). Executes as one
-        anti-join + union plan (operators/maintenance.py shape) into a
-        staged overwrite + atomic swap, so a failed merge leaves the old
-        snapshot intact and VERSION AS OF can read the pre-merge table.
+        anti-join + union plan (operators/maintenance.py shape) into one
+        copy-on-write commit, so a failed merge leaves the old version
+        intact and VERSION AS OF can read the pre-merge table.
         Returns affected rows: matched source rows updated + target rows
         deleted + source rows inserted. At scale the small CDC changeset
         broadcasts (AQE) and the one shuffle is the target anti-join."""
@@ -10332,13 +10331,11 @@ class RefSQL:
                         f"unexpected token {cur.peek()!r} after CREATE TABLE AS"
                     )
                 if or_replace:
-                    # Round-11 (ADVICE): atomic replace — the result
-                    # materializes in staging before the old table is
-                    # touched (engine.replace_table_from), so a failed
-                    # SELECT/write leaves the old table intact. The
-                    # staging write also reads the old files in place,
-                    # which makes the self-referencing CTAS work without
-                    # a driver-side localCheckpoint.
+                    # Atomic replace (engine.replace_table_from): the
+                    # result is written as a new version and commits with
+                    # its schema, so a failed SELECT/write leaves the old
+                    # table intact, and a self-referencing CTAS reads the
+                    # old version in place without a localCheckpoint.
                     self.engine.replace_table_from(name, df, partition_by=part)
                 else:
                     self.engine.create_table_from(name, df, partition_by=part)

@@ -51,6 +51,7 @@ from contextlib import contextmanager
 from datetime import datetime, timezone
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from .commit import write_json_atomic
 from .engine import Engine
 from .functions.format import render_statement_result
 from .plans import nl
@@ -68,8 +69,8 @@ class ConversationStore:
     Thread-safety: ``ThreadingHTTPServer`` serves each request on its own
     thread, so every load-modify-save cycle must hold ``self.lock`` (an
     RLock — handlers wrap the cycle, store methods re-enter). Saves go
-    through tmp+rename so a reader or a crash never sees a half-written
-    file."""
+    through ``write_json_atomic`` so a reader or a crash never sees a
+    half-written file."""
 
     def __init__(self, root: str):
         self.dir = os.path.join(root, "conversations")
@@ -91,11 +92,7 @@ class ConversationStore:
     def save(self, conv: dict) -> None:
         with self.lock:
             os.makedirs(self.dir, exist_ok=True)
-            path = self._path(conv["id"])
-            tmp = path + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as f:
-                json.dump(conv, f, indent=2)
-            os.replace(tmp, path)  # atomic: readers see old or new, never torn
+            write_json_atomic(self._path(conv["id"]), conv)
 
     def delete(self, conv_id: str) -> None:
         with self.lock:  # a concurrent load-modify-save must not
@@ -164,9 +161,9 @@ class _RWLock:
     """Readers-writer lock with writer preference — the server-side
     equivalent of the reference's per-database ``sync.RWMutex``
     (pkg/schema). Reads (SELECT render, NL generation) share; mutations
-    are exclusive. Exclusion matters for reads too: the copy-on-write
-    ``store.overwrite`` swaps the live table directory (rename + rmtree,
-    tables.py), so an unlocked concurrent scan can hit a missing path."""
+    are exclusive. Exclusion matters for reads too: a rewrite commits a new
+    table version and then deletes the retired one (tables.py), so an
+    unlocked concurrent scan of the old version can hit missing files."""
 
     def __init__(self):
         self._cond = threading.Condition()
@@ -234,6 +231,11 @@ class ApiHandler(BaseHTTPRequestHandler):
     rwlock: _RWLock
 
     protocol_version = "HTTP/1.1"
+    # TCP_NODELAY on every accepted socket: a response goes out as a
+    # headers write then a body write, and with Nagle on the body waits
+    # for the client's delayed ACK of the headers (~40 ms per request on
+    # a keep-alive connection).
+    disable_nagle_algorithm = True
     # Per-connection socket timeout: an unsent request body (any declared
     # Content-Length with no bytes) must time out, not pin the thread
     # forever. socketserver applies this to the connection socket.
@@ -486,8 +488,8 @@ class ApiHandler(BaseHTTPRequestHandler):
     def _execute_rendered(self, sql: str) -> str:
         """Run one RefSQL statement under the lock its verb requires:
         SELECTs share (concurrent reads), everything else is exclusive.
-        Rendering stays inside the scope — the copy-on-write table swap
-        must never run mid-collect."""
+        Rendering stays inside the scope — a rewrite's commit deletes the
+        retired version, which must never happen mid-collect."""
         verb = sql.split(None, 1)[0].upper() if sql else ""
         scope = (
             self.rwlock.read_locked()

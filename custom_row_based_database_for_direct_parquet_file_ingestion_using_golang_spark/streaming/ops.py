@@ -544,7 +544,7 @@ def temporal_enrich_latest(
 
 def stream_upsert_into(engine, table: str, stream: DataFrame, keys: list[str]):
     """Exactly-once-style streaming sink: each micro-batch MERGEs into an
-    engine table via foreachBatch (anti-join + union + atomic swap). The
+    engine table via foreachBatch (anti-join + union + one commit). The
     foreachBatch pattern is the standard CDC/SCD sink when no Delta/Iceberg
     commit protocol is on the classpath. Returns the StreamingQuery."""
 
@@ -567,11 +567,13 @@ def stream_append_exactly_once(
     to exactly-once with the ledger trick Delta's txn table / Kafka's
     transactional producer use, adapted to plain parquet directories:
 
-    1. every epoch's files land in the table directory under names
-       carrying the producer+epoch prefix
+    1. every epoch's files land in the table's live version directory
+       under names carrying the producer+epoch prefix
        (``epoch-<app8>-<id>-part-<k>.parquet``; partitioned tables place
-       them inside their hive ``col=value/`` directories), staged first
-       and renamed in (rename is atomic per file);
+       them inside their hive ``col=value/`` directories), staged first in
+       a hidden ``_stage-*`` directory inside the table directory (which
+       the next engine open deletes if a kill left it) and renamed in
+       (rename is atomic per file);
     2. a replay first REMOVES any partial ``epoch-<app8>-<id>-*`` files
        from a crashed attempt — anywhere in the partition tree — then
        moves the fresh complete set, so a crash at ANY point (mid-stage,
@@ -607,6 +609,8 @@ def stream_append_exactly_once(
     import hashlib
     import json as _json
 
+    from ..commit import write_json_atomic
+
     store = engine.store
     meta = engine.catalog.get(table)
     parts = list(meta.partition_by or [])
@@ -637,7 +641,7 @@ def stream_append_exactly_once(
             *[F.col(c.name).cast(c.spark_type) for c in meta.columns]
         )
         stage = os.path.join(
-            store.staging_dir, f"{table}-{app8}-epoch-{epoch_id}"
+            store.root, meta.path, f"_stage-{app8}-epoch-{epoch_id}"
         )
         writer = aligned.write.mode("overwrite")
         if parts:
@@ -669,10 +673,7 @@ def stream_append_exactly_once(
         shutil.rmtree(stage, ignore_errors=True)
         done = _committed()  # re-read: cheap, and keeps the write fresh
         done.setdefault(app_id, set()).add(int(epoch_id))
-        tmp = ledger + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump({k: sorted(v) for k, v in done.items()}, f)
-        os.replace(tmp, ledger)
+        write_json_atomic(ledger, {k: sorted(v) for k, v in done.items()})
 
     return (
         stream.writeStream.outputMode("append")

@@ -1,72 +1,74 @@
-"""Parquet-backed table store with append and copy-on-write rewrite.
+"""Parquet table store: immutable version directories that one catalog
+save commits.
 
 Reference parity: the Go engine appends JSON rows to ``<table>.dat``
 (``pkg/storage/storage.go:48-85``) and implements UPDATE/DELETE as
 read-all → transform → temp-file → fsync → atomic rename
-(``pkg/storage/storage.go:251-316``). The Spark-native equivalent keeps the
-same two primitives but columnar and distributed:
+(``pkg/storage/storage.go:251-316``). Here the rename is the catalog's: a
+table is a directory of Parquet versions, and ``catalog.json`` names the
+live one. Layout under the engine root::
 
-  * append  = ``df.write.mode("append").parquet(dir)`` — each executor writes
-    its own part files; no global lock, no row-at-a-time IO.
-  * rewrite = write the transformed snapshot to a staging dir, then atomically
-    swap directories. Readers of the old snapshot are unaffected (Parquet
-    files are immutable); a crash mid-swap leaves either old or new, never a
-    torn table.
+    catalog.json              {table: {path, version, columns, ...}}
+    tables/<name>-<id>/       TableMeta.path, fixed when the table is created
+        v0/ ... v<N>/         immutable Parquet data dirs; v<N> is live
 
-At cluster scale the swap would be a metastore pointer flip (or a Delta/
-Iceberg commit); on a filesystem, ``os.replace``-style renames give the same
-single-writer guarantee the reference has.
+* append  = Spark's own file commit into the live ``v<N>`` — each
+  executor writes its own part files; no global lock.
+* rewrite = write ``v<N+1>`` beside the live version, commit data and
+  schema together in one catalog save (temp file + fsync + ``os.replace``),
+  then delete the versions past ``keep_snapshots``. A kill before the save
+  leaves ``v<N>`` live; after it, ``v<N+1>``. Never a mix, never new files
+  under the old schema.
+* retired versions ``v<k>``, ``k < N``, are the time-travel snapshots
+  (``versions``, ``read_version``, ``vacuum``).
+* recovery: opening the store deletes what the catalog does not reference
+  — table directories with no entry, and anything in a table directory
+  other than ``v<N>`` and the retired versions kept — so every interrupted
+  commit ends either done or undone.
+
+One writer per engine root: a second engine opening the root recovers it,
+deleting the first one's uncommitted writes.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import Catalog, TableMeta
+from .commit import fresh_path, remove_path, remove_temp_files, remove_unreferenced
+
+
+def _version_of(entry: str) -> int | None:
+    return int(entry[1:]) if entry[:1] == "v" and entry[1:].isdigit() else None
+
 
 class ParquetTableStore:
-    """Directory-per-table Parquet storage under an engine root.
+    """Versioned Parquet tables under an engine root, committed through
+    ``catalog``. ``keep_snapshots`` retired versions stay readable per
+    table (Delta-style time travel with bounded retention)."""
 
-    ``keep_snapshots > 0`` turns every copy-on-write rewrite into a
-    versioned commit: the replaced snapshot moves to
-    ``.snapshots/<table>/v<k>`` instead of being deleted, giving Delta-style
-    time travel (``read_version``) with bounded retention. Snapshots are
-    immutable Parquet directories, so historical reads are zero-copy.
-    """
-
-    def __init__(self, spark: SparkSession, root: str, keep_snapshots: int = 0):
+    def __init__(self, spark: SparkSession, catalog: Catalog, keep_snapshots: int = 0):
         self.spark = spark
-        self.root = root
+        self.catalog = catalog
+        self.root = catalog.root
         self.keep_snapshots = keep_snapshots
-        self.tables_dir = os.path.join(root, "tables")
-        self.staging_dir = os.path.join(root, ".staging")
-        self.trash_dir = os.path.join(root, ".trash")
-        self.snapshots_dir = os.path.join(root, ".snapshots")
-        for d in (self.tables_dir, self.staging_dir, self.trash_dir, self.snapshots_dir):
-            os.makedirs(d, exist_ok=True)
+        self.tables_dir = os.path.join(self.root, "tables")
+        os.makedirs(self.tables_dir, exist_ok=True)
+        self._recover()
+
+    def _dir(self, meta: TableMeta) -> str:
+        return os.path.join(self.root, meta.path)
+
+    def _version_dir(self, meta: TableMeta, version: int) -> str:
+        return os.path.join(self.root, meta.path, f"v{version}")
 
     def table_path(self, name: str) -> str:
-        return os.path.join(self.tables_dir, name)
-
-    def init_empty(
-        self, name: str, schema, partition_by: list[str] | None = None
-    ) -> str:
-        """Materialize an empty table dir so scans of a fresh table work.
-
-        A partitioned table's empty write must partition too: an
-        unpartitioned part file at the table root would sit beside the
-        later ``col=value/`` directories and corrupt partition discovery
-        once it carried rows."""
-        path = self.table_path(name)
-        empty = self.spark.createDataFrame([], schema)
-        writer = empty.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        return path
+        """The live version directory of ``name``."""
+        meta = self.catalog.get(name)
+        return self._version_dir(meta, meta.version)
 
     def read(self, name: str, schema=None) -> DataFrame:
         reader = self.spark.read
@@ -80,101 +82,87 @@ class ParquetTableStore:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self.table_path(name))
 
-    def overwrite(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        """Copy-on-write rewrite with atomic swap (see module docstring)."""
-        token = uuid.uuid4().hex[:12]
-        staging = os.path.join(self.staging_dir, f"{name}-{token}")
+    def overwrite(
+        self,
+        name: str,
+        df: DataFrame,
+        partition_by: list[str] | None = None,
+        meta: TableMeta | None = None,
+        keep: int | None = None,
+    ) -> None:
+        """Copy-on-write rewrite (see module docstring): ``df`` becomes the
+        next version and ``meta`` (default: the current metadata) its
+        schema, in one catalog commit. A table not in the catalog is
+        created in a fresh directory as ``v0``. ``keep`` overrides
+        ``keep_snapshots`` for this commit (0 for CREATE OR REPLACE, whose
+        history dies with the old definition)."""
+        old = self.catalog.get(name) if meta is None or name in self.catalog else None
+        if old is None:
+            new = dataclasses.replace(meta, path=fresh_path("tables", name), version=0)
+        else:
+            new = dataclasses.replace(meta or old, path=old.path, version=old.version + 1)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         try:
-            writer.parquet(staging)
-        except Exception:
-            # A failed write (e.g. an in-plan guard raise_error) must not
-            # leak a partial .staging/<table>-<token> directory.
-            shutil.rmtree(staging, ignore_errors=True)
+            writer.parquet(self._version_dir(new, new.version))
+            if old is None:
+                self.catalog.add_table(new)
+            else:
+                self.catalog.update_table(new)
+        except BaseException:
+            # Nothing committed: the write is unreferenced garbage.
+            remove_path(self._dir(new) if old is None else self._version_dir(new, new.version))
             raise
+        if old is not None:
+            self.vacuum(name, self.keep_snapshots if keep is None else keep)
 
-        current = self.table_path(name)
-        trash = os.path.join(self.trash_dir, f"{name}-{token}")
-        if os.path.exists(current):
-            os.rename(current, trash)
-        try:
-            os.rename(staging, current)
-        except OSError:
-            # Roll back: restore the old snapshot.
-            if os.path.exists(trash) and not os.path.exists(current):
-                os.rename(trash, current)
-            raise
-        if self.keep_snapshots > 0 and os.path.exists(trash):
-            # Best-effort: the write is already durable at this point, so a
-            # retention failure must not surface as a failed UPDATE/DELETE.
-            try:
-                self._retire_to_snapshot(name, trash)
-            except OSError:
-                shutil.rmtree(trash, ignore_errors=True)
-        else:
-            shutil.rmtree(trash, ignore_errors=True)
+    def drop(self, name: str) -> None:
+        """DROP: commit the catalog without the table, then delete its
+        directory — snapshots die with it, and a recreated table gets a
+        fresh directory."""
+        remove_path(self._dir(self.catalog.drop_table(name)))
 
-    # -- snapshot retention / time travel ---------------------------------
-
-    def _table_snap_dir(self, name: str) -> str:
-        d = os.path.join(self.snapshots_dir, name)
-        os.makedirs(d, exist_ok=True)
-        return d
+    # -- retention / time travel -----------------------------------------
 
     def versions(self, name: str) -> list[int]:
-        d = self._table_snap_dir(name)
-        return sorted(
-            int(v[1:]) for v in os.listdir(d) if v.startswith("v") and v[1:].isdigit()
-        )
-
-    def _retire_to_snapshot(self, name: str, old_dir: str) -> None:
-        vs = self.versions(name)
-        nxt = (vs[-1] + 1) if vs else 0
-        os.rename(old_dir, os.path.join(self._table_snap_dir(name), f"v{nxt}"))
-        for stale in [*vs, nxt][: -self.keep_snapshots]:
-            shutil.rmtree(
-                os.path.join(self._table_snap_dir(name), f"v{stale}"),
-                ignore_errors=True,
-            )
+        """The retired versions of ``name`` still on disk."""
+        meta = self.catalog.get(name)
+        found = (_version_of(e) for e in os.listdir(self._dir(meta)))
+        return sorted(k for k in found if k is not None and k < meta.version)
 
     def vacuum(self, name: str, keep: int = 0) -> list[int]:
-        """Drop retired snapshots beyond the ``keep`` newest (the
-        Delta-style VACUUM: reclaim history storage, keep recent time
-        travel). Returns the removed version numbers. Snapshot dirs are
-        immutable, so removal is safe for any reader that already planned
-        against a dropped version only until its scan starts — same
-        contract as Delta's retention window."""
+        """Drop retired versions beyond the ``keep`` newest (the Delta-style
+        VACUUM: reclaim history storage, keep recent time travel). Returns
+        the removed version numbers. Versions are immutable, so removal is
+        safe for any reader that already planned against a dropped version
+        only until its scan starts — same contract as Delta's retention
+        window."""
         if keep < 0:
             raise ValueError("keep must be >= 0")
         vs = self.versions(name)
-        doomed = vs[: max(0, len(vs) - keep)] if keep else vs
-        for v in doomed:
-            shutil.rmtree(
-                os.path.join(self._table_snap_dir(name), f"v{v}"),
-                ignore_errors=True,
-            )
+        doomed = vs[: max(0, len(vs) - keep)]
+        meta = self.catalog.get(name)
+        for k in doomed:
+            remove_path(self._version_dir(meta, k))
         return doomed
 
     def read_version(self, name: str, version: int, schema=None) -> DataFrame:
-        """Time travel: read a retired snapshot by version number."""
-        path = os.path.join(self._table_snap_dir(name), f"v{version}")
-        if not os.path.exists(path):
+        """Time travel: read a retired version by number."""
+        if version not in self.versions(name):
             raise KeyError(
                 f"table '{name}' has no snapshot v{version}; available: {self.versions(name)}"
             )
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.parquet(path)
+        return reader.parquet(self._version_dir(self.catalog.get(name), version))
 
-    def drop(self, name: str) -> None:
-        path = self.table_path(name)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        # Snapshots die with the table: a recreated table must not time-
-        # travel into a dead table's data (schema may differ).
-        snaps = os.path.join(self.snapshots_dir, name)
-        if os.path.exists(snaps):
-            shutil.rmtree(snaps, ignore_errors=True)
+    def _recover(self) -> None:
+        remove_temp_files(self.root)
+        metas = [self.catalog.get(n) for n in self.catalog.show_tables()]
+        remove_unreferenced(self.tables_dir, {os.path.basename(m.path) for m in metas})
+        for meta in metas:
+            live = {f"v{k}" for k in range(meta.version + 1)}
+            remove_unreferenced(self._dir(meta), live)
+            self.vacuum(meta.name, self.keep_snapshots)

@@ -9,6 +9,11 @@ An index is two artifacts under the engine root:
 * the coarse quantizer's centroids, stored in the registry JSON (they ARE
   the index metadata: n_centroids × dim doubles, corpus-size independent).
 
+Every build or refresh writes the inverted lists to a fresh directory
+under ``_vector_indexes/`` and commits it by saving
+``vector_indexes.json`` (commit.py); the replaced lists are deleted after
+the save, so a failed or killed rebuild leaves the old index searchable.
+
 ``search`` ranks centroids driver-side from the persisted quantizer and
 reads only the probed lists (``ivf_probe_indexed`` — the PartitionFilter
 is plan-asserted in tests/test_plans.py). ``refresh`` re-assigns the
@@ -23,42 +28,17 @@ partitioned storage.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 
+from .commit import ArtifactRegistry
 from .operators.util import lit_double_array
 
 
-class VectorIndexes:
+class VectorIndexes(ArtifactRegistry):
     """Registry + lifecycle for persistent IVF indexes."""
 
     def __init__(self, engine):
-        self.engine = engine
-        self.path = os.path.join(engine.store.root, "vector_indexes.json")
-        self.dir = os.path.join(engine.store.root, "_vector_indexes")
-
-    # -- persistence ---------------------------------------------------------
-
-    def _load(self) -> dict:
-        if not os.path.exists(self.path):
-            return {}
-        with open(self.path) as f:
-            return json.load(f)
-
-    def _save(self, meta: dict) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, self.path)
-
-    def names(self) -> list[str]:
-        return sorted(self._load())
-
-    def __contains__(self, name: str) -> bool:
-        return name in self._load()
+        super().__init__(engine, "vector_indexes.json", "_vector_indexes")
 
     def _get(self, name: str) -> dict:
         meta = self._load()
@@ -81,64 +61,20 @@ class VectorIndexes:
         pq_k: int = 32,
         dim: int | None = None,
         n_assign: int = 1,
-        _path: str | None = None,
     ) -> None:
-        """Build and register the index. ``pq_m`` (round-9) additionally
-        stores residual PQ codes (``pq_m`` int codes per vector — 16
-        bytes/vector at the default m=16) as a column of the partitioned
-        index parquet, and the residual codebooks in the registry — the
-        full FAISS-IVFPQ serving artifact: an ADC search then reads m
-        bytes per candidate instead of dim·4 (see search(mode='adc')).
-        ``n_assign`` (round-10) > 1 spills each vector to its n nearest
-        lists at build — multi-assignment, the standard lever when
-        partial-probe recall is IVF-pruning-bound — at n_assign× index
-        storage; searches dedupe the spilled copies automatically."""
-        from pyspark.sql import functions as F
-
-        from .operators import similarity
-
-        if name in self._load():
-            raise ValueError(f"vector index {name!r} already exists")
-        df = self.engine.table(table)
-        for c in (id_col, vec_col):
-            if c not in df.columns:
-                raise ValueError(
-                    f"table {table!r} has no column {c!r} "
-                    f"(columns: {df.columns})"
-                )
-        idx_path = _path or os.path.join(self.dir, name)
-        codebooks = None
-        if pq_m is None:
-            centroids = similarity.ivf_build(
-                df, id_col, vec_col, idx_path,
-                n_centroids=n_centroids, train_limit=train_limit, seed=seed,
-                n_assign=n_assign,
-            )
-        else:
-            if dim is None:
-                dim = len(df.select(vec_col).first()[0])
-            centroids = similarity._train_centroids(
-                df, id_col, vec_col, train_limit, n_centroids, 8, seed
-            )
-            codebooks = similarity.pq_train(
-                df, id_col, vec_col, dim, m=pq_m, k_codes=pq_k,
-                seed=seed, centroids=centroids,
-            )
-            # Each spilled copy encodes the residual against ITS OWN
-            # list's centroid, so ADC stays consistent per list.
-            listed = similarity._assign_lists(
-                df, id_col, vec_col, centroids, n_assign
-            )
-            listed = listed.withColumn(
-                "pq",
-                similarity._pq_encode_residual_udf(codebooks, centroids)(
-                    F.col(vec_col).cast("array<double>"), F.col("list_id")
-                ),
-            )
-            listed.write.mode("overwrite").partitionBy("list_id").parquet(
-                idx_path
-            )
+        """Build and register the index. ``pq_m`` additionally stores
+        residual PQ codes (``pq_m`` int codes per vector — 16 bytes/vector
+        at the default m=16) as a column of the partitioned index parquet,
+        and the residual codebooks in the registry — the full FAISS-IVFPQ
+        serving artifact: an ADC search then reads m bytes per candidate
+        instead of dim·4 (see search(mode='adc')). ``n_assign`` > 1 spills
+        each vector to its n nearest lists at build — multi-assignment,
+        the standard lever when partial-probe recall is IVF-pruning-bound
+        — at n_assign× index storage; searches dedupe the spilled copies
+        automatically."""
         meta = self._load()
+        if name in meta:
+            raise ValueError(f"vector index {name!r} already exists")
         meta[name] = {
             "table": table,
             "id_col": id_col,
@@ -146,18 +82,66 @@ class VectorIndexes:
             "n_centroids": n_centroids,
             "train_limit": train_limit,
             "seed": seed,
-            "path": idx_path,
-            "centroids": [[float(x) for x in c] for c in centroids],
             "pq_m": pq_m,
             "pq_k": pq_k,
             "n_assign": n_assign,
-            "codebooks": (
-                None
-                if codebooks is None
-                else [[[float(x) for x in row] for row in cb] for cb in codebooks]
-            ),
         }
-        self._save(meta)
+        self._commit_artifact(
+            meta, name, lambda path: self._build(meta[name], path, dim)
+        )
+
+    def _build(self, m: dict, path: str, dim: int | None = None) -> None:
+        """Train the quantizer (plus, with ``pq_m``, the residual
+        codebooks) on the table's current rows, write the inverted lists
+        to ``path`` and store the trained model in ``m``."""
+        from pyspark.sql import functions as F
+
+        from .operators import similarity
+
+        table, id_col, vec_col = m["table"], m["id_col"], m["vec_col"]
+        df = self.engine.table(table)
+        for c in (id_col, vec_col):
+            if c not in df.columns:
+                raise ValueError(
+                    f"table {table!r} has no column {c!r} "
+                    f"(columns: {df.columns})"
+                )
+        codebooks = None
+        if m["pq_m"] is None:
+            centroids = similarity.ivf_build(
+                df, id_col, vec_col, path,
+                n_centroids=m["n_centroids"], train_limit=m["train_limit"],
+                seed=m["seed"], n_assign=m["n_assign"],
+            )
+        else:
+            if dim is None:
+                dim = len(df.select(vec_col).first()[0])
+            centroids = similarity._train_centroids(
+                df, id_col, vec_col, m["train_limit"], m["n_centroids"], 8,
+                m["seed"],
+            )
+            codebooks = similarity.pq_train(
+                df, id_col, vec_col, dim, m=m["pq_m"], k_codes=m["pq_k"],
+                seed=m["seed"], centroids=centroids,
+            )
+            # Each spilled copy encodes the residual against ITS OWN
+            # list's centroid, so ADC stays consistent per list.
+            listed = similarity._assign_lists(
+                df, id_col, vec_col, centroids, m["n_assign"]
+            )
+            listed = listed.withColumn(
+                "pq",
+                similarity._pq_encode_residual_udf(codebooks, centroids)(
+                    F.col(vec_col).cast("array<double>"), F.col("list_id")
+                ),
+            )
+            listed.write.partitionBy("list_id").parquet(path)
+        m["centroids"] = [[float(x) for x in c] for c in centroids]
+        m["codebooks"] = (
+            None
+            if codebooks is None
+            else [[[float(x) for x in row] for row in cb] for cb in codebooks]
+        )
 
     def refresh(self, name: str, retrain: bool = False) -> str:
         """Rebuild the inverted lists from the table's CURRENT rows.
@@ -165,95 +149,49 @@ class VectorIndexes:
         Default keeps the existing quantizer (one assignment scan + one
         partitioned write; list membership of unchanged rows is stable).
         ``retrain=True`` re-trains the quantizer first — the drift lever,
-        which may move any vector to a new list."""
+        which may move any vector to a new list. Either way the new lists
+        commit only once fully written: a failed rebuild (base table or
+        column dropped, table emptied) leaves the old index searchable."""
         from pyspark.sql import functions as F
 
         from .operators import similarity
 
-        m = self._get(name)
-        df = self.engine.table(m["table"])
+        self._get(name)
+        meta = self._load()
+        m = meta[name]
         if retrain:
-            # Retrain everything (the drift lever): recreate under the
-            # same registered parameters, PQ codes included.
-            params = {
-                k2: m[k2]
-                for k2 in (
-                    "table", "id_col", "vec_col", "n_centroids",
-                    "train_limit", "seed",
-                )
-            }
-            pq_m, pq_k = m.get("pq_m"), m.get("pq_k", 32)
-            meta = self._load()
-            del meta[name]
-            self._save(meta)
-            # Round-11 (ADVICE): build the new index under a TEMP path and
-            # swap only on success. The old rollback restored the registry
-            # entry on failure, but create() wrote mode('overwrite') to the
-            # SAME path — a failure during/after that write left the
-            # restored registration pointing at a destroyed or partial
-            # artifact. Now the old parquet is untouched until the rebuild
-            # has fully materialized, so "still searchable" holds for real.
-            tmp_path = m["path"] + ".rebuild"
-            shutil.rmtree(tmp_path, ignore_errors=True)
-            try:
-                self.create(
-                    name, params["table"], params["id_col"],
-                    params["vec_col"],
-                    n_centroids=params["n_centroids"],
-                    train_limit=params["train_limit"], seed=params["seed"],
-                    pq_m=pq_m, pq_k=pq_k,
-                    n_assign=m.get("n_assign", 1),
-                    _path=tmp_path,
-                )
-            except BaseException:
-                # Rebuild failed (base table or column dropped, table
-                # emptied): restore the previous registration — the old
-                # parquet artifact was never touched and is still
-                # searchable — and clear the partial temp build.
-                shutil.rmtree(tmp_path, ignore_errors=True)
-                meta = self._load()
-                meta[name] = m
-                self._save(meta)
-                raise
-            # Success: swap the artifact directories and point the fresh
-            # registration at the canonical path.
-            shutil.rmtree(m["path"], ignore_errors=True)
-            os.rename(tmp_path, m["path"])
-            meta = self._load()
-            meta[name]["path"] = m["path"]
-            self._save(meta)
+            self._commit_artifact(meta, name, lambda path: self._build(m, path))
             return (
                 f"retrained + rebuilt {name!r} ({m['n_centroids']} lists"
-                + (f", PQ m={pq_m}" if pq_m else "")
+                + (f", PQ m={m['pq_m']}" if m.get("pq_m") else "")
                 + ")"
             )
-        listed = similarity._assign_lists(
-            df, m["id_col"], m["vec_col"], m["centroids"],
-            m.get("n_assign", 1),
-        )
-        if m.get("codebooks"):
-            # PQ index: re-encode against the STORED codebooks — model
-            # state stays fixed, only the codes/lists refresh.
-            listed = listed.withColumn(
-                "pq",
-                similarity._pq_encode_residual_udf(
-                    m["codebooks"], m["centroids"]
-                )(
-                    F.col(m["vec_col"]).cast("array<double>"),
-                    F.col("list_id"),
-                ),
+
+        def write(path: str) -> None:
+            listed = similarity._assign_lists(
+                self.engine.table(m["table"]), m["id_col"], m["vec_col"],
+                m["centroids"], m.get("n_assign", 1),
             )
-        listed.write.mode("overwrite").partitionBy("list_id").parquet(
-            m["path"]
-        )
+            if m.get("codebooks"):
+                # PQ index: re-encode against the STORED codebooks — model
+                # state stays fixed, only the codes/lists refresh.
+                listed = listed.withColumn(
+                    "pq",
+                    similarity._pq_encode_residual_udf(
+                        m["codebooks"], m["centroids"]
+                    )(
+                        F.col(m["vec_col"]).cast("array<double>"),
+                        F.col("list_id"),
+                    ),
+                )
+            listed.write.partitionBy("list_id").parquet(path)
+
+        self._commit_artifact(meta, name, write)
         return f"rebuilt {name!r} against the existing quantizer"
 
     def drop(self, name: str) -> None:
-        m = self._get(name)
-        meta = self._load()
-        del meta[name]
-        self._save(meta)
-        shutil.rmtree(m["path"], ignore_errors=True)
+        self._get(name)
+        self._drop(self._load(), name)
 
     # -- query ---------------------------------------------------------------
 

@@ -1,9 +1,8 @@
 """Plain (logical) SQL views over the dialect.
 
 ``CREATE [OR REPLACE] VIEW v AS SELECT ...`` stores the SELECT text in a
-JSON registry (``views.json`` beside the catalog — the same atomic
-temp-file + rename durability pattern as the catalog and the matview
-registry); reads expand the stored text through the dialect compiler at
+JSON registry (``views.json`` beside the catalog, saved atomically like
+every registry — commit.py); reads expand the stored text through the dialect compiler at
 reference time, so a view is pure query shorthand: zero storage, always
 current, and every Catalyst optimization (pushdown through the view,
 column pruning, join planning) applies to the EXPANDED plan exactly as
@@ -26,42 +25,20 @@ behaves the same; views bind late by design).
 
 from __future__ import annotations
 
-import json
-import os
+from .commit import JsonRegistry
 
 
-class Views:
+class Views(JsonRegistry):
     """Registry for plain logical views."""
 
     def __init__(self, engine):
-        self.engine = engine
-        self.path = os.path.join(engine.store.root, "views.json")
-
-    # -- persistence --------------------------------------------------------
-
-    def _load(self) -> dict:
-        if not os.path.exists(self.path):
-            return {}
-        with open(self.path) as f:
-            return json.load(f)
-
-    def _save(self, meta: dict) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, self.path)
-
-    def names(self) -> list[str]:
-        return sorted(self._load())
+        super().__init__(engine, "views.json")
 
     def items(self) -> list[tuple[str, str]]:
         """(name, sql) pairs in REGISTRY (creation) order — EXPORT
         DATABASE replays views in this order so view-over-view
         definitions rebind cleanly at import."""
         return [(n, d["sql"]) for n, d in self._load().items()]
-
-    def __contains__(self, name: str) -> bool:
-        return name in self._load()
 
     def get(self, name: str) -> str:
         meta = self._load()

@@ -48,12 +48,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # The file's mtime rides in the key so a rewritten fixture (same path,
     # new data — e.g. a regenerated sf dir within one live session) never
-    # serves the stale plan/file-listing; the stat is microseconds.
+    # serves the stale plan/file-listing; the stat is microseconds. A path
+    # the stat cannot see (a URI, a missing file) is never cached: nothing
+    # would notice it change or vanish.
     path = f"{sf_dir}/{name}.parquet"
     try:
         mtime = os.stat(path).st_mtime_ns
     except OSError:
-        mtime = -1  # directory-style tables / missing file: let Spark raise
+        return _load_uncached(spark, sf_dir, name)
     key = (spark.sparkContext.applicationId, sf_dir, name, mtime)
     cached = _SCAN_CACHE.get(key)
     if cached is not None:

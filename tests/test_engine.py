@@ -4,6 +4,7 @@ reference's CRUD surface (SURVEY.md §2.1-2.3) on Parquet copy-on-write."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -419,3 +420,19 @@ def test_alter_table_rename(spark, tmp_path, sf_dir):
     e.ref_sql("CREATE VECTOR INDEX vi ON emb (embedding) ID vec_id CENTROIDS 4")
     with pytest.raises(ValueError, match="referenced by"):
         e.rename_table("emb", "emb2")
+
+
+def test_scan_cache_skips_paths_stat_cannot_see(spark, tmp_path):
+    """A fixture the driver cannot stat (here a ``file:`` URI) must not be
+    cached under a constant key: once deleted it must stop loading."""
+    from custom_row_based_database_for_direct_parquet_file_ingestion_using_golang_spark.workloads.registry import (
+        load,
+    )
+
+    spark.range(3).write.parquet(str(tmp_path / "t.parquet"))
+    assert load(spark, str(tmp_path), "t") is load(spark, str(tmp_path), "t")
+    uri = f"file:{tmp_path}"
+    assert load(spark, uri, "t").count() == 3
+    shutil.rmtree(tmp_path / "t.parquet")
+    with pytest.raises(Exception):
+        load(spark, uri, "t")

@@ -778,12 +778,12 @@ def test_update_from_duplicate_null_keys_pass(spark, tmp_path):
     e.ref_sql("INSERT INTO s VALUES (1, 101)")
     with pytest.raises(ValueError, match="duplicate rows on the join keys"):
         e.ref_sql("UPDATE t SET v = s.bonus FROM s WHERE t.k = s.k")
-    # ... and the failed write leaks no staging directory (r15 advice:
-    # the guard now raises mid-write inside store.overwrite).
+    # ... and the failed write (the guard raises mid-write inside
+    # store.overwrite) leaves no v<N+1> beside the live version.
     import os
 
-    staging = os.path.join(str(tmp_path / "updnull"), ".staging")
-    assert os.listdir(staging) == []
+    live = e.store.table_path("t")
+    assert os.listdir(os.path.dirname(live)) == [os.path.basename(live)]
 
 
 def test_dml_in_subqueries(spark, tmp_path, sf_dir):
@@ -2950,10 +2950,10 @@ def test_vector_index_multi_assignment(spark, tmp_path, sf_dir):
     ids = [r.vec_id for r in adc]
     assert len(ids) == len(set(ids)) == 5
     assert ids[0] == 7
-    # refresh keeps the spill factor (codes re-encode per copy)
+    # refresh keeps the spill factor (codes re-encode per copy); the
+    # rebuilt lists commit under a fresh path
     e.ref_sql("REFRESH VECTOR INDEX vm")
-    spark.catalog.refreshByPath(idx_path)
-    idx2 = spark.read.parquet(idx_path)
+    idx2 = spark.read.parquet(e.vindexes._get("vm")["path"])
     assert idx2.count() == idx_rows
     with pytest.raises(ParseError, match="ASSIGN"):
         e.ref_sql(

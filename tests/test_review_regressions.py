@@ -547,13 +547,15 @@ def test_vecindex_retrain_failure_leaves_artifact_searchable(
     monkeypatch.undo()
     # registration restored AND the artifact is the old, intact one
     assert e.ref_sql("SHOW VECTOR INDEXES") == ["vs"]
-    assert not os.path.exists(idx_path + ".rebuild")  # temp build cleaned
+    # the partial rebuild is gone; only the registered lists remain
+    assert os.listdir(e.vindexes.dir) == [os.path.basename(idx_path)]
     after = {r.vec_id for r in e.vindexes.search("vs", q, k=3, n_probe=4).collect()}
     assert after == before
     # and a successful retrain still swaps cleanly
     msg = e.vindexes.refresh("vs", retrain=True)
     assert "retrained" in msg
-    assert not os.path.exists(idx_path + ".rebuild")
+    new_path = e.vindexes._get("vs")["path"]
+    assert os.listdir(e.vindexes.dir) == [os.path.basename(new_path)]
     assert e.vindexes.search("vs", q, k=3, n_probe=4).count() == 3
 
 

@@ -230,6 +230,37 @@ def test_keep_alive_connection_survives_unread_bodies(api):
         conn.close()
 
 
+def test_accepted_sockets_disable_nagle(spark, tmp_path):
+    """Responses go out as a headers write then a body write; with Nagle
+    on, the body waits for the client's delayed ACK (~40 ms per keep-alive
+    request). Every accepted socket must carry TCP_NODELAY."""
+    import http.client
+    import socket
+
+    server = make_server(Engine(spark, str(tmp_path / "db")), port=0)
+    seen = []
+
+    class Probe(server.RequestHandlerClass):
+        def handle(self):
+            seen.append(
+                self.connection.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+            )
+            super().handle()
+
+    server.RequestHandlerClass = Probe
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    conn = http.client.HTTPConnection("127.0.0.1", server.server_address[1], timeout=10)
+    try:
+        conn.request("GET", "/api/tables")
+        assert conn.getresponse().read()
+    finally:
+        conn.close()
+        server.shutdown()
+        thread.join(timeout=5)
+    assert seen and all(seen)
+
+
 def test_rwlock_readers_share_writer_excludes():
     import threading as _t
     import time as _time
