@@ -549,11 +549,12 @@ class Engine:
         """UPDATE via copy-on-write: read the live version → conditional
         withColumn → commit the result as the next version. No WHERE ⇒ all
         rows (reference update.go:87-98). Returns the matched-row count.
+        ``where`` may carry subquery Columns (the dialect's IN/ANY/scalar
+        subqueries); Catalyst plans them inside the rewrite.
 
-        ``frame``: an optional pre-built frame — the table plus
-        helper predicate columns (e.g. IN-subquery membership booleans the
-        dialect materializes as joins). Helper columns never reach storage:
-        the write projects the declared schema only."""
+        ``frame``: the table already joined to an ``UPDATE ... FROM``
+        source, whose columns the SET values read. Columns beyond the
+        declared schema never reach storage."""
         from pyspark.sql import Observation
 
         meta = self.catalog.get(name)
@@ -623,21 +624,29 @@ class Engine:
         self,
         name: str,
         where: Column | str,
-        frame: DataFrame | None = None,
         returning: bool = False,
     ) -> int | tuple[int, DataFrame]:
         """DELETE requires a predicate — parity with the reference's safety
         guard ('DELETE without WHERE is not allowed', delete.go:33).
-        ``frame`` as in :meth:`update`."""
+        ``where`` as in :meth:`update`."""
         from pyspark.sql import Observation
 
         if where is None:
             raise ValueError("DELETE without WHERE is not allowed for safety")
         meta = self.catalog.get(name)
-        df = self.table(name) if frame is None else frame
+        df = self.table(name)
         # NULL predicate ⇒ row is NOT deleted (SQL: DELETE only where the
         # predicate is TRUE, not NULL) — coalesce makes ~cond keep it.
-        cond = F.coalesce(self._where_col(where), F.lit(False))
+        # Projected once into a helper column, as UPDATE does: Spark
+        # rejects IN/EXISTS subqueries inside observe(), and the column is
+        # evaluated once for the count and the filter alike.
+        dcol = "__doomed"
+        while dcol in df.columns:
+            dcol += "_"
+        df = df.withColumn(
+            dcol, F.coalesce(self._where_col(where), F.lit(False))
+        )
+        cond = F.col(dcol)
         # Single pass: count the doomed rows while writing the survivors.
         obs = Observation()
         df = df.observe(obs, F.sum(F.when(cond, 1).otherwise(0)).alias("doomed"))

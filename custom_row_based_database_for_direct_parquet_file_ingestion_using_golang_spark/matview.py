@@ -70,10 +70,10 @@ class MaterializedViews(ArtifactRegistry):
         spec, _, clauses = parse_select(cur)
         if not cur.done():
             raise ParseError(f"unexpected token {cur.peek()!r} in view query")
-        if spec.joins or spec.version is not None or spec.in_subqueries:
+        if spec.joins or spec.version is not None:
             raise ParseError(
                 "materialized views support a single base table (no JOIN / "
-                "VERSION AS OF / IN-subqueries)"
+                "VERSION AS OF)"
             )
         if not spec.aggregates:
             raise ParseError(

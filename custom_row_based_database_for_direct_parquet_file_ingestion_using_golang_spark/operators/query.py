@@ -124,6 +124,7 @@ class Query:
         self._group_sets: list = []
         self._aggs: list[Column] = []
         self._having: Column | str | None = None
+        self._having_bind: "list[tuple[str, Column]] | None" = None
         self._order: list[Column] = []
         self._limit: int | None = None
         self._offset: int | None = None
@@ -166,8 +167,13 @@ class Query:
         self._aggs = list(specs)
         return self
 
-    def having(self, cond: Column | str) -> "Query":
+    def having(
+        self, cond: Column | str, bind: "list[tuple[str, Column]] | None" = None
+    ) -> "Query":
+        """``bind``: hidden ``(name, Column)`` pairs the condition
+        references by name, added to the aggregated frame first."""
         self._having = cond
+        self._having_bind = bind
         return self
 
     def order_by(
@@ -234,8 +240,13 @@ class Query:
                     }[self._group_mode]
                     df = grouper(*self._group).agg(*aggs)
             else:
-                df = df.agg(*aggs)
+                # a global aggregate as a select (same Aggregate plan):
+                # DataFrame.agg analyzes its input eagerly, which a
+                # correlated subquery's frame cannot do on its own
+                df = df.select(*aggs)
             if self._having is not None:
+                if self._having_bind:
+                    df = df.withColumns(dict(self._having_bind))
                 df = df.filter(self._cond(self._having))
         if self._projection is not None:
             df = df.select(*self._projection)

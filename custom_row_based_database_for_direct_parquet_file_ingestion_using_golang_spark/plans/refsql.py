@@ -11,6 +11,25 @@ Written from scratch: a tokenizer, a recursive-descent predicate parser with
 the reference's precedence (OR < AND < NOT < comparison,
 ``expr.go:411-518``), and clause assembly onto the Query builder.
 
+Subqueries (scalar ``(SELECT ...)`` in any value position, ``x [NOT] IN
+(SELECT ...)``, ``[NOT] EXISTS (SELECT ...)``, ``x <op> ANY|ALL|SOME
+(SELECT ...)``) compile while parsing to Spark subquery Columns —
+``DataFrame.scalar()``, ``DataFrame.exists()``, ``Column.isin(DataFrame)``
+— anywhere in a WHERE or UPDATE/DELETE predicate (conjuncts, OR, NOT,
+parentheses); uncorrelated scalars also in HAVING, and scalars as SELECT
+items and UPDATE SET values. The parser's resolver returns each subquery's
+DataFrame; nothing runs until the statement does.
+Inside a subquery a qualified column whose qualifier names no relation of
+that subquery's FROM is an outer reference (``Column.outer()``), and
+Catalyst decorrelates: top-level [NOT] EXISTS plans as LeftSemi/LeftAnti,
+correlated scalars as an aggregate + left join with its own COUNT-bug
+guard. ``IN`` is the exact ANSI three-valued form (_in_subquery), the
+order-decidable ANY/ALL pairs fold through one aggregate
+(_quantified_fold), and SELECT-list scalars over the same FROM/WHERE share
+one struct-valued subquery (_bind_select_scalars). A correlated scalar's
+correlation must be ``inner = outer`` equalities; a multi-row scalar fails
+when the statement runs (SCALAR_SUBQUERY_TOO_MANY_ROWS).
+
 Reference semantics preserved:
   * restricted LIKE shapes (%x%, %x, x% — no '_', no interior %)
   * IN / BETWEEN (inclusive) / NOT / parenthesized sub-expressions
@@ -29,8 +48,6 @@ select.go:49-54 is single-table, bare-column only):
   * JOINs: ``[INNER|LEFT|RIGHT|FULL [OUTER]] JOIN t [AS x] ON <predicate>``
     with qualified ``x.col`` references.
   * Window functions: ``fn(args) OVER ([PARTITION BY ...] [ORDER BY ...])``.
-  * IN/NOT IN subqueries as top-level WHERE conjuncts → semi / null-aware
-    anti joins (exact ANSI three-valued NOT IN); nesting recurses.
   * Value expressions in projections, aggregate/window arguments, WHERE/
     HAVING comparison sides, and ORDER BY keys — captured as raw token
     runs and compiled by Catalyst's own expression parser.
@@ -46,14 +63,8 @@ Round-6 extensions:
     chains — positional arms named by the first arm, left-associative
     fold, trailing ORDER BY/LIMIT/OFFSET on the combined result; accepted
     wherever a SELECT is (CTAS, INSERT...SELECT, EXPLAIN, CTE bodies).
-  * Uncorrelated scalar subqueries ``(SELECT agg ...)`` in any comparison
-    position (WHERE/HAVING sides, BETWEEN bounds, UPDATE/DELETE
-    predicates): executed once, inlined as a literal; ANSI empty→NULL.
-  * Correlated ``[NOT] EXISTS (SELECT ... WHERE <pred>)`` as top-level
-    WHERE conjuncts → left-semi / left-anti joins with <pred> (which may
-    reference alias-qualified outer columns) as the join condition; plus
-    the explicit ``LEFT SEMI / LEFT ANTI / CROSS JOIN`` and
-    ``USING (cols)`` forms.
+  * The explicit ``LEFT SEMI / LEFT ANTI / CROSS JOIN`` and ``USING
+    (cols)`` join forms.
   * ``GROUP BY ROLLUP(a, b)`` / ``CUBE(a, b)`` — one Expand pass — with
     ``GROUPING(col)`` to flag super-aggregate rows.
   * DISTINCT aggregates (``COUNT/SUM/AVG(DISTINCT col)``) and the
@@ -128,14 +139,6 @@ Round-12 extensions:
     yield COUNT 0 / SUM NULL rows); ``ORDER BY ... LIMIT k`` bodies
     become a per-key window top-k + equi-join; never a per-outer-row
     rescan, never a cartesian product.
-  * Correlated scalar subqueries as SELECT items (round-9 decorrelator;
-    COUNT 0 on empty groups); N scalars sharing the same inner
-    relation + filter + correlation keys BATCH into one groupBy pass +
-    one join.
-  * ``[NOT] EXISTS`` under OR/NOT/parens — a two-valued boolean flag
-    column (RefSQL._bool_exists_column): equality-correlated bodies
-    decorrelate to a distinct-keys left join; uncorrelated bodies fold
-    to a constant via one bounded driver probe.
   * ``ORDER BY ALL [ASC|DESC]`` — every output column left-to-right
     (DuckDB ergonomic), star-modifier-aware.
   * ``string_split(s, '<literal>')`` (aliases ``str_split``,
@@ -189,18 +192,17 @@ Round-12 extensions:
 
 from __future__ import annotations
 
-import math
 import os
 import re
+from collections import Counter
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..catalog import parse_date as _parse_date, parse_timestamp as _parse_timestamp
 from ..functions.compat import dual_compare, ref_like, truthy
-from ..operators.query import Query, agg_spec, arg_col
+from ..operators.query import Query, agg_default_name, agg_spec, arg_col
 
 _TOKEN_RE = re.compile(
     r"""
@@ -3615,42 +3617,124 @@ class _Cursor:
         return self.i >= len(self.toks)
 
 
-def _sql_literal_text(v: Any) -> str:
-    """Render a python value (an eagerly-resolved scalar subquery result)
-    back to SQL literal text so it can splice into a raw arithmetic run
-    that Catalyst's expression parser compiles."""
-    import datetime
+def _output_width(spec: "SelectSpec", clauses: dict) -> "int | None":
+    """Column count of a parsed SELECT's output, or None for ``*`` —
+    read off the parse so a correlated subquery (whose DataFrame only
+    analyzes inside its outer query) is checked without analysis."""
+    if spec.star:
+        return None
+    hidden = set(clauses.get("having_hidden", ()))
+    n = len(spec.projections) + sum(
+        1
+        for fn, col, alias in spec.aggregates
+        if (alias or (fn != "_expr" and agg_default_name(fn, col))) not in hidden
+    )
+    n += sum(1 for w in spec.windows if not w[2].startswith(_QUALIFY_HIDDEN))
+    if clauses.get("group_by") and not spec.aggregates:
+        n += 1  # the lenient GROUP BY's implicit COUNT(*)
+    return n
 
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        # Round-10 (advice): bare TRUE/FALSE text is neither a value
-        # expression nor a column to the projection builder, so it fell
-        # into the missing-column-tolerant branch and silently projected
-        # NULL. The CAST form routes through Catalyst's parser.
-        return "CAST(1 AS BOOLEAN)" if v else "CAST(0 AS BOOLEAN)"
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    if isinstance(v, datetime.datetime):
-        return f"TIMESTAMP '{v}'"
-    if isinstance(v, datetime.date):
-        return f"DATE '{v}'"
-    if isinstance(v, float):
-        # Round-10 (advice): repr(inf)/repr(nan) are not valid SQL CAST
-        # bodies — reject rather than splice invalid text.
-        if not math.isfinite(v):
-            raise ParseError(
-                f"scalar subquery resolved to a non-finite float ({v!r}) "
-                "— cannot splice it as a SQL literal"
-            )
-        # A bare decimal-point literal parses as DECIMAL in Spark SQL —
-        # the round-6 hash-divergence class; keep floats DOUBLE-typed.
-        return f"CAST({v!r} AS DOUBLE)"
-    return str(v)
+
+def _in_subquery(left: Column, sub: DataFrame) -> Column:
+    """ANSI three-valued ``left IN (subquery)`` from subquery Columns
+    alone: FALSE over an empty subquery (even for a NULL left side), TRUE
+    on a match, NULL when the left side is NULL or the subquery holds a
+    NULL, FALSE otherwise. Valid in a Filter and in a projection alike —
+    a bare ``isin(sub)`` in a projection plans a two-valued
+    ExistenceJoin, so this form is used in every position."""
+    sub = sub.toDF("__subq_v")
+    return (
+        F.when(~sub.exists(), F.lit(False))
+        .when(left.isin(sub), F.lit(True))
+        .when(
+            left.isNull() | sub.filter(F.col("__subq_v").isNull()).exists(),
+            F.lit(None).cast("boolean"),
+        )
+        .otherwise(F.lit(False))
+    )
+
+
+def _quantified_fold(left: Column, op: str, quant: str, sub: DataFrame) -> Column:
+    """``left <op> ANY|ALL (subquery)`` for the order-decidable pairs:
+    one aggregate over the subquery (row count, non-NULL count, min, max)
+    read from a single struct scalar subquery, folded into a CASE — no
+    join, so the predicate stays in the outer scan stage.
+
+    ``x > ANY(S)`` ⇔ x > min(S); ``x > ALL(S)`` ⇔ x > max(S); ``<> ANY``
+    and ``= ALL`` decide via min ≠ x ∨ max ≠ x. ANSI edges: an empty S
+    makes ANY FALSE and ALL TRUE (even for a NULL x); otherwise a NULL x
+    gives NULL, and a NULL element gives NULL wherever the non-NULL
+    elements cannot decide."""
+    v = F.col(sub.columns[0])
+    st = sub.select(
+        F.struct(
+            F.count(F.lit(1)).alias("n"),
+            F.count(v).alias("nn"),
+            F.min(v).alias("lo"),
+            F.max(v).alias("hi"),
+        )
+    ).scalar()
+    n, nn, lo, hi = (st.getField(f) for f in ("n", "nn", "lo", "hi"))
+    null_b = F.lit(None).cast("boolean")
+    if quant == "any":
+        hit = {
+            "!=": (left != lo) | (left != hi),
+            ">": left > lo,
+            ">=": left >= lo,
+            "<": left < hi,
+            "<=": left <= hi,
+        }[op]
+        empty, decided, undecided = F.lit(False), F.lit(True), F.lit(False)
+    else:
+        # ALL is decided FALSE by any non-NULL element failing the test
+        hit = {
+            "=": (left != lo) | (left != hi),
+            ">": left <= hi,
+            ">=": left < hi,
+            "<": left >= lo,
+            "<=": left > lo,
+        }[op]
+        empty, decided, undecided = F.lit(True), F.lit(False), F.lit(True)
+    return (
+        F.when(n == 0, empty)
+        .when(left.isNull(), null_b)
+        .when(hit, decided)
+        .when(nn < n, null_b)
+        .otherwise(undecided)
+    )
+
+
+#: Words a raw expression run may contain besides column references.
+_RAW_WORDS = frozenset(
+    {
+        "and", "or", "not", "null", "true", "false", "is", "in", "like",
+        "between", "case", "when", "then", "else", "end", "as", "cast",
+        "distinct", "interval", "div", "year", "years", "month", "months",
+        "week", "weeks", "day", "days", "hour", "hours", "minute",
+        "minutes", "second", "seconds",
+    }
+)
 
 
 class ExprParser:
-    """WHERE/HAVING predicate → Spark Column (precedence per expr.go)."""
+    """WHERE/HAVING predicate → Spark Column (precedence per expr.go).
+
+    Subqueries compile to Spark subquery Columns (``DataFrame.scalar()``,
+    ``DataFrame.exists()``, ``Column.isin(DataFrame)``); Catalyst
+    decorrelates and plans them. ``resolver`` builds a parsed subquery's
+    DataFrame — contexts without one reject subqueries. ``scope`` is set
+    while parsing inside a subquery: the lower-cased relation names of
+    its FROM. A qualified column whose qualifier names none of them is an
+    outer reference (``F.col(q).outer()``). ``scalar`` marks a scalar
+    subquery's WHERE, whose correlation must be ``inner = outer``
+    equalities (an equi-join once decorrelated).
+
+    ``subqueries`` counts what the parse saw, by kind: ``scalar``,
+    ``in``, ``exists``, ``quantified``, ``correlated`` (a subquery with
+    outer references) and ``outer`` (outer references made here).
+    Scalar subqueries spliced into raw arithmetic text are bound as hidden
+    ``__subq_scalar_<n>`` columns, appended to ``hidden`` for the caller
+    to add to the frame the predicate runs over."""
 
     COMPARATORS = ("=", "!=", "<>", "<=", ">=", "<", ">")
 
@@ -3659,93 +3743,32 @@ class ExprParser:
         cur: _Cursor,
         weak_typing: bool = False,
         resolver=None,
-        conjunct_in_joins: bool = True,
+        scope: "frozenset[str] | None" = None,
+        scalar: bool = False,
+        hidden: "list[tuple[str, Column]] | None" = None,
     ):
         self.cur = cur
         self.weak = weak_typing
-        # Round-12: when False, even top-level-conjunct IN (SELECT ...)
-        # predicates take the boolean-membership-COLUMN path instead of
-        # the semi/anti-join marker — the DML (UPDATE/DELETE) surface has
-        # no FROM-resolution stage to apply join markers, but can
-        # materialize membership columns on the table frame.
-        self.conjunct_in_joins = conjunct_in_joins
-        # IN (SELECT ...) markers collected during the parse — the caller
-        # rewrites them as semi/anti joins. Only valid as top-level AND
-        # conjuncts of a WHERE (the standard first-class restriction: a
-        # subquery under OR/NOT/parens has no join rewrite), enforced via
-        # ``_sub_ok`` plus growth checks at the OR level.
-        self.subqueries: list[tuple[str, Any, dict, bool]] = []
-        # [NOT] EXISTS (SELECT ...) markers — (spec, clauses, negated).
-        # Same first-class restriction as IN subqueries.
-        self.exists_subqueries: list[tuple[Any, dict, bool]] = []
-        # Round-9: IN (SELECT ...) in NON-conjunct positions (under OR/
-        # NOT/parens) — (placeholder, left_col, spec, clauses). The
-        # executor materializes the membership test as a three-valued
-        # BOOLEAN column on the outer frame (left join against the
-        # deduplicated subquery values), so the predicate tree can use it
-        # anywhere a boolean fits.
-        self.bool_in_subqueries: list[tuple[str, str, Any, dict]] = []
-        # Round-12: [NOT] EXISTS in NON-conjunct positions (under OR/NOT/
-        # parens) — (placeholder, raw body tokens). EXISTS is two-valued
-        # (never UNKNOWN), so the executor materializes a plain boolean
-        # flag column: equality-correlated bodies decorrelate to a
-        # distinct-keys left join (_bool_exists_column); uncorrelated
-        # bodies fold to a constant via one bounded driver probe.
-        self.bool_exists_subqueries: list[tuple[str, list[str]]] = []
-        # Round-13: quantified comparisons — ``expr <op> ANY|ALL|SOME
-        # (SELECT col ...)`` markers: (placeholder, left Column, op,
-        # quantifier, spec, clauses). Materialized by the executor as a
-        # three-valued boolean COLUMN (usable anywhere in the predicate
-        # tree, like the boolean-IN form): ``= ANY`` / ``<> ALL`` are
-        # exact membership (the _bool_in_column join), every other
-        # (op, quantifier) pair folds through ONE distributed aggregate
-        # over the subquery (count/count-nonnull/min/max — 4 scalars to
-        # the driver) into a literal-backed CASE expression.
-        self.quantified_subqueries: list[
-            tuple[str, Column, str, str, Any, dict]
-        ] = []
-        # Round-9: correlated scalar subqueries — (placeholder,
-        # body_tokens, uncorrelated_error). The eager resolver path fails
-        # on outer references; the executor decorrelates (group the inner
-        # by its correlation keys, left-join onto the outer frame).
-        self.correlated_scalars: list[tuple[str, list[str], str]] = []
-        self._sub_ok = True
+        self.resolver = resolver
+        self.scope = scope
+        self.scalar = scalar
+        self.subqueries: Counter = Counter()
+        self.hidden = [] if hidden is None else hidden
         # Round-10: aggregate calls seen while parsing (``COUNT(*)`` /
         # ``SUM(x)`` ... mapped to their default output names) — the
         # HAVING handler uses these to add HIDDEN aggregates for calls
         # that don't appear in the SELECT list (standard SQL allows
         # HAVING over any aggregate; the hidden column drops post-filter).
         self.agg_calls: list[tuple[str, str, str]] = []
-        # Scalar-subquery resolver (round-6 extension): a callable
-        # ``(spec, clauses) -> python value`` the executor supplies.
-        # ``(SELECT agg ...)`` in a comparison position executes the
-        # subquery to a single value at parse time — the same physical
-        # strategy Spark itself uses for uncorrelated scalar subqueries
-        # (execute the subplan, inline the literal into the outer plan).
-        self.resolver = resolver
 
     def parse(self) -> Column:
         return self._or()
 
-    def _no_sub(self):
-        prev, self._sub_ok = self._sub_ok, False
-        return prev
-
     def _or(self) -> Column:
-        n0 = len(self.subqueries) + len(self.exists_subqueries)
         left = self._and()
         while self.cur.peek_kw() == "or":
-            if len(self.subqueries) + len(self.exists_subqueries) > n0:
-                raise ParseError(
-                    "IN/EXISTS (SELECT ...) joined by OR must be "
-                    "parenthesized — write (x IN (SELECT ...)) OR ... or "
-                    "(EXISTS (SELECT ...)) OR ... to use the boolean "
-                    "column form"
-                )
             self.cur.next()
-            prev = self._no_sub()
             left = left | self._and()
-            self._sub_ok = prev
         return left
 
     def _and(self) -> Column:
@@ -3757,16 +3780,39 @@ class ExprParser:
 
     def _not(self) -> Column:
         if self.cur.peek_kw() == "not" and self.cur.peek_kw(1) == "exists":
-            # NOT EXISTS is a single predicate form (anti-join marker),
-            # not a generic negation — let _predicate consume the pair.
+            # NOT EXISTS is one predicate form — _predicate consumes both.
             return self._predicate()
         if self.cur.peek_kw() == "not":
             self.cur.next()
-            prev = self._no_sub()  # NOT (x IN (SELECT ...)) has no rewrite
-            out = ~self._not()
-            self._sub_ok = prev
-            return out
+            return ~self._not()
         return self._predicate()
+
+    def _is_outer(self, tok: str) -> bool:
+        if self.scope is None or "." not in tok or _is_string_lit(tok):
+            return False
+        if _literal_value(tok) is not None:  # 1.5 etc.
+            return False
+        return _unquote(tok).split(".", 1)[0].lower() not in self.scope
+
+    def _raw(self, buf: list[str]) -> Column:
+        """Compile a raw token run with Catalyst's expression parser.
+        Inside a subquery, a run whose column references are all outer
+        is marked outer as a whole; a run mixing inner and outer columns
+        resolves its outer ones through Catalyst's own outer scope."""
+        col = F.expr(" ".join(buf))
+        outer = [t for t in buf if self._is_outer(t)]
+        if not outer:
+            return col
+        self.subqueries["outer"] += 1
+        names = [
+            t
+            for i, t in enumerate(buf)
+            if re.fullmatch(r"[A-Za-z_][\w$.]*", t)
+            and t.lower() not in _RAW_WORDS
+            and (i + 1 == len(buf) or buf[i + 1] != "(")
+            and (i == 0 or buf[i - 1].lower() != "as")
+        ]
+        return col.outer() if len(names) == len(outer) else col
 
     # round-10: || (string concat) joins the arithmetic re-lex set, so
     # ``WHERE a || 'X' = ...`` compiles like any computed comparison side
@@ -3780,14 +3826,13 @@ class ExprParser:
 
         def one_operand(out: list[str]) -> None:
             if self.cur.peek() == "(" and self.cur.peek_kw(1) == "select":
-                # Round-9: scalar subquery INSIDE an arithmetic run —
-                # ``2 * (SELECT AVG(x) FROM t ...)``. Resolve it here
-                # (eager literal, or correlated placeholder column) and
-                # splice the result back as a token; the raw re-lex would
-                # otherwise hand the subquery text to Catalyst's parser,
-                # which cannot see this engine's tables.
-                col, lit, ph = self._scalar_subquery()
-                out.append(ph if col is not None else _sql_literal_text(lit))
+                # A scalar subquery inside the run — ``2 * (SELECT AVG(x)
+                # FROM t)`` — is bound as a hidden column and its name
+                # spliced into the text (Catalyst's expression parser
+                # cannot see this engine's tables).
+                ph = f"__subq_scalar_{len(self.hidden)}"
+                self.hidden.append((ph, self._scalar_subquery(ph)))
+                out.append(ph)
                 return
             t = self.cur.next()
             if t == "(":
@@ -3840,58 +3885,76 @@ class ExprParser:
         keep the reference path (literal typing, weak-mode dual compare,
         HAVING aggregate-call names)."""
         start = self.cur.i
-        n_scalars = len(self.correlated_scalars)
+        seen, n_hidden = self.subqueries.copy(), len(self.hidden)
         expr, lit, name = self._operand()
         if self.cur.peek() not in self._ARITH_OPS:
             return expr, lit, name
-        self.cur.i = start  # rewind; rebuild the whole run as raw text
-        # Roll back any correlated-scalar markers the first parse pass
-        # registered — the re-lex re-registers them (a stale marker would
-        # add a dead LEFT JOIN whose placeholder nothing references).
-        # Round-9: the re-lex handles scalar subqueries itself (eager
-        # literal text / correlated placeholder), so subquery-first
-        # arithmetic like ``(SELECT AVG(x) ...) * 2 > y`` works too.
-        del self.correlated_scalars[n_scalars:]
-        return F.expr(" ".join(self._collect_arith_tokens())), None, None
+        # rewind and rebuild the whole run as raw text; the re-lex parses
+        # any subquery in it again, so forget the first pass's count
+        self.cur.i = start
+        self.subqueries, self.hidden[n_hidden:] = seen, []
+        return self._raw(self._collect_arith_tokens()), None, None
 
-    def _scalar_subquery(self) -> tuple[Column | None, Any, str | None]:
-        """Consume ``( SELECT ... )`` positioned ON the '('. Returns
-        (placeholder_column, None, placeholder_name) for a CORRELATED
-        subquery — the executor decorrelates it and binds the placeholder
-        — or (None, literal, None) for an uncorrelated one (executed
-        eagerly, Spark's own inline-the-scalar strategy). Correlation is
-        pre-detected textually from alias-qualified outer references
-        (skipping the doomed eager attempt); an eager AnalysisException
-        still falls back to the marker so the executor can report the
-        precise decorrelation error."""
+    def _subquery(self, kind: str) -> DataFrame:
+        """Parse the ``SELECT ...`` at the cursor (the caller consumes the
+        enclosing parentheses) into its DataFrame. ``kind`` is one of
+        ``scalar``, ``in``, ``exists``, ``quantified``."""
+        what = {
+            "scalar": "scalar subquery",
+            "in": "IN (SELECT ...) subquery",
+            "exists": "EXISTS subquery",
+            "quantified": "ANY/ALL subquery",
+        }[kind]
         if self.resolver is None:
-            raise ParseError(
-                "scalar subqueries are not supported in this context"
-            )
-        self.cur.next()  # '('
-        start = self.cur.i
-        spec2, _, clauses2 = parse_select(
-            self.cur, self.weak, resolver=self.resolver, subquery=True
+            raise ParseError(f"{what} is not supported in this context")
+        spec, _, clauses = parse_select(
+            self.cur, self.weak, resolver=self.resolver, subquery=kind
         )
+        self.subqueries[kind] += 1
+        if spec.correlated:
+            self.subqueries["correlated"] += 1
+            if kind == "quantified":
+                raise ParseError(
+                    "quantified comparison (ANY/ALL) subqueries must be "
+                    "uncorrelated"
+                )
+        if kind == "exists":
+            for bad in ("group_by", "having", "order_by", "limit", "offset"):
+                if bad in clauses:
+                    raise ParseError(
+                        f"EXISTS subqueries do not support {bad.upper()} "
+                        "(the projection/grouping is irrelevant to EXISTS)"
+                    )
+            if spec.aggregates:
+                # ANSI: an ungrouped-aggregate subquery yields ONE row
+                # even over empty input, so EXISTS over it is constant
+                # TRUE — reject rather than let a row test diverge.
+                raise ParseError(
+                    "EXISTS over an ungrouped-aggregate subquery is "
+                    "always TRUE (the aggregate yields one row even on "
+                    "empty input) — drop the aggregate or compare the "
+                    "scalar subquery's value instead"
+                )
+        sub = self.resolver(spec, clauses)
+        if kind != "exists":
+            width = _output_width(spec, clauses)
+            if width is None and not spec.correlated:
+                width = len(sub.columns)
+            if width not in (None, 1):
+                raise ParseError(f"{what} must select exactly one column")
+        return sub
+
+    def _scalar_subquery(self, name: str | None = None) -> Column:
+        """Consume ``( SELECT ... )`` positioned ON the '(' and return its
+        value as a scalar subquery Column: NULL over zero rows (ANSI);
+        more than one row fails the statement when it runs
+        (SCALAR_SUBQUERY_TOO_MANY_ROWS). ``name`` names the subquery's
+        output column — a hidden binding's name, so plans show it."""
+        self.cur.next()  # '('
+        sub = self._subquery("scalar")
         if self.cur.next() != ")":
             raise ParseError("expected ')' after scalar subquery")
-        end = self.cur.i - 1
-        body = list(self.cur.toks[start:end])
-        try:
-            correlated = bool(_split_correlated(body)[2])
-        except ParseError:
-            correlated = False  # let the eager path report its error
-        err = ""
-        if not correlated:
-            try:
-                return None, self.resolver(spec2, clauses2), None
-            except AnalysisException as e:
-                # Unqualified outer reference (or a real error) — the
-                # executor's decorrelation gives the precise message.
-                err = str(e)
-        ph = f"__subq_scalar_{len(self.correlated_scalars)}"
-        self.correlated_scalars.append((ph, body, err))
-        return F.col(ph), None, ph
+        return (sub.toDF(name) if name else sub).scalar()
 
     def _operand(self) -> tuple[Column | None, Any, str | None]:
         """Returns (column_expr, literal_value, column_name). Exactly one of
@@ -3899,24 +3962,10 @@ class ExprParser:
         sub-expressions return a boolean column_expr."""
         t = self.cur.peek()
         if t == "(" and self.cur.peek_kw(1) == "select":
-            # Round-6 extension: uncorrelated scalar subquery in operand
-            # position — ``WHERE x > (SELECT AVG(y) FROM t)``. Executed
-            # eagerly by the resolver; 0 rows ⇒ NULL (ANSI), >1 row errors.
-            # Round-9: correlated scalar subqueries — ``(SELECT AVG(y)
-            # FROM t WHERE t.k = o.k)`` — fail the eager path on the
-            # unresolvable outer reference; the raw tokens are recorded as
-            # a marker and the EXECUTOR decorrelates (group the inner by
-            # its equality-correlation keys, left-join onto the outer
-            # frame — one bounded shuffle, never a per-row re-execution).
-            # Outer references must be alias-qualified (same contract as
-            # correlated EXISTS).
-            col, lit, _ph = self._scalar_subquery()
-            return col, lit, None
+            return self._scalar_subquery(), None, None
         if t == "(":
             self.cur.next()
-            prev = self._no_sub()  # parenthesized conjuncts have no rewrite
             inner = self._or()
-            self._sub_ok = prev
             if self.cur.next() != ")":
                 raise ParseError("expected ')'")
             return inner, None, None
@@ -3978,15 +4027,21 @@ class ExprParser:
                 r"\.[A-Za-z_][\w$.]*", self.cur.peek()
             ):
                 buf.append(self.cur.next())
-            return F.expr(" ".join(buf)), None, None
+            return self._raw(buf), None, None
         name = _unquote(tok)
+        if self._is_outer(tok):
+            self.subqueries["outer"] += 1
+            return F.col(name).outer(), None, name
         return F.col(name), None, name
 
     def _compare(self, left: Column | None, lname: str | None, op: str) -> Column:
+        subq = self.cur.peek() == "(" and self.cur.peek_kw(1) == "select"
         rexpr, rlit, _ = self._value_operand()
         op = "!=" if op == "<>" else op
-        if self.weak and lname is not None and rexpr is None:
-            return dual_compare(left, op, rlit)
+        if self.weak and lname is not None and (rexpr is None or subq):
+            # weak typing compares against a literal or a scalar
+            # subquery's value numerically when both sides parse
+            return dual_compare(left, op, rexpr if subq else rlit)
         right = rexpr if rexpr is not None else F.lit(rlit)
         ops = {
             "=": lambda a, b: a == b,
@@ -4000,44 +4055,29 @@ class ExprParser:
 
     def _quantified(self, left: Column, op: str) -> Column:
         """Round-13: ``expr <op> ANY|ALL|SOME (SELECT col ...)`` — the
-        ANSI quantified comparison (DuckDB runs the identical syntax).
-        Positioned ON the quantifier keyword. Parses the subquery and
-        records a marker; the EXECUTOR materializes a three-valued
-        boolean placeholder column (_quantified_column), so the predicate
-        composes anywhere in the tree — conjuncts, OR, NOT, parens.
-        SOME is the ANSI synonym for ANY. Subqueries must be
-        UNCORRELATED (same scope rule as the IN form)."""
-        if self.resolver is None:
-            raise ParseError(
-                "quantified comparisons (ANY/ALL) are not supported in "
-                "this context"
-            )
+        ANSI quantified comparison (DuckDB runs the identical syntax),
+        positioned ON the quantifier keyword. SOME is the ANSI synonym
+        for ANY. ``= ANY`` is IN and ``<> ALL`` is NOT IN; every other
+        pair folds through one aggregate (_quantified_fold). Subqueries
+        must be uncorrelated."""
         qk = self.cur.next().lower()
         self.cur.next()  # '('
         if self.cur.peek_kw() != "select":
             raise ParseError(
                 f"{qk.upper()} needs a subquery: {qk.upper()} (SELECT ...)"
             )
-        spec2, _, clauses2 = parse_select(
-            self.cur, self.weak, resolver=self.resolver, subquery=True
-        )
+        sub = self._subquery("quantified")
         if self.cur.next() != ")":
             raise ParseError(f"expected ')' after {qk.upper()} subquery")
         op = "!=" if op == "<>" else op
         quant = "any" if qk == "some" else qk
-        ph = f"__subq_quant_{len(self.quantified_subqueries)}"
-        self.quantified_subqueries.append(
-            (ph, left, op, quant, spec2, clauses2)
-        )
-        return F.col(ph)
+        if quant == "any" and op == "=":
+            return _in_subquery(left, sub)
+        if quant == "all" and op == "!=":
+            return ~_in_subquery(left, sub)
+        return _quantified_fold(left, op, quant, sub)
 
     def _predicate(self) -> Column:
-        # Round-6 extension: [NOT] EXISTS (SELECT ... [WHERE <pred>]) —
-        # the <pred> may reference alias-qualified OUTER columns
-        # (correlation); the executor joins it as left-semi / left-anti
-        # with <pred> as the join condition. NOT EXISTS needs no
-        # null-aware handling (unlike NOT IN): anti join IS its ANSI
-        # semantics.
         k0 = self.cur.peek_kw()
         neg_exists = False
         if k0 == "not" and self.cur.peek_kw(1) == "exists":
@@ -4045,49 +4085,18 @@ class ExprParser:
             neg_exists = True
             k0 = "exists"
         if k0 == "exists":
-            if not self._sub_ok:
-                # Round-12: EXISTS under OR/NOT/parens — no semi-join
-                # rewrite applies, so it becomes a BOOLEAN flag column
-                # (EXISTS is two-valued, so unlike the IN form there is
-                # no UNKNOWN branch). The body is captured raw; the
-                # executor decorrelates equality-correlated bodies to a
-                # distinct-keys left join (_bool_exists_column).
-                self.cur.next()
-                if self.cur.next() != "(":
-                    raise ParseError("expected '(' after EXISTS")
-                toks = _capture_balanced_tokens(self.cur)
-                ph = f"__subq_exbool_{len(self.bool_exists_subqueries)}"
-                self.bool_exists_subqueries.append((ph, toks))
-                out = F.col(ph)
-                return ~out if neg_exists else out
+            # [NOT] EXISTS (SELECT ...): the body may reference outer
+            # columns; as a top-level conjunct Catalyst plans it as a
+            # LeftSemi / LeftAnti join.
             self.cur.next()
             if self.cur.next() != "(":
                 raise ParseError("expected '(' after EXISTS")
-            spec2, _, clauses2 = parse_select(
-                self.cur, self.weak, resolver=self.resolver
-            )
+            sub = self._subquery("exists")
             if self.cur.next() != ")":
                 raise ParseError("expected ')' after EXISTS subquery")
-            for bad in ("group_by", "having", "order_by", "limit", "offset"):
-                if bad in clauses2:
-                    raise ParseError(
-                        f"EXISTS subqueries do not support {bad.upper()} "
-                        "(the projection/grouping is irrelevant to EXISTS)"
-                    )
-            if spec2.aggregates:
-                # ANSI: an ungrouped-aggregate subquery yields ONE row
-                # even over empty input, so EXISTS over it is constant
-                # TRUE — a row-existence rewrite would silently diverge
-                # (round-13 advice). Reject loudly, like GROUP BY above.
-                raise ParseError(
-                    "EXISTS over an ungrouped-aggregate subquery is "
-                    "always TRUE (the aggregate yields one row even on "
-                    "empty input) — drop the aggregate or compare the "
-                    "scalar subquery's value instead"
-                )
-            self.exists_subqueries.append((spec2, clauses2, neg_exists))
-            # The join IS the predicate; the conjunct slot stays TRUE.
-            return F.lit(True)
+            return ~sub.exists() if neg_exists else sub.exists()
+        outer0 = self.subqueries["outer"]
+        grouped = self.cur.peek() == "(" and self.cur.peek_kw(1) != "select"
         expr, lit, name = self._value_operand()
         left = expr if expr is not None else F.lit(lit)
 
@@ -4100,6 +4109,7 @@ class ExprParser:
             negate = True
             nxt = self.cur.peek_kw()
 
+        op = None
         if nxt in (t.lower() for t in self.COMPARATORS):
             op = self.cur.next()
             if (
@@ -4114,33 +4124,15 @@ class ExprParser:
             if self.cur.next() != "(":
                 raise ParseError("expected '(' after IN")
             if self.cur.peek_kw() == "select":
-                # Dialect extension: ``x [NOT] IN (SELECT single_col ...)``
-                # — as a top-level WHERE conjunct, recorded as a marker;
-                # the executor rewrites it as a left-semi join (IN) or a
-                # null-aware left-anti join (NOT IN, exact ANSI
-                # three-valued semantics). Nested subqueries compose (the
-                # rewrite recurses). Round-9: in NON-conjunct positions
-                # (under OR, NOT, or parentheses) the membership test
-                # instead becomes a three-valued boolean COLUMN on the
-                # outer frame (see _resolved_from) — same ANSI semantics,
-                # usable anywhere in the predicate tree.
-                if name is None:
-                    raise ParseError(
-                        "IN (SELECT ...) needs a column on the left side"
-                    )
-                spec2, _, clauses2 = parse_select(
-                    self.cur, self.weak, resolver=self.resolver
-                )
+                # Dialect extension: ``x [NOT] IN (SELECT single_col
+                # ...)`` — exact ANSI three-valued membership in any
+                # position (_in_subquery); NOT folds through it by Kleene
+                # logic.
+                sub = self._subquery("in")
                 if self.cur.next() != ")":
                     raise ParseError("expected ')' after subquery")
-                if not self._sub_ok or not self.conjunct_in_joins:
-                    ph = f"__subq_inbool_{len(self.bool_in_subqueries)}"
-                    self.bool_in_subqueries.append((ph, name, spec2, clauses2))
-                    out = F.col(ph)
-                    return ~out if negate else out
-                self.subqueries.append((name, spec2, clauses2, negate))
-                # The join IS the predicate; the conjunct slot stays TRUE.
-                return F.lit(True)
+                out = _in_subquery(left, sub)
+                return ~out if negate else out
             vals: list[Any] = []
             while True:
                 tok = self.cur.next()
@@ -4218,6 +4210,17 @@ class ExprParser:
             # Bare operand ⇒ truthiness (expr.go:515-517); parenthesized
             # boolean sub-expressions pass through unchanged.
             out = left if expr is not None and name is None else truthy(left)
+        if (
+            self.scalar
+            and op != "="
+            and not grouped
+            and self.subqueries["outer"] > outer0
+        ):
+            raise ParseError(
+                "correlated conjuncts in a scalar subquery must be "
+                "equalities 'inner_col = outer.col' (an equi-join once "
+                "decorrelated, never a nested-loop join)"
+            )
         return ~out if negate else out
 
 
@@ -4244,39 +4247,15 @@ class SelectSpec:
     windows: list[tuple[str, list, str, list, list]] = field(
         default_factory=list
     )  # (fn, args, alias, partition_cols, [(order_col, desc)])
-    # Dialect extension: x [NOT] IN (SELECT col ...) markers from WHERE —
-    # rewritten by the executor as semi/anti joins.
-    in_subqueries: list[tuple[str, "SelectSpec", dict, bool]] = field(
-        default_factory=list
-    )
-    # Dialect extension (round-6): [NOT] EXISTS (SELECT ... WHERE <pred>)
-    # markers — the subquery's WHERE (which may reference alias-qualified
-    # OUTER columns: correlation) becomes the join condition of a
-    # left-semi (EXISTS) / left-anti (NOT EXISTS) join.
-    # Round-9: IN (SELECT ...) in non-conjunct positions — materialized
-    # as a three-valued boolean column (placeholder, left_col, spec,
-    # clauses); and correlated scalar subqueries (placeholder, raw body
-    # tokens, uncorrelated-attempt error) decorrelated by the executor.
-    bool_in_subqueries: list[tuple[str, str, "SelectSpec", dict]] = field(
-        default_factory=list
-    )
-    # Round-12: [NOT] EXISTS in non-conjunct positions — (placeholder,
-    # raw body tokens); materialized as a boolean flag column.
-    bool_exists_subqueries: list[tuple[str, list]] = field(
-        default_factory=list
-    )
-    # Round-13: quantified comparisons ``expr <op> ANY|ALL|SOME
-    # (SELECT ...)`` — (placeholder, left Column, op, quantifier, spec,
-    # clauses); materialized as a three-valued boolean column.
-    quantified_subqueries: list[tuple[str, Column, str, str, "SelectSpec", dict]] = field(
-        default_factory=list
-    )
-    scalar_subqueries: list[tuple[str, list, str]] = field(
-        default_factory=list
-    )
-    exists_subqueries: list[tuple["SelectSpec", dict, bool]] = field(
-        default_factory=list
-    )
+    # Scalar subqueries bound as hidden ``__subq_scalar_<n>`` columns on
+    # the FROM frame: WHERE arithmetic splices their names into raw text
+    # and SELECT-list subqueries project them.
+    hidden: list[tuple[str, Column]] = field(default_factory=list)
+    # True when qualified references must resolve against this FROM's
+    # table name — the SELECT has subqueries, or is one.
+    scoped: bool = False
+    # A subquery whose WHERE references columns of an enclosing query.
+    correlated: bool = False
     # Dialect extension: [INNER|LEFT|RIGHT|FULL [OUTER]] JOIN t [AS x] ON cond
     joins: list[tuple[str, str, "str | None", Column]] = field(
         default_factory=list
@@ -4321,9 +4300,9 @@ def _contains_agg_call(buf: list[str]) -> bool:
     (``fn (`` for a known aggregate name) and no window form (no OVER) —
     the round-10 rule that routes aggregate-wrapping expressions like
     ``round(AVG(x), 2)`` to the aggregate list instead of the
-    post-aggregation projection path. Scalar subqueries were already
-    resolved out of the buffer by this point, so any aggregate name seen
-    here belongs to this SELECT."""
+    post-aggregation projection path. SELECT-list scalar subqueries never
+    reach the buffer, so any aggregate name seen here belongs to this
+    SELECT."""
     has_agg = False
     for i, t in enumerate(buf):
         low = t.lower()
@@ -4572,19 +4551,20 @@ def _over_body(cur: _Cursor) -> tuple[list, list, "tuple | None"]:
 
 def parse_select(
     cur: _Cursor, weak_typing: bool = False, resolver=None,
-    subquery: bool = False,
+    subquery: str | None = None,
 ) -> tuple[SelectSpec, Query | None, dict]:
     """Parse SELECT ... and return (spec, clauses) — assembly happens in
-    execute_select where the DataFrame is available. ``resolver`` (optional)
-    executes uncorrelated scalar subqueries to literals (RefSQL supplies
-    it; contexts without an engine parse without scalar-subquery support).
-    ``subquery=True`` (round-11, found by differential sweep) relaxes the
-    dialect's expression-alias requirement: inside a SCALAR subquery the
-    output name is never observable (the value is spliced), and standard
-    SQL allows ``(SELECT round(AVG(x), 2) FROM t)`` unaliased — such items
-    get an internal auto-alias instead of raising."""
+    build_select where the DataFrame is available. ``resolver`` (optional)
+    builds a parsed subquery's DataFrame (RefSQL supplies it; contexts
+    without an engine reject subqueries). ``subquery`` names the form
+    this SELECT is the body of (``scalar``, ``in``, ``exists``,
+    ``quantified``): its WHERE then marks references to other relations
+    as outer, and the dialect's expression-alias requirement is relaxed —
+    a subquery's output name is never observable, and standard SQL allows
+    ``(SELECT round(AVG(x), 2) FROM t)`` unaliased, so such items get an
+    internal auto-alias instead of raising."""
     cur.expect_kw("select")
-    spec = SelectSpec(table="")
+    spec = SelectSpec(table="", scoped=bool(subquery))
     if cur.peek_kw() == "distinct":
         cur.next()
         if cur.peek_kw() == "on":
@@ -4606,6 +4586,7 @@ def parse_select(
             spec.distinct = True
 
     # projection list until FROM
+    scalar_items: list[tuple[int, list[str]]] = []
     while cur.peek_kw() != "from":
         if (
             cur.done()
@@ -4625,15 +4606,10 @@ def parse_select(
             cur.toks[cur.i:cur.i] = ["from", DUAL_TABLE]
             break
         if cur.peek() == "(" and cur.peek_kw(1) == "select":
-            # Round-9: scalar subquery in the SELECT list — ``SELECT a,
-            # (SELECT max(x) FROM t) AS m FROM ...``. An UNCORRELATED
-            # body resolves eagerly to a literal (Spark's own
-            # inline-the-scalar strategy). Round-12: a CORRELATED body
-            # (``(SELECT count(*) FROM i WHERE i.k = o.k)``) routes to
-            # the same decorrelator as the WHERE form — groupBy the
-            # correlation keys + one LEFT join, COUNT coalesced to 0 —
-            # with the user's alias as the attached column name. AS
-            # alias mandatory (a subquery has no natural output name).
+            # Scalar subquery in the SELECT list — ``SELECT a, (SELECT
+            # max(x) FROM t) AS m FROM ...``, correlated or not. AS alias
+            # mandatory (a subquery has no natural output name); bound
+            # after the clauses parse (_bind_select_scalars).
             if resolver is None:
                 raise ParseError(
                     "scalar subqueries are not supported in this context"
@@ -4646,15 +4622,8 @@ def parse_select(
                 )
             cur.next()
             alias = _unquote(cur.next())
-            spec2, _, clauses2 = parse_select(
-                _Cursor(list(body)), weak_typing, resolver, subquery=True
-            )
-            try:
-                val = resolver(spec2, clauses2)
-                spec.projections.append((_sql_literal_text(val), alias))
-            except AnalysisException as exc:
-                spec.scalar_subqueries.append((alias, list(body), str(exc)))
-                spec.projections.append((alias, None))
+            scalar_items.append((len(spec.projections), body))
+            spec.projections.append(("", alias))
             continue
         tok = cur.next()
         if tok == ",":
@@ -5491,14 +5460,7 @@ def parse_select(
         cur.expect_kw("on")
         onp = ExprParser(cur, weak_typing, resolver)
         cond = onp.parse()
-        if (
-            onp.subqueries
-            or onp.exists_subqueries
-            or onp.bool_in_subqueries
-            or onp.bool_exists_subqueries
-            or onp.correlated_scalars
-            or onp.quantified_subqueries
-        ):
+        if onp.hidden or _predicate_subqueries(onp, "scalar"):
             raise ParseError("subqueries are not supported in JOIN ... ON")
         spec.joins.append((how, jtable, jalias, cond))
 
@@ -5507,14 +5469,24 @@ def parse_select(
         kw = cur.peek_kw()
         if kw == "where":
             cur.next()
-            wp = ExprParser(cur, weak_typing, resolver)
+            scope = None
+            if subquery:
+                scope = frozenset(
+                    n.lower()
+                    for n in (
+                        spec.table,
+                        spec.alias,
+                        *[ja or jt for _, jt, ja, _ in spec.joins],
+                    )
+                    if isinstance(n, str)
+                )
+            wp = ExprParser(
+                cur, weak_typing, resolver, scope=scope,
+                scalar=subquery == "scalar", hidden=spec.hidden,
+            )
             clauses["where"] = wp.parse()
-            spec.in_subqueries.extend(wp.subqueries)
-            spec.exists_subqueries.extend(wp.exists_subqueries)
-            spec.bool_in_subqueries.extend(wp.bool_in_subqueries)
-            spec.bool_exists_subqueries.extend(wp.bool_exists_subqueries)
-            spec.quantified_subqueries.extend(wp.quantified_subqueries)
-            spec.scalar_subqueries.extend(wp.correlated_scalars)
+            spec.correlated = wp.subqueries["outer"] > 0
+            spec.scoped = spec.scoped or sum(wp.subqueries.values()) > 0
         elif kw == "group":
             cur.next()
             cur.expect_kw("by")
@@ -5618,18 +5590,13 @@ def parse_select(
             cur.next()
             hp = ExprParser(cur, weak_typing, resolver)
             clauses["having"] = hp.parse()
-            if (
-                hp.subqueries
-                or hp.exists_subqueries
-                or hp.bool_in_subqueries
-                or hp.bool_exists_subqueries
-                or hp.correlated_scalars
-                or hp.quantified_subqueries
-            ):
+            if _predicate_subqueries(hp):
                 raise ParseError(
-                    "IN/EXISTS/ANY/ALL subqueries are not supported in "
-                    "HAVING"
+                    "IN/EXISTS/ANY/ALL and correlated subqueries are not "
+                    "supported in HAVING"
                 )
+            if hp.hidden:
+                clauses["having_bind"] = hp.hidden
             # Round-10: HAVING over an aggregate NOT in the SELECT list
             # (``SELECT g, MAX(v) AS m ... HAVING COUNT(*) > 2``) —
             # standard SQL. Add each missing call as a HIDDEN aggregate
@@ -5737,14 +5704,7 @@ def parse_select(
             cur.next()
             qp = ExprParser(cur, weak_typing, resolver)
             clauses["qualify"] = qp.parse()
-            if (
-                qp.subqueries
-                or qp.exists_subqueries
-                or qp.bool_in_subqueries
-                or qp.bool_exists_subqueries
-                or qp.correlated_scalars
-                or qp.quantified_subqueries
-            ):
+            if qp.hidden or _predicate_subqueries(qp, "scalar"):
                 raise ParseError("subqueries are not supported in QUALIFY")
         elif kw == "window":
             # Round-8: ``WINDOW w AS ([PARTITION BY ...] [ORDER BY ...]
@@ -5796,7 +5756,78 @@ def parse_select(
                 part, order, frame = defs[part]
             resolved_w.append((fn, args, alias, part, order, frame))
         spec.windows = resolved_w
+    if scalar_items:
+        _bind_select_scalars(spec, clauses, scalar_items, weak_typing, resolver)
     return spec, None, clauses
+
+
+def _predicate_subqueries(ep: ExprParser, *also: str) -> int:
+    """How many IN/EXISTS/ANY/ALL or correlated subqueries (plus the
+    kinds in ``also``) a parse saw."""
+    kinds = ("in", "exists", "quantified", "correlated", *also)
+    return sum(ep.subqueries[k] for k in kinds)
+
+
+def _bind_select_scalars(
+    spec: SelectSpec,
+    clauses: dict,
+    items: list[tuple[int, list[str]]],
+    weak_typing: bool,
+    resolver,
+) -> None:
+    """Bind the SELECT list's scalar subqueries (``(position, body
+    tokens)``) as hidden columns and point their projection slots at
+    them. In an ungrouped SELECT, bodies whose single item is a call and
+    whose FROM/WHERE tails match share ONE struct-valued scalar subquery
+    — ``(SELECT count(*) ...), (SELECT sum(v) ...)`` become ``struct(
+    count(*) AS f0, sum(v) AS f1)`` read back field by field — because
+    Catalyst merges uncorrelated scalar subqueries but not correlated
+    ones, and each correlated scalar would otherwise cost its own
+    aggregate and join."""
+    batches: dict[tuple, list[tuple[int, list[str], list[str]]]] = {}
+    bodies = dict(items)
+    grouped = bool(spec.aggregates or clauses.get("group_by"))
+    for pos, body in items:
+        depth, fi = 0, None
+        for i, t in enumerate(body):
+            depth += (t == "(") - (t == ")")
+            if depth == 0 and t.lower() == "from":
+                fi = i
+                break
+        head = body[1:fi]
+        if len(head) > 2 and head[-2].lower() == "as":
+            head = head[:-2]
+        depth, batchable = 0, fi is not None and head[-1:] == [")"]
+        for t in head:
+            depth += (t == "(") - (t == ")")
+            batchable = batchable and not (depth == 0 and t == ",")
+        if batchable and not grouped and head[0].lower() != "distinct":
+            key: tuple = tuple(body[fi:])
+        else:
+            key = ("__solo__", pos)
+        batches.setdefault(key, []).append((pos, head, body[fi:] if fi else []))
+    for members in batches.values():
+        ph = f"__subq_scalar_{len(spec.hidden)}"
+        if len(members) == 1:
+            pos = members[0][0]
+            cur = _Cursor(["(", *bodies[pos], ")"])
+            col = ExprParser(cur, weak_typing, resolver)._scalar_subquery(ph)
+            spec.hidden.append((ph, col))
+            spec.projections[pos] = (ph, spec.projections[pos][1])
+            continue
+        toks = ["select"]
+        for i, (_, head, _) in enumerate(members):
+            toks += [","] * bool(i) + [*head, "as", f"f{i}"]
+        cur = _Cursor(toks + members[0][2])
+        sub_spec, _, sub_clauses = parse_select(
+            cur, weak_typing, resolver, subquery="scalar"
+        )
+        fields = [F.col(f"f{i}") for i in range(len(members))]
+        sub = resolver(sub_spec, sub_clauses).select(F.struct(*fields))
+        spec.hidden.append((ph, sub.scalar()))
+        for i, (pos, _, _) in enumerate(members):
+            spec.projections[pos] = (f"{ph}.f{i}", spec.projections[pos][1])
+    spec.scoped = True
 
 
 _INTERVAL_MICROS = {
@@ -6019,6 +6050,9 @@ def _window_column(
 def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
     if "qualify" in clauses and not spec.windows:
         raise ParseError("QUALIFY requires a window function in the SELECT")
+    hidden = dict(spec.hidden)
+    if hidden:
+        df = df.withColumns(hidden)
     if spec.distinct_on:
         # Round-9: DISTINCT ON (cols) — keep the FIRST row per group
         # under the statement's ORDER BY (DuckDB/Postgres semantics),
@@ -6171,7 +6205,7 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
     if spec.aggregates:
         q.agg(*[agg_spec(fn, col, alias) for fn, col, alias in spec.aggregates])
     if "having" in clauses:
-        q.having(clauses["having"])
+        q.having(clauses["having"], clauses.get("having_bind"))
     if grouped_windows:
         # Round-6: windows OVER the aggregated frame — standard SQL
         # evaluation (GROUP BY → HAVING → window functions), so ``RANK()
@@ -6294,6 +6328,10 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
                 base = F.col(gmap[name]).alias(name if alias is None else alias)
                 cols.append(base)
                 continue
+            if grouped and name in hidden:
+                # a scalar subquery evaluates over the aggregated rows
+                cols.append(hidden[name].alias(alias))
+                continue
             if is_value_expr(name):
                 base = F.expr(name)
             elif "." in name:
@@ -6331,16 +6369,17 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
         if len(spec.star_exclude) >= len(out.columns):
             raise ParseError("EXCLUDE cannot remove every column")
         out = out.drop(*spec.star_exclude)
-    # Round-9: boolean-IN / correlated-scalar placeholder columns are
-    # internal — they exist so the WHERE can reference them; a SELECT *
-    # must not surface them.
-    leak = [
-        c
-        for c in out.columns
-        if c.startswith("__subq_") or c.startswith(_QUALIFY_HIDDEN)
-    ]
-    if leak:
-        out = out.drop(*leak)
+    # Hidden scalar-subquery and QUALIFY-only window columns are internal;
+    # a SELECT * must not surface them. (Checked only when some exist: a
+    # correlated subquery's frame cannot list its columns on its own.)
+    if hidden or any(w[2].startswith(_QUALIFY_HIDDEN) for w in spec.windows):
+        leak = [
+            c
+            for c in out.columns
+            if c.startswith("__subq_") or c.startswith(_QUALIFY_HIDDEN)
+        ]
+        if leak:
+            out = out.drop(*leak)
     return out
 
 
@@ -6479,9 +6518,7 @@ class RefSQL:
             return _read_file_df(self.engine.spark, path, fmt)
         if isinstance(jtable, tuple) and jtable[0] == "__subselect__":
             _, sub_spec, sub_clauses, cols = jtable
-            df = build_select(
-                self._resolved_from(sub_spec), sub_spec, sub_clauses
-            )
+            df = self._build(sub_spec, sub_clauses)
             if cols is not None:
                 if len(cols) != len(df.columns):
                     raise ParseError(
@@ -6645,7 +6682,7 @@ class RefSQL:
                     "VERSION AS OF applies to tables, not derived tables"
                 )
             dspec, dclauses = spec.derived
-            df = build_select(self._resolved_from(dspec), dspec, dclauses)
+            df = self._build(dspec, dclauses)
             if spec.derived_cols is not None:
                 if len(spec.derived_cols) != len(df.columns):
                     raise ParseError(
@@ -6773,8 +6810,10 @@ class RefSQL:
                     df = df.join(jdf, list(cond), how)
                 else:
                     df = df.join(jdf, cond, how)
-        elif spec.alias:
-            df = df.alias(spec.alias)
+        elif spec.alias or spec.scoped:
+            # qualified references (``x.col``, and a subquery's outer
+            # references) resolve against the relation's name
+            df = df.alias(spec.alias or spec.table)
         return df
 
     def _asof(
@@ -7248,421 +7287,10 @@ class RefSQL:
             cond = c if cond is None else (cond & c)
         return outer.join(lat, cond, "left" if left else "inner").drop(*kcols)
 
-    def _resolved_from(self, spec: "SelectSpec") -> DataFrame:
-        """FROM resolution plus the IN-subquery join rewrites: each
-        ``x IN (SELECT c FROM ...)`` marker becomes a left-semi join
-        against the (recursively resolved) subquery result; ``NOT IN``
-        becomes the null-aware left-anti join that reproduces ANSI
-        three-valued semantics exactly — a NULL on either side makes the
-        membership test unknown, which filters the row. The subquery side
-        is deduplicated before the join (semi/anti cardinality is per left
-        row anyway; distinct keeps the build side minimal)."""
-        df = self._from_df(spec)
-        if (spec.exists_subqueries or spec.scalar_subqueries) and not (
-            spec.joins or spec.alias
-        ):
-            # Correlated predicates reference the outer table by (alias-)
-            # qualified name; make sure the outer frame carries one.
-            df = df.alias(spec.table)
-        for spec2, clauses2, anti in spec.exists_subqueries:
-            # [NOT] EXISTS rewrite (round-6): the subquery's WHERE — which
-            # may reference alias-qualified OUTER columns — becomes the
-            # join condition of a left-semi / left-anti join. The inner
-            # projection is irrelevant to EXISTS; the inner frame joins
-            # whole (Catalyst prunes the unused columns). Anti join IS
-            # ANSI NOT EXISTS — no null-aware wrapping needed (unlike
-            # NOT IN). Uncorrelated EXISTS degenerates to a constant-true
-            # join condition, which Catalyst folds.
-            inner = self._resolved_from(spec2)
-            if not (spec2.joins or spec2.alias):
-                inner = inner.alias(spec2.table)
-            cond = clauses2.get("where", F.lit(True))
-            df = df.join(inner, cond, "left_anti" if anti else "left_semi")
-        for lname, spec2, clauses2, anti in spec.in_subqueries:
-            sub = build_select(self._resolved_from(spec2), spec2, clauses2)
-            if len(sub.columns) != 1:
-                raise ParseError(
-                    "IN (SELECT ...) subquery must select exactly one column"
-                )
-            sub = sub.toDF("__subq_v").distinct()
-            if anti:
-                cond = (
-                    (F.col(lname) == F.col("__subq_v"))
-                    | F.col(lname).isNull()
-                    | F.col("__subq_v").isNull()
-                )
-                df = df.join(sub, cond, "left_anti")
-            else:
-                df = df.join(sub, F.col(lname) == F.col("__subq_v"), "left_semi")
-        for ph, lname, spec2, clauses2 in spec.bool_in_subqueries:
-            df = self._bool_in_column(df, ph, lname, spec2, clauses2)
-        for ph, body_toks in spec.bool_exists_subqueries:
-            df = self._bool_exists_column(df, ph, list(body_toks))
-        for ph, left, op, quant, spec2, clauses2 in spec.quantified_subqueries:
-            df = self._quantified_column(
-                df, ph, left, op, quant, spec2, clauses2
-            )
-        # Round-12: correlated scalars sharing the SAME inner relation,
-        # local filter, and correlation keys batch into ONE groupBy +
-        # ONE join — ``SELECT (SELECT count(*) ...), (SELECT sum(v) ...)``
-        # over the same inner costs one shuffle, not two. Grouping is by
-        # the raw token text of the FROM tail + local conjuncts + pairs
-        # (syntactic identity — a conservative, always-correct key).
-        buckets: dict = {}
-        border: list = []
-        for ph, body_toks, orig_err in spec.scalar_subqueries:
-            try:
-                head, local, pairs = _split_correlated(list(body_toks))
-                fi = next(
-                    (
-                        i
-                        for i, t in enumerate(head)
-                        if t.lower() == "from"
-                        and head[:i].count("(") == head[:i].count(")")
-                    ),
-                    None,
-                )
-            except ParseError:
-                fi, pairs = None, []
-            if fi is None or not pairs:
-                key = ("__solo__", ph)
-            else:
-                key = (
-                    " ".join(head[fi:]),
-                    tuple(" ".join(c) for c in local),
-                    tuple(pairs),
-                )
-            if key not in buckets:
-                border.append(key)
-            buckets.setdefault(key, []).append((ph, body_toks, orig_err))
-        for key in border:
-            df = self._correlated_scalar(df, buckets[key])
-        return df
-
-    def _bool_in_column(
-        self, df: DataFrame, ph: str, lname: str, spec2, clauses2
-    ) -> DataFrame:
-        """Round-9: ``x IN (SELECT c ...)`` in a NON-conjunct position
-        (under OR/NOT/parens) — where the semi/anti join rewrite doesn't
-        apply — materializes as a three-valued boolean column ``ph`` on
-        the outer frame. ANSI semantics: TRUE on a match; NULL when x IS
-        NULL or when there is no match but the subquery contains a NULL
-        (membership is then unknowable); FALSE otherwise. Physical shape:
-        the subquery deduplicates (bounded by its distinct values), a
-        left equi-join marks matches (at most one per outer row — the
-        build side is distinct), and the subquery's has-NULL bit is one
-        bounded driver-side probe. NOT folds through the column by
-        Kleene logic for free (~NULL = NULL).
-
-        Round-13: ``lname`` may be a Column expression instead of a name
-        — the quantified-comparison forms (``= ANY`` / ``<> ALL``) share
-        this exact membership machinery with an arbitrary left side."""
-        lcol = F.col(lname) if isinstance(lname, str) else lname
-        sub = build_select(self._resolved_from(spec2), spec2, clauses2)
-        if len(sub.columns) != 1:
-            raise ParseError(
-                "IN (SELECT ...) subquery must select exactly one column"
-            )
-        sub = sub.toDF("__subq_v").distinct()
-        has_null = bool(
-            sub.filter(F.col("__subq_v").isNull()).limit(1).count()
-        )
-        matches = sub.filter(F.col("__subq_v").isNotNull())
-        # Round-10 (advice): ANSI defines ``x IN (<empty subquery>)`` as
-        # FALSE even for NULL x — so ``NOT (x IN ...)`` must KEEP NULL-x
-        # rows when the subquery is empty. Probe emptiness alongside the
-        # has-NULL bit (both are bounded ≤1-row driver probes); the
-        # NULL-x branch then yields FALSE instead of UNKNOWN.
-        is_empty = (not has_null) and matches.isEmpty()
-        df = df.join(
-            matches, lcol == F.col("__subq_v"), "left"
-        )
-        no_match = (
-            F.lit(None).cast("boolean") if has_null else F.lit(False)
-        )
-        null_left = (
-            F.lit(False) if is_empty else F.lit(None).cast("boolean")
-        )
-        return df.withColumn(
-            ph,
-            F.when(lcol.isNull(), null_left)
-            .when(F.col("__subq_v").isNotNull(), F.lit(True))
-            .otherwise(no_match),
-        ).drop("__subq_v")
-
-    def _quantified_column(
-        self,
-        df: DataFrame,
-        ph: str,
-        left: Column,
-        op: str,
-        quant: str,
-        spec2,
-        clauses2,
-    ) -> DataFrame:
-        """Round-13: ``expr <op> ANY|ALL (SELECT col ...)`` — the ANSI
-        quantified comparison, materialized as a three-valued boolean
-        column ``ph`` (so it composes anywhere in the predicate tree).
-
-        Physical strategy, chosen per (op, quantifier):
-
-        * ``= ANY`` is exactly IN and ``<> ALL`` exactly NOT IN — both
-          route through the _bool_in_column membership join (deduped
-          build side, bounded has-NULL/emptiness probes); NOT IN is the
-          Kleene negation of the membership column.
-        * Every other pair is ORDER-decidable: ONE distributed aggregate
-          over the subquery (count, count-nonnull, min, max — 4 scalars
-          to the driver, Spark's own inline-the-scalar strategy for
-          uncorrelated subplans) folds into a literal-backed CASE.
-          ``x > ANY(S)`` ⇔ x > min(S); ``x > ALL(S)`` ⇔ x > max(S);
-          ``<> ANY`` / ``= ALL`` decide via min≠x ∨ max≠x. No join, no
-          shuffle on the outer side — the predicate stays in the scan
-          stage.
-
-        ANSI three-valued edges (DuckDB-probed): empty S ⇒ ANY is FALSE,
-        ALL is TRUE (even for NULL x); otherwise NULL x ⇒ NULL; a NULL
-        element makes the result NULL wherever the non-null elements
-        alone can't decide it."""
-        if quant == "any" and op == "=":
-            return self._bool_in_column(df, ph, left, spec2, clauses2)
-        if quant == "all" and op == "!=":
-            out = self._bool_in_column(df, ph, left, spec2, clauses2)
-            return out.withColumn(ph, ~F.col(ph))
-        try:
-            sub = build_select(self._resolved_from(spec2), spec2, clauses2)
-        except AnalysisException as e:
-            raise ParseError(
-                "quantified comparison (ANY/ALL) subqueries must be "
-                f"uncorrelated: {e}"
-            )
-        if len(sub.columns) != 1:
-            raise ParseError(
-                "ANY/ALL subquery must select exactly one column"
-            )
-        v = F.col(sub.columns[0])
-        cnt, cnt_nn, mn, mx = sub.agg(
-            F.count(F.lit(1)), F.count(v), F.min(v), F.max(v)
-        ).collect()[0]
-        null_b = F.lit(None).cast("boolean")
-        if quant == "any":
-            if cnt == 0:
-                return df.withColumn(ph, F.lit(False))
-            if cnt_nn == 0:
-                tt = F.lit(False)
-            elif op == "!=":
-                # ∃ non-null y ≠ x ⇔ x differs from min or max.
-                tt = (left != F.lit(mn)) | (left != F.lit(mx))
-            elif op in (">", ">="):
-                tt = (left > F.lit(mn)) if op == ">" else (left >= F.lit(mn))
-            else:  # < , <=
-                tt = (left < F.lit(mx)) if op == "<" else (left <= F.lit(mx))
-            tail = null_b if cnt_nn < cnt else F.lit(False)
-            expr = (
-                F.when(left.isNull(), null_b)
-                .when(tt, F.lit(True))
-                .otherwise(tail)
-            )
-        else:  # all
-            if cnt == 0:
-                return df.withColumn(ph, F.lit(True))
-            # FALSE test: ∃ non-null y making the comparison FALSE.
-            if cnt_nn == 0:
-                ft = F.lit(False)
-            elif op == "=":
-                ft = (left != F.lit(mn)) | (left != F.lit(mx))
-            elif op == ">":
-                ft = left <= F.lit(mx)
-            elif op == ">=":
-                ft = left < F.lit(mx)
-            elif op == "<":
-                ft = left >= F.lit(mn)
-            else:  # <=
-                ft = left > F.lit(mn)
-            tail = null_b if cnt_nn < cnt else F.lit(True)
-            expr = (
-                F.when(left.isNull(), null_b)
-                .when(ft, F.lit(False))
-                .otherwise(tail)
-            )
-        return df.withColumn(ph, expr)
-
-    def _bool_exists_column(
-        self, df: DataFrame, ph: str, body_toks: list[str]
-    ) -> DataFrame:
-        """Round-12: ``EXISTS (SELECT ...)`` in a NON-conjunct position
-        (under OR/NOT/parens) — where the semi-join rewrite doesn't
-        apply — materializes as a boolean flag column ``ph``. EXISTS is
-        TWO-valued (a subquery either has rows or hasn't; no UNKNOWN
-        branch, unlike IN), so the flag is plain TRUE/FALSE.
-
-        Equality-correlated bodies decorrelate: the inner's DISTINCT
-        correlation keys (after its local filter) left-join onto the
-        outer frame, and the flag is key-matched. The build side is
-        distinct so the join never fans out; inner NULL keys can't match
-        (ANSI '='), and an outer NULL key correctly reads FALSE.
-        Uncorrelated bodies fold to a constant via one bounded ≤1-row
-        driver probe (the same strategy as the IN form's has-NULL bit)."""
-        head, local, pairs = _split_correlated(list(body_toks))
-        toks = list(head)
-        if local:
-            toks.append("where")
-            for i, c in enumerate(local):
-                if i:
-                    toks.append("and")
-                toks.extend(c)
-        cur = _Cursor(toks)
-        spec2, _, clauses2 = parse_select(
-            cur, self.weak, resolver=self._scalar, subquery=True
-        )
-        if not cur.done():
-            raise ParseError(
-                f"unexpected token {cur.peek()!r} in EXISTS subquery"
-            )
-        for bad in ("group_by", "having", "order_by", "limit", "offset"):
-            if bad in clauses2:
-                raise ParseError(
-                    f"EXISTS subqueries do not support {bad.upper()} "
-                    "(the projection/grouping is irrelevant to EXISTS)"
-                )
-        if spec2.aggregates:
-            # Mirrors the conjunct path (round-13 advice): ANSI returns
-            # one row from an ungrouped-aggregate subquery even on empty
-            # input, making EXISTS constant TRUE — a row-existence flag
-            # would silently diverge. Reject loudly.
-            raise ParseError(
-                "EXISTS over an ungrouped-aggregate subquery is always "
-                "TRUE (the aggregate yields one row even on empty input) "
-                "— drop the aggregate or compare the scalar subquery's "
-                "value instead"
-            )
-        inner = self._resolved_from(spec2)
-        if not (spec2.joins or spec2.alias):
-            inner = inner.alias(spec2.table)
-        if "where" in clauses2:
-            inner = inner.filter(clauses2["where"])
-        if not pairs:
-            return df.withColumn(ph, F.lit(not inner.isEmpty()))
-        keys = [
-            F.col(ik).alias(f"__subq_k{i}") for i, (ik, _) in enumerate(pairs)
-        ]
-        sub = inner.select(*keys).distinct()
-        cond = None
-        for i, (_, oc) in enumerate(pairs):
-            c = F.col(oc) == F.col(f"__subq_k{i}")
-            cond = c if cond is None else (cond & c)
-        return (
-            df.join(sub, cond, "left")
-            .withColumn(ph, F.col("__subq_k0").isNotNull())
-            .drop(*[f"__subq_k{i}" for i in range(len(pairs))])
-        )
-
-    def _correlated_scalar(
-        self, df: DataFrame, members: "list[tuple[str, list[str], str]]"
-    ) -> DataFrame:
-        """Round-9: decorrelate ``(SELECT agg(col) FROM t WHERE t.k = o.k
-        [AND local...])`` — the classic rewrite (group the inner by its
-        correlation keys, aggregate once, LEFT JOIN onto the outer frame
-        on the keys), the same plan Catalyst's
-        RewriteCorrelatedScalarSubquery produces. One shuffle bounded by
-        the inner's distinct correlation keys, never a per-outer-row
-        re-execution; AQE picks broadcast when the aggregate side is
-        small. COUNT over an empty group coalesces to 0 (the textbook
-        decorrelation-COUNT bug, handled); every other aggregate is NULL
-        on no-match, matching ANSI's empty-subquery-result semantics.
-
-        Round-12: ``members`` is a BATCH of scalar subqueries sharing
-        the same inner relation, local filter, and correlation pairs
-        (grouped syntactically in _resolved_from) — every member's
-        aggregate computes in the ONE groupBy pass and joins in the ONE
-        join, so N scalars over the same inner cost one shuffle."""
-        parsed = []
-        pairs = None
-        for ph, body_toks, orig_err in members:
-            head, local, pairs = _split_correlated(list(body_toks))
-            if not pairs:
-                raise ParseError(
-                    "scalar subquery failed to execute (and has no "
-                    "alias-qualified correlated equality to decorrelate "
-                    "on): "
-                    + (orig_err.splitlines()[0] if orig_err else "<no detail>")
-                )
-            toks = list(head)
-            if local:
-                toks.append("where")
-                for i, c in enumerate(local):
-                    if i:
-                        toks.append("and")
-                    toks.extend(c)
-            cur = _Cursor(toks)
-            # subquery=True: the item's output name is the attached
-            # placeholder, never observable — ``round(MAX(x), 2)``
-            # unaliased is standard SQL here (the round-11 relaxation,
-            # applied to the re-parse too so round-12's SELECT-list
-            # correlated scalars accept expression-wrapped aggregates).
-            spec2, _, clauses2 = parse_select(
-                cur, self.weak, resolver=self._scalar, subquery=True
-            )
-            if not cur.done():
-                raise ParseError(
-                    f"unexpected token {cur.peek()!r} in correlated scalar "
-                    "subquery"
-                )
-            if (
-                len(spec2.aggregates) != 1
-                or spec2.projections
-                or spec2.windows
-                or spec2.star
-                or clauses2.get("group_by")
-            ):
-                raise ParseError(
-                    "a correlated scalar subquery must select exactly one "
-                    "aggregate (no other projections, windows, or GROUP BY)"
-                )
-            parsed.append((ph, spec2, clauses2))
-        _, spec0, clauses0 = parsed[0]
-        inner = self._resolved_from(spec0)
-        if not (spec0.joins or spec0.alias):
-            inner = inner.alias(spec0.table)
-        if "where" in clauses0:
-            inner = inner.filter(clauses0["where"])
-        keys = [
-            F.col(ik).alias(f"__subq_k{i}") for i, (ik, _) in enumerate(pairs)
-        ]
-        agg = inner.groupBy(*keys).agg(
-            *[
-                agg_spec(s.aggregates[0][0], s.aggregates[0][1], ph)
-                for ph, s, _ in parsed
-            ]
-        )
-        cond = None
-        for i, (_, oc) in enumerate(pairs):
-            c = F.col(oc) == F.col(f"__subq_k{i}")
-            cond = c if cond is None else (cond & c)
-        out = df.join(agg, cond, "left").drop(
-            *[f"__subq_k{i}" for i in range(len(pairs))]
-        )
-        for ph, s, _ in parsed:
-            if s.aggregates[0][0].lower() == "count":
-                out = out.withColumn(ph, F.coalesce(F.col(ph), F.lit(0)))
-        return out
-
-
-
-
-    def _scalar(self, spec: "SelectSpec", clauses: dict):
-        """Execute an uncorrelated scalar subquery to one python value —
-        the literal is inlined into the outer plan (Spark's own physical
-        strategy for uncorrelated scalar subqueries: run the subplan,
-        broadcast the scalar). 0 rows ⇒ NULL (ANSI); >1 row is an error."""
-        sub = build_select(self._resolved_from(spec), spec, clauses)
-        if len(sub.columns) != 1:
-            raise ParseError(
-                "scalar subquery must select exactly one column"
-            )
-        rows = sub.limit(2).collect()
-        if len(rows) > 1:
-            raise ParseError("scalar subquery returned more than one row")
-        return rows[0][0] if rows else None
+    def _build(self, spec: "SelectSpec", clauses: dict) -> DataFrame:
+        """One parsed SELECT arm as a DataFrame — also the parser's
+        resolver, so a subquery's DataFrame becomes a subquery Column."""
+        return build_select(self._from_df(spec), spec, clauses)
 
     _SETOP_KWS = ("union", "intersect", "except")
 
@@ -7863,7 +7491,7 @@ class RefSQL:
         INTERSECT/EXCEPT deduplicate unless ALL, and a trailing ORDER BY/
         LIMIT/OFFSET (written after the final arm) sorts/limits the
         COMBINED result. Non-final arms cannot carry ORDER BY/LIMIT."""
-        spec, _, clauses = parse_select(cur, self.weak, resolver=self._scalar)
+        spec, _, clauses = parse_select(cur, self.weak, resolver=self._build)
         arms: list[tuple[SelectSpec, dict]] = [(spec, clauses)]
         ops: list[tuple[str, bool, bool]] = []
         while cur.peek_kw() in self._SETOP_KWS:
@@ -7885,12 +7513,12 @@ class RefSQL:
                     )
                 by_name = True
             spec2, _, clauses2 = parse_select(
-                cur, self.weak, resolver=self._scalar
+                cur, self.weak, resolver=self._build
             )
             arms.append((spec2, clauses2))
             ops.append((op, keep_dups, by_name))
         if not ops:
-            return build_select(self._resolved_from(spec), spec, clauses)
+            return self._build(spec, clauses)
         # Compound: the trailing sort/limit clauses belong to the whole
         # result — they were parsed into the final arm; lift them out.
         trailing = {
@@ -7906,7 +7534,7 @@ class RefSQL:
                     "arm is not supported (write it after the last SELECT "
                     "to order/limit the combined result)"
                 )
-        frames = [build_select(self._resolved_from(s), s, c) for s, c in arms]
+        frames = [self._build(s, c) for s, c in arms]
         acc = frames[0]
         for (op, keep_dups, by_name), nxt in zip(ops, frames[1:]):
             if by_name:
@@ -9379,9 +9007,9 @@ class RefSQL:
         cur.expect_kw("update")
         table = _unquote(cur.next())
         cur.expect_kw("set")
-        # Round-13: SET values are CAPTURED first (token buffers /
-        # eagerly-resolved scalar subqueries) and compiled after the
-        # optional FROM clause is known — ``UPDATE t SET c = s.v FROM s
+        # Round-13: SET values are CAPTURED first (token buffers / scalar
+        # subquery Columns) and compiled after the optional FROM clause
+        # is known — ``UPDATE t SET c = s.v FROM s
         # WHERE t.k = s.k`` needs the source's columns to resolve the
         # value expressions.
         entries: list[tuple[str, str, Any]] = []  # (col, kind, payload)
@@ -9393,17 +9021,12 @@ class RefSQL:
             # balanced to the next top-level ',' / WHERE / FROM and
             # compiled via Catalyst (``SET v = v + 1``). A single token
             # keeps the reference's literal semantics (typed coercion; a
-            # bare word is a string, update.go). An uncorrelated scalar
-            # subquery executes eagerly to a literal (the WHERE path's
-            # inline-the-scalar strategy).
+            # bare word is a string, update.go). A scalar subquery is a
+            # scalar subquery Column.
             if cur.peek() == "(" and cur.peek_kw(1) == "select":
-                cur.next()  # '('
-                spec2, _, clauses2 = parse_select(
-                    cur, self.weak, resolver=self._scalar, subquery=True
-                )
-                if cur.next() != ")":
-                    raise ParseError("expected ')' after scalar subquery")
-                entries.append((col, "scalar", self._scalar(spec2, clauses2)))
+                sp = ExprParser(cur, self.weak, self._build)
+                entries.append((col, "scalar", sp._scalar_subquery()))
+                self._dml_guard(sp, "UPDATE")
                 if cur.peek() == ",":
                     cur.next()
                     continue
@@ -9468,19 +9091,16 @@ class RefSQL:
             else:
                 sets[col] = F.expr(" ".join(buf))
         where = None
-        frame = None
         if cur.peek_kw() == "where":
             cur.next()
-            up = ExprParser(cur, self.weak, self._scalar, conjunct_in_joins=False)
+            up = ExprParser(cur, self.weak, self._build)
             where = up.parse()
-            frame = self._dml_frame(table, up, "UPDATE")
+            self._dml_guard(up, "UPDATE")
         if ret_items is not None:
             # Round-14 UPDATE ... RETURNING: matched rows, NEW values
-            _, ret = self.engine.update(
-                table, sets, where, frame=frame, returning=True
-            )
+            _, ret = self.engine.update(table, sets, where, returning=True)
             return ret.selectExpr(*ret_items)
-        return self.engine.update(table, sets, where, frame=frame)
+        return self.engine.update(table, sets, where)
 
     def _update_from(
         self,
@@ -9781,50 +9401,35 @@ class RefSQL:
             # Mandatory WHERE — reference safety guard (delete.go:33).
             raise ParseError("DELETE without WHERE is not allowed for safety")
         cur.next()
-        dp = ExprParser(cur, self.weak, self._scalar, conjunct_in_joins=False)
+        dp = ExprParser(cur, self.weak, self._build)
         where = dp.parse()
-        frame = self._dml_frame(table, dp, "DELETE")
+        self._dml_guard(dp, "DELETE")
         if ret_items is not None:
             # Round-14 DELETE ... RETURNING: the doomed rows
-            _, ret = self.engine.delete(
-                table, where, frame=frame, returning=True
-            )
+            _, ret = self.engine.delete(table, where, returning=True)
             return ret.selectExpr(*ret_items)
-        return self.engine.delete(table, where, frame=frame)
+        return self.engine.delete(table, where)
 
-    def _dml_frame(self, table: str, ep: "ExprParser", verb: str):
-        """Round-12: materialize ``x [NOT] IN (SELECT ...)`` predicates in
-        UPDATE/DELETE as three-valued membership COLUMNS on the table
-        frame (the _bool_in_column join rewrite the SELECT path uses in
-        non-conjunct positions), so ``DELETE FROM docs WHERE id IN
-        (SELECT doc_id FROM contaminated)`` — the canonical
-        decontamination DML — runs as ONE distributed join + copy-on-write
-        rewrite, never a driver-side value list. Returns None when the
-        predicate needs no helper columns (the engine reads the table
-        itself). EXISTS and correlated scalars stay out of DML scope."""
-        if ep.exists_subqueries or ep.bool_exists_subqueries:
+    @staticmethod
+    def _dml_guard(ep: "ExprParser", verb: str) -> None:
+        """UPDATE/DELETE predicates carry their subquery Columns into the
+        engine's single copy-on-write pass, which reads the table under
+        its own name — so a subquery there cannot correlate with it, and
+        hidden arithmetic bindings have no frame to land on."""
+        if ep.subqueries["exists"]:
             raise ParseError(
                 f"EXISTS subqueries are not supported in {verb} — rewrite "
                 "an equality correlation as x IN (SELECT k FROM ...)"
             )
-        if ep.correlated_scalars:
+        if ep.subqueries["correlated"]:
             raise ParseError(
-                f"correlated scalar subqueries are not supported in {verb}"
+                f"correlated subqueries are not supported in {verb}"
             )
-        if not ep.bool_in_subqueries and not ep.quantified_subqueries:
-            return None
-        df = self.engine.table(table)
-        for ph, lname, spec2, clauses2 in ep.bool_in_subqueries:
-            df = self._bool_in_column(df, ph, lname, spec2, clauses2)
-        # Round-13: quantified comparisons (ANY/ALL) in UPDATE/DELETE
-        # predicates — the same membership/aggregate-fold columns the
-        # SELECT path materializes (``DELETE FROM docs WHERE score <
-        # ALL (SELECT floor FROM tiers)``).
-        for ph, left, op, quant, spec2, clauses2 in ep.quantified_subqueries:
-            df = self._quantified_column(
-                df, ph, left, op, quant, spec2, clauses2
+        if ep.hidden:
+            raise ParseError(
+                "arithmetic around a scalar subquery is not supported in "
+                f"{verb} (compute it inside the subquery)"
             )
-        return df
 
     def _merge(self, cur: _Cursor) -> int:
         """Dialect extension (round-7/8): ``MERGE INTO t USING s [AS a] ON
@@ -9913,9 +9518,9 @@ class RefSQL:
             if cur.peek_kw() != "and":
                 return None
             cur.next()
-            pp = ExprParser(cur, self.weak, self._scalar)
+            pp = ExprParser(cur, self.weak, self._build)
             pred = pp.parse()
-            if pp.subqueries or pp.quantified_subqueries:
+            if pp.hidden or _predicate_subqueries(pp):
                 raise ParseError(
                     "subqueries are not supported in MERGE WHEN AND"
                 )
@@ -10439,127 +10044,6 @@ class RefSQL:
                 defaults=defaults,
             )
         return None
-
-
-def _split_correlated(
-    body_toks: list[str],
-) -> tuple[list[str], list[list[str]], list[tuple[str, str]]]:
-    """Split a correlated scalar subquery's raw tokens into (head tokens,
-    local WHERE conjuncts, correlation pairs). A conjunct is CORRELATED
-    when it references an alias-qualified column whose qualifier is
-    neither the inner table nor its alias; such a conjunct must be an
-    equality ``inner_col = outer.col`` (the decorrelatable shape — the
-    same equality restriction Catalyst's own
-    RewriteCorrelatedScalarSubquery imposes). Returns correlation pairs
-    as (inner_key, outer_col), both unqualified. Module-level so the
-    PARSER can pre-detect correlation (and skip the doomed eager
-    execution attempt) and the EXECUTOR can reuse the same split."""
-    depth = 0
-    where_i = None
-    inner_names: set[str] = set()
-    tail_kws = {
-        "group", "order", "limit", "offset", "having",
-        "qualify", "window", "union", "intersect", "except",
-    }
-    # Round-10 (advice): JOINed tables and their aliases are INNER names
-    # too — without this, `(SELECT avg(a.x) FROM a JOIN b ON ...)` was
-    # pre-detected as correlated (b.* looked outer) and misrouted into
-    # decorrelation; worse, the join keyword itself was registered as the
-    # FROM table's alias.
-    join_kws = {
-        "join", "left", "right", "inner", "cross", "full",
-        "outer", "asof", "semi", "anti", "on", "using", "natural",
-    }
-    not_alias = tail_kws | join_kws | {"where", "as"}
-    for i, t in enumerate(body_toks):
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and t.lower() in ("from", "join")
-            and i + 1 < len(body_toks)
-        ):
-            tbl = _unquote(body_toks[i + 1])
-            inner_names.add(tbl.lower())
-            j = i + 2
-            if j < len(body_toks) and body_toks[j].lower() == "as":
-                j += 1
-            if (
-                j < len(body_toks)
-                and body_toks[j] not in ("(", ")", ",")
-                and body_toks[j].lower() not in not_alias
-                and _literal_value(body_toks[j]) is None
-            ):
-                inner_names.add(_unquote(body_toks[j]).lower())
-        elif depth == 0 and t.lower() == "where":
-            where_i = i
-            break
-    if where_i is None:
-        return body_toks, [], []
-    head = body_toks[:where_i]
-    tail = body_toks[where_i + 1:]
-    depth = 0
-    for t in tail:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        elif depth == 0 and t.lower() in tail_kws:
-            raise ParseError(
-                f"correlated scalar subqueries do not support "
-                f"{t.upper()} (plain 'SELECT agg(col) FROM t WHERE "
-                "...' only)"
-            )
-    conjuncts: list[list[str]] = []
-    cur_toks: list[str] = []
-    depth = 0
-    for t in tail:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth -= 1
-        if depth == 0 and t.lower() == "and":
-            conjuncts.append(cur_toks)
-            cur_toks = []
-        else:
-            cur_toks.append(t)
-    conjuncts.append(cur_toks)
-
-    def outer_ref(tok: str) -> bool:
-        if _is_string_lit(tok) or "." not in tok:
-            return False
-        if _literal_value(tok) is not None:  # 1.5 etc.
-            return False
-        qual = _unquote(tok).rsplit(".", 1)[0].lower()
-        return qual not in inner_names
-
-    local: list[list[str]] = []
-    pairs: list[tuple[str, str]] = []
-    for c in conjuncts:
-        if not any(outer_ref(t) for t in c):
-            local.append(c)
-            continue
-        if len(c) != 3 or c[1] != "=":
-            raise ParseError(
-                "correlated conjuncts in a scalar subquery must be "
-                f"equalities 'inner_col = outer.col' (got {' '.join(c)!r})"
-            )
-        a, b = c[0], c[2]
-        if outer_ref(a) and outer_ref(b):
-            raise ParseError(
-                "correlated equality must compare an inner column "
-                f"against an outer one (both sides outer in {' '.join(c)!r})"
-            )
-        outer_tok, inner_tok = (a, b) if outer_ref(a) else (b, a)
-        pairs.append(
-            (
-                _unquote(inner_tok).rsplit(".", 1)[-1],
-                _unquote(outer_tok).rsplit(".", 1)[-1],
-            )
-        )
-    return head, local, pairs
 
 
 def _estimate_report(df: DataFrame) -> str:

@@ -22,6 +22,15 @@ def _default_shuffle_partitions(cpus: str) -> int:
     return max(8, min(64, int(ncores)))
 
 
+def _default_driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` sized from the machine: half of physical
+    RAM (the rest stays with the OS, Python workers and page cache),
+    clamped to [1g, 32g]. ``phys_bytes`` defaults to this machine's."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(32, phys_bytes // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "sparkdb",
     master: str | None = None,
@@ -52,12 +61,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # In local mode the driver heap IS the executor heap: all local[N]
         # task threads, every broadcast, and every localCheckpoint block
-        # live in this one JVM. 8g for 32 task threads (~250 MB/thread)
-        # measured 3× slower over a 33-query run purely from GC thrash;
-        # size the heap to the thread count instead. On a real cluster
-        # executor memory is configured separately and this only sizes the
-        # (lightly loaded) driver.
-        .config("spark.driver.memory", os.environ.get("SPARKDB_DRIVER_MEM", "32g"))
+        # live in this one JVM, so the default takes half the machine's
+        # RAM (_default_driver_memory); SPARKDB_DRIVER_MEM overrides it.
+        # On a real cluster executor memory is configured separately and
+        # this only sizes the (lightly loaded) driver.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARKDB_DRIVER_MEM") or _default_driver_memory(),
+        )
         # Parquet write codec (round-16, guide §6): A/B'd on the engine
         # store's DML path (plans/r16 zstd A/B) — zstd writes 35% fewer
         # bytes (2.82 vs 4.36 MB) but costs ~16% wall time at local-disk

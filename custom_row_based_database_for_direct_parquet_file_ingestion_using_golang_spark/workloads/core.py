@@ -686,12 +686,12 @@ def refsql_lateral_group_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def refsql_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # IN / NOT IN subqueries through the dialect: semi join against the
-    # rich-customer set, null-aware anti join against the negative-balance
-    # suppliers, combined as conjuncts with grouped order-insensitive
-    # aggregates. The oracle runs the identical ANSI subqueries — wrong
-    # semi/anti semantics, a dropped conjunct, or broken three-valued
-    # NOT IN flips the hash.
+    # IN / NOT IN subqueries through the dialect: membership in the
+    # rich-customer set, NOT IN against the negative-balance suppliers,
+    # combined as conjuncts with grouped order-insensitive aggregates.
+    # The oracle runs the identical ANSI subqueries — wrong membership
+    # semantics, a dropped conjunct, or broken three-valued NOT IN flips
+    # the hash.
     return _ref_select(
         spark,
         sf_dir,
@@ -1803,11 +1803,11 @@ def refsql_typed_literal_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def refsql_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-9: correlated scalar subquery through the dialect — orders
-    # more than twice their customer's average order value. The executor
-    # decorrelates (group the inner by its equality-correlation key,
-    # aggregate once, LEFT JOIN onto the outer — one shuffle bounded by
-    # distinct customers, never a per-row re-execution; the same rewrite
-    # Catalyst's RewriteCorrelatedScalarSubquery performs). The oracle is
+    # more than twice their customer's average order value. Catalyst's
+    # RewriteCorrelatedScalarSubquery decorrelates it (group the inner by
+    # its equality-correlation key, aggregate once, LEFT JOIN onto the
+    # outer — one shuffle bounded by distinct customers, never a per-row
+    # re-execution). The oracle is
     # DuckDB's NATIVE correlated-subquery engine — an independent
     # implementation of the same semantics.
     return _ref_select(
@@ -1833,11 +1833,10 @@ def refsql_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def refsql_in_or_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-9: IN (SELECT ...) in a NON-conjunct position — under OR the
-    # semi-join rewrite doesn't apply, so the dialect materializes the
-    # membership test as a three-valued boolean column (left equi-join
-    # against the deduplicated subquery values + a bounded has-NULL
-    # probe), ANSI Kleene semantics intact anywhere in the predicate
-    # tree. Oracle: DuckDB's native unrestricted IN.
+    # membership test stays three-valued (an existence join plus two
+    # one-row subqueries for emptiness and NULLs), ANSI Kleene semantics
+    # intact anywhere in the predicate tree. Oracle: DuckDB's native
+    # unrestricted IN.
     return _ref_select(
         spark,
         sf_dir,

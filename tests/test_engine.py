@@ -436,3 +436,19 @@ def test_scan_cache_skips_paths_stat_cannot_see(spark, tmp_path):
     shutil.rmtree(tmp_path / "t.parquet")
     with pytest.raises(Exception):
         load(spark, uri, "t")
+
+
+def test_default_driver_memory_is_half_the_machine():
+    """The driver heap defaults to half of physical RAM, clamped to
+    [1g, 32g] (pure function — no JVM)."""
+    from custom_row_based_database_for_direct_parquet_file_ingestion_using_golang_spark.session import (
+        _default_driver_memory,
+    )
+
+    gib = 2**30
+    assert _default_driver_memory(15 * gib) == "7g"
+    assert _default_driver_memory(16 * gib) == "8g"
+    assert _default_driver_memory(gib) == "1g"
+    assert _default_driver_memory(512 * gib) == "32g"
+    # no argument: this machine's RAM, in the same format
+    assert _default_driver_memory().endswith("g")

@@ -197,6 +197,15 @@ def test_weak_typing_numeric_compare_on_text(spark, tmp_path):
         ).collect()
     }
     assert weak == {"3"}
+    # a scalar subquery's value compares the same way: '9' numerically
+    # against 100 and 9, as a string against 'x'
+    sub = (
+        "SELECT id FROM imported WHERE amount > "
+        "(SELECT MIN(amount) FROM imported WHERE id = '2')"
+    )
+    weak = {r.id for r in e.ref_sql(sub, weak_typing=True).collect()}
+    assert weak == {"1", "3"}
+    assert {r.id for r in e.ref_sql(sub).collect()} == {"3"}
 
 
 # -- maintenance dialect extensions (§7.4): OPTIMIZE / VERSION AS OF --------
@@ -614,11 +623,15 @@ def test_in_subquery_conjuncts_nesting_and_errors(spark, tmp_path):
         "(SELECT k FROM s WHERE k IN (SELECT k FROM s WHERE k = 3))"
     ).collect()[0]["count"]
     assert n == 1
-    # structural restrictions: a bare IN-subquery conjunct under OR still
-    # raises (the semi-join marker was already recorded), pointing at the
-    # parenthesized boolean-membership form
-    with pytest.raises(ParseError, match="parenthesized"):
-        e.ref_sql("SELECT * FROM t WHERE k IN (SELECT k FROM s) OR k = 1")
+    # an unparenthesized IN-subquery under OR is the same predicate as
+    # the parenthesized form below: {2, 3} ∪ {1}
+    got = sorted(
+        r.k
+        for r in e.ref_sql(
+            "SELECT k FROM t WHERE k IN (SELECT k FROM s) OR k = 1"
+        ).collect()
+    )
+    assert got == [1, 2, 3]
     # round-9: parenthesized / negated membership works as a three-valued
     # boolean column — NOT IN-set = {1, 4}, (IN-set) OR k = 1 = {1, 2, 3}
     got = sorted(
@@ -829,6 +842,26 @@ def test_dml_in_subqueries(spark, tmp_path, sf_dir):
         )
         == 0
     )
+    # UPDATE evaluates the same predicate inside a projection: NOT IN
+    # against the NULL-holding subquery matches nothing ...
+    assert (
+        e.ref_sql(
+            "UPDATE docs SET label = 'x' "
+            "WHERE id NOT IN (SELECT doc_id FROM denylist)"
+        )
+        == 0
+    )
+    # ... and IN leaves the NULL-id row unchanged (its membership is
+    # NULL, so only the OR's TRUE arm matches)
+    n = e.ref_sql(
+        "UPDATE docs SET label = 'clean' "
+        "WHERE id IN (SELECT doc_id FROM denylist) OR id = 4"
+    )
+    assert n == 1
+    assert {
+        (r.id if r.id is not None else -1): r.label
+        for r in e.table("docs").collect()
+    } == {1: "keep", 4: "clean", -1: "nullrow"}
     # self-referencing subquery reads the pre-delete snapshot
     n = e.ref_sql(
         "DELETE FROM docs WHERE id IN "
@@ -1012,11 +1045,11 @@ def test_scalar_subquery_in_where_and_having(engine):
         ).count()
         == 0
     )
-    # Multi-row scalar subquery errors.
-    with pytest.raises(ParseError, match="more than one row"):
+    # Multi-row scalar subquery errors when the statement runs.
+    with pytest.raises(Exception, match="SCALAR_SUBQUERY_TOO_MANY_ROWS"):
         engine.ref_sql(
             "SELECT name FROM students WHERE id > (SELECT id FROM students)"
-        )
+        ).collect()
     # Multi-column scalar subquery errors.
     with pytest.raises(ParseError, match="exactly one column"):
         engine.ref_sql(
@@ -1202,22 +1235,20 @@ def test_exists_subqueries(engine, spark):
         ).count()
         == 0
     )
-    # Round-12: EXISTS in the RIGHT arm of an OR works — the boolean
-    # flag-column form (test_exists_boolean_form covers it fully). In
-    # the LEFT arm the semi-join marker is already recorded, so it still
-    # raises with the parenthesize hint.
+    # EXISTS under OR works in either arm (test_exists_boolean_form
+    # covers the boolean forms fully) — both orders give the same rows.
     rows = engine.ref_sql(
         "SELECT id FROM students WHERE id = 1 OR EXISTS "
         "(SELECT 1 FROM enroll WHERE enroll.sid = students.id) "
         "ORDER BY id"
     ).collect()
     assert len(rows) >= 1 and rows[0].id == 1
-    with pytest.raises(ParseError, match="boolean column form"):
-        engine.ref_sql(
-            "SELECT id FROM students WHERE EXISTS "
-            "(SELECT 1 FROM enroll WHERE enroll.sid = students.id) "
-            "OR id = 1"
-        )
+    flipped = engine.ref_sql(
+        "SELECT id FROM students WHERE EXISTS "
+        "(SELECT 1 FROM enroll WHERE enroll.sid = students.id) "
+        "OR id = 1 ORDER BY id"
+    ).collect()
+    assert [r.id for r in flipped] == [r.id for r in rows]
     with pytest.raises(ParseError, match="do not support"):
         engine.ref_sql(
             "SELECT id FROM students WHERE EXISTS "
@@ -6472,3 +6503,41 @@ def test_list_aggregates_vs_duckdb(spark, tmp_path):
         e.ref_sql("SELECT list_aggregate([1], 'entropy') AS r FROM t")
     with pytest.raises(ParseError, match="literal name"):
         e.ref_sql("SELECT list_aggregate([1], lower('SUM')) AS r FROM t")
+
+
+def test_building_subquery_statements_runs_no_job(spark, tmp_path, caplog):
+    """Subqueries are Catalyst subquery expressions: building a statement
+    (``ref_sql`` returns a DataFrame, or an EXPLAIN string) runs no Spark
+    job, and no valid statement logs an ERROR (PySpark logs every
+    AnalysisException it raises, even one the caller catches)."""
+    import logging
+
+    e = Engine(spark, str(tmp_path / "nojob"))
+    e.ref_sql("CREATE TABLE t (k INT, v INT)")
+    e.ref_sql("INSERT INTO t VALUES (1, 10), (2, 20), (3, 40)")
+    e.ref_sql("CREATE TABLE s (k INT, x INT)")
+    e.ref_sql("INSERT INTO s VALUES (1, 5), (2, 9), (NULL, 7)")
+    stmts = [
+        "SELECT k FROM t WHERE v > (SELECT AVG(x) FROM s)",
+        "SELECT k FROM t WHERE v > 2 * (SELECT AVG(x) FROM s)",
+        "SELECT k FROM t WHERE (k IN (SELECT k FROM s)) OR v = 40",
+        "SELECT k FROM t WHERE (EXISTS (SELECT 1 FROM s WHERE x > 5)) "
+        "OR v = 40",
+        "SELECT k FROM t WHERE v > ALL (SELECT x FROM s WHERE x IS NOT NULL)",
+        "EXPLAIN SELECT k FROM t WHERE v > (SELECT AVG(x) FROM s)",
+        "SELECT o.k, (SELECT count(*) FROM s WHERE s.k = o.k) AS n "
+        "FROM t AS o",
+    ]
+    sc = spark.sparkContext
+    qlog = logging.getLogger("DataFrameQueryContextLogger")
+    qlog.addHandler(caplog.handler)  # it does not propagate to root
+    try:
+        for i, sql in enumerate(stmts):
+            group = f"refsql-build-{i}"
+            sc.setJobGroup(group, sql)
+            e.ref_sql(sql)
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], sql
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        qlog.removeHandler(caplog.handler)
+    assert [r for r in caplog.records if r.levelno >= logging.ERROR] == []
