@@ -124,7 +124,6 @@ class Query:
         self._group_sets: list = []
         self._aggs: list[Column] = []
         self._having: Column | str | None = None
-        self._having_bind: "list[tuple[str, Column]] | None" = None
         self._order: list[Column] = []
         self._limit: int | None = None
         self._offset: int | None = None
@@ -167,13 +166,8 @@ class Query:
         self._aggs = list(specs)
         return self
 
-    def having(
-        self, cond: Column | str, bind: "list[tuple[str, Column]] | None" = None
-    ) -> "Query":
-        """``bind``: hidden ``(name, Column)`` pairs the condition
-        references by name, added to the aggregated frame first."""
+    def having(self, cond: Column | str) -> "Query":
         self._having = cond
-        self._having_bind = bind
         return self
 
     def order_by(
@@ -245,8 +239,6 @@ class Query:
                 # correlated subquery's frame cannot do on its own
                 df = df.select(*aggs)
             if self._having is not None:
-                if self._having_bind:
-                    df = df.withColumns(dict(self._having_bind))
                 df = df.filter(self._cond(self._having))
         if self._projection is not None:
             df = df.select(*self._projection)

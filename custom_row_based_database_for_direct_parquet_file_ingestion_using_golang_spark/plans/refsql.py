@@ -16,14 +16,18 @@ Subqueries (scalar ``(SELECT ...)`` in any value position, ``x [NOT] IN
 (SELECT ...)``) compile while parsing to Spark subquery Columns —
 ``DataFrame.scalar()``, ``DataFrame.exists()``, ``Column.isin(DataFrame)``
 — anywhere in a WHERE or UPDATE/DELETE predicate (conjuncts, OR, NOT,
-parentheses); uncorrelated scalars also in HAVING, and scalars as SELECT
-items and UPDATE SET values. The parser's resolver returns each subquery's
+parentheses); uncorrelated scalars also in HAVING, JOIN ... ON, QUALIFY
+and MERGE's WHEN ... AND, and scalars as SELECT items and UPDATE SET
+values. A scalar under arithmetic folds into the expression with Column
+operators. The parser's resolver returns each subquery's
 DataFrame; nothing runs until the statement does.
 Inside a subquery a qualified column whose qualifier names no relation of
 that subquery's FROM is an outer reference (``Column.outer()``), and
 Catalyst decorrelates: top-level [NOT] EXISTS plans as LeftSemi/LeftAnti,
 correlated scalars as an aggregate + left join with its own COUNT-bug
-guard. ``IN`` is the exact ANSI three-valued form (_in_subquery), the
+guard. ``IN`` is a bare ``isin`` where NULL acts as FALSE (a top-level
+conjunct plans as a semi or null-aware anti join) and the exact ANSI
+three-valued form (_in_subquery) under NOT or in a compared group; the
 order-decidable ANY/ALL pairs fold through one aggregate
 (_quantified_fold), and SELECT-list scalars over the same FROM/WHERE share
 one struct-valued subquery (_bind_select_scalars). A correlated scalar's
@@ -3640,8 +3644,8 @@ def _in_subquery(left: Column, sub: DataFrame) -> Column:
     alone: FALSE over an empty subquery (even for a NULL left side), TRUE
     on a match, NULL when the left side is NULL or the subquery holds a
     NULL, FALSE otherwise. Valid in a Filter and in a projection alike —
-    a bare ``isin(sub)`` in a projection plans a two-valued
-    ExistenceJoin, so this form is used in every position."""
+    a bare ``isin(sub)`` below the top of a predicate plans a two-valued
+    ExistenceJoin, which only a NULL-as-FALSE position tolerates."""
     sub = sub.toDF("__subq_v")
     return (
         F.when(~sub.exists(), F.lit(False))
@@ -3732,9 +3736,14 @@ class ExprParser:
     ``subqueries`` counts what the parse saw, by kind: ``scalar``,
     ``in``, ``exists``, ``quantified``, ``correlated`` (a subquery with
     outer references) and ``outer`` (outer references made here).
-    Scalar subqueries spliced into raw arithmetic text are bound as hidden
-    ``__subq_scalar_<n>`` columns, appended to ``hidden`` for the caller
-    to add to the frame the predicate runs over."""
+
+    Every context parses a predicate whose NULL acts as FALSE (a filter,
+    or UPDATE/DELETE's ``coalesce(pred, FALSE)``). ``exact`` counts the
+    enclosing NOTs and the parenthesized groups whose value is compared
+    or tested (``(x IN (...)) IS NULL``): with none, ``x [NOT] IN
+    (SELECT ...)`` is a bare ``isin`` — Catalyst plans it as a semi or
+    null-aware anti join, and its NULL/FALSE merge cannot change the
+    outcome through AND/OR alone — otherwise the exact helper."""
 
     COMPARATORS = ("=", "!=", "<>", "<=", ">=", "<", ">")
 
@@ -3745,7 +3754,6 @@ class ExprParser:
         resolver=None,
         scope: "frozenset[str] | None" = None,
         scalar: bool = False,
-        hidden: "list[tuple[str, Column]] | None" = None,
     ):
         self.cur = cur
         self.weak = weak_typing
@@ -3753,7 +3761,7 @@ class ExprParser:
         self.scope = scope
         self.scalar = scalar
         self.subqueries: Counter = Counter()
-        self.hidden = [] if hidden is None else hidden
+        self.exact = 0
         # Round-10: aggregate calls seen while parsing (``COUNT(*)`` /
         # ``SUM(x)`` ... mapped to their default output names) — the
         # HAVING handler uses these to add HIDDEN aggregates for calls
@@ -3784,8 +3792,32 @@ class ExprParser:
             return self._predicate()
         if self.cur.peek_kw() == "not":
             self.cur.next()
-            return ~self._not()
+            self.exact += 1
+            out = ~self._not()
+            self.exact -= 1
+            return out
         return self._predicate()
+
+    #: Tokens after which a parenthesized predicate is a plain boolean.
+    _BOOL_FOLLOW = frozenset(
+        {
+            ")", "and", "or", "group", "order", "limit", "offset", "having",
+            "qualify", "window", "union", "intersect", "except", "returning",
+            "then",
+        }
+    )
+
+    def _bare_group(self) -> bool:
+        """Whether the parenthesized group opening at the cursor only
+        feeds AND/OR or ends the predicate (nothing compares or tests
+        its value)."""
+        toks, depth, i = self.cur.toks, 0, self.cur.i
+        while i < len(toks):
+            depth += (toks[i] == "(") - (toks[i] == ")")
+            i += 1
+            if depth == 0:
+                break
+        return i >= len(toks) or toks[i].lower() in self._BOOL_FOLLOW
 
     def _is_outer(self, tok: str) -> bool:
         if self.scope is None or "." not in tok or _is_string_lit(tok):
@@ -3818,22 +3850,20 @@ class ExprParser:
     # ``WHERE a || 'X' = ...`` compiles like any computed comparison side
     _ARITH_OPS = ("+", "-", "*", "/", "%", "||")
 
-    def _collect_arith_tokens(self) -> list[str]:
-        """Lex one arithmetic run: operand (token or balanced paren group)
-        followed by (op operand)*. Tokens are returned RAW so Catalyst's
-        expression parser compiles them (string literals keep quotes,
-        backticks stripped from bare identifiers)."""
+    def _arith(self) -> Column:
+        """Compile one arithmetic run: operand (token or balanced paren
+        group) followed by (op operand)*. The run's RAW text goes to
+        Catalyst's expression parser (string literals keep quotes,
+        backticks stripped from bare identifiers). A run with a scalar
+        subquery operand — ``2 * (SELECT AVG(x) FROM t)`` — folds its
+        operands with Column operators instead, at Spark SQL's two
+        left-associative levels, so the subquery Column sits inside the
+        expression Catalyst decorrelates."""
 
-        def one_operand(out: list[str]) -> None:
+        def one_operand() -> "list[str] | Column":
             if self.cur.peek() == "(" and self.cur.peek_kw(1) == "select":
-                # A scalar subquery inside the run — ``2 * (SELECT AVG(x)
-                # FROM t)`` — is bound as a hidden column and its name
-                # spliced into the text (Catalyst's expression parser
-                # cannot see this engine's tables).
-                ph = f"__subq_scalar_{len(self.hidden)}"
-                self.hidden.append((ph, self._scalar_subquery(ph)))
-                out.append(ph)
-                return
+                return self._scalar_subquery()
+            out: list[str] = []
             t = self.cur.next()
             if t == "(":
                 out.append(t)
@@ -3870,13 +3900,39 @@ class ExprParser:
                 r"\.[A-Za-z_][\w$.]*", self.cur.peek()
             ):
                 out.append(self.cur.next())
+            return out
 
-        toks: list[str] = []
-        one_operand(toks)
+        operands, ops = [one_operand()], []
         while self.cur.peek() in self._ARITH_OPS:
-            toks.append(self.cur.next())
-            one_operand(toks)
-        return toks
+            ops.append(self.cur.next())
+            operands.append(one_operand())
+        if not any(isinstance(o, Column) for o in operands):
+            toks = list(operands[0])
+            for op, o in zip(ops, operands[1:]):
+                toks += [op, *o]
+            return self._raw(toks)
+        cols = [
+            o if isinstance(o, Column) else self._raw(o) for o in operands
+        ]
+        apply = {
+            "+": lambda a, b: a + b,
+            "-": lambda a, b: a - b,
+            "*": lambda a, b: a * b,
+            "/": lambda a, b: a / b,
+            "%": lambda a, b: a % b,
+            "||": F.concat,
+        }
+        terms, outer_ops = [cols[0]], []
+        for op, col in zip(ops, cols[1:]):
+            if op in ("*", "/", "%"):
+                terms[-1] = apply[op](terms[-1], col)
+            else:
+                outer_ops.append(op)
+                terms.append(col)
+        out = terms[0]
+        for op, col in zip(outer_ops, terms[1:]):
+            out = apply[op](out, col)
+        return out
 
     def _value_operand(self) -> tuple[Column | None, Any, str | None]:
         """Comparison-side operand with arithmetic support: if the operand
@@ -3885,15 +3941,15 @@ class ExprParser:
         keep the reference path (literal typing, weak-mode dual compare,
         HAVING aggregate-call names)."""
         start = self.cur.i
-        seen, n_hidden = self.subqueries.copy(), len(self.hidden)
+        seen = self.subqueries.copy()
         expr, lit, name = self._operand()
         if self.cur.peek() not in self._ARITH_OPS:
             return expr, lit, name
-        # rewind and rebuild the whole run as raw text; the re-lex parses
-        # any subquery in it again, so forget the first pass's count
+        # rewind and rebuild the whole run; the rebuild parses any
+        # subquery in it again, so forget the first pass's count
         self.cur.i = start
-        self.subqueries, self.hidden[n_hidden:] = seen, []
-        return self._raw(self._collect_arith_tokens()), None, None
+        self.subqueries = seen
+        return self._arith(), None, None
 
     def _subquery(self, kind: str) -> DataFrame:
         """Parse the ``SELECT ...`` at the cursor (the caller consumes the
@@ -3935,9 +3991,11 @@ class ExprParser:
                     "empty input) — drop the aggregate or compare the "
                     "scalar subquery's value instead"
                 )
+        # read the width before building: build_select appends the window
+        # aliases to spec.projections
+        width = _output_width(spec, clauses)
         sub = self.resolver(spec, clauses)
         if kind != "exists":
-            width = _output_width(spec, clauses)
             if width is None and not spec.correlated:
                 width = len(sub.columns)
             if width not in (None, 1):
@@ -3964,8 +4022,11 @@ class ExprParser:
         if t == "(" and self.cur.peek_kw(1) == "select":
             return self._scalar_subquery(), None, None
         if t == "(":
+            exact = not self._bare_group()
             self.cur.next()
+            self.exact += exact
             inner = self._or()
+            self.exact -= exact
             if self.cur.next() != ")":
                 raise ParseError("expected ')'")
             return inner, None, None
@@ -4072,10 +4133,18 @@ class ExprParser:
         op = "!=" if op == "<>" else op
         quant = "any" if qk == "some" else qk
         if quant == "any" and op == "=":
-            return _in_subquery(left, sub)
+            return self._in(left, sub, negate=False)
         if quant == "all" and op == "!=":
-            return ~_in_subquery(left, sub)
+            return self._in(left, sub, negate=True)
         return _quantified_fold(left, op, quant, sub)
+
+    def _in(self, left: Column, sub: DataFrame, negate: bool) -> Column:
+        """``left [NOT] IN (subquery)``: a bare ``isin`` where NULL acts
+        as FALSE (see ``exact``), else the exact three-valued helper."""
+        if self.exact:
+            out = _in_subquery(left, sub)
+            return ~out if negate else out
+        return ~left.isin(sub) if negate else left.isin(sub)
 
     def _predicate(self) -> Column:
         k0 = self.cur.peek_kw()
@@ -4125,14 +4194,11 @@ class ExprParser:
                 raise ParseError("expected '(' after IN")
             if self.cur.peek_kw() == "select":
                 # Dialect extension: ``x [NOT] IN (SELECT single_col
-                # ...)`` — exact ANSI three-valued membership in any
-                # position (_in_subquery); NOT folds through it by Kleene
-                # logic.
+                # ...)`` — ANSI three-valued membership (see _in).
                 sub = self._subquery("in")
                 if self.cur.next() != ")":
                     raise ParseError("expected ')' after subquery")
-                out = _in_subquery(left, sub)
-                return ~out if negate else out
+                return self._in(left, sub, negate)
             vals: list[Any] = []
             while True:
                 tok = self.cur.next()
@@ -4247,9 +4313,8 @@ class SelectSpec:
     windows: list[tuple[str, list, str, list, list]] = field(
         default_factory=list
     )  # (fn, args, alias, partition_cols, [(order_col, desc)])
-    # Scalar subqueries bound as hidden ``__subq_scalar_<n>`` columns on
-    # the FROM frame: WHERE arithmetic splices their names into raw text
-    # and SELECT-list subqueries project them.
+    # SELECT-list scalar subqueries, bound as hidden ``__subq_scalar_<n>``
+    # columns on the FROM frame and projected from there.
     hidden: list[tuple[str, Column]] = field(default_factory=list)
     # True when qualified references must resolve against this FROM's
     # table name — the SELECT has subqueries, or is one.
@@ -5460,8 +5525,11 @@ def parse_select(
         cur.expect_kw("on")
         onp = ExprParser(cur, weak_typing, resolver)
         cond = onp.parse()
-        if onp.hidden or _predicate_subqueries(onp, "scalar"):
-            raise ParseError("subqueries are not supported in JOIN ... ON")
+        if _predicate_subqueries(onp):
+            raise ParseError(
+                "only uncorrelated scalar subqueries are supported in "
+                "JOIN ... ON"
+            )
         spec.joins.append((how, jtable, jalias, cond))
 
     clauses: dict[str, Any] = {}
@@ -5482,7 +5550,7 @@ def parse_select(
                 )
             wp = ExprParser(
                 cur, weak_typing, resolver, scope=scope,
-                scalar=subquery == "scalar", hidden=spec.hidden,
+                scalar=subquery == "scalar",
             )
             clauses["where"] = wp.parse()
             spec.correlated = wp.subqueries["outer"] > 0
@@ -5595,8 +5663,6 @@ def parse_select(
                     "IN/EXISTS/ANY/ALL and correlated subqueries are not "
                     "supported in HAVING"
                 )
-            if hp.hidden:
-                clauses["having_bind"] = hp.hidden
             # Round-10: HAVING over an aggregate NOT in the SELECT list
             # (``SELECT g, MAX(v) AS m ... HAVING COUNT(*) > 2``) —
             # standard SQL. Add each missing call as a HIDDEN aggregate
@@ -5704,8 +5770,11 @@ def parse_select(
             cur.next()
             qp = ExprParser(cur, weak_typing, resolver)
             clauses["qualify"] = qp.parse()
-            if qp.hidden or _predicate_subqueries(qp, "scalar"):
-                raise ParseError("subqueries are not supported in QUALIFY")
+            if _predicate_subqueries(qp):
+                raise ParseError(
+                    "only uncorrelated scalar subqueries are supported in "
+                    "QUALIFY"
+                )
         elif kw == "window":
             # Round-8: ``WINDOW w AS ([PARTITION BY ...] [ORDER BY ...]
             # [frame]) [, w2 AS (...)]`` — named window definitions
@@ -5761,10 +5830,9 @@ def parse_select(
     return spec, None, clauses
 
 
-def _predicate_subqueries(ep: ExprParser, *also: str) -> int:
-    """How many IN/EXISTS/ANY/ALL or correlated subqueries (plus the
-    kinds in ``also``) a parse saw."""
-    kinds = ("in", "exists", "quantified", "correlated", *also)
+def _predicate_subqueries(ep: ExprParser) -> int:
+    """How many IN/EXISTS/ANY/ALL or correlated subqueries a parse saw."""
+    kinds = ("in", "exists", "quantified", "correlated")
     return sum(ep.subqueries[k] for k in kinds)
 
 
@@ -6205,7 +6273,7 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
     if spec.aggregates:
         q.agg(*[agg_spec(fn, col, alias) for fn, col, alias in spec.aggregates])
     if "having" in clauses:
-        q.having(clauses["having"], clauses.get("having_bind"))
+        q.having(clauses["having"])
     if grouped_windows:
         # Round-6: windows OVER the aggregated frame — standard SQL
         # evaluation (GROUP BY → HAVING → window functions), so ``RANK()
@@ -6356,7 +6424,11 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
             # Lenient GROUP BY: surface the implicit COUNT(*) column
             # (select_negative_test.go:34-68 asserts it appears).
             cols.append(F.col("count"))
-        q.select(*cols)
+        if spec.projections or group or hidden_aggs:
+            # (an aggregate-only SELECT already has exactly this output;
+            # a projection over its Aggregate would make Catalyst
+            # decorrelate a correlated scalar through a domain join)
+            q.select(*cols)
     out = q.df()
     if spec.star and spec.star_exclude and not spec.distinct:
         # Round-8: SELECT * EXCLUDE (c1, ...) — the wide-table ergonomic
@@ -9414,8 +9486,7 @@ class RefSQL:
     def _dml_guard(ep: "ExprParser", verb: str) -> None:
         """UPDATE/DELETE predicates carry their subquery Columns into the
         engine's single copy-on-write pass, which reads the table under
-        its own name — so a subquery there cannot correlate with it, and
-        hidden arithmetic bindings have no frame to land on."""
+        its own name — so a subquery there cannot correlate with it."""
         if ep.subqueries["exists"]:
             raise ParseError(
                 f"EXISTS subqueries are not supported in {verb} — rewrite "
@@ -9424,11 +9495,6 @@ class RefSQL:
         if ep.subqueries["correlated"]:
             raise ParseError(
                 f"correlated subqueries are not supported in {verb}"
-            )
-        if ep.hidden:
-            raise ParseError(
-                "arithmetic around a scalar subquery is not supported in "
-                f"{verb} (compute it inside the subquery)"
             )
 
     def _merge(self, cur: _Cursor) -> int:
@@ -9520,9 +9586,10 @@ class RefSQL:
             cur.next()
             pp = ExprParser(cur, self.weak, self._build)
             pred = pp.parse()
-            if pp.hidden or _predicate_subqueries(pp):
+            if _predicate_subqueries(pp):
                 raise ParseError(
-                    "subqueries are not supported in MERGE WHEN AND"
+                    "only uncorrelated scalar subqueries are supported in "
+                    "MERGE WHEN AND"
                 )
             return pred
 

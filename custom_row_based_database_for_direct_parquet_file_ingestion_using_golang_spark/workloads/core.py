@@ -686,12 +686,12 @@ def refsql_lateral_group_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def refsql_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # IN / NOT IN subqueries through the dialect: membership in the
-    # rich-customer set, NOT IN against the negative-balance suppliers,
-    # combined as conjuncts with grouped order-insensitive aggregates.
-    # The oracle runs the identical ANSI subqueries — wrong membership
-    # semantics, a dropped conjunct, or broken three-valued NOT IN flips
-    # the hash.
+    # IN / NOT IN subqueries through the dialect: semi join against the
+    # rich-customer set, null-aware anti join against the negative-balance
+    # suppliers, combined as conjuncts with grouped order-insensitive
+    # aggregates. The oracle runs the identical ANSI subqueries — wrong
+    # semi/anti semantics, a dropped conjunct, or broken three-valued
+    # NOT IN flips the hash.
     return _ref_select(
         spark,
         sf_dir,
@@ -895,9 +895,9 @@ def refsql_setops_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def refsql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Uncorrelated scalar subquery through the dialect: the AVG executes
-    # once and inlines as a literal threshold (the same physical strategy
-    # Spark uses for scalar subqueries). Grouped count/min/max stay
+    # Uncorrelated scalar subquery through the dialect: the AVG runs once
+    # as its own subplan and Catalyst pushes the comparison into the
+    # orders scan. Grouped count/min/max stay
     # order-insensitive; min/max return stored values (no arithmetic), so
     # the hash is exact as long as both engines agree on the threshold
     # comparison.
@@ -1833,10 +1833,9 @@ def refsql_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def refsql_in_or_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round-9: IN (SELECT ...) in a NON-conjunct position — under OR the
-    # membership test stays three-valued (an existence join plus two
-    # one-row subqueries for emptiness and NULLs), ANSI Kleene semantics
-    # intact anywhere in the predicate tree. Oracle: DuckDB's native
-    # unrestricted IN.
+    # membership test plans as an existence join (UNKNOWN and FALSE both
+    # drop the row there), ANSI Kleene semantics intact. Oracle: DuckDB's
+    # native unrestricted IN.
     return _ref_select(
         spark,
         sf_dir,

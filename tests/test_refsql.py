@@ -603,6 +603,40 @@ def test_in_subquery_semi_anti_and_nulls(spark, tmp_path):
         "SELECT x FROM l WHERE x IN (SELECT y FROM r)").count() == 2
 
 
+def test_in_subquery_three_valued_in_every_position(spark, tmp_path):
+    # l.x: 1, 2, NULL; r.y: 1, NULL. x IN r is TRUE for 1 and UNKNOWN for
+    # 2 and NULL; against r without its NULL it is FALSE for 2.
+    from custom_row_based_database_for_direct_parquet_file_ingestion_using_golang_spark.plans.inspect import (
+        plan_text,
+    )
+
+    e = Engine(spark, str(tmp_path / "subq3"))
+    e.ref_sql("CREATE TABLE l (id INT, x INT)")
+    e.ref_sql("INSERT INTO l VALUES (1, 1), (2, 2), (3, NULL)")
+    e.ref_sql("CREATE TABLE r (y INT)")
+    e.ref_sql("INSERT INTO r VALUES (1), (NULL)")
+
+    def ids(where):
+        df = e.ref_sql(f"SELECT id FROM l WHERE {where} ORDER BY id")
+        return [row.id for row in df.collect()]
+
+    assert ids("x IN (SELECT y FROM r)") == [1]
+    assert ids("x NOT IN (SELECT y FROM r)") == []
+    assert ids("x NOT IN (SELECT y FROM r) OR id = 2") == [2]
+    assert ids("(x IN (SELECT y FROM r)) AND id > 0") == [1]
+    assert ids("NOT (x IN (SELECT y FROM r))") == []
+    assert ids("(x IN (SELECT y FROM r)) IS NULL") == [2, 3]
+    assert ids("(x IN (SELECT y FROM r WHERE y IS NOT NULL)) = false") == [2]
+    assert ids("NOT (x NOT IN (SELECT y FROM r WHERE y IS NOT NULL))") == [1]
+    # top-level conjuncts plan as a semi and a null-aware anti join
+    plan = plan_text(e.ref_sql(
+        "SELECT id FROM l WHERE x IN (SELECT y FROM r) "
+        "AND x NOT IN (SELECT y FROM r WHERE y > 5)"
+    ))
+    assert "LeftSemi" in plan and "LeftAnti" in plan
+    assert "ExistenceJoin" not in plan and "NestedLoop" not in plan
+
+
 def test_in_subquery_conjuncts_nesting_and_errors(spark, tmp_path):
     e = Engine(spark, str(tmp_path / "subq2"))
     e.ref_sql("CREATE TABLE t (k INT, grp TEXT)")
@@ -1037,6 +1071,12 @@ def test_scalar_subquery_in_where_and_having(engine):
         "HAVING n > (SELECT MIN(id) FROM students)"
     ).collect()
     assert [(r.course, r.n) for r in out] == [("Mech", 2)]
+    out = engine.ref_sql(
+        "SELECT course, COUNT(*) AS n FROM students GROUP BY course "
+        "HAVING n > (SELECT MIN(id) FROM students) * 2 - 1"
+    )
+    assert out.columns == ["course", "n"]
+    assert [(r.course, r.n) for r in out.collect()] == [("Mech", 2)]
     # Empty scalar subquery ⇒ NULL ⇒ comparison filters everything (ANSI).
     assert (
         engine.ref_sql(
@@ -1056,6 +1096,17 @@ def test_scalar_subquery_in_where_and_having(engine):
             "SELECT name FROM students "
             "WHERE id > (SELECT id, name FROM students)"
         )
+    # A window item is one output column of the subquery.
+    out = engine.ref_sql(
+        "SELECT id FROM students WHERE id IN "
+        "(SELECT LAG(id) OVER (ORDER BY id) AS p FROM students) ORDER BY id"
+    ).collect()
+    assert [r.id for r in out] == [1, 2, 3, 4, 5]
+    out = engine.ref_sql(
+        "SELECT name FROM students WHERE id = "
+        "(SELECT MAX(id) OVER () AS m FROM students LIMIT 1)"
+    ).collect()
+    assert [r.name for r in out] == ["Frank"]
 
 
 def test_scalar_subquery_in_update_delete(engine):
@@ -1069,6 +1120,57 @@ def test_scalar_subquery_in_update_delete(engine):
     )
     assert n == 1
     assert engine.table("students").count() == 5
+    # under arithmetic: ids 1..5, so 2 * 1 + 1 = 3 and 2 * 3 - 2 = 4
+    n = engine.ref_sql(
+        "UPDATE students SET course = 'Top' "
+        "WHERE id > 2 * (SELECT MIN(id) FROM students) + 1"
+    )
+    assert n == 2
+    n = engine.ref_sql(
+        "DELETE FROM students "
+        "WHERE id >= 2 * (SELECT AVG(id) FROM students) - 2 AND id > 4"
+    )
+    assert n == 1
+    t = engine.table("students")
+    assert t.columns == ["id", "name", "course"]
+    assert sorted((r.id, r.course) for r in t.collect()) == [
+        (1, "Mech"), (2, "AI/ML"), (3, "Data Science"), (4, "Top"),
+    ]
+
+
+def test_scalar_subquery_in_join_on_and_qualify(engine):
+    def ids(sql):
+        df = engine.ref_sql(sql)
+        assert not [c for c in df.columns if c.startswith("__")]
+        return [tuple(r) for r in df.collect()]
+
+    assert ids(
+        "SELECT a.id, b.id AS bid FROM students AS a JOIN students AS b "
+        "ON a.id = b.id AND a.id > (SELECT AVG(id) FROM students) "
+        "ORDER BY a.id"
+    ) == [(4, 4), (5, 5), (6, 6)]
+    assert ids(
+        "SELECT a.id, b.id AS bid FROM students AS a JOIN students AS b "
+        "ON b.id = a.id + 1 AND a.id < (SELECT MIN(id) FROM students) * 3 "
+        "ORDER BY a.id"
+    ) == [(1, 2), (2, 3)]
+    assert len(ids(
+        "SELECT * FROM students AS a LEFT JOIN students AS b "
+        "ON b.id = a.id AND b.id > (SELECT MAX(id) FROM students) - 2"
+    )) == 6
+    assert ids(
+        "SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM students "
+        "QUALIFY rn <= (SELECT MIN(id) FROM students)"
+    ) == [(1, 1)]
+    assert ids(
+        "SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM students "
+        "QUALIFY rn > (SELECT COUNT(*) FROM students) - 2 ORDER BY id"
+    ) == [(5, 5), (6, 6)]
+    with pytest.raises(ParseError, match="uncorrelated scalar"):
+        engine.ref_sql(
+            "SELECT a.id FROM students AS a JOIN students AS b "
+            "ON a.id = b.id AND a.id IN (SELECT id FROM students)"
+        )
 
 
 def test_group_by_rollup_and_cube(engine):
@@ -1573,6 +1675,24 @@ def test_merge_matched_and_predicate_filters_source(merge_engine):
         for r in merge_engine.ref_sql("SELECT id, name FROM acct").collect()
     }
     assert rows[2] == "b"  # untouched
+
+
+def test_merge_when_predicates_with_scalar_subqueries(merge_engine):
+    # chg id=2 has bal 25 > 0.5 * 40; acct id=1 (bal 10 < 25 - 10) has no
+    # source row
+    n = merge_engine.ref_sql(
+        "MERGE INTO acct USING chg ON acct.id = chg.id "
+        "WHEN MATCHED AND bal > 0.5 * (SELECT MAX(bal) FROM chg) "
+        "THEN UPDATE SET * "
+        "WHEN NOT MATCHED BY SOURCE "
+        "AND bal < (SELECT MIN(bal) FROM chg) - 10 THEN DELETE"
+    )
+    assert n == 2
+    acct = merge_engine.table("acct")
+    assert acct.columns == ["id", "name", "bal"]
+    assert sorted(tuple(r) for r in acct.collect()) == [
+        (2, "b2", 25.0), (3, "c", 30.0),
+    ]
 
 
 def test_merge_delete_clause(merge_engine):
@@ -2766,14 +2886,14 @@ def test_scalar_subquery_first_arithmetic(spark, sf_dir):
         "WHERE o2.o_custkey = o.o_custkey) * 2 > o_totalprice"
     )
     # exactly ONE decorrelation join in the plan — the rolled-back
-    # first-pass marker must not add a second
+    # first parse of the subquery must not add a second
     from custom_row_based_database_for_direct_parquet_file_ingestion_using_golang_spark.plans.inspect import (
         plan_text,
     )
 
-    txt = plan_text(corr)
-    assert txt.count("__subq_scalar_") > 0
-    assert "__subq_scalar_1" not in txt  # only marker #0 exists
+    tree = plan_text(corr).split("\n\n", 1)[0]
+    assert [ln for ln in tree.splitlines() if "Join" in ln][1:] == [], tree
+    assert "Join" in tree
     assert 0 < corr.collect()[0][0] <= n_all
 
 
