@@ -135,14 +135,13 @@ Round-12 extensions:
     accepts one too. ANSI-89 comma joins (``FROM a, b WHERE a.k =
     b.k``) parse as cross joins whose WHERE equalities Catalyst folds
     into hash-join conditions.
-  * ``[CROSS | INNER | LEFT] JOIN LATERAL (SELECT ... WHERE
-    <outer>.col = inner_col ...) AS x [ON TRUE]`` (also ``FROM a,
-    LATERAL (...)``) — correlated lateral subqueries, DECORRELATED
-    (RefSQL._lateral): aggregate bodies become groupBy(correlation key)
-    + one equi-join with the count-bug handled (empty groups still
-    yield COUNT 0 / SUM NULL rows); ``ORDER BY ... LIMIT k`` bodies
-    become a per-key window top-k + equi-join; never a per-outer-row
-    rescan, never a cartesian product.
+  * ``[CROSS | INNER | LEFT] JOIN LATERAL (SELECT ...) AS x [ON
+    TRUE]`` (also ``FROM a, LATERAL (...)``) — the body parses like a
+    subquery (qualified names outside its FROM are ``Column.outer()``
+    references) and joins through ``DataFrame.lateralJoin``; Catalyst
+    decorrelates it (count-bug guard, WindowGroupLimit for a per-row
+    LIMIT). A grouped body's ``inner = outer`` conjuncts become grouping
+    keys (_lateral_body).
   * ``ORDER BY ALL [ASC|DESC]`` — every output column left-to-right
     (DuckDB ergonomic), star-modifier-aware.
   * ``string_split(s, '<literal>')`` (aliases ``str_split``,
@@ -3639,6 +3638,16 @@ def _output_width(spec: "SelectSpec", clauses: dict) -> "int | None":
     return n
 
 
+def _outer_ref(tok: str, scope: "frozenset[str] | None") -> bool:
+    """Whether ``tok`` is a qualified column whose qualifier names none of
+    the relations in ``scope`` (a subquery's FROM) — an outer reference."""
+    if scope is None or "." not in tok or _is_string_lit(tok):
+        return False
+    if _literal_value(tok) is not None:  # 1.5 etc.
+        return False
+    return _unquote(tok).split(".", 1)[0].lower() not in scope
+
+
 def _in_subquery(left: Column, sub: DataFrame) -> Column:
     """ANSI three-valued ``left IN (subquery)`` from subquery Columns
     alone: FALSE over an empty subquery (even for a NULL left side), TRUE
@@ -3772,6 +3781,32 @@ class ExprParser:
     def parse(self) -> Column:
         return self._or()
 
+    def conjuncts(self) -> list[tuple[list[str], Column, bool]]:
+        """Parse a predicate as its top-level AND conjuncts: ``(tokens,
+        column, references the outer query)`` each. A predicate with a
+        top-level OR is one conjunct."""
+        start, first, out = self.cur.i, self.subqueries["outer"], []
+        while True:
+            i, seen = self.cur.i, self.subqueries["outer"]
+            col = self._not()
+            out.append(
+                (self.cur.toks[i:self.cur.i], col,
+                 self.subqueries["outer"] > seen)
+            )
+            if self.cur.peek_kw() != "and":
+                break
+            self.cur.next()
+        if self.cur.peek_kw() != "or":
+            return out
+        col = _and_all([c for _, c, _ in out])
+        while self.cur.peek_kw() == "or":
+            self.cur.next()
+            col = col | self._and()
+        return [
+            (self.cur.toks[start:self.cur.i], col,
+             self.subqueries["outer"] > first)
+        ]
+
     def _or(self) -> Column:
         left = self._and()
         while self.cur.peek_kw() == "or":
@@ -3820,11 +3855,7 @@ class ExprParser:
         return i >= len(toks) or toks[i].lower() in self._BOOL_FOLLOW
 
     def _is_outer(self, tok: str) -> bool:
-        if self.scope is None or "." not in tok or _is_string_lit(tok):
-            return False
-        if _literal_value(tok) is not None:  # 1.5 etc.
-            return False
-        return _unquote(tok).split(".", 1)[0].lower() not in self.scope
+        return _outer_ref(tok, self.scope)
 
     def _raw(self, buf: list[str]) -> Column:
         """Compile a raw token run with Catalyst's expression parser.
@@ -4623,11 +4654,12 @@ def parse_select(
     builds a parsed subquery's DataFrame (RefSQL supplies it; contexts
     without an engine reject subqueries). ``subquery`` names the form
     this SELECT is the body of (``scalar``, ``in``, ``exists``,
-    ``quantified``): its WHERE then marks references to other relations
-    as outer, and the dialect's expression-alias requirement is relaxed —
-    a subquery's output name is never observable, and standard SQL allows
-    ``(SELECT round(AVG(x), 2) FROM t)`` unaliased, so such items get an
-    internal auto-alias instead of raising."""
+    ``quantified``, ``lateral``): its WHERE then marks references to other
+    relations as outer. Except in a LATERAL body, whose columns the outer
+    query reads by name, the dialect's expression-alias requirement is
+    relaxed — a subquery's output name is never observable, and standard
+    SQL allows ``(SELECT round(AVG(x), 2) FROM t)`` unaliased, so such
+    items get an internal auto-alias instead of raising."""
     cur.expect_kw("select")
     spec = SelectSpec(table="", scoped=bool(subquery))
     if cur.peek_kw() == "distinct":
@@ -4810,7 +4842,7 @@ def parse_select(
                     "COUNT/SUM/AVG/MIN/MAX)"
                 )
             if cur.peek_kw() != "as":
-                if not subquery:
+                if subquery in (None, "lateral"):
                     raise ParseError(
                         f"statistical aggregate {low}(...) needs AS <alias>"
                     )
@@ -5033,7 +5065,7 @@ def parse_select(
                     # the column by its text, same as DuckDB.
                     float(name)
                 except ValueError:
-                    if not subquery:
+                    if subquery in (None, "lateral"):
                         raise ParseError(
                             f"expression projection '{name}' needs AS <alias>"
                         )
@@ -5451,13 +5483,12 @@ def parse_select(
                 cur.next()
         cur.expect_kw("join")
         if cur.peek_kw() == "lateral":
-            # Round-12: LATERAL join — the body is a correlated subselect
-            # whose WHERE may reference the OUTER row (qualified by the
-            # outer alias). Captured raw here; the executor decorrelates
-            # it into a groupBy / window-top-k + equi-join plan
-            # (RefSQL._lateral — Neumann-style unnesting, never a
-            # per-outer-row rescan). CROSS/INNER take no ON; LEFT
-            # requires the canonical ``ON TRUE``.
+            # LATERAL join: the body is a subquery whose qualified names
+            # outside its own FROM reference the columns joined so far
+            # (``Column.outer()``); the executor joins it with
+            # DataFrame.lateralJoin and Catalyst decorrelates it.
+            # CROSS/INNER take no ON; LEFT requires the canonical
+            # ``ON TRUE``.
             if how not in ("cross", "inner", "left"):
                 raise ParseError(
                     "LATERAL supports CROSS / INNER / LEFT JOIN only"
@@ -5465,7 +5496,11 @@ def parse_select(
             cur.next()
             if cur.next() != "(":
                 raise ParseError("expected '(' after LATERAL")
-            body = _capture_balanced_tokens(cur)
+            bspec, _, bclauses = parse_select(
+                cur, weak_typing, resolver, subquery="lateral"
+            )
+            if cur.next() != ")":
+                raise ParseError("expected ')' to close the LATERAL body")
             if cur.peek_kw() == "as":
                 cur.next()
             nxt = cur.peek()
@@ -5491,10 +5526,16 @@ def parse_select(
                         "JOIN LATERAL takes ON TRUE (the correlation "
                         "lives in the body's WHERE)"
                     )
+            width = _output_width(bspec, bclauses)
+            if lcols is not None and width not in (None, len(lcols)):
+                raise ParseError(
+                    f"alias lists {len(lcols)} columns but the LATERAL "
+                    f"body has {width}"
+                )
             spec.joins.append(
                 (
                     "lateral_left" if how == "left" else "lateral_inner",
-                    ("__lateral__", tuple(body), lcols),
+                    ("__lateral__", bspec, bclauses, lcols),
                     lalias,
                     None,
                 )
@@ -5532,27 +5573,32 @@ def parse_select(
             )
         spec.joins.append((how, jtable, jalias, cond))
 
+    scope = None
+    if subquery:
+        scope = frozenset(
+            n.lower()
+            for n in (
+                spec.table,
+                spec.alias,
+                *[ja or jt for _, jt, ja, _ in spec.joins],
+            )
+            if isinstance(n, str)
+        )
     clauses: dict[str, Any] = {}
+    conjuncts: list[tuple[list[str], Column, bool]] = []
     while not cur.done():
         kw = cur.peek_kw()
         if kw == "where":
             cur.next()
-            scope = None
-            if subquery:
-                scope = frozenset(
-                    n.lower()
-                    for n in (
-                        spec.table,
-                        spec.alias,
-                        *[ja or jt for _, jt, ja, _ in spec.joins],
-                    )
-                    if isinstance(n, str)
-                )
             wp = ExprParser(
                 cur, weak_typing, resolver, scope=scope,
                 scalar=subquery == "scalar",
             )
-            clauses["where"] = wp.parse()
+            if subquery == "lateral":
+                conjuncts = wp.conjuncts()
+                clauses["where"] = _and_all([c for _, c, _ in conjuncts])
+            else:
+                clauses["where"] = wp.parse()
             spec.correlated = wp.subqueries["outer"] > 0
             spec.scoped = spec.scoped or sum(wp.subqueries.values()) > 0
         elif kw == "group":
@@ -5825,9 +5871,111 @@ def parse_select(
                 part, order, frame = defs[part]
             resolved_w.append((fn, args, alias, part, order, frame))
         spec.windows = resolved_w
+    if subquery == "lateral":
+        _lateral_body(spec, clauses, conjuncts, scope)
     if scalar_items:
         _bind_select_scalars(spec, clauses, scalar_items, weak_typing, resolver)
     return spec, None, clauses
+
+
+def _and_all(cols: list[Column]) -> Column:
+    out = cols[0]
+    for c in cols[1:]:
+        out = out & c
+    return out
+
+
+def _lateral_body(
+    spec: SelectSpec,
+    clauses: dict,
+    conjuncts: list[tuple[list[str], Column, bool]],
+    scope: frozenset,
+) -> None:
+    """Shape a parsed LATERAL body for ``DataFrame.lateralJoin``.
+
+    A plain item naming an outer column compiles whole as ``outer()``
+    (Catalyst still resolves its inner names first), so the body analyzes
+    only inside the join. A grouped body cannot filter on outer columns
+    before its aggregate: classic PySpark's ``groupBy`` analyzes its
+    input. Its top-level ``inner = outer`` WHERE conjuncts become extra
+    grouping keys matched to the outer columns after the aggregate, the
+    plan Spark SQL builds for a grouped LATERAL; any other outer reference
+    there is an error. SQL that is invalid on its own fails here, not when
+    the statement runs."""
+    if spec.distinct or spec.distinct_on or spec.windows:
+        raise ParseError(
+            "SELECT DISTINCT and window functions in a LATERAL body are "
+            "not supported"
+        )
+    group = clauses.get("group_by")
+    if not group:
+        if spec.aggregates and spec.projections:
+            raise ParseError(
+                "LATERAL body mixes aggregate and plain items without "
+                "GROUP BY"
+            )
+        outer = {}
+        for i, (name, alias) in enumerate(spec.projections):
+            if name and any(_outer_ref(t, scope) for t in tokenize(name)):
+                ph = f"__lateral_outer_{i}"
+                outer[ph] = F.expr(name).outer()
+                spec.projections[i] = (
+                    ph, alias or _unquote(name).rsplit(".", 1)[-1]
+                )
+        if outer:
+            clauses["outer_items"] = outer
+        return
+    if group == ["__ALL__"]:
+        group = [item for item, _ in spec.projections]
+    group = [
+        spec.projections[int(g) - 1][0]
+        if g.isdigit() and 0 < int(g) <= len(spec.projections)
+        else g
+        for g in group
+    ]
+    keys = {g.rsplit(".", 1)[-1] for g in group}
+    for name, _ in spec.projections:
+        if name.rsplit(".", 1)[-1] not in keys:
+            raise ParseError(
+                f"LATERAL item '{name}' must be an aggregate or a bare "
+                "GROUP BY key"
+            )
+    where, having = [], [clauses["having"]] if "having" in clauses else []
+    for toks, col, correlated in conjuncts:
+        if not correlated:
+            where.append(col)
+            continue
+        sides = [toks[0], toks[2]] if len(toks) == 3 and toks[1] == "=" else []
+        refs = [t for t in sides if _outer_ref(t, scope)]
+        inner = [
+            _unquote(t)
+            for t in sides
+            if t not in refs and re.fullmatch(r"[A-Za-z_`\"][\w$.`\"]*", t)
+        ]
+        if len(refs) != 1 or len(inner) != 1 or "group_mode" in clauses:
+            raise ParseError(
+                "a grouped LATERAL body references the outer query only "
+                "in top-level '<inner col> = <outer>.col' WHERE conjuncts "
+                "of a plain GROUP BY"
+            )
+        if inner[0] not in group:
+            group = [*group, inner[0]]
+        key = F.col(inner[0].rsplit(".", 1)[-1])
+        having.append(key == F.col(_unquote(refs[0])).outer())
+    if any(
+        _outer_ref(t, scope) for _, text, _ in spec.aggregates
+        for t in tokenize(text)
+    ):
+        raise ParseError(
+            "a grouped LATERAL body's aggregates cannot reference the "
+            "outer query"
+        )
+    clauses["group_by"] = group
+    clauses.pop("where", None)
+    if where:
+        clauses["where"] = _and_all(where)
+    if having:
+        clauses["having"] = _and_all(having)
 
 
 def _predicate_subqueries(ep: ExprParser) -> int:
@@ -6384,7 +6532,12 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
             if is_value_expr(g)
         }
         grouped = bool(group) or bool(spec.aggregates)
+        outer_items = clauses.get("outer_items", {})
         for name, alias in spec.projections:
+            if name in outer_items:
+                # a LATERAL body item over outer columns (_lateral_body)
+                cols.append(outer_items[name].alias(alias))
+                continue
             # Missing-column-tolerant projection (P3, select.go:588-592):
             # unknown columns project as NULL instead of erroring. Value
             # expressions (dialect extension) compile via Catalyst's
@@ -6854,15 +7007,16 @@ class RefSQL:
                 df = df.filter(F.col(val_col).isNotNull())
         if spec.joins:
             df = df.alias(spec.alias or spec.table)
-            outer_names = [spec.alias or spec.table]
             for how, jtable, jalias, cond in spec.joins:
                 if how in ("lateral_inner", "lateral_left"):
-                    _, body, lcols = jtable
-                    df = self._lateral(
-                        df, tuple(outer_names), list(body), jalias, lcols,
-                        left=(how == "lateral_left"),
+                    _, bspec, bclauses, lcols = jtable
+                    body = self._build(bspec, bclauses)
+                    if lcols is not None:
+                        body = body.toDF(*lcols)
+                    df = df.lateralJoin(
+                        body.alias(jalias),
+                        how="left" if how == "lateral_left" else "inner",
                     )
-                    outer_names.append(jalias)
                     continue
                 if how in ("asof", "asof_left"):
                     df = self._asof(
@@ -6870,10 +7024,8 @@ class RefSQL:
                         self._join_side_df(jtable), jalias or jtable,
                         cond, inner=(how == "asof"),
                     )
-                    outer_names.append(jalias or jtable)
                     continue
                 jdf = self._join_side_df(jtable).alias(jalias or jtable)
-                outer_names.append(jalias or jtable)
                 if how == "cross":
                     df = df.crossJoin(jdf)
                 elif isinstance(cond, tuple):
@@ -6968,396 +7120,6 @@ class RefSQL:
         if inner:
             out = out.filter(F.col(f"asof_{tr}").isNotNull())
         return out
-
-    def _lateral(
-        self,
-        outer: DataFrame,
-        outer_names: tuple,
-        toks: list[str],
-        alias: str,
-        cols: "list[str] | None",
-        left: bool = False,
-    ) -> DataFrame:
-        """Compile a LATERAL join body by DECORRELATION (Neumann/Kemper
-        unnesting), never a per-outer-row rescan.
-
-        Supported body shape (restrictions documented in DIALECT.md):
-        ``SELECT items FROM table [AS a] WHERE conjuncts [ORDER BY ...
-        LIMIT k]`` where at least one top-level conjunct is a correlation
-        EQUALITY ``<outer_alias>.col = inner_col`` (outer references must
-        be qualified with an outer relation's alias; any number of such
-        keys compose) and every other conjunct is inner-only. Three plans:
-
-        * aggregate items (``count(*)``, ``sum(x)``, expressions over
-          them) → groupBy(correlation keys) + ONE equi-join. The body
-          always yields exactly one row per outer row in SQL — COUNT over
-          an empty group is 0 — which a naive groupBy+join drops (the
-          classic "count bug" of unnesting). The grouped side is
-          COMPLETED with the missing outer keys (distinct-keys anti-join;
-          each item's fill value is the item evaluated over an EMPTY
-          group — round-13, so count(*)+1 fills 1, not 0) so the join
-          always matches; CROSS/INNER and LEFT coincide, per SQL.
-        * ``ORDER BY ... LIMIT k`` (no aggregates) → per-key window
-          row_number ≤ k on the INNER side (one shuffle on the keys —
-          the top-k never materializes more than k rows per key), then
-          the equi-join; CROSS/INNER drops outer rows with an empty
-          body, LEFT NULL-pads them.
-        * plain items → filter + equi-join.
-
-        At 100 TB the point is exactly this: the correlated subquery
-        becomes one shuffle on the correlation key + one join that AQE /
-        broadcast planning treat like any other — no nested-loop rescan
-        of the inner table per outer row."""
-        cur = _Cursor(list(toks))
-        cur.expect_kw("select")
-        # --- SELECT items: raw token runs split on top-level commas
-        items: list[tuple[list[str], "str | None"]] = []
-        buf: list[str] = []
-        depth = 0
-        while True:
-            if cur.done():
-                raise ParseError("LATERAL body needs a FROM clause")
-            if depth == 0 and cur.peek_kw() == "from":
-                break
-            t = cur.next()
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            if depth == 0 and t == ",":
-                items.append((buf, None))
-                buf = []
-                continue
-            buf.append(t)
-        if buf:
-            items.append((buf, None))
-        norm_items: list[tuple[list[str], str]] = []
-        for buf, _ in items:
-            if not buf:
-                raise ParseError("empty item in LATERAL SELECT list")
-            if buf == ["*"] or (len(buf) == 1 and buf[0].endswith(".*")):
-                raise ParseError(
-                    "LATERAL body items must be named expressions, not *"
-                )
-            al = None
-            if len(buf) >= 3 and buf[-2].lower() == "as":
-                al = _unquote(buf[-1])
-                buf = buf[:-2]
-            text = " ".join(buf)
-            if al is None:
-                if len(buf) == 1 and re.fullmatch(r"[A-Za-z_][\w.]*", buf[0]):
-                    al = _unquote(buf[0]).rsplit(".", 1)[-1]
-                else:
-                    raise ParseError(
-                        f"LATERAL item '{text}' needs AS <alias>"
-                    )
-            norm_items.append((buf, al))
-        cur.expect_kw("from")
-        tname = _unquote(cur.next())
-        talias = None
-        if cur.peek_kw() == "as":
-            cur.next()
-            talias = _unquote(cur.next())
-        elif cur.peek() is not None and cur.peek_kw() not in (
-            "where", "order", "limit", "group", "having", "qualify",
-            "join", "inner", "left", "right", "full", "cross",
-        ):
-            talias = _unquote(cur.next())
-        inner = self._table_df(tname)
-        inner_name = talias or tname
-        inner = inner.alias(inner_name)
-        # --- WHERE: split top-level AND conjuncts at token level so the
-        # correlation equalities can be lifted out; everything else must
-        # be inner-only and recombines into one Catalyst expression.
-        conjuncts: list[list[str]] = []
-        if cur.peek_kw() == "where":
-            cur.next()
-            buf, depth = [], 0
-            while not cur.done() and not (
-                depth == 0 and cur.peek_kw() in ("order", "limit", "group")
-            ):
-                t = cur.next()
-                if t == "(":
-                    depth += 1
-                elif t == ")":
-                    depth -= 1
-                if depth == 0 and t.lower() == "and":
-                    conjuncts.append(buf)
-                    buf = []
-                    continue
-                buf.append(t)
-            if buf:
-                conjuncts.append(buf)
-        # Round-13: GROUP BY inside the body — multi-row grouped laterals.
-        # Decorrelation is the same groupBy, over (correlation keys ∪
-        # inner GROUP BY keys); NO completion row (ANSI: GROUP BY over
-        # empty input yields no groups, so CROSS/INNER drops unmatched
-        # outer rows and LEFT NULL-pads them — DuckDB-probed).
-        group_toks: list[str] = []
-        if cur.peek_kw() == "group":
-            cur.next()
-            cur.expect_kw("by")
-            while not cur.done() and cur.peek_kw() not in (
-                "order", "limit", "having",
-            ):
-                t = cur.next()
-                if t == ",":
-                    continue
-                if not re.fullmatch(r"[A-Za-z_`\"'][\w.`\"']*", t):
-                    raise ParseError(
-                        "LATERAL GROUP BY keys must be plain inner "
-                        f"columns, got {t!r}"
-                    )
-                group_toks.append(t)
-            if not group_toks:
-                raise ParseError("LATERAL GROUP BY needs at least one key")
-        if cur.peek_kw() == "having":
-            raise ParseError(
-                "HAVING inside a LATERAL body is not supported — filter "
-                "the aggregate in the outer WHERE via the lateral alias"
-            )
-
-        def outer_qual(tok: str) -> bool:
-            return "." in tok and _unquote(tok).split(".", 1)[0] in outer_names
-
-        def inner_col(tok: str) -> "str | None":
-            c = _unquote(tok)
-            if "." in c:
-                q, c2 = c.split(".", 1)
-                return c2 if q == inner_name and c2 in inner.columns else None
-            return c if c in inner.columns else None
-
-        keys: list[tuple[str, str]] = []  # (outer qualified ref, inner col)
-        residual: list[list[str]] = []
-        for conj in conjuncts:
-            refs = [t for t in conj if outer_qual(t)]
-            if not refs:
-                residual.append(conj)
-                continue
-            ok = len(conj) == 3 and conj[1] == "="
-            if ok:
-                a, b = conj[0], conj[2]
-                if outer_qual(a) and inner_col(b) is not None:
-                    keys.append((_unquote(a), inner_col(b)))
-                elif outer_qual(b) and inner_col(a) is not None:
-                    keys.append((_unquote(b), inner_col(a)))
-                else:
-                    ok = False
-            if not ok:
-                raise ParseError(
-                    "LATERAL correlation must be equality conjuncts "
-                    f"'<outer>.col = <inner col>'; got: {' '.join(conj)}"
-                )
-        if not keys:
-            raise ParseError(
-                "LATERAL body has no correlation conjunct — use a plain "
-                "derived join side: JOIN (SELECT ...) AS x"
-            )
-        if residual:
-            text = " and ".join("( " + " ".join(c) + " )" for c in residual)
-            wp = ExprParser(_Cursor(tokenize(text)), self.weak, None)
-            inner = inner.filter(wp.parse())
-        group_keys: list[str] = []
-        for t in group_toks:
-            g = inner_col(t)
-            if g is None:
-                raise ParseError(
-                    f"LATERAL GROUP BY key {t!r} is not an inner column"
-                )
-            group_keys.append(g)
-        # --- ORDER BY / LIMIT tail
-        order: list[tuple[str, bool]] = []
-        limit: "int | None" = None
-        if cur.peek_kw() == "order":
-            cur.next()
-            cur.expect_kw("by")
-            while not cur.done() and cur.peek_kw() != "limit":
-                t = cur.next()
-                if t == ",":
-                    continue
-                if not re.fullmatch(r"[A-Za-z_`\"'][\w.`\"']*", t):
-                    raise ParseError(
-                        "LATERAL ORDER BY keys must be plain columns, "
-                        f"got {t!r}"
-                    )
-                desc = False
-                if cur.peek_kw() in ("asc", "desc"):
-                    desc = cur.next().lower() == "desc"
-                order.append((_unquote(t), desc))
-        if cur.peek_kw() == "limit":
-            cur.next()
-            try:
-                limit = int(cur.next())
-            except (TypeError, ValueError):
-                raise ParseError("LATERAL LIMIT needs an integer")
-        if not cur.done():
-            raise ParseError(f"unexpected token {cur.peek()!r} in LATERAL body")
-
-        aggs = [(buf, al) for buf, al in norm_items if _contains_agg_call(buf)]
-        if group_keys:
-            if order or limit is not None:
-                raise ParseError(
-                    "LATERAL GROUP BY bodies take no ORDER BY / LIMIT — "
-                    "rank via the lateral alias in the outer query"
-                )
-            for buf, _ in norm_items:
-                if _contains_agg_call(buf):
-                    continue
-                if not (len(buf) == 1 and inner_col(buf[0]) in group_keys):
-                    raise ParseError(
-                        f"LATERAL item '{' '.join(buf)}' must be an "
-                        "aggregate or a bare GROUP BY key"
-                    )
-        elif aggs and len(aggs) != len(norm_items):
-            raise ParseError(
-                "LATERAL body mixes aggregate and plain items — aggregate "
-                "bodies must be all-aggregate (the implicit group is the "
-                "correlation key)"
-            )
-        if not group_keys and aggs and (order or limit is not None):
-            raise ParseError(
-                "LATERAL aggregate bodies take no ORDER BY / LIMIT "
-                "(they yield one row per outer row)"
-            )
-        if order and limit is None:
-            raise ParseError(
-                "ORDER BY inside a LATERAL body needs a LIMIT "
-                "(it is meaningless otherwise)"
-            )
-        taken = set(outer.columns)
-        out_names = cols or [al for _, al in norm_items]
-        if cols is not None and len(cols) != len(norm_items):
-            raise ParseError(
-                f"alias lists {len(cols)} columns but the LATERAL body "
-                f"has {len(norm_items)}"
-            )
-        clash = [n for n in out_names if n in taken]
-        if clash:
-            raise ParseError(
-                f"LATERAL output columns {clash} collide with outer "
-                "columns — alias them"
-            )
-        kcols = [f"__lat_k{i}" for i in range(len(keys))]
-        key_exprs = [
-            F.col(f"{inner_name}.{kc}").alias(kn)
-            for (_o, kc), kn in zip(keys, kcols)
-        ]
-        if group_keys:
-            # Grouped lateral (round-13): ONE groupBy over (correlation
-            # keys ∪ GROUP BY keys) + ONE equi-join — the same shuffle
-            # count as the scalar-aggregate path, never a per-outer-row
-            # rescan. No completion: an unmatched outer key has zero
-            # groups (ANSI), so CROSS/INNER drops it and LEFT NULL-pads.
-            gcols = [f"__lat_g{j}" for j in range(len(group_keys))]
-            gb = [
-                *key_exprs,
-                *[
-                    F.col(f"{inner_name}.{g}").alias(gn)
-                    for g, gn in zip(group_keys, gcols)
-                ],
-            ]
-            agg_exprs = [
-                F.expr(" ".join(buf)).alias(n)
-                for (buf, _), n in zip(norm_items, out_names)
-                if _contains_agg_call(buf)
-            ]
-            grouped = (
-                inner.groupBy(*gb).agg(*agg_exprs)
-                if agg_exprs
-                else inner.select(*gb).distinct()
-            )
-            proj = [F.col(k) for k in kcols]
-            for (buf, _), n in zip(norm_items, out_names):
-                if _contains_agg_call(buf):
-                    proj.append(F.col(n))
-                else:
-                    j = group_keys.index(inner_col(buf[0]))
-                    proj.append(F.col(gcols[j]).alias(n))
-            lat = grouped.select(*proj).alias(alias)
-            cond = None
-            for (oref, _kc), kn in zip(keys, kcols):
-                c = F.col(oref) == F.col(f"{alias}.{kn}")
-                cond = c if cond is None else (cond & c)
-            return outer.join(
-                lat, cond, "left" if left else "inner"
-            ).drop(*kcols)
-        if aggs:
-            # Aggregate body: SQL returns exactly ONE row per outer row
-            # (COUNT over an empty group is 0, other aggregates NULL) —
-            # the "count bug" a naive groupBy+join drops. Completing the
-            # grouped side with the missing outer keys (distinct keys
-            # anti-join, zero/NULL defaults) keeps the join an always-
-            # matching equi-join AND keeps the lateral alias qualifier on
-            # every output column (a post-join coalesce would strip it).
-            # NULL handling is exact: inner NULL-key groups can never
-            # match (ANSI '='), so they are filtered; outer NULL keys
-            # match their zero-row via null-safe equality.
-            lat = inner.groupBy(*key_exprs).agg(
-                *[
-                    F.expr(" ".join(buf)).alias(n)
-                    for (buf, _), n in zip(norm_items, out_names)
-                ]
-            )
-            nonnull = None
-            for kn in kcols:
-                c = F.col(kn).isNotNull()
-                nonnull = c if nonnull is None else (nonnull & c)
-            lat = lat.filter(nonnull)
-            types = {f.name: f.dataType for f in lat.schema.fields}
-            okeys = outer.select(
-                *[
-                    F.col(oref).alias(kn)
-                    for (oref, _kc), kn in zip(keys, kcols)
-                ]
-            ).distinct()
-            # Round-13 (advice): the completion row's value per item is
-            # the item EVALUATED OVER AN EMPTY GROUP — an ungrouped
-            # aggregate over limit(0) — not a count-prefix guess, so
-            # expression-wrapped aggregates (count(*)+1 → 1) fill
-            # exactly as ANSI/DuckDB's one-row empty-group result does.
-            # One broadcast row; the cross join is a 1-row BNLJ.
-            empty = inner.limit(0).agg(
-                *[
-                    F.expr(" ".join(buf)).cast(types[n]).alias(n)
-                    for (buf, _), n in zip(norm_items, out_names)
-                ]
-            )
-            zeros = okeys.join(
-                lat.select(*kcols), kcols, "left_anti"
-            ).crossJoin(F.broadcast(empty))
-            lat = lat.unionByName(zeros).alias(alias)
-            cond = None
-            for (oref, _kc), kn in zip(keys, kcols):
-                c = F.col(oref).eqNullSafe(F.col(f"{alias}.{kn}"))
-                cond = c if cond is None else (cond & c)
-            return outer.join(lat, cond, "inner").drop(*kcols)
-        else:
-            if limit is not None:
-                from pyspark.sql import Window as W
-
-                okeys = []
-                for c, desc in order:
-                    col = F.col(c)
-                    okeys.append(col.desc() if desc else col.asc())
-                w = W.partitionBy(
-                    *[F.col(f"{inner_name}.{kc}") for _o, kc in keys]
-                ).orderBy(*okeys)
-                inner = inner.withColumn(
-                    "__lat_rn", F.row_number().over(w)
-                ).filter(F.col("__lat_rn") <= limit)
-            lat = inner.select(
-                *key_exprs,
-                *[
-                    F.expr(" ".join(buf)).alias(n)
-                    for (buf, _), n in zip(norm_items, out_names)
-                ],
-            )
-        lat = lat.alias(alias)
-        cond = None
-        for (oref, _kc), kn in zip(keys, kcols):
-            c = F.col(oref) == F.col(f"{alias}.{kn}")
-            cond = c if cond is None else (cond & c)
-        return outer.join(lat, cond, "left" if left else "inner").drop(*kcols)
 
     def _build(self, spec: "SelectSpec", clauses: dict) -> DataFrame:
         """One parsed SELECT arm as a DataFrame — also the parser's

@@ -606,14 +606,14 @@ def refsql_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def refsql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round-12: LATERAL joins through the dialect, decorrelated — the
-    # aggregate body becomes groupBy(o_custkey) + one equi-join with the
-    # grouped side completed for customers that have NO 'F' orders (the
-    # classic "count bug": n_f must be 0 there, not a dropped row), and
-    # the ORDER BY ... LIMIT 1 body becomes a per-key window top-1 +
-    # LEFT join (customers with no orders at all NULL-pad). The oracle
-    # is DuckDB's NATIVE LATERAL on the identical SQL text — both
-    # decorrelation plans must agree with true per-row evaluation,
+    # LATERAL joins through the dialect (DataFrame.lateralJoin), which
+    # Catalyst decorrelates: the aggregate body becomes an aggregate over
+    # o_custkey left-joined to the distinct customer keys, with its
+    # count-bug guard making n_f 0 (not a dropped row) for customers with
+    # NO 'F' orders; the ORDER BY ... LIMIT 1 body becomes a per-key
+    # WindowGroupLimit top-1 + LEFT join (customers with no orders at all
+    # NULL-pad). The oracle is DuckDB's NATIVE LATERAL on the identical
+    # SQL text, so both plans must agree with per-row evaluation,
     # including empty groups and ties (broken deterministically by
     # o_orderkey).
     return _ref_select(
@@ -648,15 +648,16 @@ def refsql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def refsql_lateral_group_by(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round-13: GROUP BY inside a LATERAL body — the multi-row grouped
-    # lateral, decorrelated to ONE groupBy over (correlation key ∪ GROUP
-    # BY key) + ONE equi-join (plan-pinned in test_plans.py). Unlike the
-    # scalar-aggregate form there is NO completion row: a customer with
-    # no qualifying orders has zero groups and drops under CROSS (ANSI).
-    # The oracle is DuckDB's NATIVE grouped LATERAL on the identical SQL
-    # text — the decorrelated plan must agree with true per-row
-    # evaluation, including the residual inner-only conjunct and empty
-    # groups.
+    # GROUP BY inside a LATERAL body — the multi-row grouped lateral. The
+    # correlation conjunct becomes an extra grouping key matched to the
+    # outer key after the aggregate, so the plan is ONE aggregate over
+    # (o_orderstatus, o_custkey) + ONE equi-join (plan-pinned in
+    # test_plans.py). Unlike the scalar-aggregate form an empty body
+    # yields no row: a customer with no qualifying orders has zero groups
+    # and drops under CROSS (ANSI). The oracle is DuckDB's NATIVE grouped
+    # LATERAL on the identical SQL text, so the plan must agree with
+    # per-row evaluation, including the residual inner-only conjunct and
+    # empty groups.
     return _ref_select(
         spark,
         sf_dir,

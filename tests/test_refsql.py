@@ -3970,41 +3970,71 @@ def test_lateral_topk_and_plain(spark, tmp_path):
         "ORDER BY c.ck, x.ok"
     ).collect()
     assert [(r.ck, r.ok) for r in rows] == [(1, 101), (1, 102)]
+    # explicit NULL ordering in the body (DuckDB gives the same rows)
+    e.ref_sql("INSERT INTO ords VALUES (3, 301, NULL)")
+    rows = e.ref_sql(
+        "SELECT c.ck, x.ok FROM cust AS c LEFT JOIN LATERAL "
+        "(SELECT ok FROM ords WHERE ck = c.ck ORDER BY v ASC NULLS LAST "
+        "LIMIT 1) AS x ON TRUE ORDER BY c.ck"
+    ).collect()
+    assert [(r.ck, r.ok) for r in rows] == [(1, 100), (2, None), (3, 300)]
+
+
+def _two_engines(spark, path, *stmts):
+    """An Engine and a DuckDB connection that both ran ``stmts``."""
+    import duckdb
+
+    e = Engine(spark, path)
+    con = duckdb.connect()
+    for sql in stmts:
+        e.ref_sql(sql)
+        con.execute(sql)
+    return e, con
+
+
+def _assert_matches_duckdb(e, con, sql):
+    def key(row):
+        return tuple((v is None, v) for v in row)
+
+    mine = sorted((tuple(r) for r in e.ref_sql(sql).collect()), key=key)
+    want = sorted(con.execute(sql).fetchall(), key=key)
+    assert mine == want, f"{sql}: {mine} != {want}"
 
 
 def test_lateral_guards(spark, tmp_path):
-    """Round-12: LATERAL scope guards reject what the decorrelator
-    cannot compile, each with an actionable message."""
-    e = Engine(spark, str(tmp_path / "latg"))
-    e.ref_sql("CREATE TABLE cust (ck INT)")
-    e.ref_sql("INSERT INTO cust VALUES (1)")
-    e.ref_sql("CREATE TABLE ords (ck INT, v INT)")
-    e.ref_sql("INSERT INTO ords VALUES (1, 10)")
-    with pytest.raises(ParseError, match="no correlation conjunct"):
-        e.ref_sql(
-            "SELECT c.ck, x.v FROM cust AS c JOIN LATERAL "
-            "(SELECT v FROM ords WHERE v > 0) AS x ON TRUE"
-        )
-    with pytest.raises(ParseError, match="equality conjuncts"):
-        e.ref_sql(
-            "SELECT c.ck, x.v FROM cust AS c JOIN LATERAL "
-            "(SELECT v FROM ords WHERE ck > c.ck) AS x ON TRUE"
-        )
+    """LATERAL guards reject what is not SQL or not a lateral join, each
+    with an actionable message; the forms Catalyst decorrelates on its own
+    match DuckDB."""
+    e, con = _two_engines(
+        spark, str(tmp_path / "latg"),
+        "CREATE TABLE cust (ck INT)",
+        "INSERT INTO cust VALUES (1)",
+        "CREATE TABLE ords (ck INT, v INT)",
+        "INSERT INTO ords VALUES (1, 10)",
+    )
+    for sql in (
+        # uncorrelated body
+        "SELECT c.ck, x.v FROM cust AS c JOIN LATERAL "
+        "(SELECT v FROM ords WHERE v > 0) AS x ON TRUE",
+        # non-equality correlation
+        "SELECT c.ck, x.v FROM cust AS c JOIN LATERAL "
+        "(SELECT v FROM ords WHERE ck > c.ck) AS x ON TRUE",
+        # ORDER BY without LIMIT
+        "SELECT c.ck, x.v FROM cust AS c JOIN LATERAL "
+        "(SELECT v FROM ords WHERE ck = c.ck ORDER BY v) AS x ON TRUE",
+        # LIMIT on an aggregate body
+        "SELECT c.ck, x.n FROM cust AS c JOIN LATERAL "
+        "(SELECT count(*) AS n FROM ords WHERE ck = c.ck LIMIT 1) "
+        "AS x ON TRUE",
+        # an output name shared with an outer column
+        "SELECT c.ck, x.ck FROM cust AS c JOIN LATERAL "
+        "(SELECT ck FROM ords WHERE ck = c.ck) AS x ON TRUE",
+    ):
+        _assert_matches_duckdb(e, con, sql)
     with pytest.raises(ParseError, match="mixes aggregate and plain"):
         e.ref_sql(
             "SELECT c.ck, x.v FROM cust AS c JOIN LATERAL "
             "(SELECT v, count(*) AS n FROM ords WHERE ck = c.ck) "
-            "AS x ON TRUE"
-        )
-    with pytest.raises(ParseError, match="needs a LIMIT"):
-        e.ref_sql(
-            "SELECT c.ck, x.v FROM cust AS c JOIN LATERAL "
-            "(SELECT v FROM ords WHERE ck = c.ck ORDER BY v) AS x ON TRUE"
-        )
-    with pytest.raises(ParseError, match="no ORDER BY / LIMIT"):
-        e.ref_sql(
-            "SELECT c.ck, x.n FROM cust AS c JOIN LATERAL "
-            "(SELECT count(*) AS n FROM ords WHERE ck = c.ck LIMIT 1) "
             "AS x ON TRUE"
         )
     with pytest.raises(ParseError, match="CROSS / INNER / LEFT"):
@@ -4033,11 +4063,6 @@ def test_lateral_guards(spark, tmp_path):
             "SELECT c.ck, x.w FROM cust AS c JOIN LATERAL "
             "(SELECT ck AS w FROM ords WHERE ck = c.ck GROUP BY v) "
             "AS x ON TRUE"
-        )
-    with pytest.raises(ParseError, match="collide with outer"):
-        e.ref_sql(
-            "SELECT c.ck, x.ck FROM cust AS c JOIN LATERAL "
-            "(SELECT ck FROM ords WHERE ck = c.ck) AS x ON TRUE"
         )
 
 
@@ -4195,28 +4220,27 @@ def test_exists_boolean_form(spark, tmp_path):
 
 
 def test_lateral_parse_edges(spark, tmp_path):
-    """Round-12 hardening: a GROUP BY in a LATERAL body errors with the
-    intended message (GROUP is never misread as a table alias), and an
-    expression ORDER BY key is rejected rather than silently misparsed."""
-    e = Engine(spark, str(tmp_path / "latp"))
-    e.ref_sql("CREATE TABLE cust (ck INT)")
-    e.ref_sql("INSERT INTO cust VALUES (1)")
-    e.ref_sql("CREATE TABLE ords (ck INT, v INT)")
-    e.ref_sql("INSERT INTO ords VALUES (1, 10)")
-    # GROUP is never misread as a table alias: the grouped body parses
-    # (round-13) and the uncorrelated-body guard fires, not an
-    # alias/unknown-table error.
-    with pytest.raises(ParseError, match="no correlation conjunct"):
-        e.ref_sql(
-            "SELECT c.ck, x.n FROM cust AS c JOIN LATERAL "
-            "(SELECT count(*) AS n FROM ords GROUP BY v) AS x ON TRUE"
-        )
-    with pytest.raises(ParseError, match="plain columns"):
-        e.ref_sql(
-            "SELECT c.ck, x.v FROM cust AS c JOIN LATERAL "
-            "(SELECT v FROM ords WHERE ck = c.ck "
-            "ORDER BY v * -1 LIMIT 1) AS x ON TRUE"
-        )
+    """A GROUP BY in a LATERAL body is never misread as a table alias,
+    and an expression ORDER BY key sorts like in any SELECT (both match
+    DuckDB)."""
+    e, con = _two_engines(
+        spark, str(tmp_path / "latp"),
+        "CREATE TABLE cust (ck INT)",
+        "INSERT INTO cust VALUES (1)",
+        "CREATE TABLE ords (ck INT, v INT)",
+        "INSERT INTO ords VALUES (1, 10)",
+    )
+    _assert_matches_duckdb(
+        e, con,
+        "SELECT c.ck, x.n FROM cust AS c JOIN LATERAL "
+        "(SELECT count(*) AS n FROM ords GROUP BY v) AS x ON TRUE",
+    )
+    _assert_matches_duckdb(
+        e, con,
+        "SELECT c.ck, x.v FROM cust AS c JOIN LATERAL "
+        "(SELECT v FROM ords WHERE ck = c.ck "
+        "ORDER BY v * -1 LIMIT 1) AS x ON TRUE",
+    )
 
 
 def test_comma_joins(spark, tmp_path, sf_dir):
@@ -4370,14 +4394,14 @@ def test_lateral_group_by(spark, tmp_path):
     GROUP BY keys) + ONE equi-join. No completion row (ANSI: zero
     groups for an unmatched outer key — CROSS/INNER drops it, LEFT
     NULL-pads; DuckDB-probed). Items must be aggregates or bare group
-    keys; ORDER BY/LIMIT/HAVING reject loudly."""
-    e = Engine(spark, str(tmp_path / "latgb"))
-    e.ref_sql("CREATE TABLE o (ok INT, tag TEXT)")
-    e.ref_sql("INSERT INTO o VALUES (1,'x'),(2,'y'),(42,'z'),(NULL,'n')")
-    e.ref_sql("CREATE TABLE i (ik INT, grp TEXT, v INT)")
-    e.ref_sql(
+    keys; ORDER BY/LIMIT/HAVING match DuckDB."""
+    e, con = _two_engines(
+        spark, str(tmp_path / "latgb"),
+        "CREATE TABLE o (ok INT, tag TEXT)",
+        "INSERT INTO o VALUES (1,'x'),(2,'y'),(42,'z'),(NULL,'n')",
+        "CREATE TABLE i (ik INT, grp TEXT, v INT)",
         "INSERT INTO i VALUES (1,'a',10),(1,'a',20),(1,'b',5),(2,'a',7),"
-        "(NULL,'z',1)"
+        "(NULL,'z',1)",
     )
     rows = e.ref_sql(
         "SELECT x.ok, l.g, l.n, l.s FROM o AS x CROSS JOIN LATERAL "
@@ -4410,28 +4434,72 @@ def test_lateral_group_by(spark, tmp_path):
     assert [(r.ok, r.g, r.m) for r in rows] == [
         (1, "a", 21), (2, "a", 8)
     ]
-    for bad, pat in [
-        (
+    with pytest.raises(ParseError, match="bare GROUP BY key"):
+        e.ref_sql(
             "SELECT x.ok, l.g FROM o AS x CROSS JOIN LATERAL "
             "(SELECT grp AS g, v AS w FROM i WHERE x.ok = ik "
-            "GROUP BY grp) AS l",
-            "bare GROUP BY key",
-        ),
-        (
-            "SELECT x.ok, l.g FROM o AS x CROSS JOIN LATERAL "
-            "(SELECT grp AS g FROM i WHERE x.ok = ik GROUP BY grp "
-            "ORDER BY grp LIMIT 1) AS l",
-            "no ORDER BY",
-        ),
-        (
-            "SELECT x.ok, l.n FROM o AS x CROSS JOIN LATERAL "
-            "(SELECT count(*) AS n FROM i WHERE x.ok = ik GROUP BY grp "
-            "HAVING count(*) > 1) AS l",
-            "HAVING",
-        ),
-    ]:
-        with pytest.raises(ParseError, match=pat):
-            e.ref_sql(bad)
+            "GROUP BY grp) AS l"
+        )
+    for sql in (
+        "SELECT x.ok, l.g FROM o AS x CROSS JOIN LATERAL "
+        "(SELECT grp AS g FROM i WHERE x.ok = ik GROUP BY grp "
+        "ORDER BY grp LIMIT 1) AS l",
+        "SELECT x.ok, l.n FROM o AS x CROSS JOIN LATERAL "
+        "(SELECT count(*) AS n FROM i WHERE x.ok = ik GROUP BY grp "
+        "HAVING count(*) > 1) AS l",
+    ):
+        _assert_matches_duckdb(e, con, sql)
+
+
+def _lateral_fixture(spark, tmp_path):
+    """Outer rows with a NULL key and inner rows with a NULL key, tied
+    values and two statuses, on both engines."""
+    return _two_engines(
+        spark, str(tmp_path / "latd"),
+        "CREATE TABLE cust (ck INT, nm TEXT)",
+        "INSERT INTO cust VALUES (1, 'a'), (2, 'b'), (3, 'c'), (NULL, 'n')",
+        "CREATE TABLE ords (ck INT, ok INT, v INT, st TEXT)",
+        "INSERT INTO ords VALUES (1, 100, 5, 'F'), (1, 101, 9, 'O'), "
+        "(1, 102, 9, 'F'), (1, 103, 7, 'O'), (3, 300, 1, 'F'), "
+        "(3, 301, 2, 'F'), (NULL, 999, 3, 'O')",
+    )
+
+
+def test_lateral_shapes_vs_duckdb(spark, tmp_path):
+    """LATERAL joins compile to DataFrame.lateralJoin and Catalyst
+    decorrelates them; each shape returns DuckDB's rows. (The lone
+    ``sum(v)`` CROSS body is left out: DuckDB 1.0 drops its all-NULL
+    row, see test_lateral_expression_wrapped_aggregate_fill.)"""
+    e, con = _lateral_fixture(spark, tmp_path)
+    topk = (
+        "(SELECT ok, v FROM ords WHERE ck = c.ck ORDER BY v DESC, ok "
+        "LIMIT 2) AS x"
+    )
+    for sql in (
+        # count body: NULL outer key and NULL inner key each count 0
+        "SELECT c.nm, x.n FROM cust AS c CROSS JOIN LATERAL "
+        "(SELECT count(*) AS n FROM ords WHERE ck = c.ck) AS x",
+        # the empty-group value of count(*) + 1 is 1
+        "SELECT c.nm, x.m FROM cust AS c CROSS JOIN LATERAL "
+        "(SELECT count(*) + 1 AS m FROM ords WHERE ck = c.ck AND v > 4) "
+        "AS x",
+        # top-k over tied values, INNER and LEFT
+        f"SELECT c.nm, x.ok, x.v FROM cust AS c JOIN LATERAL {topk} ON TRUE",
+        f"SELECT c.nm, x.ok, x.v FROM cust AS c LEFT JOIN LATERAL {topk} "
+        "ON TRUE",
+        # grouped body with an inner-only residual conjunct
+        "SELECT c.nm, g.st, g.n, g.s FROM cust AS c CROSS JOIN LATERAL "
+        "(SELECT st, count(*) AS n, sum(v) AS s FROM ords "
+        "WHERE ck = c.ck AND v > 1 GROUP BY st) AS g",
+        # an outer reference in an item
+        "SELECT c.nm, x.w FROM cust AS c CROSS JOIN LATERAL "
+        "(SELECT v + c.ck AS w FROM ords WHERE ck = c.ck) AS x",
+        # chained: a non-equality on the previous lateral's column
+        "SELECT c.nm, a.n, b.ok FROM cust AS c CROSS JOIN LATERAL "
+        "(SELECT count(*) AS n FROM ords WHERE ck = c.ck) AS a "
+        "CROSS JOIN LATERAL (SELECT ok FROM ords WHERE v > a.n) AS b",
+    ):
+        _assert_matches_duckdb(e, con, sql)
 
 
 def test_temporal_series_splittable(spark, tmp_path):
@@ -6647,6 +6715,11 @@ def test_building_subquery_statements_runs_no_job(spark, tmp_path, caplog):
         "EXPLAIN SELECT k FROM t WHERE v > (SELECT AVG(x) FROM s)",
         "SELECT o.k, (SELECT count(*) FROM s WHERE s.k = o.k) AS n "
         "FROM t AS o",
+        "SELECT o.k, a.n FROM t AS o CROSS JOIN LATERAL "
+        "(SELECT count(*) AS n FROM s WHERE s.k = o.k) AS a",
+        "SELECT o.k, b.x FROM t AS o LEFT JOIN LATERAL "
+        "(SELECT x FROM s WHERE s.k = o.k ORDER BY x DESC LIMIT 1) AS b "
+        "ON TRUE",
     ]
     sc = spark.sparkContext
     qlog = logging.getLogger("DataFrameQueryContextLogger")
