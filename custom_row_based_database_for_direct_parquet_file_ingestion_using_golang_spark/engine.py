@@ -20,16 +20,19 @@ select.go:41-42 vs 516-597).
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import datetime
 import decimal
 import glob
 import json
 import os
+import re
 from collections.abc import Iterable
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .catalog import (
@@ -45,6 +48,36 @@ from .commit import write_json_atomic
 from .tables import ParquetTableStore
 
 IMAGE_EXTENSIONS = (".jpg", ".jpeg", ".png", ".gif", ".bmp", ".tiff", ".webp")
+
+
+_GUARD = "__sparkdb_guard__"
+
+
+def guard(message: str) -> Column:
+    """An in-plan check: a ``raise_error`` Column that fails the statement
+    evaluating it with ``ValueError(message)`` (see :func:`_guarded`)."""
+    return F.raise_error(F.lit(f"{_GUARD}{message}{_GUARD}"))
+
+
+@contextlib.contextmanager
+def _guarded():
+    """Turn a :func:`guard` failure raised by a Spark job back into its
+    ValueError; any other failure passes through unchanged."""
+    try:
+        yield
+    except Exception as exc:
+        found = re.search(f"{_GUARD}(.*?){_GUARD}", str(exc), re.S)
+        if found is None:
+            raise
+        raise ValueError(found.group(1)) from None
+
+
+def _helper(columns: list[str], base: str) -> str:
+    """A helper column name that collides with none of ``columns`` (a user
+    column literally named ``__match`` must survive a rewrite untouched)."""
+    while base in columns:
+        base += "_"
+    return base
 
 
 def _coerce(value: Any, decl: str) -> Any:
@@ -419,20 +452,26 @@ class Engine:
         """Append a DataFrame to an existing table (columns are aligned to
         the declared schema by name). The append-only fast path — no
         copy-on-write rewrite, and materialized views over the table can
-        refresh incrementally from just the new files.
+        refresh incrementally from just the new files. The row count rides
+        the write as an Observation, so the source computes once.
 
-        ``returning`` (round-14, DML RETURNING): materializes the aligned
-        batch eagerly (localCheckpoint) so the returned frame stays
-        stable after the append adds files — and the upstream plan
-        computes ONCE for the checkpoint + count + write."""
+        ``returning`` materializes the aligned batch eagerly
+        (localCheckpoint) so the returned frame stays stable after the
+        append adds files."""
         meta = self.catalog.get(name)
         aligned = df.select(
             *[F.col(c.name).cast(c.spark_type) for c in meta.columns]
         )
-        if returning:
-            aligned = aligned.localCheckpoint(eager=True)
-        n = aligned.count()
-        self.store.append(name, aligned, meta.partition_by)
+        obs = Observation()
+        with _guarded():
+            if returning:
+                aligned = aligned.localCheckpoint(eager=True)
+            self.store.append(
+                name,
+                aligned.observe(obs, F.count(F.lit(1)).alias("rows")),
+                meta.partition_by,
+            )
+        n = int(obs.get["rows"] or 0)
         return (n, aligned) if returning else n
 
     def register_views(self) -> None:
@@ -543,82 +582,32 @@ class Engine:
         name: str,
         set_values: dict[str, Any],
         where: Column | str | None = None,
-        frame: DataFrame | None = None,
         returning: bool = False,
     ) -> int | tuple[int, DataFrame]:
         """UPDATE via copy-on-write: read the live version → conditional
-        withColumn → commit the result as the next version. No WHERE ⇒ all
-        rows (reference update.go:87-98). Returns the matched-row count.
+        SET → commit the result as the next version. No WHERE ⇒ all rows
+        (reference update.go:87-98). Returns the matched-row count.
         ``where`` may carry subquery Columns (the dialect's IN/ANY/scalar
-        subqueries); Catalyst plans them inside the rewrite.
-
-        ``frame``: the table already joined to an ``UPDATE ... FROM``
-        source, whose columns the SET values read. Columns beyond the
-        declared schema never reach storage."""
-        from pyspark.sql import Observation
-
-        meta = self.catalog.get(name)
-        declared = {c.name: c for c in meta.columns}
-        for cname in set_values:
-            if cname not in declared:
-                raise ValueError(f"unknown SET column '{cname}'")
-        df = self.table(name) if frame is None else frame
+        subqueries); Catalyst plans them inside the rewrite."""
+        df = self.table(name)
         cond = self._where_col(where)
-        # Matched-row count via the Observation API: piggybacks on the
-        # copy-on-write pass, so the table is scanned ONCE (the reference
-        # reads everything into memory and counts while rewriting,
-        # update.go:87-106 — this is the distributed single-pass analogue).
         # Materialize the predicate ONCE against pre-update values: a SET
         # column referenced by the WHERE must not change which rows later
         # SET columns apply to (SQL semantics). NULL predicate ⇒ no match.
         match = (
             F.coalesce(cond, F.lit(False)) if cond is not None else F.lit(True)
         )
-        # Collision-proof helper column name (a user column literally named
-        # __match must survive the rewrite untouched).
-        mcol = "__match"
-        while mcol in df.columns:
-            mcol += "_"
+        mcol = _helper(df.columns, "__match")
         df = df.withColumn(mcol, match)
-        obs = Observation()
-        df = df.observe(
-            obs, F.sum(F.when(F.col(mcol), 1).otherwise(0)).alias("matched")
-        )
-        # One select, not chained withColumn: every SET target evaluates
-        # against the row's ORIGINAL values (standard SQL — ``SET a = b,
-        # b = a`` swaps). Values may be plain literals (reference parity)
-        # or Columns (expression SET, e.g. ``SET v = v + 1``).
-        targets = {}
-        for cname, val in set_values.items():
-            src = val if isinstance(val, Column) else F.lit(val)
-            target = src.cast(declared[cname].spark_type)
-            targets[cname] = F.when(F.col(mcol), target).otherwise(
-                F.col(cname)
-            )
-        df = df.select(
-            *[
-                targets[c].alias(c) if c in targets else F.col(c)
-                for c in df.columns
-            ]
-        )
-        ret: DataFrame | None = None
-        if returning:
-            # UPDATE ... RETURNING: the matched rows with their NEW
-            # values, materialized EAGERLY — the commit retires the old
-            # version's files, so a lazy frame over them would break
-            # after the write.
-            ret = (
-                df.filter(F.col(mcol))
-                .select(*[F.col(c.name) for c in meta.columns])
-                .localCheckpoint(eager=True)
-            )
-        self.store.overwrite(
+        hit = F.col(mcol)
+        return self._rewrite(
             name,
-            df.select(*[F.col(c.name) for c in meta.columns]),
-            meta.partition_by,
+            df,
+            hit,
+            F.sum(F.when(hit, 1).otherwise(0)).alias("matched"),
+            sets=set_values,
+            returning=returning,
         )
-        n = obs.get["matched"] or 0
-        return (n, ret) if returning else n
 
     def delete(
         self,
@@ -629,42 +618,194 @@ class Engine:
         """DELETE requires a predicate — parity with the reference's safety
         guard ('DELETE without WHERE is not allowed', delete.go:33).
         ``where`` as in :meth:`update`."""
-        from pyspark.sql import Observation
-
         if where is None:
             raise ValueError("DELETE without WHERE is not allowed for safety")
-        meta = self.catalog.get(name)
         df = self.table(name)
         # NULL predicate ⇒ row is NOT deleted (SQL: DELETE only where the
-        # predicate is TRUE, not NULL) — coalesce makes ~cond keep it.
-        # Projected once into a helper column, as UPDATE does: Spark
-        # rejects IN/EXISTS subqueries inside observe(), and the column is
-        # evaluated once for the count and the filter alike.
-        dcol = "__doomed"
-        while dcol in df.columns:
-            dcol += "_"
+        # predicate is TRUE, not NULL). Projected into a helper column:
+        # Spark rejects IN/EXISTS subqueries inside observe().
+        dcol = _helper(df.columns, "__doomed")
         df = df.withColumn(
             dcol, F.coalesce(self._where_col(where), F.lit(False))
         )
-        cond = F.col(dcol)
-        # Single pass: count the doomed rows while writing the survivors.
-        obs = Observation()
-        df = df.observe(obs, F.sum(F.when(cond, 1).otherwise(0)).alias("doomed"))
-        ret: DataFrame | None = None
-        if returning:
-            # DELETE ... RETURNING: the doomed rows, materialized EAGERLY
-            # before the commit retires their files.
-            ret = (
-                df.filter(cond)
-                .select(*[F.col(c.name) for c in meta.columns])
-                .localCheckpoint(eager=True)
-            )
-        self.store.overwrite(
+        doomed = F.col(dcol)
+        return self._rewrite(
             name,
-            df.filter(~cond).select(*[F.col(c.name) for c in meta.columns]),
-            meta.partition_by,
+            df,
+            doomed,
+            F.sum(F.when(doomed, 1).otherwise(0)).alias("doomed"),
+            drop=doomed,
+            returning=returning,
         )
-        n = obs.get["doomed"] or 0
+
+    def merge(
+        self,
+        name: str,
+        source: DataFrame,
+        on: list[tuple[str, str]],
+        *,
+        update: dict[str, Any] | None = None,
+        delete: bool = False,
+        acting: Column | None = None,
+        where: Column | None = None,
+        insert: bool = False,
+        delete_unmatched: Column | None = None,
+        duplicate: str = "a target row matched multiple source rows",
+        returning: bool = False,
+    ) -> int | tuple[int, DataFrame]:
+        """Keyed merge of ``source`` into table ``name`` in one
+        copy-on-write rewrite: the plan behind MERGE, UPDATE ... FROM and
+        INSERT ... ON CONFLICT DO UPDATE.
+
+        ``on`` pairs (target column, source column) equality keys. Source
+        rows with a NULL key match nothing (only ``insert`` sees them); the
+        rest are grouped on the keys (row count + first row) and LEFT-joined to the
+        target once, so every target row meets at most one group. SET
+        values and ``where`` read target columns by name and source column
+        ``c`` as ``__src_c``. Arms:
+
+        * ``update``: ``{column: value}`` for matched target rows, each
+          value read against the row's original values and cast to the
+          declared type. A matched key with more than one acting source
+          row raises ``ValueError(duplicate)`` from inside the write;
+          source keys that match nothing never raise.
+        * ``delete``: matched target rows are deleted.
+        * ``acting``: a predicate over the source's own columns picking
+          the rows the matched arm uses (MERGE's ``WHEN MATCHED AND``);
+          ``where``: a predicate over the joined row that must also hold.
+        * ``insert``: source rows whose keys match no target row are
+          appended (anti-join; the source carries every target column).
+        * ``delete_unmatched``: target rows no source row matches are
+          deleted where this predicate over target columns holds (MERGE's
+          ``WHEN NOT MATCHED BY SOURCE``).
+
+        Returns the affected-row count (updated + deleted + inserted),
+        counted on the write pass; ``returning`` adds the updated rows
+        with their new values."""
+        tgt = self.table(name)
+        meta = self.catalog.get(name)
+        renamed = [F.col(c).alias(f"__src_{c}") for c in source.columns]
+        keyed = None
+        for tc, sc in on:
+            eq = F.col(tc) == F.col(f"__src_{sc}")
+            keyed = eq if keyed is None else (keyed & eq)
+        taken = tgt.columns + [f"__src_{c}" for c in source.columns]
+        act, cnt, op = (_helper(taken, h) for h in ("__act", "__n", "__op"))
+
+        if update is None and not delete and delete_unmatched is None:
+            df = tgt.withColumn(op, F.lit(None).cast("string"))
+        else:
+            acted = F.lit(True) if acting is None else F.coalesce(
+                acting, F.lit(False)
+            )
+            keys = [f"__src_{sc}" for _tc, sc in on]
+            src = source.select(*renamed, acted.alias(act))
+            for k in keys:
+                src = src.filter(F.col(k).isNotNull())
+            groups = src.groupBy(*keys).agg(
+                F.count_if(F.col(act)).alias(cnt),
+                *[
+                    F.first(
+                        F.when(F.col(act), F.col(c)), ignorenulls=True
+                    ).alias(c)
+                    for c in src.columns
+                    if c not in keys and c != act
+                ],
+            )
+            n = F.col(cnt)
+            arm = F.coalesce(n > 0, F.lit(False))
+            if where is not None:
+                arm = arm & F.coalesce(where, F.lit(False))
+            arms = []
+            if update is not None:
+                arms += [(n > 1, guard(duplicate)), (arm, F.lit("u"))]
+            elif delete:
+                arms.append((arm, F.lit("d")))
+            if delete_unmatched is not None:
+                gone = F.coalesce(delete_unmatched, F.lit(False))
+                arms.append((n.isNull() & gone, F.lit("d")))
+            case = F.when(*arms[0])
+            for cond, value in arms[1:]:
+                case = case.when(cond, value)
+            df = tgt.join(groups, keyed, "left").withColumn(
+                op, case.cast("string")
+            )
+        if insert:
+            tkeys = tgt.select(*[tc for tc, _sc in on])
+            fresh = source.select(*renamed).join(tkeys, keyed, "left_anti")
+            fresh = fresh.select(
+                *[
+                    F.col(f"__src_{c.name}").cast(c.spark_type).alias(c.name)
+                    for c in meta.columns
+                ],
+                F.lit("i").alias(op),
+            )
+            df = df.unionByName(fresh, allowMissingColumns=True)
+        return self._rewrite(
+            name,
+            df,
+            F.col(op) == "u",
+            F.count(op).alias("affected"),
+            sets=update,
+            drop=F.col(op).eqNullSafe("d"),
+            returning=returning,
+        )
+
+    def _rewrite(
+        self,
+        name: str,
+        df: DataFrame,
+        hit: Column,
+        metric: Column,
+        sets: dict[str, Any] | None = None,
+        drop: Column | None = None,
+        returning: bool = False,
+    ) -> int | tuple[int, DataFrame]:
+        """The copy-on-write step UPDATE, DELETE and MERGE share: ``df`` is
+        the live table plus helper columns, ``hit`` marks the rows the
+        statement changes and ``metric`` counts them — one Observation on
+        the write pass, so the table is scanned once (the reference reads
+        everything into memory and counts while rewriting, update.go:87-106).
+        ``sets`` rewrites columns of hit rows; ``drop`` marks rows that
+        leave the table. The result commits as the next version."""
+        meta = self.catalog.get(name)
+        declared = {c.name: c for c in meta.columns}
+        for cname in sets or {}:
+            if cname not in declared:
+                raise ValueError(f"unknown SET column '{cname}'")
+        obs = Observation()
+        df = df.observe(obs, metric)
+        if sets:
+            # One select, not chained withColumn: every SET target evaluates
+            # against the row's ORIGINAL values (standard SQL — ``SET a = b,
+            # b = a`` swaps). Values may be plain literals (reference parity)
+            # or Columns (expression SET, e.g. ``SET v = v + 1``).
+            targets = {
+                c: F.when(
+                    hit,
+                    (v if isinstance(v, Column) else F.lit(v)).cast(
+                        declared[c].spark_type
+                    ),
+                ).otherwise(F.col(c))
+                for c, v in sets.items()
+            }
+            df = df.select(
+                *[
+                    targets[c].alias(c) if c in targets else F.col(c)
+                    for c in df.columns
+                ]
+            )
+        cols = [F.col(c) for c in declared]
+        ret: DataFrame | None = None
+        with _guarded():
+            if returning:
+                # RETURNING: the hit rows, materialized EAGERLY — the
+                # commit retires the old version's files, so a lazy frame
+                # over them would break after the write.
+                ret = df.filter(hit).select(*cols).localCheckpoint(eager=True)
+            kept = df if drop is None else df.filter(~drop)
+            self.store.overwrite(name, kept.select(*cols), meta.partition_by)
+        n = next(iter(obs.get.values())) or 0
         return (n, ret) if returning else n
 
     # ---- maintenance ------------------------------------------------------
@@ -838,8 +979,6 @@ class Engine:
         entry exists only once the write has finished, so a failed ingest
         leaves no phantom entry. The row count rides the write via an
         Observation — no second scan."""
-        from pyspark.sql import Observation
-
         meta = TableMeta(
             name=name,
             columns=[
@@ -955,15 +1094,13 @@ class Engine:
         """Distributed export of an arbitrary DataFrame — the engine of
         ``export_table`` and the dialect's ``COPY (SELECT ...) TO`` form
         (export a query result without materializing a table first)."""
-        from pyspark.sql import Observation
-
         fmt = fmt.lower()
         if partition_by:
             missing = [c for c in partition_by if c not in df.columns]
             if missing:
                 raise ValueError(f"unknown PARTITION BY column(s) {missing}")
         # Round-8 (advice): the row count rides the write pass via an
-        # Observation (the _merge pattern) instead of a separate count()
+        # Observation (as the DML rewrites do) instead of a separate count()
         # job — one execution of the exported query, and the reported
         # count is exactly the rows written even for nondeterministic
         # sources.

@@ -87,12 +87,13 @@ Round-6 extensions:
 Round-7 extensions:
   * ``MERGE INTO t USING s [AS a] ON t.k = a.k [AND ...]`` with
     ``WHEN MATCHED [AND <pred>] THEN UPDATE SET * | DELETE``,
-    ``WHEN NOT MATCHED [BY TARGET] THEN INSERT *``, and (round-8)
+    ``WHEN NOT MATCHED [BY TARGET] THEN INSERT *``, and
     ``WHEN NOT MATCHED BY SOURCE [AND <pred>] THEN DELETE`` — the full
-    Delta-style CDC triad over copy-on-write storage (anti-join + union
-    plan, one commit, snapshot-retiring); source may be a table
-    or ``(SELECT ...) AS a``. UPDATE SET * raises on duplicate join keys
-    on either side (round-8 multi-match guard).
+    Delta-style CDC triad over copy-on-write storage (``Engine.merge``:
+    one left join against the key-grouped source, one commit,
+    snapshot-retiring); source may be a table or ``(SELECT ...) AS a``.
+    UPDATE SET * raises when a target row matches several source rows;
+    a source row matching duplicate-keyed target rows updates each.
   * ``GROUP BY ALL`` (group on every non-aggregate SELECT item) and
     integer ordinals in GROUP BY / ORDER BY indexing the output columns.
   * ``RANGE BETWEEN <bound> AND <bound>`` frames (logical value offsets
@@ -172,13 +173,13 @@ Round-12 extensions:
     0-based native ``arr[i]`` (try_element_at + nullif(.., 0) for the
     index-0 edge, slice with inclusive-bounds arithmetic).
   * ``INSERT ... ON CONFLICT [(cols)] DO NOTHING | DO UPDATE SET ...
-    [WHERE ...]`` / ``INSERT OR REPLACE|IGNORE`` (round-13,
-    _insert_on_conflict): Postgres/DuckDB upserts over declared
-    PRIMARY KEYs (parsed in CREATE TABLE, informational on plain
-    appends); DO NOTHING = anti-join + append-only write, DO UPDATE =
-    one left join + COW swap. Plus ``INSERT INTO t BY NAME SELECT``
-    (name-bound set inserts) and column DEFAULTs (omitted columns take
-    them; explicit NULL stays NULL).
+    [WHERE ...]`` / ``INSERT OR REPLACE|IGNORE`` (_insert_on_conflict):
+    Postgres/DuckDB upserts over declared PRIMARY KEYs (parsed in CREATE
+    TABLE, informational on plain appends); DO NOTHING = anti-join +
+    append-only write, DO UPDATE = ``Engine.merge`` (one left join + COW
+    swap); key checks are guards inside the write. Plus ``INSERT INTO t
+    BY NAME SELECT`` (name-bound set inserts) and column DEFAULTs
+    (omitted columns take them; explicit NULL stays NULL).
   * CTE-fronted DML (round-13): ``WITH ... INSERT|UPDATE|DELETE|MERGE``
     — bound CTE frames resolve before the catalog in every relation
     read; a CTE over the DML's own target sees the pre-statement
@@ -204,6 +205,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..catalog import parse_date as _parse_date, parse_timestamp as _parse_timestamp
+from ..engine import guard
 from ..functions.compat import dual_compare, ref_like, truthy
 from ..operators.query import Query, agg_default_name, agg_spec, arg_col
 
@@ -8614,10 +8616,10 @@ class RefSQL:
         ccur: _Cursor | None,
         by_name: bool = False,
     ) -> int:
-        """Round-13: ``INSERT ... ON CONFLICT [(cols)] DO NOTHING | DO
-        UPDATE SET c = expr [, ...] [WHERE pred]`` and the ``INSERT OR
-        REPLACE|IGNORE`` sugar (DuckDB/SQLite; Postgres 9.5 upsert) —
-        the idempotent-ingest DML.
+        """``INSERT ... ON CONFLICT [(cols)] DO NOTHING | DO UPDATE SET c =
+        expr [, ...] [WHERE pred]`` and the ``INSERT OR REPLACE|IGNORE``
+        sugar (DuckDB/SQLite; Postgres 9.5 upsert) — the idempotent-ingest
+        DML.
 
         Semantics follow Postgres/DuckDB, probed in
         test_insert_on_conflict_vs_duckdb: the conflict target is the
@@ -8634,15 +8636,15 @@ class RefSQL:
 
         Scale shape: DO NOTHING is ONE anti-join of the (small) batch
         against the key-pruned target scan + an append — no rewrite. DO
-        UPDATE is ONE left join of the target against the batch (AQE
-        broadcasts the small side) into one copy-on-write commit +
-        one anti-join for the fresh rows — the same cost class as MERGE,
-        with the batch never driver-collected."""
-        from pyspark.sql import Observation, Window
+        UPDATE is ``Engine.merge``: one left join of the target against
+        the batch (AQE broadcasts the small side) plus one anti-join for
+        the fresh rows, in one copy-on-write commit. The NULL-key and
+        duplicate-key checks are guards inside the write — no extra job,
+        and the batch is never driver-collected."""
+        from pyspark.sql import Window
 
         meta = self.engine.catalog.get(table)
         tcols = [c.name for c in meta.columns]
-        decls = {c.name: c.spark_type for c in meta.columns}
         keys: list[str] = []
         do_update = False
         sets: list[tuple[str, list[str]]] = []
@@ -8731,38 +8733,31 @@ class RefSQL:
 
         inc = self._insert_body_df(cur, table, cols, by_name)
 
-        # NULL conflict keys: reject like a real PRIMARY KEY would
-        # (DuckDB errors; silently never-conflicting NULLs would make
-        # the idempotent-ingest pattern quietly duplicate rows).
-        nullcond = None
+        # In-plan guards on the batch's first key column. NULL conflict
+        # keys reject like a real PRIMARY KEY would (DuckDB errors;
+        # silently never-conflicting NULLs would make the idempotent-ingest
+        # pattern quietly duplicate rows). DO UPDATE also rejects a batch
+        # whose conflict keys collide — Postgres/DuckDB would update the
+        # same row twice.
+        anynull = None
         for k in keys:
             c = F.col(k).isNull()
-            nullcond = c if nullcond is None else (nullcond | c)
-        if inc.filter(nullcond).limit(1).count() > 0:
-            raise ValueError(
+            anynull = c if anynull is None else (anynull | c)
+        checked = F.when(
+            anynull,
+            guard(
                 f"NULL in conflict key column(s) {keys} — ON CONFLICT "
                 "keys follow PRIMARY KEY semantics (no NULLs)"
-            )
-        tgt = self.engine.table(table)
-
-        def _rewrite(buf: list[str]) -> str:
-            # excluded.c -> the incoming row's column; t.c / <table>.c ->
-            # the existing row's (bare names already resolve there).
-            out = []
-            for t in buf:
-                low = t.lower()
-                if low.startswith("excluded."):
-                    c = _unquote(t.split(".", 1)[1])
-                    if c not in tcols:
-                        raise ParseError(
-                            f"excluded.{c}: no such column in '{table}'"
-                        )
-                    out.append(f"__exc_{c}")
-                elif low.startswith(table.lower() + "."):
-                    out.append(_unquote(t.split(".", 1)[1]))
-                else:
-                    out.append(t)
-            return " ".join(out)
+            ),
+        )
+        dup_msg = (
+            "ON CONFLICT DO UPDATE cannot affect the same row twice "
+            f"— duplicate conflict key(s) {keys} in the batch"
+        )
+        if do_update:
+            batch_rows = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+            checked = checked.when(batch_rows > 1, guard(dup_msg))
+        inc = inc.withColumn(keys[0], checked.otherwise(F.col(keys[0])))
 
         if not do_update:
             # DO NOTHING: first-wins batch dedup, then one anti-join
@@ -8776,65 +8771,40 @@ class RefSQL:
                 .drop("__rn", "__ord")
             )
             fresh = survivors.join(
-                tgt.select(*keys).dropDuplicates(), on=keys, how="left_anti"
+                self.engine.table(table).select(*keys).dropDuplicates(),
+                on=keys,
+                how="left_anti",
             )
             return self.engine.append_df(table, fresh)
 
-        # DO UPDATE: duplicate conflict keys in one batch would update
-        # the same row twice — Postgres/DuckDB raise; so do we.
-        dup = (
-            inc.groupBy(*keys).count().filter(F.col("count") > 1)
-            .limit(1).count()
+        def _rewrite(buf: list[str]) -> Column:
+            # excluded.c -> the incoming row's column; t.c / <table>.c ->
+            # the existing row's (bare names already resolve there).
+            out = []
+            for t in buf:
+                low = t.lower()
+                if low.startswith("excluded."):
+                    c = _unquote(t.split(".", 1)[1])
+                    if c not in tcols:
+                        raise ParseError(
+                            f"excluded.{c}: no such column in '{table}'"
+                        )
+                    out.append(f"__src_{c}")
+                elif low.startswith(table.lower() + "."):
+                    out.append(_unquote(t.split(".", 1)[1]))
+                else:
+                    out.append(t)
+            return F.expr(" ".join(out))
+
+        return self.engine.merge(
+            table,
+            inc.drop("__ord"),
+            [(k, k) for k in keys],
+            update={c: _rewrite(b) for c, b in sets},
+            where=_rewrite(where_toks) if where_toks is not None else None,
+            insert=True,
+            duplicate=dup_msg,
         )
-        if dup:
-            raise ValueError(
-                "ON CONFLICT DO UPDATE cannot affect the same row twice "
-                f"— duplicate conflict key(s) {keys} in the batch"
-            )
-        exc = inc.drop("__ord").select(
-            *[F.col(c).alias(f"__exc_{c}") for c in tcols]
-        )
-        cond = None
-        for k in keys:
-            eq = F.col(k) == F.col(f"__exc_{k}")
-            cond = eq if cond is None else (cond & eq)
-        joined = tgt.join(exc, cond, "left")
-        hit = F.col(f"__exc_{keys[0]}").isNotNull()
-        upd = hit
-        if where_toks is not None:
-            upd = hit & F.expr(_rewrite(where_toks))
-        out_cols = []
-        set_map = {c: b for c, b in sets}
-        for c in tcols:
-            if c in set_map:
-                out_cols.append(
-                    F.when(upd, F.expr(_rewrite(set_map[c])).cast(decls[c]))
-                    .otherwise(F.col(c))
-                    .alias(c)
-                )
-            else:
-                out_cols.append(F.col(c))
-        kept = joined.select(
-            *out_cols, F.when(upd, F.lit("u")).alias("__tag")
-        )
-        fresh = (
-            inc.drop("__ord")
-            .join(tgt.select(*keys).dropDuplicates(), on=keys, how="left_anti")
-            .select(*tcols)
-            .withColumn("__tag", F.lit("i"))
-        )
-        result = kept.unionByName(fresh)
-        obs = Observation()
-        result = result.observe(
-            obs,
-            F.sum(F.when(F.col("__tag") == "u", 1).otherwise(0)).alias("u"),
-            F.sum(F.when(F.col("__tag") == "i", 1).otherwise(0)).alias("i"),
-        )
-        self.engine.store.overwrite(
-            table, result.drop("__tag"), meta.partition_by
-        )
-        got = obs.get
-        return int((got["u"] or 0) + (got["i"] or 0))
 
     def _update(self, cur: _Cursor) -> int | DataFrame:
         cur, ret_items = self._split_returning(cur)
@@ -8943,31 +8913,27 @@ class RefSQL:
         entries: "list[tuple[str, str, Any]]",
         ret_items: "list[str] | None" = None,
     ) -> int | DataFrame:
-        """Round-13: ``UPDATE t SET c = s.v [, ...] FROM s [AS a] WHERE
-        t.k = a.k [AND ...]`` — the correlated per-row SET from a second
-        table (DuckDB/Postgres join update; the round-12 verdict's top
-        DML gap: constant re-labeling shape in curation pipelines).
+        """``UPDATE t SET c = s.v [, ...] FROM s [AS a] WHERE t.k = a.k
+        [AND ...]`` — the correlated per-row SET from a second table
+        (DuckDB/Postgres join update): the relabeling shape of curation
+        pipelines.
 
-        Compiled Spark-first as ONE left equi-join + the existing
-        copy-on-write rewrite (engine.update with a pre-joined frame):
-        the source's referenced columns are renamed to collision-proof
-        ``__src_*`` helpers, SET/WHERE token runs are rewritten against
-        them, and a constant ``__upd_hit`` marker on the source drives
-        the matched predicate — unmatched target rows pass through
-        untouched, NULL join keys match nothing (ANSI '='). Helper
-        columns never reach storage (engine.update projects the declared
-        schema). At scale this is exactly the plan you want: one shuffle
-        (or broadcast, via AQE) on the correlation keys, never a
-        per-row subquery re-execution.
+        Compiled to one ``Engine.merge`` UPDATE: source references in SET
+        and WHERE are rewritten to the merge's ``__src_*`` names, the
+        top-level ``t.col = s.col`` conjuncts are the merge keys,
+        source-only conjuncts filter the source, and the remaining
+        conjuncts must hold on the joined row. Unmatched target rows pass
+        through untouched, NULL join keys match nothing (ANSI '='). One
+        shuffle (or broadcast, via AQE) on the keys, never a per-row
+        subquery.
 
-        Determinism guard: the source must be UNIQUE on the equality
-        keys after source-only filters — a target row matched by ≥2
-        source rows raises (DuckDB silently picks an arbitrary match;
-        Delta raises — we follow Delta). One source-side aggregate, the
-        same cost class as MERGE's 1:1 guard. Scope: the WHERE needs at
-        least one top-level ``t.col = s.col`` equality conjunct; other
-        conjuncts may reference either side; no subqueries in the FROM
-        form's WHERE or SET."""
+        Determinism guard: a target row whose keys match more than one
+        source row (after the source-only filters) raises — DuckDB
+        silently picks an arbitrary match; Delta raises, and so do we.
+        Duplicate source keys that match no target row are harmless.
+        Scope: the WHERE needs at least one top-level ``t.col = s.col``
+        equality conjunct; other conjuncts may reference either side; no
+        subqueries in the FROM form's WHERE or SET."""
         cur.expect_kw("from")
         if cur.peek() == "(":
             cur.next()
@@ -9006,7 +8972,9 @@ class RefSQL:
         tgt_cols = {c.name for c in self.engine.catalog.get(table).columns}
         src_cols = set(src.columns)
 
-        def rewrite(toks: list[str], what: str) -> list[str]:
+        def rewrite(
+            toks: list[str], what: str, prefix: str = "__src_"
+        ) -> list[str]:
             out = []
             for i, t in enumerate(toks):
                 if _is_string_lit(t) or not re.fullmatch(
@@ -9017,7 +8985,7 @@ class RefSQL:
                 if "." in t:
                     q, c = t.split(".", 1)
                     if q == src_alias and c in src_cols:
-                        out.append(f"__src_{c}")
+                        out.append(prefix + c)
                     elif q == table and c in tgt_cols:
                         out.append(c)
                     else:
@@ -9032,7 +9000,7 @@ class RefSQL:
                 # call is followed by '(' — and a column can't be.
                 nxt = toks[i + 1] if i + 1 < len(toks) else None
                 if nxt != "(" and t not in tgt_cols and t in src_cols:
-                    out.append(f"__src_{t}")
+                    out.append(prefix + t)
                 else:
                     out.append(t)
             return out
@@ -9084,69 +9052,26 @@ class RefSQL:
                 f"'{table}.col = {src_alias}.col' equality conjunct "
                 "to join on"
             )
-        residual_rw = [rewrite(c, "WHERE") for c in residual]
 
-        # Determinism guard: source must be unique on the equality keys,
-        # after applying residual conjuncts that touch ONLY the source
-        # (they can legitimately disambiguate, e.g. a flag column).
-        # Round-15 (optimization): the guard no longer runs as a separate
-        # eager aggregate job ahead of the write — the source is
-        # pre-aggregated on the join keys INSIDE the update plan (count +
-        # first-of-each-used-column), and a ``raise_error`` woven into the
-        # hit marker fires for ANY duplicated key while the source side of
-        # the join materializes. One source scan instead of two, one Spark
-        # action instead of two; the ValueError contract is preserved by
-        # translating the in-plan raise below. The raise is global (every
-        # aggregated source row evaluates the marker projection when the
-        # join's build side materializes), matching the old guard's
-        # raise-even-if-no-target-row-matches behavior.
-        src_only = []
-        mixed = []
-        for rw in residual_rw:
+        # Conjuncts over the source alone filter it before the merge
+        # groups it on the keys (they can legitimately disambiguate
+        # duplicates, e.g. a flag column); the rest are checked on the
+        # joined row.
+        where = None
+        for conj in residual:
+            rw = rewrite(conj, "WHERE")
             if any(t in tgt_cols for t in rw):
-                mixed.append(rw)
+                c = F.expr(" ".join(rw))
+                where = c if where is None else (where & c)
             else:
-                src_only.append(rw)
-        src_rn = src.select(
-            *[F.col(c).alias(f"__src_{c}") for c in src.columns]
-        )
-        guard_src = src_rn
-        for rw in src_only:
-            guard_src = guard_src.filter(F.expr(" ".join(rw)))
-        skeys = [sc for _tc, sc in pairs]
-        # Drop NULL-key source rows explicitly: under SQL `=` they match no
-        # target row, so excluding them changes nothing about the update —
-        # but it makes the duplicate-NULL-key pass-through semantics (pinned
-        # in test_update_from_duplicate_null_keys_pass) independent of
-        # Catalyst's IsNotNull constraint inference, which is an
-        # optimization (disable-able via constraintPropagation), not a
-        # guarantee (r16 review finding).
-        for sc in skeys:
-            guard_src = guard_src.filter(F.col(f"__src_{sc}").isNotNull())
-        dup_msg = (
-            "UPDATE ... FROM: the source has duplicate rows on the "
-            f"join keys {skeys} — a target row would match multiple "
-            "source rows (DuckDB picks one arbitrarily; this engine "
-            "raises, like Delta). Dedupe the source on the keys "
-            "first."
-        )
-        # Unique sentinel for the exception translation below: matching on
-        # the human-readable phrase would misreport any unrelated failure
-        # whose message happened to contain it (r15 advice). The token rides
-        # only in the in-plan raise_error text, never in the ValueError.
-        _GUARD_TOKEN = "__upd_from_dup_guard__"
+                src = src.filter(F.expr(" ".join(rewrite(conj, "WHERE", ""))))
 
-        # Compile the SET values against the rewritten namespace.
         sets: dict[str, Any] = {}
-        used_src: set[str] = set(skeys)
         for col, kind, payload in entries:
             if kind == "scalar":
                 sets[col] = payload
                 continue
             rw = rewrite(payload, "SET")
-            used_src.update(
-                t[len("__src_"):] for t in rw if t.startswith("__src_")
-            )
             if len(rw) == 1:
                 tok = rw[0]
                 if tok.upper() == "NULL":
@@ -9162,69 +9087,22 @@ class RefSQL:
                     sets[col] = lit if lit is not None else _unquote(tok)
             else:
                 sets[col] = F.expr(" ".join(rw))
-        for rw in residual_rw:
-            used_src.update(
-                t[len("__src_"):] for t in rw if t.startswith("__src_")
-            )
-
-        # One left join: target × (renamed, column-pruned, key-aggregated
-        # source + guarded hit marker); the engine's copy-on-write pass
-        # does the rest. The aggregate enforces the determinism guard
-        # in-plan: non-key columns come out as first() (deterministic —
-        # any key with a second row raises before its values are used),
-        # and the hit marker raises on __src_cnt > 1.
-        key_cols = [F.col(f"__src_{c}") for c in skeys]
-        other_cols = sorted(used_src - set(skeys))
-        src_agg = guard_src.groupBy(*key_cols).agg(
-            F.count(F.lit(1)).alias("__src_cnt"),
-            *[
-                F.first(f"__src_{c}").alias(f"__src_{c}")
-                for c in other_cols
-            ],
+        skeys = [sc for _tc, sc in pairs]
+        out = self.engine.merge(
+            table,
+            src,
+            pairs,
+            update=sets,
+            where=where,
+            duplicate=(
+                "UPDATE ... FROM: the source has duplicate rows on the "
+                f"join keys {skeys} — a target row would match multiple "
+                "source rows (DuckDB picks one arbitrarily; this engine "
+                "raises, like Delta). Dedupe the source on the keys first."
+            ),
+            returning=ret_items is not None,
         )
-        # NULL-key note (r15 advice): a source row whose join key is NULL
-        # never reaches this guard — Spark infers IsNotNull on the equi-join
-        # key and pushes it below the aggregate — so duplicate NULL-key
-        # source rows pass silently. That is the intended semantics: under
-        # SQL `=`, a NULL key matches no target row, so such duplicates can
-        # never make an update non-deterministic (pinned in
-        # tests/test_refsql.py::test_update_from_duplicate_null_keys_pass).
-        hit = (
-            F.when(
-                F.col("__src_cnt") > 1,
-                F.raise_error(F.lit(dup_msg + f" [{_GUARD_TOKEN}]")).cast(
-                    "boolean"
-                ),
-            )
-            .otherwise(F.lit(True))
-            .alias("__upd_hit")
-        )
-        src_sel = src_agg.select(
-            *[F.col(f"__src_{c}") for c in sorted(used_src)], hit
-        )
-        cond = None
-        for tc, sc in pairs:
-            eq = F.col(tc) == F.col(f"__src_{sc}")
-            cond = eq if cond is None else (cond & eq)
-        for rw in residual_rw:
-            cond = cond & F.expr(" ".join(rw))
-        frame = self.engine.table(table).join(src_sel, cond, "left")
-        try:
-            if ret_items is not None:
-                _, ret = self.engine.update(
-                    table, sets, F.col("__upd_hit"), frame=frame,
-                    returning=True,
-                )
-                return ret.selectExpr(*ret_items)
-            return self.engine.update(
-                table, sets, F.col("__upd_hit"), frame=frame
-            )
-        except ValueError:
-            raise
-        except Exception as exc:  # translate the in-plan guard raise
-            if _GUARD_TOKEN in str(exc):
-                raise ValueError(dup_msg) from None
-            raise
+        return out if ret_items is None else out[1].selectExpr(*ret_items)
 
     def _delete(self, cur: _Cursor) -> int | DataFrame:
         cur, ret_items = self._split_returning(cur)
@@ -9260,34 +9138,31 @@ class RefSQL:
             )
 
     def _merge(self, cur: _Cursor) -> int:
-        """Dialect extension (round-7/8): ``MERGE INTO t USING s [AS a] ON
-        t.k = a.k [AND ...] [WHEN MATCHED [AND <pred>] THEN UPDATE SET * |
-        WHEN MATCHED [AND <pred>] THEN DELETE] [WHEN NOT MATCHED [BY
-        TARGET] THEN INSERT *] [WHEN NOT MATCHED BY SOURCE [AND <pred>]
-        THEN DELETE]`` — the full Delta-style CDC triad over copy-on-write
-        storage.
-
-        UPDATE SET * enforces 1:1 matching (round-8): duplicate join keys
-        on either side raise (Delta's multiple-rows-matched error) rather
-        than silently fanning out or collapsing rows; matched DELETE is
-        exempt (idempotent). NOT MATCHED BY SOURCE DELETE removes target
-        rows with no source match — its optional AND predicate references
-        unqualified TARGET columns and filters which unmatched rows die.
+        """``MERGE INTO t USING s [AS a] ON t.k = a.k [AND ...] [WHEN
+        MATCHED [AND <pred>] THEN UPDATE SET * | WHEN MATCHED [AND <pred>]
+        THEN DELETE] [WHEN NOT MATCHED [BY TARGET] THEN INSERT *] [WHEN NOT
+        MATCHED BY SOURCE [AND <pred>] THEN DELETE]`` — the full
+        Delta-style CDC triad over copy-on-write storage.
 
         The source is a catalog table or a parenthesized SELECT; ON must be
         a conjunction of qualified equi-conditions (one side target, one
         side source). ``UPDATE SET *`` replaces every key-matching target
         row with its source row (SCD1 — the source must expose all target
         columns); the optional ``AND <pred>`` filters which SOURCE rows
-        participate (unqualified source column references). Executes as one
-        anti-join + union plan (operators/maintenance.py shape) into one
-        copy-on-write commit, so a failed merge leaves the old version
-        intact and VERSION AS OF can read the pre-merge table.
-        Returns affected rows: matched source rows updated + target rows
-        deleted + source rows inserted. At scale the small CDC changeset
-        broadcasts (AQE) and the one shuffle is the target anti-join."""
-        from pyspark.sql import Observation
+        participate (unqualified source column references). A target row
+        matched by two or more participating source rows raises (Delta's
+        multiple-rows-matched error); a source row matching several
+        duplicate-keyed target rows updates each of them (Postgres/Delta),
+        and matched DELETE never raises. NOT MATCHED BY SOURCE DELETE
+        removes target rows with no source match — its optional AND
+        predicate references unqualified TARGET columns.
 
+        Executes as one ``Engine.merge``: one left join of the target
+        against the key-grouped source, plus an anti-join for INSERT *, in
+        one copy-on-write commit — a failed merge leaves the old version
+        intact and VERSION AS OF can read the pre-merge table. Returns
+        affected rows: target rows updated + target rows deleted + source
+        rows inserted."""
         cur.expect_kw("merge")
         cur.expect_kw("into")
         target = _unquote(cur.next())
@@ -9416,9 +9291,7 @@ class RefSQL:
         if not cur.done():
             raise ParseError(f"unexpected token {cur.peek()!r} after MERGE")
 
-        meta = self.engine.catalog.get(target)
-        tgt = self.engine.table(target)
-        tcols = tgt.columns
+        tcols = [c.name for c in self.engine.catalog.get(target).columns]
         if has_update or has_insert:
             missing = [c for c in tcols if c not in src.columns]
             if missing:
@@ -9426,139 +9299,28 @@ class RefSQL:
                     f"MERGE source is missing target column(s) {missing} "
                     "(UPDATE SET * / INSERT * need the full row)"
                 )
-        t, s = tgt.alias("__mt"), src.alias("__ms")
-        on = None
-        for tc, sc in pairs:
-            eq = F.col(f"__mt.{tc}") == F.col(f"__ms.{sc}")
-            on = eq if on is None else (on & eq)
-
-        # Matched source rows that act (UPDATE's optional AND filters the
-        # source side BEFORE matching — a filtered-out source row leaves its
-        # target row untouched).
-        upd_src = src.filter(upd_pred) if upd_pred is not None else src
-        del_src = src.filter(del_pred) if del_pred is not None else src
-        # At most one WHEN MATCHED clause (enforced above): the acting
-        # source rows — whose keys knock matching target rows out — are
-        # either the update set or the delete set.
-        acting = upd_src if has_update else (del_src if has_delete else None)
-
-        if has_update:
-            # Multi-match guard (round-8): UPDATE SET * is only
-            # well-defined 1:1. A target row matched by ≥2 source rows
-            # would fan out (anti-join removes it once, the matched set
-            # re-inserts one row per source row); a source row matching
-            # ≥2 target rows would collapse them to one. Detect both with
-            # one key-pruned aggregate — row-id both sides, inner-join on
-            # the keys, compare pair count against distinct ids per side —
-            # and raise, matching Delta's multiple-rows-matched error.
-            # DELETE is exempt: deleting a row twice is idempotent and
-            # collapse cannot lose data. Cost: one extra key-column scan
-            # of the target per UPDATE merge.
-            tk = t.select(
-                *[F.col(f"__mt.{tc}").alias(f"__k{i}")
-                  for i, (tc, _sc) in enumerate(pairs)]
-            ).withColumn("__tid", F.monotonically_increasing_id())
-            sk = upd_src.alias("__ms").select(
-                *[F.col(f"__ms.{sc}").alias(f"__k{i}")
-                  for i, (_tc, sc) in enumerate(pairs)]
-            ).withColumn("__sid", F.monotonically_increasing_id())
-            key_eq = [f"__k{i}" for i in range(len(pairs))]
-            g = (
-                tk.join(sk, on=key_eq, how="inner")
-                .agg(
-                    F.count(F.lit(1)).alias("m"),
-                    F.count_distinct("__tid").alias("d"),
-                    F.count_distinct("__sid").alias("u"),
-                )
-                .first()
-            )
-            if g["m"] > g["d"]:
-                raise ValueError(
-                    "MERGE: a target row matched multiple source rows "
-                    "(duplicate join keys in the UPDATE source) — "
-                    "UPDATE SET * would fan the target out; dedupe the "
-                    "source on the join keys first"
-                )
-            if g["m"] > g["u"]:
-                raise ValueError(
-                    "MERGE: a source row matched multiple target rows "
-                    "(duplicate join keys in the target) — UPDATE SET * "
-                    "would collapse them to one row"
-                )
-
-        kept = tgt
-        n_del = 0
-        if acting is not None:
-            a = acting.alias("__ms")
-            key_cond = None
-            for tc, sc in pairs:
-                eq = F.col(f"__mt.{tc}") == F.col(f"__ms.{sc}")
-                key_cond = eq if key_cond is None else (key_cond & eq)
-            if has_delete:
-                # Deleted target rows leave no trace in the written result,
-                # so they can't ride the write-pass Observation — one
-                # explicit (semi-join) count job, before the swap.
-                n_del = t.join(a, key_cond, "left_semi").count()
-            kept = t.join(a, key_cond, "left_anti").select(tcols)
-
-        n_src_del = 0
-        if has_source_delete:
-            # NOT MATCHED BY SOURCE DELETE: drop surviving target rows with
-            # no source match (optionally only those passing the pred).
-            # One broadcast-able marker join against the distinct source
-            # keys — the doomed rows are counted by an Observation placed
-            # BEFORE the filter, so no extra count job runs.
-            marker = src.select(
-                *[F.col(sc).alias(f"__mk{i}")
-                  for i, (_tc, sc) in enumerate(pairs)]
-            ).dropDuplicates().withColumn("__mhit", F.lit(1))
-            mcond = None
-            for i, (tc, _sc) in enumerate(pairs):
-                eq = kept[tc] == marker[f"__mk{i}"]
-                mcond = eq if mcond is None else (mcond & eq)
-            joined = kept.join(F.broadcast(marker), mcond, "left")
-            doomed = F.col("__mhit").isNull() & (
-                F.coalesce(src_del_pred, F.lit(False))
-                if src_del_pred is not None
-                else F.lit(True)
-            )
-            obs_sd = Observation()
-            joined = joined.observe(
-                obs_sd,
-                F.sum(F.when(doomed, 1).otherwise(0)).alias("sd"),
-            )
-            kept = joined.filter(~doomed).select(tcols)
-            # The Observation materializes with the write pass below; read
-            # it after the overwrite via this closure.
-            _obs_sd = obs_sd
-        else:
-            _obs_sd = None
-
-        parts = [kept.withColumn("__tag", F.lit(None).cast("string"))]
-        if has_update:
-            matched = (
-                upd_src.alias("__ms").join(t, on, "left_semi").select(tcols)
-            )
-            parts.append(matched.withColumn("__tag", F.lit("u")))
-        if has_insert:
-            fresh = src.alias("__ms").join(t, on, "left_anti").select(tcols)
-            parts.append(fresh.withColumn("__tag", F.lit("i")))
-        result = parts[0]
-        for p in parts[1:]:
-            result = result.unionByName(p)
-        obs = Observation()
-        result = result.observe(
-            obs,
-            F.sum(F.when(F.col("__tag") == "u", 1).otherwise(0)).alias("u"),
-            F.sum(F.when(F.col("__tag") == "i", 1).otherwise(0)).alias("i"),
+        return self.engine.merge(
+            target,
+            src,
+            pairs,
+            update=(
+                {c: F.col(f"__src_{c}") for c in tcols} if has_update else None
+            ),
+            delete=has_delete,
+            acting=upd_pred if has_update else del_pred,
+            insert=has_insert,
+            delete_unmatched=(
+                (src_del_pred if src_del_pred is not None else F.lit(True))
+                if has_source_delete
+                else None
+            ),
+            duplicate=(
+                "MERGE: a target row matched multiple source rows "
+                "(duplicate join keys in the UPDATE source) — "
+                "UPDATE SET * would fan the target out; dedupe the "
+                "source on the join keys first"
+            ),
         )
-        self.engine.store.overwrite(
-            target, result.drop("__tag"), meta.partition_by
-        )
-        got = obs.get
-        if _obs_sd is not None:
-            n_src_del = int(_obs_sd.get["sd"] or 0)
-        return int((got["u"] or 0) + (got["i"] or 0) + n_del + n_src_del)
 
     def _create(self, cur: _Cursor):
         cur.expect_kw("create")

@@ -118,6 +118,29 @@ def test_delete_with_where(engine):
     assert engine.table("students").count() == 4
 
 
+@pytest.mark.parametrize("returning", [False, True])
+def test_append_df_computes_source_once(engine, spark, returning):
+    """append_df counts the rows it writes on the write pass itself: the
+    source plan runs once, with or without RETURNING's checkpoint."""
+    from pyspark.sql import functions as F, types as T
+
+    engine.create_table("t", [("x", "INT")])
+    calls = spark.sparkContext.accumulator(0)
+
+    def even(x):
+        calls.add(1)
+        return x % 2 == 0
+
+    src = spark.range(10).select(F.col("id").cast("int").alias("x"))
+    src = src.filter(F.udf(even, T.BooleanType())("x"))
+    got = engine.append_df("t", src, returning=returning)
+    n, batch = got if returning else (got, None)
+    assert n == 5 and calls.value == 10
+    if returning:
+        assert sorted(r.x for r in batch.collect()) == [0, 2, 4, 6, 8]
+    assert engine.table("t").count() == 5
+
+
 def test_ingest_parquet_native_types(engine, sf_dir):
     n = engine.ingest_parquet(f"{sf_dir}/nation.parquet", "nation")
     assert n == 25

@@ -1822,15 +1822,30 @@ def test_merge_update_rejects_duplicate_source_keys(merge_engine):
     assert n == 0
 
 
-def test_merge_update_rejects_duplicate_target_keys(merge_engine):
-    # Duplicate-keyed target rows matched by one source row would collapse
-    # to a single row under the anti-join+union plan — guard raises.
+def test_merge_update_sets_every_duplicate_target_row(merge_engine):
+    # One source row matching duplicate-keyed target rows updates each of
+    # them (Postgres/Delta): the rows DuckDB's equivalent UPDATE ... FROM
+    # leaves (DuckDB 1.0 has no MERGE).
+    import duckdb
+
     merge_engine.insert_rows("acct", [{"id": 2, "name": "dup", "bal": 0.0}])
-    with pytest.raises(ValueError, match="multiple target rows"):
-        merge_engine.ref_sql(
-            "MERGE INTO acct USING chg ON acct.id = chg.id "
-            "WHEN MATCHED THEN UPDATE SET *"
-        )
+    n = merge_engine.ref_sql(
+        "MERGE INTO acct USING chg ON acct.id = chg.id "
+        "WHEN MATCHED THEN UPDATE SET *"
+    )
+    con = duckdb.connect()
+    for t, rows in (
+        ("acct", "(1, 'a', 10), (2, 'b', 20), (3, 'c', 30), (2, 'dup', 0)"),
+        ("chg", "(2, 'b2', 25), (4, 'd', 40)"),
+    ):
+        con.execute(f"CREATE TABLE {t} (id INT, name TEXT, bal FLOAT)")
+        con.execute(f"INSERT INTO {t} VALUES {rows}")
+    (want_n,) = con.execute(
+        "UPDATE acct SET name = chg.name, bal = chg.bal FROM chg "
+        "WHERE acct.id = chg.id"
+    ).fetchone()
+    assert n == want_n == 2
+    _assert_matches_duckdb(merge_engine, con, "SELECT * FROM acct")
 
 
 def test_merge_by_source_parse_errors(merge_engine):
@@ -4973,6 +4988,99 @@ def test_insert_on_conflict_vs_duckdb(spark, tmp_path):
     e2.ref_sql("INSERT OR IGNORE INTO kv VALUES (1, 'again', 1)")
     assert e2.ref_sql(
         "SELECT count(*) AS c FROM kv WHERE k = 1").collect()[0][0] == 2
+
+
+_GUARDED = {
+    "update_from_dup": (
+        "UPDATE t SET v = s.v FROM s WHERE t.k = s.k",
+        "duplicate rows on the join keys",
+    ),
+    "merge_dup": (
+        "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE SET *",
+        "multiple source rows",
+    ),
+    "do_update_dup": (
+        "INSERT INTO t VALUES (7, 1), (7, 2) "
+        "ON CONFLICT (k) DO UPDATE SET v = excluded.v",
+        "cannot affect the same row twice",
+    ),
+    "do_nothing_null": (
+        "INSERT INTO t VALUES (8, 1), (NULL, 2) ON CONFLICT (k) DO NOTHING",
+        "NULL in conflict key",
+    ),
+    "do_update_null": (
+        "INSERT INTO t VALUES (8, 1), (NULL, 2) "
+        "ON CONFLICT (k) DO UPDATE SET v = excluded.v",
+        "NULL in conflict key",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_GUARDED))
+def test_in_plan_guards_are_atomic(spark, tmp_path, case):
+    """Every guard that runs inside a DML write raises its ValueError and
+    leaves the table as it was: the same rows, only the live ``v<N>``
+    directory, and not one new file (DO NOTHING appends in place)."""
+    import os
+
+    stmt, msg = _GUARDED[case]
+    e = Engine(spark, str(tmp_path / "guard"))
+    e.ref_sql("CREATE TABLE t (k INT, v INT)")
+    e.ref_sql("INSERT INTO t VALUES (1, 10), (2, 20)")
+    e.ref_sql("CREATE TABLE s (k INT, v INT)")
+    e.ref_sql("INSERT INTO s VALUES (1, 100), (1, 101), (3, 300)")
+
+    def state():
+        live = e.store.table_path("t")
+        files = {
+            os.path.join(d, f) for d, _, fs in os.walk(live) for f in fs
+        }
+        rows = sorted(tuple(r) for r in e.table("t").collect())
+        return os.listdir(os.path.dirname(live)), files, rows
+
+    before = state()
+    with pytest.raises(ValueError, match=msg):
+        e.ref_sql(stmt)
+    assert state() == before
+
+
+def test_keyed_merge_semantics_vs_duckdb(spark, tmp_path):
+    """MERGE, UPDATE ... FROM and ON CONFLICT DO UPDATE share one keyed
+    merge whose matching rules agree with DuckDB: every row of a
+    duplicated target key updates, duplicate source keys that match no
+    target row are harmless, NULL keys match nothing on either side, and
+    a DO UPDATE WHERE that is NULL leaves the row unchanged. DuckDB 1.0
+    has no MERGE, so MERGE is checked against its UPDATE ... FROM."""
+    e, con = _two_engines(
+        spark, str(tmp_path / "km"),
+        "CREATE TABLE t (k INT, v TEXT, n INT)",
+        "INSERT INTO t VALUES (1, 'a', 10), (2, 'b', 20), (2, 'b2', 21), "
+        "(NULL, 'z', 0), (3, 'c', NULL)",
+        "CREATE TABLE s (k INT, v TEXT, n INT)",
+        "INSERT INTO s VALUES (2, 'B', 200), (9, 'x', 1), (9, 'y', 2), "
+        "(NULL, 'N', 7), (NULL, 'M', 8)",
+        "CREATE TABLE u (k INT PRIMARY KEY, v TEXT, n INT)",
+        "INSERT INTO u VALUES (1, 'a', NULL), (2, 'b', 5), (3, 'c', 1)",
+    )
+    n = e.ref_sql(
+        "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE SET *"
+    )
+    (want,) = con.execute(
+        "UPDATE t SET k = s.k, v = s.v, n = s.n FROM s WHERE t.k = s.k"
+    ).fetchone()
+    assert n == want == 2
+    _assert_matches_duckdb(e, con, "SELECT * FROM t")
+    stmt = "UPDATE t SET n = t.n + s.n, v = s.v FROM s WHERE t.k = s.k"
+    assert e.ref_sql(stmt) == con.execute(stmt).fetchone()[0] == 2
+    _assert_matches_duckdb(e, con, "SELECT * FROM t")
+    stmt = (
+        "INSERT INTO u VALUES (1, 'A', 1), (2, 'B', 2), (3, 'C', 3), "
+        "(4, 'D', 4) ON CONFLICT (k) DO UPDATE SET v = excluded.v, "
+        "n = excluded.n WHERE n > 2"
+    )
+    e.ref_sql(stmt)
+    con.execute(stmt)
+    _assert_matches_duckdb(e, con, "SELECT * FROM u")
 
 
 def test_export_import_database(spark, tmp_path):
