@@ -33,7 +33,9 @@ representation that is incrementally maintainable, because exact
 distinct state grows with every key seen while registers are constant.
 Finalization runs the integer-scaled harmonic estimate at READ time.
 
-Restrictions (v1, validated at CREATE): single base table, aggregates
+Restrictions (validated at CREATE): one plain catalog table (no derived
+table, VALUES, file, series, VERSION AS OF, SAMPLE, PIVOT or UNPIVOT
+around it — those would be dropped, not maintained), aggregates
 required (COUNT/SUM/AVG/MIN/MAX/APPROX_COUNT_DISTINCT), optional WHERE
 and GROUP BY; no JOIN / HAVING / ORDER / LIMIT / DISTINCT — those belong
 to queries over the view.
@@ -70,10 +72,17 @@ class MaterializedViews(ArtifactRegistry):
         spec, _, clauses = parse_select(cur)
         if not cur.done():
             raise ParseError(f"unexpected token {cur.peek()!r} in view query")
-        if spec.joins or spec.version is not None:
+        rel = spec.relation
+        if (
+            rel.kind != "table" or rel.version is not None or spec.joins
+            or spec.sample or spec.using_sample or spec.pivot or spec.unpivot
+        ):
+            # the view aggregates the base table's files; anything around
+            # the table would be dropped, not maintained
             raise ParseError(
-                "materialized views support a single base table (no JOIN / "
-                "VERSION AS OF)"
+                "materialized views read one plain base table (no derived "
+                "table, VALUES, file, series, JOIN, VERSION AS OF, SAMPLE, "
+                "PIVOT or UNPIVOT)"
             )
         if not spec.aggregates:
             raise ParseError(
@@ -293,12 +302,13 @@ class MaterializedViews(ArtifactRegistry):
         if name in self.engine.views:
             raise ValueError(f"'{name}' is already a (plain) view")
         spec, clauses = self._parse(select_sql)
-        base_df = self.engine.table(spec.table)  # raises on unknown table
+        base = spec.relation.source
+        base_df = self.engine.table(base)  # raises on unknown table
         state = self._compute_state(base_df, spec, clauses)
         meta[name] = {
             "sql": select_sql,
-            "base": spec.table,
-            "files": self._base_files(spec.table),
+            "base": base,
+            "files": self._base_files(base),
         }
         # State frames are tiny relative to the base; one file per
         # group-partition is fine.
@@ -310,8 +320,9 @@ class MaterializedViews(ArtifactRegistry):
             raise KeyError(f"no materialized view '{name}'")
         entry = meta[name]
         spec, clauses = self._parse(entry["sql"])
-        base_meta = self.engine.catalog.get(spec.table)
-        current = self._base_files(spec.table)
+        base = spec.relation.source
+        base_meta = self.engine.catalog.get(base)
+        current = self._base_files(base)
         seen = set(entry["files"])
         cur_set = set(current)
         if seen <= cur_set:
@@ -338,10 +349,10 @@ class MaterializedViews(ArtifactRegistry):
             # (UPDATE/DELETE/compaction) — partials can't be subtracted
             # safely, so recompute from scratch.
             state = self._compute_state(
-                self.engine.table(spec.table), spec, clauses
+                self.engine.table(base), spec, clauses
             )
             mode = "full recompute (base was rewritten)"
-        entry["files"] = self._base_files(spec.table)
+        entry["files"] = self._base_files(base)
         self._commit_artifact(meta, name, state.write.parquet)
         return f"refreshed '{name}': {mode}"
 

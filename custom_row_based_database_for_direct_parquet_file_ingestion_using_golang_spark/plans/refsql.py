@@ -45,12 +45,45 @@ Reference semantics preserved:
   * optional weak typing (``weak_typing=True``): dual numeric/string
     comparison for all-TEXT imported tables (``expr.go:90-156``)
 
+Relations. The reference reads one bare table (select.go:49-54). Here
+six positions read a relation: the first FROM item, a JOIN, comma-join or
+ASOF side, a LATERAL body, the UPDATE ... FROM source and the MERGE ...
+USING source. All of them parse one grammar (_relation) into one record
+(Relation) and build it one way (RefSQL._relation_df), so every position
+accepts every form::
+
+    relation := name                        catalog table, CTE or view
+              | 'path.ext'                  direct file query (.parquet,
+              | read_parquet('path')          .csv, .json[l], .orc)
+              | read_csv(...) | read_json(...)
+              | range(...)                  integer or temporal series
+              | generate_series(...)          (spark.range)
+              | (SELECT ...)                derived table or set-op chain
+              | (VALUES (...), ...)         inline rows (a LocalRelation)
+              [AS alias [(c1, ...)]]        the parenthesized forms need
+                                              the alias (AS optional)
+              [VERSION AS OF n]             tables only: time travel
+
+A relation binds qualified references by its alias, else by the table's
+name, the function's name or the file's basename sans extension; the
+column list renames its columns positionally. SAMPLE, USING SAMPLE /
+TABLESAMPLE, PIVOT and UNPIVOT stay clauses of the first FROM item.
+
+Joins: ``[INNER|LEFT|RIGHT|FULL [OUTER]|LEFT SEMI|LEFT ANTI|CROSS] JOIN
+<relation> [ON <predicate> | USING (cols)]`` with qualified ``x.col``
+references; ANSI-89 comma joins (``FROM a, b WHERE a.k = b.k``) are cross
+joins whose WHERE equalities Catalyst folds into hash-join conditions;
+``[CROSS | INNER | LEFT] JOIN LATERAL (SELECT ...) AS x [ON TRUE]`` (also
+``FROM a, LATERAL (...)``) parses the body like a subquery (qualified names
+outside its FROM are ``Column.outer()`` references) and joins through
+``DataFrame.lateralJoin``; Catalyst decorrelates it (count-bug guard,
+WindowGroupLimit for a per-row LIMIT). A grouped body's ``inner = outer``
+conjuncts become grouping keys (_lateral_body).
+
 Documented upgrades (SURVEY.md §7.4): LIMIT/OFFSET apply on every path,
 UPDATE/DELETE accept the full predicate language, multi-column GROUP BY,
 multi-assignment SET. Round-5 extensions (the reference has none of these —
 select.go:49-54 is single-table, bare-column only):
-  * JOINs: ``[INNER|LEFT|RIGHT|FULL [OUTER]] JOIN t [AS x] ON <predicate>``
-    with qualified ``x.col`` references.
   * Window functions: ``fn(args) OVER ([PARTITION BY ...] [ORDER BY ...])``.
   * Value expressions in projections, aggregate/window arguments, WHERE/
     HAVING comparison sides, and ORDER BY keys — captured as raw token
@@ -67,8 +100,6 @@ Round-6 extensions:
     chains — positional arms named by the first arm, left-associative
     fold, trailing ORDER BY/LIMIT/OFFSET on the combined result; accepted
     wherever a SELECT is (CTAS, INSERT...SELECT, EXPLAIN, CTE bodies).
-  * The explicit ``LEFT SEMI / LEFT ANTI / CROSS JOIN`` and ``USING
-    (cols)`` join forms.
   * ``GROUP BY ROLLUP(a, b)`` / ``CUBE(a, b)`` — one Expand pass — with
     ``GROUPING(col)`` to flag super-aggregate rows.
   * DISTINCT aggregates (``COUNT/SUM/AVG(DISTINCT col)``) and the
@@ -91,16 +122,13 @@ Round-7 extensions:
     ``WHEN NOT MATCHED BY SOURCE [AND <pred>] THEN DELETE`` — the full
     Delta-style CDC triad over copy-on-write storage (``Engine.merge``:
     one left join against the key-grouped source, one commit,
-    snapshot-retiring); source may be a table or ``(SELECT ...) AS a``.
+    snapshot-retiring); the source is any relation.
     UPDATE SET * raises when a target row matches several source rows;
     a source row matching duplicate-keyed target rows updates each.
   * ``GROUP BY ALL`` (group on every non-aggregate SELECT item) and
     integer ordinals in GROUP BY / ORDER BY indexing the output columns.
   * ``RANGE BETWEEN <bound> AND <bound>`` frames (logical value offsets
     over exactly one numeric ORDER BY key — Spark's rangeBetween).
-  * Derived tables: ``FROM (SELECT ...) AS x`` (alias mandatory; one
-    plain subselect — use a CTE for set-op bodies), composing with joins
-    and every outer clause.
   * ``FIRST_VALUE / LAST_VALUE / NTH_VALUE`` window functions.
   * ``CREATE TABLE ... PARTITIONED BY (...)`` (both forms) and
     ``COPY (SELECT ...) TO 'path'`` query export.
@@ -130,19 +158,6 @@ Round-7 extensions:
     driver-side fixpoint with frontier semantics (see _recursive_cte).
 
 Round-12 extensions:
-  * Derived tables as JOIN sides: ``JOIN (SELECT ...) AS x [(c1, ...)]
-    ON ...`` — the subquery builds independently and joins like any
-    relation (Catalyst still picks broadcast vs shuffle on it); ASOF
-    accepts one too. ANSI-89 comma joins (``FROM a, b WHERE a.k =
-    b.k``) parse as cross joins whose WHERE equalities Catalyst folds
-    into hash-join conditions.
-  * ``[CROSS | INNER | LEFT] JOIN LATERAL (SELECT ...) AS x [ON
-    TRUE]`` (also ``FROM a, LATERAL (...)``) — the body parses like a
-    subquery (qualified names outside its FROM are ``Column.outer()``
-    references) and joins through ``DataFrame.lateralJoin``; Catalyst
-    decorrelates it (count-bug guard, WindowGroupLimit for a per-row
-    LIMIT). A grouped body's ``inner = outer`` conjuncts become grouping
-    keys (_lateral_body).
   * ``ORDER BY ALL [ASC|DESC]`` — every output column left-to-right
     (DuckDB ergonomic), star-modifier-aware.
   * ``string_split(s, '<literal>')`` (aliases ``str_split``,
@@ -150,11 +165,6 @@ Round-12 extensions:
     separator regex-escaped, closing the literal-vs-regex drift for
     literal separators (_rewrite_string_split); non-literal/empty
     separators stay un-rewritten by design.
-  * ``FROM range(...)`` / ``generate_series(...)`` — DuckDB's
-    integer-series table functions over spark.range (end-exclusive /
-    end-inclusive, default column named after the function,
-    wrong-direction bounds error at plan time like DuckDB's binder);
-    compose with aliases ``AS r(x)``, CTEs, and joins.
   * JSON text extraction (round-13, every value form probed vs DuckDB
     before entry — see test_json_functions_vs_duckdb):
     ``json_extract_string(j, path)`` / ``json_extract_path_text`` and
@@ -184,9 +194,6 @@ Round-12 extensions:
     — bound CTE frames resolve before the catalog in every relation
     read; a CTE over the DML's own target sees the pre-statement
     snapshot.
-  * Direct file queries (round-13): ``FROM 'path.parquet'`` /
-    read_parquet|read_csv|read_json('path') — the native distributed
-    scan with full pushdown/pruning; basename relation binding.
   * ``EXPORT DATABASE 'path' [FORMAT ...]`` / ``IMPORT DATABASE`` —
     whole-catalog snapshot + all-or-nothing rebuild (tables, declared
     types/PKs/defaults, partition layout, view SQL in creation order).
@@ -4324,24 +4331,55 @@ class ExprParser:
 
 
 @dataclass
+class Relation:
+    """One relation a statement reads: the first FROM item, a JOIN,
+    comma-join or ASOF side, a LATERAL body, an UPDATE ... FROM source or
+    a MERGE ... USING source. Every position parses it with ``_relation``
+    and builds it with ``RefSQL._relation_df``, so each accepts every
+    form:
+
+    * ``table``: a catalog table, CTE or view name (``source`` = name);
+    * ``select``: a parenthesized SELECT or set-operation chain
+      (``source`` = ``parse_query``'s result);
+    * ``values``: ``(VALUES (...), ...)`` (``source`` = the SQL text,
+      compiled by Catalyst to a LocalRelation);
+    * ``series``: ``range(...)`` / ``generate_series(...)`` (``source`` =
+      ``(fn, args)``, compiled to ``spark.range``);
+    * ``file``: ``'path.ext'`` / ``read_parquet|read_csv|read_json('path')``
+      (``source`` = ``(path, format)``, the native scan);
+    * ``lateral``: the body of ``JOIN LATERAL (SELECT ...)`` (``source`` =
+      ``(spec, clauses)``).
+
+    ``name`` is what qualified references bind to: the alias, else the
+    table's name, the function's name or the file's basename sans
+    extension. ``columns`` is the ``AS x(c1, ...)`` list, renaming the
+    columns positionally. ``version`` is ``VERSION AS OF n`` (tables
+    only)."""
+
+    kind: str
+    source: Any
+    name: str = ""
+    columns: "list[str] | None" = None
+    version: "int | None" = None
+
+
+@dataclass
 class SelectSpec:
-    table: str
+    relation: "Relation | None" = None
     distinct: bool = False
-    # Round-9: SELECT DISTINCT ON (cols) — first row per group by the
-    # statement's ORDER BY (the DuckDB/Postgres top-1-per-group verb).
+    # SELECT DISTINCT ON (cols) — first row per group by the statement's
+    # ORDER BY (the DuckDB/Postgres top-1-per-group verb).
     distinct_on: list[str] = field(default_factory=list)
     projections: list[tuple[str, str | None]] = field(default_factory=list)  # (item, alias)
     aggregates: list[tuple[str, str, str | None]] = field(default_factory=list)  # (fn, col, alias)
     star: bool = False
-    version: int | None = None  # FROM t VERSION AS OF n (time travel)
-    # Dialect extension (round-6): FROM t SAMPLE n PERCENT BY col —
-    # deterministic md5-bucket sampling (byte-identical across runs,
-    # engines and task retries, unlike TABLESAMPLE's per-task re-roll).
+    # FROM t SAMPLE n PERCENT BY col — deterministic md5-bucket sampling
+    # (byte-identical across runs, engines and task retries, unlike
+    # TABLESAMPLE's per-task re-roll).
     sample: "tuple[int, str] | None" = None
-    # Round-14: DuckDB USING SAMPLE / TABLESAMPLE — (kind, value, unit,
-    # seed): kind in bernoulli|system|reservoir, unit in percent|rows
+    # DuckDB USING SAMPLE / TABLESAMPLE — (kind, value, unit, seed): kind
+    # in bernoulli|system|reservoir, unit in percent|rows
     using_sample: "tuple[str, float, str, int | None] | None" = None
-    alias: str | None = None  # FROM t AS x (needed to qualify join columns)
     # Dialect extension: fn(args) OVER ([PARTITION BY ...] [ORDER BY ...])
     windows: list[tuple[str, list, str, list, list]] = field(
         default_factory=list
@@ -4349,48 +4387,28 @@ class SelectSpec:
     # SELECT-list scalar subqueries, bound as hidden ``__subq_scalar_<n>``
     # columns on the FROM frame and projected from there.
     hidden: list[tuple[str, Column]] = field(default_factory=list)
-    # True when qualified references must resolve against this FROM's
-    # table name — the SELECT has subqueries, or is one.
+    # True when qualified references must resolve against the FROM
+    # relation's name — the SELECT has subqueries, or is one.
     scoped: bool = False
     # A subquery whose WHERE references columns of an enclosing query.
     correlated: bool = False
-    # Dialect extension: [INNER|LEFT|RIGHT|FULL [OUTER]] JOIN t [AS x] ON cond
-    joins: list[tuple[str, str, "str | None", Column]] = field(
-        default_factory=list
-    )  # (how, table, alias, on-condition)
-    # Dialect extension (round-7): FROM (SELECT ...) AS x — a derived
-    # table; (sub_spec, sub_clauses) resolved recursively at execute time.
-    derived: "tuple[SelectSpec, dict] | None" = None
-    # Dialect extension (round-8): FROM t PIVOT (agg(expr) FOR col IN
-    # (lit [AS name], ...)) — (agg_text, for_col, [(value, out_name)]).
+    # Dialect extension: [INNER|LEFT|RIGHT|FULL [OUTER]] JOIN r ON cond —
+    # (how, relation, condition); the condition is a Column, a USING
+    # column tuple, the ASOF conjunct list, or None (CROSS, LATERAL)
+    joins: list[tuple[str, Relation, Any]] = field(default_factory=list)
+    # FROM t PIVOT (agg(expr) FOR col IN (lit [AS name], ...)) —
+    # (agg_text, for_col, [(value, out_name)]).
     pivot: "tuple[str, str, list[tuple[Any, str]]] | None" = None
-    # Dialect extension (round-8): FROM t UNPIVOT [INCLUDE NULLS]
-    # (val FOR name IN (col, ...)) — (val_col, name_col, cols, keep_nulls).
+    # FROM t UNPIVOT [INCLUDE NULLS] (val FOR name IN (col, ...)) —
+    # (val_col, name_col, cols, keep_nulls).
     unpivot: "tuple[str, str, list[str], bool] | None" = None
-    # Dialect extension (round-8): SELECT * EXCLUDE (c1, ...) — star
-    # minus named columns (wide-table ergonomic).
+    # SELECT * EXCLUDE (c1, ...) — star minus named columns (wide-table
+    # ergonomic).
     star_exclude: list[str] = field(default_factory=list)
     star_replace: "list[tuple[str, str]]" = field(default_factory=list)
-    # Dialect extension (round-12): SELECT * RENAME (col AS new, ...) —
-    # star with named columns renamed in place (DuckDB 1.3+/Snowflake).
+    # SELECT * RENAME (col AS new, ...) — star with named columns renamed
+    # in place (DuckDB 1.3+/Snowflake).
     star_rename: "list[tuple[str, str]]" = field(default_factory=list)
-    # Dialect extension (round-10): FROM (VALUES (...), ...) AS v(c1, ...)
-    # — inline table constructor; the raw VALUES row text, compiled by
-    # Catalyst at execute time (a LocalRelation — nothing scanned).
-    values_sql: "str | None" = None
-    # Round-10: explicit derived-table column list `AS x(c1, c2, ...)` —
-    # renames the derived frame's columns positionally (SELECT or VALUES).
-    derived_cols: "list[str] | None" = None
-    # Dialect extension (round-12): FROM range(...) / generate_series(...)
-    # — DuckDB's integer-series table functions, compiled to spark.range
-    # (a splittable, codegen'd leaf — parallelizes across executors, no
-    # data scanned). (fn_name, [args]) with 1-3 integer literal args.
-    table_fn: "tuple[str, list[int]] | None" = None
-    # Dialect extension (round-13): FROM 'path.parquet' / read_parquet(
-    # 'path') — direct file queries (the repo's namesake capability,
-    # DuckDB surface): (path, format). The relation name defaults to the
-    # file's basename sans extension (DuckDB's binding), AS overrides.
-    file_path: "tuple[str, str] | None" = None
 
 
 def _contains_agg_call(buf: list[str]) -> bool:
@@ -4416,7 +4434,7 @@ def _contains_agg_call(buf: list[str]) -> bool:
 
 
 def _sniff_file_format(path: str) -> str:
-    """Round-13 direct file queries: format from the extension."""
+    """A direct file query's format, from the path's extension."""
     low = path.lower()
     if low.endswith((".parquet", ".pq")):
         return "parquet"
@@ -4456,81 +4474,156 @@ def _read_file_df(spark, path: str, fmt: str) -> DataFrame:
     return r.json(path)
 
 
-def _join_side(
+# Words that end a relation rather than alias it.
+_ALIAS_STOP = frozenset({
+    "on", "using", "where", "group", "order", "limit", "offset", "having",
+    "qualify", "window", "union", "intersect", "except", "join", "inner",
+    "left", "right", "full", "cross", "asof", "sample", "tablesample",
+    "version", "pivot", "unpivot",
+})
+
+
+def _relation(
     cur: _Cursor, weak_typing: bool = False, resolver=None,
-) -> tuple["str | tuple", "str | None"]:
-    """The relation after a JOIN keyword: a table name (optionally
-    aliased), an inline ``(VALUES ...) AS v[(c1, ...)]`` table constructor
-    (round-10, marker ``("__values__", values_sql, cols)``), or (round-12)
-    a derived table ``(SELECT ...) AS x[(c1, ...)]`` (marker
-    ``("__subselect__", spec, clauses, cols)``) — alias mandatory for
-    both inline forms."""
-    if cur.peek() is not None and _is_string_lit(cur.peek()):
-        # Round-13: a FILE as a join side — ``JOIN 'dim.parquet' [AS d]
-        # ON ...`` (DuckDB surface); binds as the basename sans
-        # extension unless aliased, reads via the native scan.
+    lateral: bool = False,
+) -> Relation:
+    """Parse one relation (see ``Relation``) with its alias, column list
+    and ``VERSION AS OF``::
+
+        relation := ( name | 'path' | read_*('path') | range(...)
+                    | generate_series(...) ) [AS alias [(c1, ...)]]
+                  | ( (SELECT ...) | (VALUES ...) ) [AS] alias [(c1, ...)]
+                  [VERSION AS OF n]
+
+    ``lateral`` parses the body after ``JOIN LATERAL``, whose qualified
+    names outside its own FROM are outer references. A parenthesized
+    relation needs an alias; the others bind their own name unless
+    aliased with AS."""
+    if lateral:
+        if cur.next() != "(":
+            raise ParseError("expected '(' after LATERAL")
+        bspec, _, bclauses = parse_select(
+            cur, weak_typing, resolver, subquery="lateral"
+        )
+        if cur.next() != ")":
+            raise ParseError("expected ')' to close the LATERAL body")
+        rel = Relation("lateral", (bspec, bclauses))
+    elif cur.peek() == "(" and cur.peek_kw(1) == "values":
+        cur.next()
+        cur.next()
+        rel = Relation("values", _capture_values_tokens(cur))
+    elif cur.peek() == "(":
+        cur.next()
+        rel = Relation("select", parse_query(cur, weak_typing, resolver))
+        if cur.next() != ")":
+            raise ParseError("expected ')' to close the derived table")
+    elif cur.peek_kw() in ("range", "generate_series") and cur.peek(1) == "(":
+        fn, args = _series_args(cur)
+        rel = Relation("series", (fn, args), fn)
+    elif cur.peek() is not None and _is_string_lit(cur.peek()):
         path = cur.next()[1:-1]
-        fmt = _sniff_file_format(path)
-        jalias = _file_relation_name(path)
-        if cur.peek_kw() == "as":
-            cur.next()
-            jalias = _unquote(cur.next())
-        return ("__file__", path, fmt), jalias
-    if cur.peek_kw() in _FILE_TABLE_FNS and cur.peek(1) == "(":
+        rel = Relation(
+            "file", (path, _sniff_file_format(path)), _file_relation_name(path)
+        )
+    elif cur.peek_kw() in _FILE_TABLE_FNS and cur.peek(1) == "(":
         fn = cur.next().lower()
         cur.next()
         ptok = cur.next()
         if not _is_string_lit(ptok) or cur.next() != ")":
             raise ParseError(f"{fn}() takes one quoted path")
         path = ptok[1:-1]
-        jalias = _file_relation_name(path)
-        if cur.peek_kw() == "as":
-            cur.next()
-            jalias = _unquote(cur.next())
-        return ("__file__", path, _FILE_TABLE_FNS[fn]), jalias
-    if cur.peek() == "(" and cur.peek_kw(1) == "values":
+        rel = Relation(
+            "file", (path, _FILE_TABLE_FNS[fn]), _file_relation_name(path)
+        )
+    else:
+        name = _unquote(cur.next())
+        rel = Relation("table", name, name)
+    aliased = cur.peek_kw() == "as"
+    if aliased:
         cur.next()
-        cur.next()
-        vsql = _capture_values_tokens(cur)
-        if cur.peek_kw() == "as":
-            cur.next()
-        nxt = cur.peek()
-        if nxt is None or nxt in (",", ")", "("):
-            raise ParseError(
-                "a VALUES join side needs an alias: (VALUES ...) AS v"
-            )
-        jalias = _unquote(cur.next())
-        cols = _alias_column_list(cur)
-        return ("__values__", vsql, cols), jalias
-    if cur.peek() == "(" and cur.peek_kw(1) == "select":
-        # Round-12: derived table as a join side — ``JOIN (SELECT ...)
-        # AS x [(c1, ...)] ON ...``. Same contract as the FROM-position
-        # derived table (one plain subselect; use a CTE for set-op
-        # bodies); the subquery builds independently and joins like any
-        # relation, so Catalyst still picks broadcast vs shuffle on the
-        # built side.
-        cur.next()
-        sub_spec, _, sub_clauses = parse_select(cur, weak_typing, resolver)
-        if cur.next() != ")":
-            raise ParseError("expected ')' to close the derived join side")
-        if cur.peek_kw() == "as":
-            cur.next()
-        nxt = cur.peek()
-        if nxt is None or nxt in (",", ")", "(") or (cur.peek_kw() or "") in (
-            "on", "using", "where", "group", "order", "limit",
+    if aliased or not rel.name:
+        if not rel.name and (
+            cur.peek() in (None, ",", ")", "(") or cur.peek_kw() in _ALIAS_STOP
         ):
+            form = {
+                "lateral": "a LATERAL join needs an alias: LATERAL (SELECT ...)",
+                "values": "a VALUES list needs an alias: (VALUES ...)",
+                "select": "a derived table needs an alias: (SELECT ...)",
+            }[rel.kind]
+            raise ParseError(f"{form} AS x")
+        rel.name = _unquote(cur.next())
+        rel.columns = _alias_column_list(cur)
+    if rel.kind == "lateral" and rel.columns:
+        # a body over outer columns analyzes only inside its join, so its
+        # width is read off the parse
+        width = _output_width(*rel.source)
+        if width not in (None, len(rel.columns)):
             raise ParseError(
-                "a derived join side needs an alias: (SELECT ...) AS x"
+                f"alias lists {len(rel.columns)} columns but {rel.name!r} "
+                f"has {width}"
             )
-        jalias = _unquote(cur.next())
-        cols = _alias_column_list(cur)
-        return ("__subselect__", sub_spec, sub_clauses, cols), jalias
-    jtable = _unquote(cur.next())
-    jalias = None
-    if cur.peek_kw() == "as":
+    if cur.peek_kw() == "version":
+        # ``VERSION AS OF n`` reads a retained copy-on-write version
+        # (Engine.table_at) — the Delta/Iceberg time-travel surface.
         cur.next()
-        jalias = _unquote(cur.next())
-    return jtable, jalias
+        cur.expect_kw("as")
+        cur.expect_kw("of")
+        vtok = cur.next()
+        try:
+            rel.version = int(vtok)
+        except ValueError:
+            raise ParseError(f"VERSION AS OF needs an integer, got {vtok!r}")
+    return rel
+
+
+def _series_args(cur: _Cursor) -> tuple[str, list]:
+    """``range(...)`` / ``generate_series(...)``, DuckDB's series table
+    functions: 1-3 integer literals, or TIMESTAMP/DATE bounds with an
+    INTERVAL step (the gap-fill calendar-spine idiom; DuckDB coerces DATE
+    bounds to TIMESTAMP output, and so do we). Wrong-direction integer
+    bounds error like DuckDB's binder does (Spark's bare range would
+    silently return empty)."""
+    fn = cur.next().lower()
+    cur.next()
+    raw: list[list[str]] = [[]]
+    while True:
+        t = cur.next()
+        if t == ")":
+            break
+        if t == ",":
+            raw.append([])
+            continue
+        raw[-1].append(t)
+    raw = [a for a in raw if a]
+    if all(
+        len(a) == 1 and isinstance(_literal_value(a[0]), int) for a in raw
+    ):
+        args = [int(a[0]) for a in raw]
+        if not 1 <= len(args) <= 3:
+            raise ParseError(f"{fn}() takes 1 to 3 arguments")
+        if len(args) == 3 and args[2] == 0:
+            raise ParseError(f"{fn}() step must not be 0")
+        if len(args) >= 2:
+            start, stop = args[0], args[1]
+            step = args[2] if len(args) == 3 else 1
+            if (step > 0 and start > stop) or (step < 0 and start < stop):
+                raise ParseError(
+                    f"{fn}({start}, {stop}, {step}): start is past stop "
+                    "for the step direction"
+                )
+        return fn, args
+    if (
+        len(raw) == 3
+        and all(len(a) == 2 and _is_string_lit(a[1]) for a in raw)
+        and raw[0][0].lower() in ("timestamp", "date")
+        and raw[1][0].lower() in ("timestamp", "date")
+        and raw[2][0].lower() == "interval"
+    ):
+        return fn, [f"{a[0].upper()} {a[1]}" for a in raw]
+    raise ParseError(
+        f"{fn}() takes integer literals or TIMESTAMP/DATE bounds "
+        "with an INTERVAL step"
+    )
 
 
 def _capture_values_tokens(cur: _Cursor) -> str:
@@ -4572,8 +4665,8 @@ def _capture_balanced_tokens(cur: _Cursor) -> list[str]:
 
 
 def _alias_column_list(cur: _Cursor) -> "list[str] | None":
-    """Optional ``(c1, c2, ...)`` column list after a derived-table alias
-    (round-10): returns the names, or None when absent."""
+    """Optional ``(c1, c2, ...)`` column list after a relation's alias:
+    returns the names, or None when absent."""
     if cur.peek() != "(":
         return None
     cur.next()
@@ -4663,7 +4756,7 @@ def parse_select(
     SQL allows ``(SELECT round(AVG(x), 2) FROM t)`` unaliased, so such
     items get an internal auto-alias instead of raising."""
     cur.expect_kw("select")
-    spec = SelectSpec(table="", scoped=bool(subquery))
+    spec = SelectSpec(scoped=bool(subquery))
     if cur.peek_kw() == "distinct":
         cur.next()
         if cur.peek_kw() == "on":
@@ -5086,153 +5179,9 @@ def parse_select(
             else:
                 spec.projections.append((name, alias))
     cur.expect_kw("from")
-    if cur.peek() == "(" and cur.peek_kw(1) == "values":
-        # Round-10: inline table constructor — ``FROM (VALUES (1, 'a'),
-        # (2, 'b')) AS v(c1, c2)``. Rows are captured verbatim and
-        # compiled by Catalyst (a LocalRelation); the alias is mandatory,
-        # the column list optional (defaults to col0, col1, ... — the
-        # DuckDB naming).
-        cur.next()
-        cur.next()
-        spec.values_sql = _capture_values_tokens(cur)
-        if cur.peek_kw() == "as":
-            cur.next()
-        nxt = cur.peek()
-        if nxt is None or nxt in (",", ")", "("):
-            raise ParseError("VALUES table needs an alias: (VALUES ...) AS v")
-        spec.alias = _unquote(cur.next())
-        spec.table = spec.alias
-        spec.derived_cols = _alias_column_list(cur)
-    elif cur.peek() == "(":
-        # Round-7: derived table — ``FROM (SELECT ...) AS x``. One plain
-        # subselect (use a CTE for set-op bodies); the alias is mandatory
-        # (standard SQL) and names the frame for qualified references.
-        # Round-10: an optional column list ``AS x(c1, c2)`` renames the
-        # derived columns positionally.
-        cur.next()
-        sub_spec, _, sub_clauses = parse_select(cur, weak_typing, resolver)
-        if cur.next() != ")":
-            raise ParseError("expected ')' to close the derived table")
-        if cur.peek_kw() == "as":
-            cur.next()
-        nxt = cur.peek()
-        if nxt is None or nxt in (",", ")") or (cur.peek_kw() or "") in (
-            "where", "group", "order", "limit", "offset", "having",
-            "qualify", "union", "intersect", "except", "join", "inner",
-            "left", "right", "full", "cross", "sample", "version",
-        ):
-            raise ParseError("derived table needs an alias: (SELECT ...) AS x")
-        spec.derived = (sub_spec, sub_clauses)
-        spec.alias = _unquote(cur.next())
-        spec.table = spec.alias
-        spec.derived_cols = _alias_column_list(cur)
-    elif cur.peek_kw() in ("range", "generate_series") and cur.peek(1) == "(":
-        # Round-12: DuckDB's integer-series table functions. range is
-        # end-EXCLUSIVE, generate_series end-INCLUSIVE; the default
-        # column carries the function's name (the DuckDB contract);
-        # wrong-direction bounds error like DuckDB's binder does (Spark's
-        # bare range would silently return empty).
-        fn = cur.next().lower()
-        cur.next()
-        raw: list[list[str]] = [[]]
-        while True:
-            t = cur.next()
-            if t == ")":
-                break
-            if t == ",":
-                raw.append([])
-                continue
-            raw[-1].append(t)
-        raw = [a for a in raw if a]
-        args: list
-        if all(len(a) == 1 for a in raw) and all(
-            _literal_value(a[0]) is not None
-            and isinstance(_literal_value(a[0]), int)
-            for a in raw
-        ):
-            args = [int(a[0]) for a in raw]
-            if not 1 <= len(args) <= 3:
-                raise ParseError(f"{fn}() takes 1 to 3 arguments")
-            if len(args) == 3 and args[2] == 0:
-                raise ParseError(f"{fn}() step must not be 0")
-            if len(args) >= 2:
-                start, stop = args[0], args[1]
-                step = args[2] if len(args) == 3 else 1
-                if (step > 0 and start > stop) or (step < 0 and start < stop):
-                    raise ParseError(
-                        f"{fn}({start}, {stop}, {step}): start is past stop "
-                        "for the step direction"
-                    )
-        elif (
-            # temporal series: TIMESTAMP/DATE bounds + INTERVAL step —
-            # the gap-fill calendar-spine idiom. DuckDB coerces DATE
-            # bounds to TIMESTAMP output; so do we (one sequence()).
-            len(raw) == 3
-            and all(
-                len(a) == 2 and _is_string_lit(a[1]) for a in raw
-            )
-            and raw[0][0].lower() in ("timestamp", "date")
-            and raw[1][0].lower() in ("timestamp", "date")
-            and raw[2][0].lower() == "interval"
-        ):
-            args = [f"{a[0].upper()} {a[1]}" for a in raw]
-        else:
-            raise ParseError(
-                f"{fn}() takes integer literals or TIMESTAMP/DATE bounds "
-                "with an INTERVAL step"
-            )
-        spec.table_fn = (fn, args)
-        spec.table = fn
-        if cur.peek_kw() == "as":
-            cur.next()
-            spec.alias = _unquote(cur.next())
-            spec.table = spec.alias
-            spec.derived_cols = _alias_column_list(cur)
-    elif cur.peek() is not None and _is_string_lit(cur.peek()):
-        # Round-13: direct file query — ``FROM 'path.parquet'`` (DuckDB
-        # surface; THE reference's namesake capability, now zero-DDL).
-        # Format from the extension; the relation binds as the file's
-        # basename sans extension (DuckDB's naming), AS overrides.
-        path = cur.next()[1:-1]
-        spec.file_path = (path, _sniff_file_format(path))
-        spec.table = _file_relation_name(path)
-        if cur.peek_kw() == "as":
-            cur.next()
-            spec.alias = _unquote(cur.next())
-            spec.table = spec.alias
-    elif cur.peek_kw() in _FILE_TABLE_FNS and cur.peek(1) == "(":
-        # Round-13: the explicit-format file table functions (DuckDB).
-        fn = cur.next().lower()
-        cur.next()
-        ptok = cur.next()
-        if not _is_string_lit(ptok) or cur.next() != ")":
-            raise ParseError(f"{fn}() takes one quoted path")
-        path = ptok[1:-1]
-        spec.file_path = (path, _FILE_TABLE_FNS[fn])
-        spec.table = _file_relation_name(path)
-        if cur.peek_kw() == "as":
-            cur.next()
-            spec.alias = _unquote(cur.next())
-            spec.table = spec.alias
-    else:
-        spec.table = _unquote(cur.next())
-        if cur.peek_kw() == "as":
-            cur.next()
-            spec.alias = _unquote(cur.next())
-    if cur.peek_kw() == "version":
-        # Dialect extension (SURVEY.md §7.4): `FROM t VERSION AS OF n`
-        # reads a retired copy-on-write snapshot (Engine.table_at) — the
-        # Delta/Iceberg time-travel surface over plain parquet snapshots.
-        cur.next()
-        cur.expect_kw("as")
-        cur.expect_kw("of")
-        vtok = cur.next()
-        try:
-            spec.version = int(vtok)
-        except ValueError:
-            raise ParseError(f"VERSION AS OF needs an integer, got {vtok!r}")
+    spec.relation = _relation(cur, weak_typing, resolver)
     if cur.peek_kw() == "sample":
-        # Round-6: ``SAMPLE n PERCENT BY col`` — a narrow md5-bucket
+        # ``SAMPLE n PERCENT BY col`` — a narrow md5-bucket
         # filter evaluated in the scan stage (keep = floor(256·n/100)
         # of the 256 first-byte buckets), the deterministic alternative
         # to TABLESAMPLE a reproducible pipeline needs.
@@ -5251,7 +5200,7 @@ def parse_select(
     if (
         cur.peek_kw() == "using" and cur.peek_kw(1) == "sample"
     ) or cur.peek_kw() == "tablesample":
-        # Round-14: DuckDB's sampling clauses. ``USING SAMPLE n%`` /
+        # DuckDB's sampling clauses. ``USING SAMPLE n%`` /
         # ``n PERCENT`` -> Spark row-level Bernoulli sample (DuckDB's
         # default percentage method is cluster-level 'system'; both are
         # nondeterministic — ours samples rows, documented). ``USING
@@ -5317,9 +5266,8 @@ def parse_select(
         spec.using_sample = (kind, val, unit, seed)
 
     if cur.peek_kw() == "pivot":
-        # Round-8: ``PIVOT (agg(expr) FOR col [IN (lit [AS name],
-        # ...)])``. Round-14: the IN list became OPTIONAL — absent, the
-        # executor infers the values with one bounded distinct pass
+        # ``PIVOT (agg(expr) FOR col [IN (lit [AS name], ...)])``.
+        # The IN list is optional — absent, the executor infers the values with one bounded distinct pass
         # (DuckDB's auto-discovering PIVOT / Spark DataFrame two-pass).
         # The aggregate call is captured verbatim (balanced parens) and
         # compiled by Catalyst inside the pivot aggregation.
@@ -5381,7 +5329,7 @@ def parse_select(
         spec.pivot = (agg_text, for_col, entries)
 
     if cur.peek_kw() == "unpivot":
-        # Round-8: ``UNPIVOT [INCLUDE NULLS] (val FOR name IN (c, ...))``
+        # ``UNPIVOT [INCLUDE NULLS] (val FOR name IN (c, ...))``
         # — the inverse rotation. ANSI default drops NULL measures;
         # INCLUDE NULLS keeps them (Spark's unpivot keeps them natively,
         # so the default adds one scan-stage filter).
@@ -5415,49 +5363,57 @@ def parse_select(
             raise ParseError("expected ')' to close UNPIVOT")
         spec.unpivot = (val_col, name_col, ucols, keep_nulls)
 
-    # Dialect extension (beyond the reference, which has no joins at all —
-    # select.go:49-54 takes a single table): standard equi/theta joins.
-    # ``[INNER|LEFT|RIGHT|FULL [OUTER]|LEFT SEMI|LEFT ANTI|CROSS] JOIN t
-    # [AS x] [ON <predicate> | USING (col, ...)]`` — the ON predicate
-    # reuses the full WHERE expression language, with qualified
-    # ``table.column`` (or ``alias.column``) references resolving against
-    # the DataFrame aliases the executor assigns; USING (round-6) is
-    # equi-join sugar resolved by the executor (one output column per
-    # USING name, standard semantics); CROSS JOIN takes no condition.
+    # Joins (the reference has none — select.go:49-54 takes one table):
+    # ``[INNER|LEFT|RIGHT|FULL [OUTER]|LEFT SEMI|LEFT ANTI|CROSS] JOIN r
+    # [ON <predicate> | USING (col, ...)]``, where r is any relation
+    # (_relation). ON reuses the full WHERE expression language, with
+    # qualified ``name.column`` references resolving against the
+    # DataFrame aliases the executor assigns; USING is equi-join sugar
+    # (one output column per USING name); CROSS JOIN takes no condition.
+    # ``FROM a, b`` is a cross product whose WHERE equalities Catalyst
+    # folds back into hash-join conditions. ``ASOF [LEFT] JOIN r ON l.k =
+    # r.k [AND ...] AND l.ts >= r.ts`` takes key equalities plus one
+    # >=/<= time order (>= from the left side = backward lookup); the
+    # executor compiles it to operators/joins.asof_join, never a theta
+    # join. ``[CROSS | INNER | LEFT] JOIN LATERAL (SELECT ...) AS x [ON
+    # TRUE]`` (also ``FROM a, LATERAL (...)``) joins a body whose
+    # qualified names outside its own FROM reference the columns joined
+    # so far (``Column.outer()``), through DataFrame.lateralJoin.
     _JOIN_KWS = ("join", "inner", "left", "right", "full", "cross", "asof")
     while cur.peek_kw() in _JOIN_KWS or cur.peek() == ",":
         if cur.peek() == ",":
-            # Round-12: ANSI-89 comma join — ``FROM a, b [, ...]`` is a
-            # cross product whose WHERE equalities Catalyst folds back
-            # into a hash join condition (never an executed cartesian
-            # when the predicate links the sides). ``FROM a, LATERAL
-            # (SELECT ...)`` is the DuckDB comma spelling of CROSS JOIN
-            # LATERAL.
             cur.next()
-            if cur.peek_kw() == "lateral":
-                cur.toks[cur.i:cur.i] = ["cross", "join"]
-                continue
-            jtable, jalias = _join_side(cur, weak_typing, resolver)
-            spec.joins.append(("cross", jtable, jalias, None))
-            continue
-        if cur.peek_kw() == "asof":
-            # Round-8: ``ASOF [LEFT] JOIN t [AS x] ON l.k = r.k AND
-            # l.ts >= r.ts`` (DuckDB's surface) — exactly one equality
-            # conjunct (the key) and one >=/<= conjunct (the time order;
-            # >= from the left side = backward lookup, <= = forward).
-            # Compiled by the executor to operators/joins.asof_join (the
-            # union-tag single-shuffle plan), never a theta join. Plain
-            # ASOF is INNER (unmatched left rows drop); ASOF LEFT keeps
-            # them with NULL payload.
-            cur.next()
-            how = "asof"
-            if cur.peek_kw() == "left":
+            how = "cross"
+        else:
+            how = "inner" if cur.peek_kw() == "join" else cur.next().lower()
+            if (how, cur.peek_kw()) in (
+                ("left", "semi"), ("left", "anti"), ("asof", "left"),
+            ):
+                how = f"{how}_{cur.next().lower()}"
+            elif cur.peek_kw() == "outer":
                 cur.next()
-                how = "asof_left"
             cur.expect_kw("join")
-            jtable, jalias = _join_side(cur, weak_typing, resolver)
+        lateral = cur.peek_kw() == "lateral"
+        if lateral:
+            if how not in ("cross", "inner", "left"):
+                raise ParseError(
+                    "LATERAL supports CROSS / INNER / LEFT JOIN only"
+                )
+            cur.next()
+        rel = _relation(cur, weak_typing, resolver, lateral=lateral)
+        cond: Any = None
+        if lateral:
+            if how == "left" or cur.peek_kw() == "on":
+                cur.expect_kw("on")
+                if cur.next().lower() != "true":
+                    raise ParseError(
+                        "JOIN LATERAL takes ON TRUE (the correlation "
+                        "lives in the body's WHERE)"
+                    )
+            how = "lateral_left" if how == "left" else "lateral_inner"
+        elif how in ("asof", "asof_left"):
             cur.expect_kw("on")
-            conjs: list[tuple[str, str, str]] = []
+            cond = []
             while True:
                 lt = _unquote(cur.next())
                 op = cur.next()
@@ -5466,90 +5422,14 @@ def parse_select(
                         "ASOF JOIN ON takes =, >= or <= conjuncts, "
                         f"got {op!r}"
                     )
-                rt = _unquote(cur.next())
-                conjs.append((lt, op, rt))
-                if cur.peek_kw() == "and":
-                    cur.next()
-                    continue
-                break
-            spec.joins.append((how, jtable, jalias, conjs))
-            continue
-        how = "inner"
-        if cur.peek_kw() != "join":
-            how = cur.next().lower()
-            if how == "left" and cur.peek_kw() in ("semi", "anti"):
-                # Round-6: LEFT SEMI / LEFT ANTI JOIN — the explicit forms
-                # of the EXISTS / NOT EXISTS rewrites.
-                how = f"left_{cur.next().lower()}"
-            elif cur.peek_kw() == "outer":
+                cond.append((lt, op, _unquote(cur.next())))
+                if cur.peek_kw() != "and":
+                    break
                 cur.next()
-        cur.expect_kw("join")
-        if cur.peek_kw() == "lateral":
-            # LATERAL join: the body is a subquery whose qualified names
-            # outside its own FROM reference the columns joined so far
-            # (``Column.outer()``); the executor joins it with
-            # DataFrame.lateralJoin and Catalyst decorrelates it.
-            # CROSS/INNER take no ON; LEFT requires the canonical
-            # ``ON TRUE``.
-            if how not in ("cross", "inner", "left"):
-                raise ParseError(
-                    "LATERAL supports CROSS / INNER / LEFT JOIN only"
-                )
-            cur.next()
-            if cur.next() != "(":
-                raise ParseError("expected '(' after LATERAL")
-            bspec, _, bclauses = parse_select(
-                cur, weak_typing, resolver, subquery="lateral"
-            )
-            if cur.next() != ")":
-                raise ParseError("expected ')' to close the LATERAL body")
-            if cur.peek_kw() == "as":
-                cur.next()
-            nxt = cur.peek()
-            if nxt is None or nxt in (",", ")", "(") or (
-                cur.peek_kw() or ""
-            ) in ("on", "where", "group", "order", "limit"):
-                raise ParseError(
-                    "a LATERAL join needs an alias: LATERAL (SELECT ...) AS x"
-                )
-            lalias = _unquote(cur.next())
-            lcols = _alias_column_list(cur)
-            if how == "left":
-                cur.expect_kw("on")
-                if cur.next().lower() != "true":
-                    raise ParseError(
-                        "LEFT JOIN LATERAL takes ON TRUE (the correlation "
-                        "lives in the body's WHERE)"
-                    )
-            elif cur.peek_kw() == "on":
-                cur.next()
-                if cur.next().lower() != "true":
-                    raise ParseError(
-                        "JOIN LATERAL takes ON TRUE (the correlation "
-                        "lives in the body's WHERE)"
-                    )
-            width = _output_width(bspec, bclauses)
-            if lcols is not None and width not in (None, len(lcols)):
-                raise ParseError(
-                    f"alias lists {len(lcols)} columns but the LATERAL "
-                    f"body has {width}"
-                )
-            spec.joins.append(
-                (
-                    "lateral_left" if how == "left" else "lateral_inner",
-                    ("__lateral__", bspec, bclauses, lcols),
-                    lalias,
-                    None,
-                )
-            )
-            continue
-        jtable, jalias = _join_side(cur, weak_typing, resolver)
-        if how == "cross":
+        elif how == "cross":
             if cur.peek_kw() in ("on", "using"):
                 raise ParseError("CROSS JOIN takes no ON/USING condition")
-            spec.joins.append(("cross", jtable, jalias, None))
-            continue
-        if cur.peek_kw() == "using":
+        elif cur.peek_kw() == "using":
             cur.next()
             if cur.next() != "(":
                 raise ParseError("expected '(' after USING")
@@ -5558,33 +5438,26 @@ def parse_select(
                 t = cur.next()
                 if t == ")":
                     break
-                if t == ",":
-                    continue
-                ucols.append(_unquote(t))
+                if t != ",":
+                    ucols.append(_unquote(t))
             if not ucols:
                 raise ParseError("USING needs at least one column")
-            spec.joins.append((how, jtable, jalias, tuple(ucols)))
-            continue
-        cur.expect_kw("on")
-        onp = ExprParser(cur, weak_typing, resolver)
-        cond = onp.parse()
-        if _predicate_subqueries(onp):
-            raise ParseError(
-                "only uncorrelated scalar subqueries are supported in "
-                "JOIN ... ON"
-            )
-        spec.joins.append((how, jtable, jalias, cond))
+            cond = tuple(ucols)
+        else:
+            cur.expect_kw("on")
+            onp = ExprParser(cur, weak_typing, resolver)
+            cond = onp.parse()
+            if _predicate_subqueries(onp):
+                raise ParseError(
+                    "only uncorrelated scalar subqueries are supported in "
+                    "JOIN ... ON"
+                )
+        spec.joins.append((how, rel, cond))
 
     scope = None
     if subquery:
         scope = frozenset(
-            n.lower()
-            for n in (
-                spec.table,
-                spec.alias,
-                *[ja or jt for _, jt, ja, _ in spec.joins],
-            )
-            if isinstance(n, str)
+            r.name.lower() for r in (spec.relation, *[j[1] for j in spec.joins])
         )
     clauses: dict[str, Any] = {}
     conjuncts: list[tuple[list[str], Column, bool]] = []
@@ -6714,6 +6587,56 @@ def _expand_macros(toks: list[str], reg: dict) -> list[str]:
     )
 
 
+def parse_query(
+    cur: _Cursor, weak_typing: bool = False, resolver=None,
+) -> tuple[list[tuple[SelectSpec, dict]], list[tuple[str, bool, bool]], dict]:
+    """Parse one SELECT or set-operation chain: ``SELECT ... UNION [ALL]
+    [BY NAME] | INTERSECT [ALL] | EXCEPT [ALL] SELECT ... [ORDER BY ...
+    LIMIT n]``. Returns the arms as ``(spec, clauses)``, the operators as
+    ``(op, keep_dups, by_name)``, and the trailing ORDER BY/LIMIT/OFFSET,
+    which sort and limit the COMBINED result. Standard semantics: arms
+    combine positionally left to right (result columns named by the first
+    arm) and UNION/INTERSECT/EXCEPT deduplicate unless ALL; UNION BY NAME
+    (DuckDB; Spark's unionByName) matches columns by name and null-fills
+    missing ones. Non-final arms cannot carry ORDER BY/LIMIT."""
+    spec, _, clauses = parse_select(cur, weak_typing, resolver)
+    arms = [(spec, clauses)]
+    ops: list[tuple[str, bool, bool]] = []
+    while cur.peek_kw() in ("union", "intersect", "except"):
+        op = cur.next().lower()
+        keep_dups = False
+        if cur.peek_kw() == "all":
+            cur.next()
+            keep_dups = True
+        by_name = False
+        if cur.peek_kw() == "by":
+            cur.next()
+            cur.expect_kw("name")
+            if op != "union":
+                raise ParseError(f"BY NAME applies to UNION, not {op.upper()}")
+            by_name = True
+        spec, _, clauses = parse_select(cur, weak_typing, resolver)
+        arms.append((spec, clauses))
+        ops.append((op, keep_dups, by_name))
+    if not ops:
+        return arms, ops, {}
+    # the trailing sort/limit clauses were parsed into the final arm
+    trailing = {
+        k: arms[-1][1].pop(k)
+        for k in ("order_by", "limit", "offset")
+        if k in arms[-1][1]
+    }
+    for _, c in arms[:-1]:
+        bad = [k for k in ("order_by", "limit", "offset") if k in c]
+        if bad:
+            raise ParseError(
+                f"{'/'.join(bad).upper()} on a non-final set-operation "
+                "arm is not supported (write it after the last SELECT "
+                "to order/limit the combined result)"
+            )
+    return arms, ops, trailing
+
+
 class RefSQL:
     """Executor binding the dialect to an Engine (DDL/DML) or any table
     resolver (SELECT)."""
@@ -6725,36 +6648,6 @@ class RefSQL:
         # name → DataFrame, consulted before the engine catalog. Reset per
         # execute().
         self._ctes: dict[str, DataFrame] = {}
-
-    def _join_side_df(self, jtable) -> DataFrame:
-        """A join side: a table name, the round-10 inline-VALUES marker
-        ("__values__", values_sql, cols), or the round-12 derived-table
-        marker ("__subselect__", spec, clauses, cols)."""
-        if isinstance(jtable, tuple) and jtable[0] == "__values__":
-            _, vsql, cols = jtable
-            df = self.engine.spark.sql(vsql)
-            names = cols or [f"col{i}" for i in range(len(df.columns))]
-            if len(names) != len(df.columns):
-                raise ParseError(
-                    f"alias lists {len(names)} columns but VALUES rows "
-                    f"have {len(df.columns)}"
-                )
-            return df.toDF(*names)
-        if isinstance(jtable, tuple) and jtable[0] == "__file__":
-            _, path, fmt = jtable
-            return _read_file_df(self.engine.spark, path, fmt)
-        if isinstance(jtable, tuple) and jtable[0] == "__subselect__":
-            _, sub_spec, sub_clauses, cols = jtable
-            df = self._build(sub_spec, sub_clauses)
-            if cols is not None:
-                if len(cols) != len(df.columns):
-                    raise ParseError(
-                        f"alias lists {len(cols)} columns but the derived "
-                        f"join side has {len(df.columns)}"
-                    )
-                df = df.toDF(*cols)
-            return df
-        return self._table_df(jtable)
 
     def _table_df(self, name: str) -> DataFrame:
         if name in self._ctes:
@@ -6785,144 +6678,109 @@ class RefSQL:
             return sub.execute(views.get(name))
         return self.engine.table(name)
 
-    def _from_df(self, spec: "SelectSpec") -> DataFrame:
-        """Resolve the FROM clause: base table (optionally time-travelled),
-        then any JOINs. With joins present, every table gets a DataFrame
-        alias (its AS name or its table name) so qualified ``x.col``
-        references in ON/WHERE/projections resolve; Catalyst picks
-        broadcast vs shuffle join per side as usual."""
-        if spec.version is not None and spec.table in self._ctes:
-            raise ParseError("VERSION AS OF applies to tables, not CTEs")
-        if spec.file_path is not None:
-            # Direct file query (round-13): spark.read straight off the
-            # path — native distributed scans with the full pushdown/
-            # pruning surface (the plan pin asserts PushedFilters reach
-            # the parquet scan). CSV/JSON infer schema here (ad-hoc
-            # exploration); ingest for a declared schema.
-            if spec.version is not None:
-                raise ParseError(
-                    "VERSION AS OF applies to tables, not file paths"
-                )
-            fpath, fmt = spec.file_path
-            df = _read_file_df(self.engine.spark, fpath, fmt)
-            # bind the relation name (basename or AS alias) so qualified
-            # references resolve, as they would for a catalog table
-            df = df.alias(spec.table)
-        elif spec.values_sql is not None:
-            # Inline VALUES table (round-10): Catalyst compiles the rows
-            # to a LocalRelation; rename to the alias column list, else
-            # to col0, col1, ... (the DuckDB naming).
-            df = self.engine.spark.sql(spec.values_sql)
-            names = spec.derived_cols or [
-                f"col{i}" for i in range(len(df.columns))
-            ]
-            if len(names) != len(df.columns):
-                raise ParseError(
-                    f"alias lists {len(names)} columns but VALUES rows "
-                    f"have {len(df.columns)}"
-                )
-            df = df.toDF(*names)
-        elif spec.table_fn is not None:
-            # Integer-series table function (round-12): spark.range is a
-            # splittable codegen'd leaf — at scale the series partitions
-            # across executors like any other relation, nothing scanned.
-            if spec.version is not None:
-                raise ParseError(
-                    "VERSION AS OF applies to tables, not table functions"
-                )
-            fn, args = spec.table_fn
-            names = spec.derived_cols or [fn]
-            if len(names) != 1:
-                raise ParseError(
-                    f"{fn}() produces exactly 1 column, alias lists "
-                    f"{len(names)}"
-                )
-            if args and isinstance(args[0], str):
-                # Temporal series. Round-13: FIXED-LENGTH interval steps
-                # (second/minute/hour/day — no calendar arithmetic, and
-                # the session is pinned UTC so a day is exactly 86400s)
-                # compile to a SPLITTABLE spark.range over epoch micros,
-                # the same scale posture as the integer series — the r12
-                # verdict flagged the single-row sequence()+explode as a
-                # month-granularity ceiling. Month/year steps (true
-                # calendar arithmetic) and wrong-direction bounds keep
-                # the sequence() path: a calendar spine is
-                # dimension-sized by nature, and Spark's sequence raises
-                # on wrong-direction bounds like DuckDB's binder.
-                lo, hi, step = args
-                df = None
-                m = re.fullmatch(
-                    r"INTERVAL\s+'(\d+)\s*(second|minute|hour|day)s?'",
-                    step,
-                    re.IGNORECASE,
-                )
-                if m:
-                    unit_us = {
-                        "second": 1_000_000,
-                        "minute": 60_000_000,
-                        "hour": 3_600_000_000,
-                        "day": 86_400_000_000,
-                    }[m.group(2).lower()]
-                    step_us = int(m.group(1)) * unit_us
-                    # One plan-time LocalRelation probe folds the bound
-                    # literals to micros (metadata-sized, never a scan).
-                    row = self.engine.spark.sql(
-                        f"SELECT unix_micros(CAST({lo} AS TIMESTAMP)) AS a,"
-                        f" unix_micros(CAST({hi} AS TIMESTAMP)) AS b"
-                    ).first()
-                    lo_us, hi_us = row["a"], row["b"]
-                    if step_us > 0 and hi_us >= lo_us:
-                        n = (hi_us - lo_us) // step_us + 1  # inclusive
-                        if fn == "range" and (hi_us - lo_us) % step_us == 0:
-                            n -= 1  # DuckDB range: end-EXCLUSIVE
-                        df = self.engine.spark.range(0, n).select(
-                            F.timestamp_micros(
-                                F.lit(lo_us) + F.col("id") * F.lit(step_us)
-                            ).alias(names[0])
-                        )
-                if df is None:
-                    seq = (
-                        f"sequence(CAST({lo} AS TIMESTAMP), "
-                        f"CAST({hi} AS TIMESTAMP), {step})"
-                    )
-                    df = self.engine.spark.range(1).select(
-                        F.explode(F.expr(seq)).alias(names[0])
-                    )
-                    if fn == "range":
-                        df = df.filter(
-                            F.col(names[0])
-                            != F.expr(f"CAST({hi} AS TIMESTAMP)")
-                        )
-            else:
-                if len(args) == 1:
-                    start, stop, step = 0, args[0], 1
-                elif len(args) == 2:
-                    start, stop, step = args[0], args[1], 1
-                else:
-                    start, stop, step = args
-                if fn == "generate_series":
-                    stop += 1 if step > 0 else -1  # DuckDB: end-inclusive
-                df = self.engine.spark.range(start, stop, step).toDF(*names)
-        elif spec.derived is not None:
-            if spec.version is not None:
-                raise ParseError(
-                    "VERSION AS OF applies to tables, not derived tables"
-                )
-            dspec, dclauses = spec.derived
-            df = self._build(dspec, dclauses)
-            if spec.derived_cols is not None:
-                if len(spec.derived_cols) != len(df.columns):
-                    raise ParseError(
-                        f"alias lists {len(spec.derived_cols)} columns but "
-                        f"the derived table has {len(df.columns)}"
-                    )
-                df = df.toDF(*spec.derived_cols)
-        else:
+    def _relation_df(self, rel: Relation) -> DataFrame:
+        """Build a parsed relation (see ``Relation``); the caller aliases
+        it by its name where qualified references need one."""
+        kind, src = rel.kind, rel.source
+        if rel.version is not None and (kind != "table" or src in self._ctes):
+            what = {
+                "table": "CTEs", "select": "derived tables",
+                "values": "VALUES lists", "series": "table functions",
+                "file": "file paths", "lateral": "LATERAL bodies",
+            }[kind]
+            raise ParseError(f"VERSION AS OF applies to tables, not {what}")
+        cols = rel.columns
+        if kind == "table":
             df = (
-                self.engine.table_at(spec.table, spec.version)
-                if spec.version is not None
-                else self._table_df(spec.table)
+                self.engine.table_at(src, rel.version)
+                if rel.version is not None
+                else self._table_df(src)
             )
+        elif kind == "file":
+            # the native scan: full pushdown/pruning; CSV/JSON infer their
+            # schema (ingest for a declared one)
+            df = _read_file_df(self.engine.spark, *src)
+        elif kind == "values":
+            df = self.engine.spark.sql(src)
+            if cols is None:  # DuckDB names VALUES columns col0, col1, ...
+                cols = [f"col{i}" for i in range(len(df.columns))]
+        elif kind == "series":
+            df = self._series_df(*src, cols[0] if cols else src[0])
+        elif kind == "lateral":
+            df = self._build(*src)
+            return df.toDF(*cols) if cols else df
+        else:
+            df = self._query_df(*src)
+        if cols is not None and df.columns != cols:
+            if len(cols) != len(df.columns):
+                raise ParseError(
+                    f"alias lists {len(cols)} columns but {rel.name!r} has "
+                    f"{len(df.columns)}"
+                )
+            df = df.toDF(*cols)
+        return df
+
+    def _series_df(self, fn: str, args: list, name: str) -> DataFrame:
+        """``range`` (end-exclusive) or ``generate_series`` (end-inclusive)
+        as one column ``name``: ``spark.range``, a splittable codegen'd
+        leaf that partitions across executors like any relation."""
+        spark = self.engine.spark
+        if not isinstance(args[0], str):
+            start, stop, step = {1: [0, *args, 1], 2: [*args, 1], 3: args}[
+                len(args)
+            ]
+            if fn == "generate_series":
+                stop += 1 if step > 0 else -1
+            return spark.range(start, stop, step).toDF(name)
+        # Temporal series. Fixed-length steps (second/minute/hour/day; the
+        # session is pinned to UTC, so a day is exactly 86400 s) compile to
+        # the same splittable spark.range over epoch micros. Month/year
+        # steps (calendar arithmetic) and wrong-direction bounds take one
+        # sequence() + explode: a calendar spine is dimension-sized, and
+        # Spark's sequence raises on wrong-direction bounds like DuckDB's
+        # binder.
+        lo, hi, step = args
+        m = re.fullmatch(
+            r"INTERVAL\s+'(\d+)\s*(second|minute|hour|day)s?'",
+            step,
+            re.IGNORECASE,
+        )
+        if m:
+            unit_us = {
+                "second": 1_000_000,
+                "minute": 60_000_000,
+                "hour": 3_600_000_000,
+                "day": 86_400_000_000,
+            }[m.group(2).lower()]
+            step_us = int(m.group(1)) * unit_us
+            # One plan-time LocalRelation probe folds the bound literals to
+            # micros (metadata-sized, never a scan).
+            row = spark.sql(
+                f"SELECT unix_micros(CAST({lo} AS TIMESTAMP)) AS a,"
+                f" unix_micros(CAST({hi} AS TIMESTAMP)) AS b"
+            ).first()
+            lo_us, hi_us = row["a"], row["b"]
+            if step_us > 0 and hi_us >= lo_us:
+                n = (hi_us - lo_us) // step_us + 1  # inclusive
+                if fn == "range" and (hi_us - lo_us) % step_us == 0:
+                    n -= 1  # DuckDB range: end-EXCLUSIVE
+                return spark.range(0, n).select(
+                    F.timestamp_micros(
+                        F.lit(lo_us) + F.col("id") * F.lit(step_us)
+                    ).alias(name)
+                )
+        seq = f"sequence(CAST({lo} AS TIMESTAMP), CAST({hi} AS TIMESTAMP), {step})"
+        df = spark.range(1).select(F.explode(F.expr(seq)).alias(name))
+        if fn == "range":
+            df = df.filter(F.col(name) != F.expr(f"CAST({hi} AS TIMESTAMP)"))
+        return df
+
+    def _from_df(self, spec: "SelectSpec") -> DataFrame:
+        """The FROM clause: the first relation with its SAMPLE, PIVOT and
+        UNPIVOT clauses, then each join in order; Catalyst picks broadcast
+        vs shuffle per side as usual."""
+        rel = spec.relation
+        df = self._relation_df(rel)
         if spec.sample is not None:
             pct, scol = spec.sample
             keep = (256 * pct) // 100
@@ -6965,7 +6823,7 @@ class RefSQL:
             }
             gcols = [c for c in df.columns if c not in consumed]
             if entries is None:
-                # Round-14: inferred pivot values — ONE bounded distinct
+                # Inferred pivot values — ONE bounded distinct
                 # pass (the same two-pass plan Spark's DataFrame
                 # ``.pivot(col)`` runs without a value list). The collect
                 # is capped at 1001 rows by construction, so it stays in
@@ -7007,39 +6865,27 @@ class RefSQL:
             df = df.unpivot(ids, ucols, name_col, val_col)
             if not keep_nulls:
                 df = df.filter(F.col(val_col).isNotNull())
-        if spec.joins:
-            df = df.alias(spec.alias or spec.table)
-            for how, jtable, jalias, cond in spec.joins:
-                if how in ("lateral_inner", "lateral_left"):
-                    _, bspec, bclauses, lcols = jtable
-                    body = self._build(bspec, bclauses)
-                    if lcols is not None:
-                        body = body.toDF(*lcols)
-                    df = df.lateralJoin(
-                        body.alias(jalias),
-                        how="left" if how == "lateral_left" else "inner",
-                    )
-                    continue
-                if how in ("asof", "asof_left"):
-                    df = self._asof(
-                        df, spec.alias or spec.table,
-                        self._join_side_df(jtable), jalias or jtable,
-                        cond, inner=(how == "asof"),
-                    )
-                    continue
-                jdf = self._join_side_df(jtable).alias(jalias or jtable)
-                if how == "cross":
-                    df = df.crossJoin(jdf)
-                elif isinstance(cond, tuple):
-                    # USING (cols): Spark's join-on-names — one output
-                    # column per USING name, standard semantics.
-                    df = df.join(jdf, list(cond), how)
-                else:
-                    df = df.join(jdf, cond, how)
-        elif spec.alias or spec.scoped:
+        if spec.joins or spec.scoped or rel.name != rel.source:
             # qualified references (``x.col``, and a subquery's outer
-            # references) resolve against the relation's name
-            df = df.alias(spec.alias or spec.table)
+            # references) resolve against the relation's name; a bare
+            # table read by a plain SELECT stays unaliased
+            df = df.alias(rel.name)
+        for how, jrel, cond in spec.joins:
+            jdf = self._relation_df(jrel).alias(jrel.name)
+            if how in ("lateral_inner", "lateral_left"):
+                df = df.lateralJoin(jdf, how=how[len("lateral_"):])
+            elif how in ("asof", "asof_left"):
+                df = self._asof(
+                    df, rel.name, jdf, jrel.name, cond, inner=how == "asof"
+                )
+            elif how == "cross":
+                df = df.crossJoin(jdf)
+            elif isinstance(cond, tuple):
+                # USING (cols): Spark's join-on-names — one output column
+                # per USING name, standard semantics.
+                df = df.join(jdf, list(cond), how)
+            else:
+                df = df.join(jdf, cond, how)
         return df
 
     def _asof(
@@ -7127,8 +6973,6 @@ class RefSQL:
         """One parsed SELECT arm as a DataFrame — also the parser's
         resolver, so a subquery's DataFrame becomes a subquery Column."""
         return build_select(self._from_df(spec), spec, clauses)
-
-    _SETOP_KWS = ("union", "intersect", "except")
 
     def _expand_columns_fn(self, toks: list[str]) -> list[str]:
         """Round-14: DuckDB's COLUMNS() star function — COLUMNS('regex')
@@ -7320,56 +7164,14 @@ class RefSQL:
         return out
 
     def _select_df(self, cur: _Cursor) -> DataFrame:
-        """Parse + build one full SELECT, including set-operation chains
-        (round-6 extension): ``SELECT ... UNION [ALL] SELECT ... [ORDER BY
-        ... LIMIT n]``. Standard semantics: arms combine positionally
-        left-to-right (result columns named by the first arm), UNION/
-        INTERSECT/EXCEPT deduplicate unless ALL, and a trailing ORDER BY/
-        LIMIT/OFFSET (written after the final arm) sorts/limits the
-        COMBINED result. Non-final arms cannot carry ORDER BY/LIMIT."""
-        spec, _, clauses = parse_select(cur, self.weak, resolver=self._build)
-        arms: list[tuple[SelectSpec, dict]] = [(spec, clauses)]
-        ops: list[tuple[str, bool, bool]] = []
-        while cur.peek_kw() in self._SETOP_KWS:
-            op = cur.next().lower()
-            keep_dups = False
-            if cur.peek_kw() == "all":
-                cur.next()
-                keep_dups = True
-            by_name = False
-            if cur.peek_kw() == "by":
-                # Round-9: UNION [ALL] BY NAME — arms combine by COLUMN
-                # NAME instead of position (the DuckDB ergonomic; Spark's
-                # unionByName). Missing columns null-fill on both sides.
-                cur.next()
-                cur.expect_kw("name")
-                if op != "union":
-                    raise ParseError(
-                        f"BY NAME applies to UNION, not {op.upper()}"
-                    )
-                by_name = True
-            spec2, _, clauses2 = parse_select(
-                cur, self.weak, resolver=self._build
-            )
-            arms.append((spec2, clauses2))
-            ops.append((op, keep_dups, by_name))
+        """Parse + build one full SELECT or set-operation chain."""
+        return self._query_df(*parse_query(cur, self.weak, self._build))
+
+    def _query_df(self, arms: list, ops: list, trailing: dict) -> DataFrame:
+        """Build ``parse_query``'s result: the arms combine left to right,
+        then the trailing ORDER BY/LIMIT/OFFSET apply to the result."""
         if not ops:
-            return self._build(spec, clauses)
-        # Compound: the trailing sort/limit clauses belong to the whole
-        # result — they were parsed into the final arm; lift them out.
-        trailing = {
-            k: arms[-1][1].pop(k)
-            for k in ("order_by", "limit", "offset")
-            if k in arms[-1][1]
-        }
-        for s, c in arms[:-1]:
-            bad = [k for k in ("order_by", "limit", "offset") if k in c]
-            if bad:
-                raise ParseError(
-                    f"{'/'.join(bad).upper()} on a non-final set-operation "
-                    "arm is not supported (write it after the last SELECT "
-                    "to order/limit the combined result)"
-                )
+            return self._build(*arms[0])
         frames = [self._build(s, c) for s, c in arms]
         acc = frames[0]
         for (op, keep_dups, by_name), nxt in zip(ops, frames[1:]):
@@ -7389,8 +7191,8 @@ class RefSQL:
                 if not keep_dups:
                     acc = acc.dropDuplicates()
             elif op == "intersect":
-                # Round-9: INTERSECT ALL — multiset semantics (min
-                # multiplicity per row), Spark's intersectAll ≡ ANSI.
+                # INTERSECT ALL: multiset semantics (min multiplicity per
+                # row), Spark's intersectAll ≡ ANSI.
                 acc = acc.intersectAll(nxt) if keep_dups else acc.intersect(nxt)
             else:  # except
                 acc = acc.exceptAll(nxt) if keep_dups else acc.subtract(nxt)
@@ -8913,8 +8715,8 @@ class RefSQL:
         entries: "list[tuple[str, str, Any]]",
         ret_items: "list[str] | None" = None,
     ) -> int | DataFrame:
-        """``UPDATE t SET c = s.v [, ...] FROM s [AS a] WHERE t.k = a.k
-        [AND ...]`` — the correlated per-row SET from a second table
+        """``UPDATE t SET c = a.v [, ...] FROM <relation> WHERE t.k = a.k
+        [AND ...]`` — the correlated per-row SET from any relation
         (DuckDB/Postgres join update): the relabeling shape of curation
         pipelines.
 
@@ -8935,21 +8737,8 @@ class RefSQL:
         equality conjunct; other conjuncts may reference either side; no
         subqueries in the FROM form's WHERE or SET."""
         cur.expect_kw("from")
-        if cur.peek() == "(":
-            cur.next()
-            src = self._select_df(cur)
-            if cur.next() != ")":
-                raise ParseError("expected ')' to close the UPDATE source")
-            if cur.peek_kw() == "as":
-                cur.next()
-            src_alias = _unquote(cur.next())
-        else:
-            src_name = _unquote(cur.next())
-            src = self._table_df(src_name)
-            src_alias = src_name
-            if cur.peek_kw() == "as":
-                cur.next()
-                src_alias = _unquote(cur.next())
+        rel = _relation(cur, self.weak, self._build)
+        src, src_alias = self._relation_df(rel), rel.name
         if src_alias == table:
             raise ParseError(
                 "UPDATE ... FROM source alias collides with the target "
@@ -9138,14 +8927,13 @@ class RefSQL:
             )
 
     def _merge(self, cur: _Cursor) -> int:
-        """``MERGE INTO t USING s [AS a] ON t.k = a.k [AND ...] [WHEN
+        """``MERGE INTO t USING <relation> ON t.k = a.k [AND ...] [WHEN
         MATCHED [AND <pred>] THEN UPDATE SET * | WHEN MATCHED [AND <pred>]
         THEN DELETE] [WHEN NOT MATCHED [BY TARGET] THEN INSERT *] [WHEN NOT
         MATCHED BY SOURCE [AND <pred>] THEN DELETE]`` — the full
         Delta-style CDC triad over copy-on-write storage.
 
-        The source is a catalog table or a parenthesized SELECT; ON must be
-        a conjunction of qualified equi-conditions (one side target, one
+        The source is any relation (_relation); ON must be a conjunction of qualified equi-conditions (one side target, one
         side source). ``UPDATE SET *`` replaces every key-matching target
         row with its source row (SCD1 — the source must expose all target
         columns); the optional ``AND <pred>`` filters which SOURCE rows
@@ -9171,21 +8959,8 @@ class RefSQL:
             cur.next()
             tgt_alias = _unquote(cur.next())
         cur.expect_kw("using")
-        if cur.peek() == "(":
-            cur.next()
-            src = self._select_df(cur)
-            if cur.next() != ")":
-                raise ParseError("expected ')' to close the MERGE source")
-            if cur.peek_kw() == "as":
-                cur.next()
-            src_alias = _unquote(cur.next())
-        else:
-            src_name = _unquote(cur.next())
-            src = self._table_df(src_name)
-            src_alias = src_name
-            if cur.peek_kw() == "as":
-                cur.next()
-                src_alias = _unquote(cur.next())
+        rel = _relation(cur, self.weak, self._build)
+        src, src_alias = self._relation_df(rel), rel.name
         cur.expect_kw("on")
 
         def _qualified(tok: str) -> tuple[str, str]:
@@ -9256,7 +9031,7 @@ class RefSQL:
                 cur.expect_kw("matched")
                 by_source = False
                 if cur.peek_kw() == "by":
-                    # Round-8: the full CDC triad — ``WHEN NOT MATCHED BY
+                    # The full CDC triad — ``WHEN NOT MATCHED BY
                     # SOURCE [AND <pred>] THEN DELETE`` removes target rows
                     # with no source match (the pred filters which — over
                     # unqualified TARGET columns); ``BY TARGET`` is the

@@ -69,16 +69,6 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARKDB_DRIVER_MEM") or _default_driver_memory(),
         )
-        # Parquet write codec (round-16, guide §6): A/B'd on the engine
-        # store's DML path (plans/r16 zstd A/B) — zstd writes 35% fewer
-        # bytes (2.82 vs 4.36 MB) but costs ~16% wall time at local-disk
-        # fixture scale where CPU dominates; snappy stays the local
-        # default. On a cluster where writes cross a network or object
-        # store, the byte reduction wins — set SPARKDB_PARQUET_CODEC=zstd.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARKDB_PARQUET_CODEC", "snappy"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -126,6 +126,30 @@ def test_mv_rejects_unsupported_shapes(eng, bad):
         eng.mviews.create("nope", bad)
 
 
+def test_mv_rejects_anything_around_the_base_table(eng, tmp_path):
+    """A view maintains aggregates over the base table's files, so a
+    derived table, VALUES list, file, series, time travel, SAMPLE or
+    rotation around the table must be refused, not silently dropped."""
+    eng.ref_sql(f"COPY sales TO '{tmp_path / 's.parquet'}'")
+    for src in (
+        "(SELECT * FROM sales WHERE qty > 1) AS sales",
+        "sales SAMPLE 0 PERCENT BY region",
+        "sales USING SAMPLE 1 ROWS",
+        "sales VERSION AS OF 0",
+        "(VALUES ('east', 1.0, 1)) AS sales(region, amount, qty)",
+        f"'{tmp_path / 's.parquet'}' AS sales",
+        "range(3) AS sales(region)",
+        "sales JOIN sales AS o ON sales.region = o.region",
+        "sales UNPIVOT (amount FOR region IN (qty))",
+        "sales PIVOT (sum(qty) FOR region IN ('east'))",
+    ):
+        with pytest.raises(ParseError, match="plain base table"):
+            eng.mviews.create(
+                "nope", f"SELECT region, COUNT(*) FROM {src} GROUP BY region"
+            )
+    assert "nope" not in eng.mviews
+
+
 def test_mv_approx_count_distinct_incremental_equals_batch(spark, tmp_path):
     # The HLL-register state merged incrementally (elementwise MAX) must
     # equal the batch sketch over the final table — register merge is

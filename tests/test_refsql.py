@@ -3995,11 +3995,11 @@ def test_lateral_topk_and_plain(spark, tmp_path):
     assert [(r.ck, r.ok) for r in rows] == [(1, 100), (2, None), (3, 300)]
 
 
-def _two_engines(spark, path, *stmts):
+def _two_engines(spark, path, *stmts, **engine_kw):
     """An Engine and a DuckDB connection that both ran ``stmts``."""
     import duckdb
 
-    e = Engine(spark, path)
+    e = Engine(spark, path, **engine_kw)
     con = duckdb.connect()
     for sql in stmts:
         e.ref_sql(sql)
@@ -5472,6 +5472,80 @@ def test_from_file_path_vs_duckdb(spark, tmp_path, sf_dir):
     e.ref_sql(f"COPY njl FROM '{tmp_path / 'nat_jsonl'}' FORMAT jsonl")
     e.ref_sql(f"COPY njl FROM '{tmp_path / 'nat_jsonl'}' FORMAT jsonl")
     assert e.ref_sql("SELECT count(*) AS n FROM njl").collect()[0][0] == 50
+
+
+def test_relation_forms_in_every_position_vs_duckdb(spark, tmp_path):
+    """Every position that reads a relation (the first FROM item, JOIN and
+    comma-join sides, UPDATE ... FROM, MERGE ... USING) accepts every
+    relation form with its alias column list and VERSION AS OF, and
+    matches DuckDB. DuckDB 1.0 has no MERGE, so a MERGE is compared with
+    DuckDB's equivalent UPDATE ... FROM; VERSION AS OF 0 is compared with
+    the rows the table held at v0."""
+    f = tmp_path / "src.parquet"
+    e, con = _two_engines(
+        spark, str(tmp_path / "rels"),
+        "CREATE TABLE t (k INT, v INT)",
+        "INSERT INTO t VALUES (1, 10), (2, 20), (3, 30)",
+        "CREATE TABLE s (k INT, v INT)",
+        "INSERT INTO s VALUES (1, 100), (2, 200)",
+        keep_snapshots=1,
+    )
+    con.execute(f"COPY (SELECT k, v + 1 AS v FROM s) TO '{f}' (FORMAT PARQUET)")
+    con.execute("CREATE TABLE s_v0 AS SELECT * FROM s")
+    for sql in ("UPDATE s SET v = v + 5 WHERE k = 1",):
+        e.ref_sql(sql)
+        con.execute(sql)
+    for sql in (
+        "SELECT t.k, r.x FROM t JOIN range(3) AS r(x) ON t.k = r.x",
+        "SELECT t.k, g.x FROM t, generate_series(1, 2) AS g(x) "
+        "WHERE t.k = g.x",
+        "SELECT t.k, x.a, x.b FROM t JOIN s AS x(a, b) ON t.k = x.a",
+        f"SELECT t.k, p.v FROM t JOIN '{f}' AS p ON t.k = p.k",
+        f"SELECT src.k FROM '{f}', t WHERE src.k = t.k",
+        "SELECT t.k, d.c FROM t JOIN (VALUES (1, 'a'), (3, 'c')) AS d(k, c) "
+        "ON t.k = d.k",
+        "SELECT u.k FROM (SELECT k FROM t UNION SELECT k FROM s) AS u",
+    ):
+        _assert_matches_duckdb(e, con, sql)
+    mine = e.ref_sql(
+        "SELECT t.k, s.v FROM t JOIN s VERSION AS OF 0 ON t.k = s.k"
+    ).collect()
+    assert sorted(tuple(r) for r in mine) == sorted(con.execute(
+        "SELECT t.k, s.v FROM t JOIN s_v0 AS s ON t.k = s.k"
+    ).fetchall())
+    for mine, theirs in (
+        (
+            "MERGE INTO t USING (VALUES (1, 11), (4, 44)) AS s(k, v) "
+            "ON t.k = s.k WHEN MATCHED THEN UPDATE SET *",
+            "UPDATE t SET v = s.v FROM (VALUES (1, 11), (4, 44)) AS s(k, v) "
+            "WHERE t.k = s.k",
+        ),
+        (
+            f"MERGE INTO t USING '{f}' AS p ON t.k = p.k "
+            "WHEN MATCHED THEN UPDATE SET *",
+            f"UPDATE t SET v = p.v FROM '{f}' AS p WHERE t.k = p.k",
+        ),
+        (f"UPDATE t SET v = p.v * 2 FROM '{f}' AS p WHERE t.k = p.k",) * 2,
+        (
+            "UPDATE t SET v = d.v FROM (VALUES (3, 33), (5, 55)) AS d(k, v) "
+            "WHERE t.k = d.k",
+        ) * 2,
+    ):
+        e.ref_sql(mine)
+        con.execute(theirs)
+        _assert_matches_duckdb(e, con, "SELECT k, v FROM t")
+    for sql in (
+        "SELECT * FROM (VALUES (1))",
+        "SELECT * FROM t, (SELECT k FROM s)",
+        "SELECT * FROM t JOIN (SELECT k FROM s) ON t.k = k",
+        "SELECT * FROM t JOIN LATERAL (SELECT v FROM s WHERE s.k = t.k) "
+        "ON TRUE",
+        "UPDATE t SET v = 0 FROM (SELECT k FROM s) WHERE t.k = 1",
+        "MERGE INTO t USING (VALUES (1, 2)) ON t.k = k "
+        "WHEN MATCHED THEN DELETE",
+    ):
+        with pytest.raises(ParseError, match="needs an alias"):
+            e.ref_sql(sql)
 
 
 def test_alter_column_default_lifecycle(spark, tmp_path):
