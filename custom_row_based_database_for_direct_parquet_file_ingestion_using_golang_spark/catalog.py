@@ -16,6 +16,7 @@ Type mapping (SURVEY.md §1.3):
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import os
 from dataclasses import dataclass, field, replace
@@ -73,10 +74,14 @@ _SPARK_TYPE_BY_NAME = {rt.value: t for rt, t in _SPARK_TYPE.items()}
 # anything not in the 5-type system is recorded with its Spark DDL string so we
 # round-trip faithfully (a strict superset of the reference, which forces TEXT
 # on all imports — reference pkg/importer/importer.go:37-52).
+@functools.cache
 def spark_type_for(decl: str) -> T.DataType:
     # Exact (uppercase) match = reference type; otherwise native Spark DDL.
     # The distinction matters because Spark's own "int" (32-bit) must not
-    # collide with the reference's INT (64-bit, Go int).
+    # collide with the reference's INT (64-bit, Go int). Memoized: a DDL
+    # parse is a JVM round trip, and every schema build asks for each
+    # column; a failed parse raises and is not cached. Callers share the
+    # returned type and must not mutate it.
     if decl in _SPARK_TYPE_BY_NAME:
         return _SPARK_TYPE_BY_NAME[decl]
     try:

@@ -33,7 +33,10 @@ def is_value_expr(text: str) -> bool:
     """True when an argument/projection item is a computed EXPRESSION
     rather than a bare column reference — operators, spaces, parens, or
     literal syntax mean Catalyst's own parser (``F.expr``) should handle
-    it. A plain (possibly dot-qualified) identifier is a column."""
+    it. A plain (possibly dot-qualified) identifier is a column, and so is
+    a qualified star ``t.*`` (all of relation ``t``'s columns)."""
+    if text.endswith(".*") and text[:-2].isidentifier():
+        return False
     if any(ch in text for ch in "+-*/% ()'\""):
         return True
     # bare numeric literal (e.g. SELECT 42 AS x)

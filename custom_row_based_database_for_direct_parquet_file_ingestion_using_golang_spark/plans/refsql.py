@@ -4388,7 +4388,8 @@ class SelectSpec:
     # columns on the FROM frame and projected from there.
     hidden: list[tuple[str, Column]] = field(default_factory=list)
     # True when qualified references must resolve against the FROM
-    # relation's name — the SELECT has subqueries, or is one.
+    # relation's name — the SELECT has subqueries, is one, or names the
+    # relation in a qualified reference.
     scoped: bool = False
     # A subquery whose WHERE references columns of an enclosing query.
     correlated: bool = False
@@ -5180,6 +5181,11 @@ def parse_select(
                 spec.projections.append((name, alias))
     cur.expect_kw("from")
     spec.relation = _relation(cur, weak_typing, resolver)
+    # ``SELECT t.v FROM t``: a qualified reference to the relation's name
+    # anywhere in the statement needs the name on the frame
+    qual = spec.relation.name.lower() + "."
+    if spec.relation.name and any(t.lower().startswith(qual) for t in cur.toks):
+        spec.scoped = True
     if cur.peek_kw() == "sample":
         # ``SAMPLE n PERCENT BY col`` — a narrow md5-bucket
         # filter evaluated in the scan stage (keep = floor(256·n/100)

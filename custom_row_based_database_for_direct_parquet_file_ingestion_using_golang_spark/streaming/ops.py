@@ -573,7 +573,7 @@ def stream_append_exactly_once(
        them inside their hive ``col=value/`` directories), staged first in
        a hidden ``_stage-*`` directory inside the table directory (which
        the next engine open deletes if a kill left it) and renamed in
-       (rename is atomic per file);
+       (rename is atomic per file) by ``ParquetTableStore.append_prefixed``;
     2. a replay first REMOVES any partial ``epoch-<app8>-<id>-*`` files
        from a crashed attempt — anywhere in the partition tree — then
        moves the fresh complete set, so a crash at ANY point (mid-stage,
@@ -613,7 +613,6 @@ def stream_append_exactly_once(
 
     store = engine.store
     meta = engine.catalog.get(table)
-    parts = list(meta.partition_by or [])
     if app_id is None:
         app_id = uuid.uuid4().hex
     # short fs-safe producer tag for file prefixes; the ledger keeps the
@@ -640,37 +639,7 @@ def stream_append_exactly_once(
         aligned = batch_df.select(
             *[F.col(c.name).cast(c.spark_type) for c in meta.columns]
         )
-        stage = os.path.join(
-            store.root, meta.path, f"_stage-{app8}-epoch-{epoch_id}"
-        )
-        writer = aligned.write.mode("overwrite")
-        if parts:
-            writer = writer.partitionBy(*parts)
-        writer.parquet(stage)
-        tdir = store.table_path(table)
-        prefix = f"epoch-{app8}-{epoch_id}-"
-        # a crashed attempt may have moved SOME files: remove them all —
-        # anywhere in the partition tree — so the epoch is this attempt's
-        # complete set, never a mix
-        for dirpath, _dirs, files in os.walk(tdir):
-            for old in files:
-                if old.startswith(prefix):
-                    os.remove(os.path.join(dirpath, old))
-        k = 0
-        for dirpath, dirs, files in os.walk(stage):
-            dirs.sort()
-            for f in sorted(files):
-                if not f.endswith(".parquet"):
-                    continue
-                rel = os.path.relpath(dirpath, stage)
-                dest = tdir if rel == "." else os.path.join(tdir, rel)
-                os.makedirs(dest, exist_ok=True)
-                os.rename(
-                    os.path.join(dirpath, f),
-                    os.path.join(dest, f"{prefix}part-{k:05d}.parquet"),
-                )
-                k += 1
-        shutil.rmtree(stage, ignore_errors=True)
+        store.append_prefixed(table, aligned, f"epoch-{app8}-{epoch_id}-")
         done = _committed()  # re-read: cheap, and keeps the write fresh
         done.setdefault(app_id, set()).add(int(epoch_id))
         write_json_atomic(ledger, {k: sorted(v) for k, v in done.items()})

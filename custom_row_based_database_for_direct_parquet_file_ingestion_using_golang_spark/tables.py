@@ -13,7 +13,9 @@ live one. Layout under the engine root::
         v0/ ... v<N>/         immutable Parquet data dirs; v<N> is live
 
 * append  = Spark's own file commit into the live ``v<N>`` — each
-  executor writes its own part files; no global lock.
+  executor writes its own part files; no global lock. The streaming
+  sink's epoch commit (``append_prefixed``) is the other in-place write:
+  staged files renamed into ``v<N>``.
 * rewrite = write ``v<N+1>`` beside the live version, commit data and
   schema together in one catalog save (temp file + fsync + ``os.replace``),
   then delete the versions past ``keep_snapshots``. A kill before the save
@@ -26,6 +28,19 @@ live one. Layout under the engine root::
   other than ``v<N>`` and the retired versions kept — so every interrupted
   commit ends either done or undone.
 
+Scans are reused until their files change. ``read`` and ``read_version``
+keep one DataFrame per (table directory, version) and return it while the
+schema asked for and the directory's write count are the ones it was
+built under, so a repeated SELECT neither re-lists the version directory
+nor re-plans the Parquet source. This is exact because only this store
+changes a version directory's files. A rewrite, DDL, RENAME or DROP
+changes the directory, version or schema and so misses by key. The two
+in-place writes, ``append`` and ``append_prefixed``, raise the write count once
+they finish, so a scan listed while one was in flight is never served
+after it. Every write also evicts the directory's scans, so the cache
+holds about one scan per live table plus the time-travel versions read
+since the table's last write.
+
 One writer per engine root: a second engine opening the root recovers it,
 deleting the first one's uncommitted writes.
 """
@@ -34,6 +49,7 @@ from __future__ import annotations
 
 import dataclasses
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,6 +73,11 @@ class ParquetTableStore:
         self.keep_snapshots = keep_snapshots
         self.tables_dir = os.path.join(self.root, "tables")
         os.makedirs(self.tables_dir, exist_ok=True)
+        # (table dir, version) -> ((write count, schema), scan)
+        self._scans: dict[tuple[str, int], tuple[tuple, DataFrame]] = {}
+        # table dir -> writes finished into it; a scan stamped with an
+        # older count is stale
+        self._writes: dict[str, int] = {}
         self._recover()
 
     def _dir(self, meta: TableMeta) -> str:
@@ -71,16 +92,83 @@ class ParquetTableStore:
         return self._version_dir(meta, meta.version)
 
     def read(self, name: str, schema=None) -> DataFrame:
+        """The live version of ``name``, read under ``schema``."""
+        meta = self.catalog.get(name)
+        return self._scan(meta, meta.version, schema)
+
+    def _scan(self, meta: TableMeta, version: int, schema) -> DataFrame:
+        """The one reader: reuse the version's scan while its stamp holds
+        (module docstring). The stamp is taken before the listing, so a
+        write finishing during it makes the new scan stale at once."""
+        key = (meta.path, version)
+        stamp = (self._writes.get(meta.path, 0), schema)
+        hit = self._scans.get(key)
+        if hit is not None and hit[0] == stamp:
+            return hit[1]
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        return reader.parquet(self.table_path(name))
+        df = reader.parquet(self._version_dir(meta, version))
+        self._scans[key] = (stamp, df)
+        return df
+
+    def _wrote(self, meta: TableMeta) -> None:
+        """A write into ``meta``'s directory finished: its scans are stale."""
+        self._writes[meta.path] = self._writes.get(meta.path, 0) + 1
+        for key in list(self._scans):  # a copy: readers may add scans
+            if key[0] == meta.path:
+                self._scans.pop(key, None)
 
     def append(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
+        meta = self.catalog.get(name)
         writer = df.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.table_path(name))
+        try:
+            writer.parquet(self._version_dir(meta, meta.version))
+        finally:
+            self._wrote(meta)
+
+    def append_prefixed(self, name: str, df: DataFrame, prefix: str) -> None:
+        """Append ``df`` as files named ``<prefix>part-<k>.parquet``,
+        replacing every ``<prefix>*`` file an earlier attempt left anywhere
+        in the live version's partition tree, so a retried write lands as
+        this attempt's complete set, never a mix. ``df`` is first written
+        to a hidden ``_stage-<prefix>`` directory inside the table
+        directory (same filesystem, so the moves are renames; recovery
+        deletes it if a kill leaves it), then each file is renamed in,
+        keeping a partitioned stage's hive ``col=value/`` directories. Each
+        rename is atomic; a reader during the moves can see part of the
+        set."""
+        meta = self.catalog.get(name)
+        stage = os.path.join(self._dir(meta), f"_stage-{prefix}")
+        writer = df.write.mode("overwrite")
+        if meta.partition_by:
+            writer = writer.partitionBy(*meta.partition_by)
+        writer.parquet(stage)
+        tdir = self._version_dir(meta, meta.version)
+        try:
+            for dirpath, _dirs, files in os.walk(tdir):
+                for old in files:
+                    if old.startswith(prefix):
+                        os.remove(os.path.join(dirpath, old))
+            k = 0
+            for dirpath, dirs, files in os.walk(stage):
+                dirs.sort()
+                for f in sorted(files):
+                    if not f.endswith(".parquet"):
+                        continue
+                    rel = os.path.relpath(dirpath, stage)
+                    dest = tdir if rel == "." else os.path.join(tdir, rel)
+                    os.makedirs(dest, exist_ok=True)
+                    os.rename(
+                        os.path.join(dirpath, f),
+                        os.path.join(dest, f"{prefix}part-{k:05d}.parquet"),
+                    )
+                    k += 1
+        finally:
+            self._wrote(meta)
+        shutil.rmtree(stage, ignore_errors=True)
 
     def overwrite(
         self,
@@ -121,7 +209,10 @@ class ParquetTableStore:
         """DROP: commit the catalog without the table, then delete its
         directory — snapshots die with it, and a recreated table gets a
         fresh directory."""
-        remove_path(self._dir(self.catalog.drop_table(name)))
+        meta = self.catalog.drop_table(name)
+        remove_path(self._dir(meta))
+        self._wrote(meta)
+        self._writes.pop(meta.path, None)
 
     # -- retention / time travel -----------------------------------------
 
@@ -145,6 +236,7 @@ class ParquetTableStore:
         meta = self.catalog.get(name)
         for k in doomed:
             remove_path(self._version_dir(meta, k))
+        self._wrote(meta)
         return doomed
 
     def read_version(self, name: str, version: int, schema=None) -> DataFrame:
@@ -153,10 +245,7 @@ class ParquetTableStore:
             raise KeyError(
                 f"table '{name}' has no snapshot v{version}; available: {self.versions(name)}"
             )
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(self._version_dir(self.catalog.get(name), version))
+        return self._scan(self.catalog.get(name), version, schema)
 
     def _recover(self) -> None:
         remove_temp_files(self.root)

@@ -475,3 +475,34 @@ def test_default_driver_memory_is_half_the_machine():
     assert _default_driver_memory(512 * gib) == "32g"
     # no argument: this machine's RAM, in the same format
     assert _default_driver_memory().endswith("g")
+
+
+def test_declared_types_parse_once(engine):
+    """``spark_type_for`` memoizes each declared string: a nested
+    declaration parses to one shared type that no schema build mutates,
+    and a failed parse raises every time instead of being cached."""
+    from custom_row_based_database_for_direct_parquet_file_ingestion_using_golang_spark.catalog import (
+        spark_type_for,
+    )
+
+    decl = "array<struct<a:int,b:map<string,array<bigint>>>>"
+    engine.create_table("n", [("id", "INT"), ("xs", decl)])
+    first = spark_type_for(decl)
+    assert spark_type_for(decl) is first
+    assert first.simpleString() == decl
+    meta = engine.catalog.get("n")
+    assert meta.schema == meta.schema
+    assert meta.schema["xs"].dataType is first
+    engine.insert_rows("n", [{"id": 1, "xs": [{"a": 2, "b": {"k": [3, 4]}}]}])
+    engine.insert_rows("n", [{"id": 2, "xs": None}])
+    rows = sorted(engine.table("n").collect())
+    assert [r.id for r in rows] == [1, 2]
+    assert rows[0].xs[0].a == 2 and rows[0].xs[0].b == {"k": [3, 4]}
+    assert spark_type_for(decl) is first and first.simpleString() == decl
+    misses = spark_type_for.cache_info().currsize
+    for _ in range(2):
+        with pytest.raises(ValueError):
+            spark_type_for("no_such_type<")
+    assert spark_type_for.cache_info().currsize == misses
+    with pytest.raises(ValueError):
+        engine.create_table("bad", [("x", "no_such_type<")])
