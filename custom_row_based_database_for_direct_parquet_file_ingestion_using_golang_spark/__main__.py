@@ -13,7 +13,7 @@ from __future__ import annotations
 import sys
 
 from . import Engine, get_spark
-from .functions.format import format_result, render_statement_result
+from .functions.format import format_result
 from .plans import nl
 
 
@@ -30,7 +30,7 @@ def run_statement(engine: Engine, line: str) -> str:
         sql, result = nl.ask(engine, line)
         header = f"-- {sql}\n"
         return header + format_result(result)
-    return render_statement_result(engine.ref_sql(line))
+    return engine.render_sql(line)
 
 
 def main() -> None:

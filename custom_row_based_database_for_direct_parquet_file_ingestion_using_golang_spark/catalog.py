@@ -19,6 +19,7 @@ import datetime
 import functools
 import json
 import os
+import threading
 from dataclasses import dataclass, field, replace
 from enum import Enum
 
@@ -191,6 +192,11 @@ class Catalog:
     ``pkg/storage/storage.go:290-306``) and only then takes it as the
     in-memory state, so a failed save changes nothing. No process-wide
     mutex: Spark jobs are the unit of isolation.
+
+    ``generation`` counts the commits under the root: every catalog save,
+    registry save (commit.JsonRegistry) and table-file write
+    (tables.ParquetTableStore) raises it once it has finished, so a value
+    read before a statement is built names the data that statement saw.
     """
 
     def __init__(self, root: str):
@@ -198,6 +204,8 @@ class Catalog:
         self.path = os.path.join(root, "catalog.json")
         os.makedirs(root, exist_ok=True)
         self._tables: dict[str, TableMeta] = {}
+        self.generation = 0
+        self._generation_lock = threading.Lock()
         if os.path.exists(self.path):
             with open(self.path) as f:
                 raw = json.load(f)
@@ -211,6 +219,12 @@ class Catalog:
             self.path, {"tables": {n: m.to_json() for n, m in tables.items()}}
         )
         self._tables = tables
+        self.committed()
+
+    def committed(self) -> None:
+        """A commit under the root finished: raise ``generation``."""
+        with self._generation_lock:
+            self.generation += 1
 
     # -- reference DDL surface (SURVEY.md §2.2: D1-D3) --------------------
 

@@ -83,6 +83,7 @@ class JsonRegistry:
 
     def _save(self, meta: dict) -> None:
         write_json_atomic(self.path, meta)
+        self.engine.catalog.committed()
 
     def names(self) -> list[str]:
         return sorted(self._load())

@@ -45,6 +45,8 @@ from .catalog import (
     spark_type_for,
 )
 from .commit import write_json_atomic
+from .functions.format import render_statement_result
+from .results import ResultCache, read_only, reusable
 from .tables import ParquetTableStore
 
 IMAGE_EXTENSIONS = (".jpg", ".jpeg", ".png", ".gif", ".bmp", ".tiff", ".webp")
@@ -223,6 +225,7 @@ class Engine:
         # PREPARE/EXECUTE statements — engine-scoped (the analog of
         # DuckDB's connection scope), deliberately unpersisted
         self.prepared_statements: dict[str, dict] = {}
+        self.results = ResultCache()
 
     def table_at(self, name: str, version: int) -> DataFrame:
         """Time travel: the table as of a retired snapshot (requires the
@@ -487,12 +490,12 @@ class Engine:
         return self.spark.sql(text)
 
     def ref_sql(self, text: str, weak_typing: bool = False):
-        """Execute a statement — or a ';'-separated SCRIPT (round-14,
-        string/comment-aware split; the result of the LAST statement
-        comes back, DuckDB's multi-statement convention) — in the
-        reference's exact SQL dialect (plans/refsql.py): drop-in for
-        every query the reference accepts. ``weak_typing=True`` enables
-        the reference's dynamic numeric/string comparison semantics for
+        """Execute a statement, or a ';'-separated script whose last
+        statement's result comes back (DuckDB's multi-statement
+        convention; the split is string- and comment-aware), in the
+        reference's SQL dialect (plans/refsql.py): drop-in for every query
+        the reference accepts. ``weak_typing=True`` enables the
+        reference's dynamic numeric/string comparison semantics for
         all-TEXT imported tables."""
         from .plans.refsql import RefSQL, split_statements
 
@@ -503,6 +506,28 @@ class Engine:
         for s in stmts:
             out = RefSQL(self, weak_typing=weak_typing).execute(s)
         return out
+
+    def render_sql(self, text: str, weak_typing: bool = False) -> str:
+        """``ref_sql`` rendered reference-style (functions/format.py), the
+        path the REST server and the REPL share. A repeated read-only
+        statement is answered from ``self.results`` until the next commit
+        (results.py)."""
+        key = (text.strip(), weak_typing)
+        generation = self.catalog.generation
+        hit = self.results.get(key, generation)
+        if hit is not None:
+            return hit
+        clocks = self.results.clock_reads()
+        result = self.ref_sql(text, weak_typing)
+        rendered = render_statement_result(result)
+        if (
+            isinstance(result, DataFrame)
+            and read_only(key[0])
+            and self.results.clock_reads() == clocks
+            and reusable(result, self.store.root)
+        ):
+            self.results.put(key, generation, rendered)
+        return rendered
 
     # ---- DML (M1-M3) ----------------------------------------------------
 

@@ -215,6 +215,7 @@ from ..catalog import parse_date as _parse_date, parse_timestamp as _parse_times
 from ..engine import guard
 from ..functions.compat import dual_compare, ref_like, truthy
 from ..operators.query import Query, agg_default_name, agg_spec, arg_col
+from ..results import CLOCK_FUNCTIONS
 
 _TOKEN_RE = re.compile(
     r"""
@@ -4480,8 +4481,11 @@ _ALIAS_STOP = frozenset({
     "on", "using", "where", "group", "order", "limit", "offset", "having",
     "qualify", "window", "union", "intersect", "except", "join", "inner",
     "left", "right", "full", "cross", "asof", "sample", "tablesample",
-    "version", "pivot", "unpivot",
+    "version", "pivot", "unpivot", "natural", "positional", "lateral",
+    "semi", "anti", "outer", "returning", "fetch", "minus",
 })
+# A token that can name a relation without AS: a plain or quoted identifier.
+_BARE_ALIAS = re.compile(r'[A-Za-z_][\w$]*|"[^"]+"|`[^`]+`')
 
 
 def _relation(
@@ -4492,14 +4496,15 @@ def _relation(
     and ``VERSION AS OF``::
 
         relation := ( name | 'path' | read_*('path') | range(...)
-                    | generate_series(...) ) [AS alias [(c1, ...)]]
+                    | generate_series(...) ) [[AS] alias [(c1, ...)]]
                   | ( (SELECT ...) | (VALUES ...) ) [AS] alias [(c1, ...)]
                   [VERSION AS OF n]
 
     ``lateral`` parses the body after ``JOIN LATERAL``, whose qualified
     names outside its own FROM are outer references. A parenthesized
     relation needs an alias; the others bind their own name unless
-    aliased with AS."""
+    aliased. An alias without AS is any identifier that is not a word of
+    ``_ALIAS_STOP`` (``FROM t a JOIN t b ON a.k = b.k``)."""
     if lateral:
         if cur.next() != "(":
             raise ParseError("expected '(' after LATERAL")
@@ -4542,6 +4547,11 @@ def _relation(
     aliased = cur.peek_kw() == "as"
     if aliased:
         cur.next()
+    elif rel.name and cur.peek() is not None:
+        aliased = (
+            _BARE_ALIAS.fullmatch(cur.peek()) is not None
+            and cur.peek_kw() not in _ALIAS_STOP
+        )
     if aliased or not rel.name:
         if not rel.name and (
             cur.peek() in (None, ",", ")", "(") or cur.peek_kw() in _ALIAS_STOP
@@ -4743,7 +4753,7 @@ def _over_body(cur: _Cursor) -> tuple[list, list, "tuple | None"]:
 
 def parse_select(
     cur: _Cursor, weak_typing: bool = False, resolver=None,
-    subquery: str | None = None,
+    subquery: str | None = None, positional: bool = False,
 ) -> tuple[SelectSpec, Query | None, dict]:
     """Parse SELECT ... and return (spec, clauses) — assembly happens in
     build_select where the DataFrame is available. ``resolver`` (optional)
@@ -4755,9 +4765,20 @@ def parse_select(
     query reads by name, the dialect's expression-alias requirement is
     relaxed — a subquery's output name is never observable, and standard
     SQL allows ``(SELECT round(AVG(x), 2) FROM t)`` unaliased, so such
-    items get an internal auto-alias instead of raising."""
+    items get an internal auto-alias instead of raising. ``positional``
+    (the source of ``INSERT INTO t SELECT ...``, whose columns bind by
+    position) relaxes it the same way."""
     cur.expect_kw("select")
     spec = SelectSpec(scoped=bool(subquery))
+    unnamed_ok = positional or subquery not in (None, "lateral")
+
+    def unnamed(error: str) -> str:
+        """The alias of an item written without AS where its output name
+        is never observable; elsewhere the dialect demands the alias."""
+        if not unnamed_ok:
+            raise ParseError(error)
+        return f"__sq_expr{len(spec.projections) + len(spec.aggregates)}"
+
     if cur.peek_kw() == "distinct":
         cur.next()
         if cur.peek_kw() == "on":
@@ -4938,11 +4959,9 @@ def parse_select(
                     "COUNT/SUM/AVG/MIN/MAX)"
                 )
             if cur.peek_kw() != "as":
-                if subquery in (None, "lateral"):
-                    raise ParseError(
-                        f"statistical aggregate {low}(...) needs AS <alias>"
-                    )
-                alias = "__sq_expr"
+                alias = unnamed(
+                    f"statistical aggregate {low}(...) needs AS <alias>"
+                )
             else:
                 cur.next()
                 alias = _unquote(cur.next())
@@ -5050,13 +5069,14 @@ def parse_select(
                         buf2.append(
                             t2 if _is_string_lit(t2) else _unquote_bare(t2)
                         )
-                    if cur.peek_kw() != "as":
-                        raise ParseError(
+                    if cur.peek_kw() == "as":
+                        cur.next()
+                        alias = _unquote(cur.next())
+                    else:
+                        alias = unnamed(
                             f"aggregate expression "
                             f"'{' '.join(buf2)}' needs AS <alias>"
                         )
-                    cur.next()
-                    alias = _unquote(cur.next())
                     spec.aggregates.append(("_expr", " ".join(buf2), alias))
                     continue
                 alias = None
@@ -5074,7 +5094,7 @@ def parse_select(
                     else args[0]
                 )
                 if alias is None and check != "*" and is_value_expr(check):
-                    raise ParseError(
+                    alias = unnamed(
                         f"{low}({args[0]}) aggregates an expression — "
                         "name it with AS <alias>"
                     )
@@ -5161,11 +5181,9 @@ def parse_select(
                     # the column by its text, same as DuckDB.
                     float(name)
                 except ValueError:
-                    if subquery in (None, "lateral"):
-                        raise ParseError(
-                            f"expression projection '{name}' needs AS <alias>"
-                        )
-                    alias = "__sq_expr"
+                    alias = unnamed(
+                        f"expression projection '{name}' needs AS <alias>"
+                    )
             if _contains_agg_call(buf):
                 # Round-10: an expression WRAPPING an aggregate —
                 # ``round(AVG(x), 2) AS a``, ``CAST(SUM(x) AS BIGINT)``,
@@ -6595,6 +6613,7 @@ def _expand_macros(toks: list[str], reg: dict) -> list[str]:
 
 def parse_query(
     cur: _Cursor, weak_typing: bool = False, resolver=None,
+    positional: bool = False,
 ) -> tuple[list[tuple[SelectSpec, dict]], list[tuple[str, bool, bool]], dict]:
     """Parse one SELECT or set-operation chain: ``SELECT ... UNION [ALL]
     [BY NAME] | INTERSECT [ALL] | EXCEPT [ALL] SELECT ... [ORDER BY ...
@@ -6604,8 +6623,11 @@ def parse_query(
     combine positionally left to right (result columns named by the first
     arm) and UNION/INTERSECT/EXCEPT deduplicate unless ALL; UNION BY NAME
     (DuckDB; Spark's unionByName) matches columns by name and null-fills
-    missing ones. Non-final arms cannot carry ORDER BY/LIMIT."""
-    spec, _, clauses = parse_select(cur, weak_typing, resolver)
+    missing ones. Non-final arms cannot carry ORDER BY/LIMIT.
+    ``positional`` is parse_select's, for every arm."""
+    spec, _, clauses = parse_select(
+        cur, weak_typing, resolver, positional=positional
+    )
     arms = [(spec, clauses)]
     ops: list[tuple[str, bool, bool]] = []
     while cur.peek_kw() in ("union", "intersect", "except"):
@@ -6621,7 +6643,9 @@ def parse_query(
             if op != "union":
                 raise ParseError(f"BY NAME applies to UNION, not {op.upper()}")
             by_name = True
-        spec, _, clauses = parse_select(cur, weak_typing, resolver)
+        spec, _, clauses = parse_select(
+            cur, weak_typing, resolver, positional=positional
+        )
         arms.append((spec, clauses))
         ops.append((op, keep_dups, by_name))
     if not ops:
@@ -7169,9 +7193,12 @@ class RefSQL:
             )
         return out
 
-    def _select_df(self, cur: _Cursor) -> DataFrame:
-        """Parse + build one full SELECT or set-operation chain."""
-        return self._query_df(*parse_query(cur, self.weak, self._build))
+    def _select_df(self, cur: _Cursor, positional: bool = False) -> DataFrame:
+        """Parse + build one full SELECT or set-operation chain
+        (``positional``: see parse_select)."""
+        return self._query_df(
+            *parse_query(cur, self.weak, self._build, positional)
+        )
 
     def _query_df(self, arms: list, ops: list, trailing: dict) -> DataFrame:
         """Build ``parse_query``'s result: the arms combine left to right,
@@ -7214,9 +7241,9 @@ class RefSQL:
     _RECURSION_CAP = 100
 
     def _recursive_cte(self, name: str, toks: list[str]) -> DataFrame:
-        """Round-8: WITH RECURSIVE — standard iterate-to-fixpoint
-        semantics over ``anchor UNION [ALL] recursive``. Spark has no
-        native recursive CTE, so this is a driver-side loop: each round
+        """WITH RECURSIVE — standard iterate-to-fixpoint semantics over
+        ``anchor UNION [ALL] recursive``, as a driver-side loop (Spark
+        4.1's native recursion refuses UNION distinct): each round
         binds the CTE name to the PREVIOUS round's new rows (the working
         frontier — standard SQL recursion sees the last increment, not
         the accumulation), evaluates the recursive arm, and stops when
@@ -7300,8 +7327,8 @@ class RefSQL:
         toks = tokenize(sql)
         if not toks:
             raise ParseError("empty statement")
-        # Round-14: macro call-site expansion (never inside the macro's
-        # own CREATE/DROP statement)
+        # Macro call sites expand here, except in the macro's own
+        # CREATE/DROP statement.
         is_macro_ddl = "macro" in [t.lower() for t in toks[:4]]
         macros = getattr(self.engine, "macros", None)
         if macros is not None and not is_macro_ddl:
@@ -7312,6 +7339,11 @@ class RefSQL:
                 if t and t[0] not in "'\"`"
             ):
                 toks = _expand_macros(toks, reg)
+        results = getattr(self.engine, "results", None)
+        if results is not None and not CLOCK_FUNCTIONS.isdisjoint(
+            t.lower() for t in toks
+        ):
+            results.note_clock_read()
         if any(
             t.lower() == "columns"
             and i + 1 < len(toks)
@@ -7328,16 +7360,17 @@ class RefSQL:
         cur = _Cursor(toks)
         self._ctes = {}
         if verb == "with":
-            # Round-6: common table expressions — ``WITH name AS (SELECT
-            # ...) [, name2 AS (...)] SELECT ...``. Each CTE binds its
-            # (lazy) DataFrame; later CTEs and the main SELECT resolve it
-            # before the catalog. Set-op chains and every SELECT feature
-            # work inside a CTE body; re-references recompute (standard
+            # Common table expressions — ``WITH name AS (SELECT ...) [,
+            # name2 AS (...)] SELECT ...``. Each CTE binds its (lazy)
+            # DataFrame; later CTEs and the main SELECT resolve it before
+            # the catalog. Set-op chains and every SELECT feature work
+            # inside a CTE body; re-references recompute (standard
             # lazy-plan semantics — Catalyst reuses exchanges where it
-            # can). Round-8: ``WITH RECURSIVE name AS (anchor UNION [ALL]
-            # recursive) ...`` — Spark has no native recursive CTEs, so a
-            # self-referencing body runs as a driver-side fixpoint loop
-            # (see _recursive_cte).
+            # can). ``WITH RECURSIVE name AS (anchor UNION [ALL]
+            # recursive) ...``: a self-referencing body runs as a
+            # driver-side fixpoint loop (_recursive_cte). Spark 4.1 plans
+            # WITH RECURSIVE ... UNION ALL natively but refuses recursive
+            # UNION (distinct), which the loop also covers.
             cur.expect_kw("with")
             recursive = False
             if cur.peek_kw() == "recursive":
@@ -7380,16 +7413,16 @@ class RefSQL:
                 break
             nxt = cur.peek_kw()
             if nxt in ("insert", "update", "delete", "merge"):
-                # Round-13: CTE-fronted DML (Postgres/DuckDB) — ``WITH
-                # staged AS (SELECT ...) INSERT INTO t SELECT * FROM
-                # staged`` and the UPDATE/DELETE/MERGE forms. The bound
-                # CTE frames resolve before the catalog everywhere the
-                # statement reads a relation (_table_df), including
-                # UPDATE ... FROM sources, IN (SELECT ...) predicates,
-                # and MERGE USING. A CTE reading the DML's own target
-                # sees the PRE-statement snapshot (the copy-on-write
-                # write streams from the old version, which stays until
-                # the commit — the self-referencing-CTAS machinery).
+                # CTE-fronted DML (Postgres/DuckDB) — ``WITH staged AS
+                # (SELECT ...) INSERT INTO t SELECT * FROM staged`` and
+                # the UPDATE/DELETE/MERGE forms. The bound CTE frames
+                # resolve before the catalog everywhere the statement
+                # reads a relation (_table_df), including UPDATE ... FROM
+                # sources, IN (SELECT ...) predicates, and MERGE USING. A
+                # CTE reading the DML's own target sees the PRE-statement
+                # snapshot (the copy-on-write write streams from the old
+                # version, which stays until the commit — the
+                # self-referencing-CTAS machinery).
                 return {
                     "insert": self._insert,
                     "update": self._update,
@@ -7411,11 +7444,11 @@ class RefSQL:
                 raise ParseError(f"unexpected token {cur.peek()!r} after SELECT")
             return out
         if verb == "values":
-            # Round-10: statement-level table constructor — ``VALUES
-            # (1, 'a'), (2, 'b')``. Catalyst compiles the literal rows to
-            # a LocalRelation; columns are named col0, col1, ... (the
-            # DuckDB naming — Spark's native col1-based naming is
-            # remapped so oracle comparisons line up).
+            # Statement-level table constructor — ``VALUES (1, 'a'), (2,
+            # 'b')``. Catalyst compiles the literal rows to a
+            # LocalRelation; columns are named col0, col1, ... (the DuckDB
+            # naming — Spark's native col1-based naming is remapped so
+            # oracle comparisons line up).
             df = self.engine.spark.sql(" ".join(toks))
             return df.toDF(*[f"col{i}" for i in range(len(df.columns))])
         if verb == "insert":
@@ -8239,8 +8272,9 @@ class RefSQL:
             # set-based append (the reference inserts one VALUES row at a
             # time). The SELECT result is aligned/cast to the target's
             # declared schema; with an explicit column list, unnamed
-            # columns fill with NULL.
-            src = self._select_df(cur)
+            # columns fill with NULL. Columns bind by position unless BY
+            # NAME, so expression items need no AS.
+            src = self._select_df(cur, positional=not by_name)
             if not cur.done():
                 raise ParseError(
                     f"unexpected token {cur.peek()!r} after INSERT ... SELECT"
@@ -8375,7 +8409,7 @@ class RefSQL:
         there (set semantics — no meaningful first)."""
         meta = self.engine.catalog.get(table)
         if cur.peek_kw() == "select":
-            src = self._select_df(cur)
+            src = self._select_df(cur, positional=not by_name)
             if not cur.done():
                 raise ParseError(
                     f"unexpected token {cur.peek()!r} after INSERT ... SELECT"

@@ -53,7 +53,6 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .commit import write_json_atomic
 from .engine import Engine
-from .functions.format import render_statement_result
 from .plans import nl
 
 _MAX_UPLOAD = 64 << 20  # reference: r.ParseMultipartForm(64 << 20)
@@ -152,9 +151,9 @@ def derive_title(msg: str, max_words: int = 8, max_len: int = 60) -> str:
 
 
 def _run_ref_statement(engine: Engine, query: str) -> str:
-    """Execute one RefSQL statement and render it (shared dispatch with the
-    CLI REPL — functions.format.render_statement_result)."""
-    return render_statement_result(engine.ref_sql(query))
+    """Execute one RefSQL statement and render it (``Engine.render_sql``,
+    shared with the CLI REPL)."""
+    return engine.render_sql(query)
 
 
 class _RWLock:

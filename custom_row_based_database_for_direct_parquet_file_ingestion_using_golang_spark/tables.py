@@ -113,8 +113,10 @@ class ParquetTableStore:
         return df
 
     def _wrote(self, meta: TableMeta) -> None:
-        """A write into ``meta``'s directory finished: its scans are stale."""
+        """A write into ``meta``'s directory finished: its scans are stale,
+        and so is every result read before it (``Catalog.generation``)."""
         self._writes[meta.path] = self._writes.get(meta.path, 0) + 1
+        self.catalog.committed()
         for key in list(self._scans):  # a copy: readers may add scans
             if key[0] == meta.path:
                 self._scans.pop(key, None)

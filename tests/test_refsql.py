@@ -5197,6 +5197,79 @@ def test_reused_scan_sees_every_write(spark, tmp_path, case):
         assert _rows(e, "SELECT * FROM t_old") == before
 
 
+def test_bare_table_alias_vs_duckdb(spark, tmp_path):
+    """A table alias without AS (``FROM t a``) binds like ``FROM t AS a``,
+    as in DuckDB, while every clause word that can follow a relation still
+    reads as that clause, and the AS forms plan as before."""
+    import re
+
+    e, con = _two_engines(
+        spark, str(tmp_path / "ba"),
+        "CREATE TABLE t (k INT, v TEXT)",
+        "INSERT INTO t VALUES (1, 'a'), (2, 'b'), (3, 'a')",
+        "CREATE TABLE s (k INT, w TEXT)",
+        "INSERT INTO s VALUES (2, 'x'), (3, 'y'), (4, 'z')",
+        keep_snapshots=1,
+    )
+    for sql in (
+        "SELECT a.k, b.v FROM t a JOIN t b ON a.k = b.k",
+        "SELECT o.k, x.w FROM t o LEFT JOIN s x ON o.k = x.k WHERE o.k > 1",
+        # clause words directly after a bare relation
+        "SELECT (SELECT count(*) FROM t WHERE k > 1) AS w,"
+        " (SELECT count(*) FROM (SELECT v FROM t GROUP BY v) AS g) AS g,"
+        " (SELECT max(k) FROM (SELECT k FROM t ORDER BY k) AS r) AS o,"
+        " (SELECT count(*) FROM (SELECT k FROM t LIMIT 2) AS l) AS l,"
+        " (SELECT count(*) FROM (SELECT k FROM t OFFSET 1) AS f) AS f,"
+        " (SELECT count(*) FROM (SELECT k FROM t UNION SELECT k FROM s) AS a) AS u,"
+        " (SELECT count(*) FROM (SELECT k FROM t INTERSECT SELECT k FROM s) AS b) AS i,"
+        " (SELECT count(*) FROM (SELECT k FROM t EXCEPT SELECT k FROM s) AS c) AS e",
+        "SELECT t.k, s.w, u.w AS uw FROM t INNER JOIN s ON t.k = s.k"
+        " LEFT OUTER JOIN s AS u ON u.k = t.k + 1",
+        "SELECT s.k, t.v FROM t RIGHT JOIN s ON t.k = s.k",
+        "SELECT t.k AS tk, s.k AS sk FROM t FULL JOIN s ON t.k = s.k",
+        "SELECT t.k, s.k AS sk FROM t CROSS JOIN s",
+        "SELECT k, w FROM t JOIN s USING (k)",
+        "SELECT count(*) AS n FROM t USING SAMPLE 100%",
+    ):
+        _assert_matches_duckdb(e, con, sql)
+    # forms DuckDB spells differently: checked against known rows
+    e.ref_sql("UPDATE t SET v = upper(v) WHERE k = 1")
+    assert _rows(e, "SELECT k, v FROM t VERSION AS OF 0 WHERE k = 1")[1] == [(1, "a")]
+    assert _rows(e, "SELECT count(*) AS n FROM t SAMPLE 100 PERCENT BY k")[1] == [(3,)]
+    assert _rows(
+        e, "SELECT * FROM t PIVOT (count(k) FOR v IN ('A' AS ua, 'a' AS la))"
+    )[1] == [(1, 1)]
+
+    def plan(sql):
+        text = e.ref_sql(sql)._jdf.queryExecution().optimizedPlan().toString()
+        return re.sub(r"#\d+L?", "#", text)
+
+    assert plan("SELECT a.k, b.w FROM t a JOIN s b ON a.k = b.k") == plan(
+        "SELECT a.k, b.w FROM t AS a JOIN s AS b ON a.k = b.k"
+    )
+
+
+def test_insert_select_binds_unnamed_items_by_position_vs_duckdb(spark, tmp_path):
+    """``INSERT INTO t SELECT <expr>, ...`` needs no AS: its columns bind
+    by position. A top-level SELECT still demands the alias."""
+    e, con = _two_engines(
+        spark, str(tmp_path / "ip"),
+        "CREATE TABLE t (k INT, v TEXT)",
+        "INSERT INTO t VALUES (1, 'a'), (2, 'b')",
+    )
+    for stmt in (
+        "INSERT INTO t SELECT k + 10, v FROM t",
+        "INSERT INTO t (v, k) SELECT upper(v), k * 100 FROM t WHERE k < 3",
+        "INSERT INTO t SELECT max(k) + 1, min(v) FROM t",
+        "INSERT INTO t SELECT sum(k * 2), min(v) FROM t WHERE k < 3",
+    ):
+        e.ref_sql(stmt)
+        con.execute(stmt)
+    _assert_matches_duckdb(e, con, "SELECT * FROM t")
+    with pytest.raises(ParseError, match="needs AS"):
+        e.ref_sql("SELECT k + 10, v FROM t")
+
+
 def test_reused_scan_self_join_and_correlated_vs_duckdb(spark, tmp_path):
     """Two references to one cached scan — a self-join and a correlated
     subquery — plan and answer as two independent reads, before and
