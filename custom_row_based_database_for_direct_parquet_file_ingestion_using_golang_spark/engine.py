@@ -31,9 +31,12 @@ import re
 from collections.abc import Iterable
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, Observation, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from .catalog import (
     Catalog,
@@ -108,15 +111,15 @@ def _coerce(value: Any, decl: str) -> Any:
 
 
 def _coerce_native(value: Any, dtype: T.DataType, decl: str) -> Any:
-    """Round-14: coercion for columns declared with a NATIVE Spark type
-    (the catalog's Spark-DDL passthrough, catalog.py:50-58). Before this,
-    string values for e.g. a declared TIMESTAMP column escaped to
-    ``createDataFrame`` and died with a raw PySparkTypeError (judge probe,
-    r13 verdict "What's wrong" #1). Mirrors Spark string-cast semantics
-    for the scalar types; parse failures raise a loud ValueError naming
-    the declared type. Values already in shape pass through; compound
-    types (array/struct/map/binary) trust the caller — ``createDataFrame``
-    verifies against the declared schema (wrapped loudly by the callers).
+    """Coercion for columns declared with a native Spark type (the
+    catalog's Spark-DDL passthrough, ``catalog.spark_type_for``), so a
+    string for e.g. a TIMESTAMP column converts instead of failing Spark's
+    type check. Mirrors Spark string-cast semantics for the scalar types;
+    parse failures raise a loud ValueError naming the declared type.
+    Values already in shape pass through; compound types (array/struct/
+    map/binary) trust the caller — Spark's type verifier checks them
+    against the declared schema (``_arrow_batch``; wrapped loudly by the
+    callers).
     """
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         if isinstance(value, datetime.datetime):
@@ -167,6 +170,88 @@ def _coerce_native(value: Any, dtype: T.DataType, decl: str) -> Any:
             f"cannot coerce {value!r} to declared {decl}: {exc}"
         ) from exc
     return value  # compound/unknown: trust the caller (schema-verified)
+
+
+def _round_decimal(value: decimal.Decimal, dtype: T.DecimalType) -> decimal.Decimal:
+    """``value`` at ``dtype``'s scale, rounded half up; too many digits
+    raise. Spark converts a Python Decimal the same way."""
+    ctx = decimal.Context(prec=80)  # above any DECIMAL(38, s) value
+    out = value.quantize(decimal.Decimal(1).scaleb(-dtype.scale), decimal.ROUND_HALF_UP, ctx)
+    if out and out.adjusted() >= dtype.precision - dtype.scale:
+        raise ValueError(f"{value} cannot be represented as {dtype.simpleString()}")
+    return out
+
+
+def _arrow_value(value: Any, dtype: T.DataType) -> Any:
+    """A value Spark's type verifier accepted for ``dtype``, in the form
+    pyarrow stores as the value Spark's own conversion would: a naive
+    timestamp is local time (``TimestampType.toInternal``), a
+    TIMESTAMP_NTZ keeps its wall clock, a datetime for a DATE keeps its
+    date, decimals round to the scale, maps become pairs and structs
+    (dict, Row, tuple or object) become dicts."""
+    if value is None:
+        return None
+    if isinstance(dtype, T.TimestampType):
+        return value.astimezone(datetime.timezone.utc)
+    if isinstance(dtype, T.TimestampNTZType):
+        return value.replace(tzinfo=None)
+    if isinstance(dtype, T.DateType) and isinstance(value, datetime.datetime):
+        return value.date()
+    if isinstance(dtype, T.DecimalType):
+        return _round_decimal(value, dtype)
+    if isinstance(dtype, T.ArrayType):
+        return [_arrow_value(v, dtype.elementType) for v in value]
+    if isinstance(dtype, T.MapType):
+        return [
+            (_arrow_value(k, dtype.keyType), _arrow_value(v, dtype.valueType))
+            for k, v in value.items()
+        ]
+    if isinstance(dtype, T.StructType):
+        if isinstance(value, Row) and hasattr(value, "__fields__"):
+            value = value.asDict()
+        elif isinstance(value, (tuple, list)):
+            value = dict(zip(dtype.names, value))
+        elif not isinstance(value, dict):
+            value = vars(value)
+        return {
+            f.name: _arrow_value(value.get(f.name), f.dataType) for f in dtype.fields
+        }
+    return value
+
+
+#: The types pyarrow writes to Parquet as Spark's own writer does.
+_ARROW_SCALARS = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.StringType, T.BinaryType,
+    T.DateType, T.TimestampType, T.TimestampNTZType,
+)
+
+
+def _arrow_writable(dtype: T.DataType) -> bool:
+    if isinstance(dtype, T.ArrayType):
+        return _arrow_writable(dtype.elementType)
+    if isinstance(dtype, T.MapType):
+        return _arrow_writable(dtype.keyType) and _arrow_writable(dtype.valueType)
+    if isinstance(dtype, T.StructType):
+        return all(_arrow_writable(f.dataType) for f in dtype.fields)
+    return isinstance(dtype, _ARROW_SCALARS)
+
+
+def _arrow_batch(schema: T.StructType, rows: list[dict[str, Any]]) -> pa.Table:
+    """``rows`` (dicts keyed by every field of ``schema``) as a pyarrow
+    Table under ``schema``, checked by Spark's own type verifier first so
+    a batch is accepted or refused exactly as ``createDataFrame`` would."""
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    arrow = to_arrow_schema(schema)
+    return pa.Table.from_arrays(
+        [
+            pa.array([_arrow_value(r[f.name], f.dataType) for r in rows], type=a.type)
+            for f, a in zip(schema.fields, arrow)
+        ],
+        schema=arrow,
+    )
 
 
 def resolve_image(identifier: str, image_dir: str) -> str | None:
@@ -287,12 +372,23 @@ class Engine:
 
     def _write_empty(self, meta: TableMeta, keep: int | None = None) -> None:
         """Commit an empty version of ``meta`` (a new table, TRUNCATE,
-        plain CREATE OR REPLACE). A partitioned table's empty write
-        partitions too: an unpartitioned part file beside later
-        ``col=value/`` directories would corrupt partition discovery once
-        it carried rows."""
-        empty = self.spark.createDataFrame([], meta.schema)
+        plain CREATE OR REPLACE), written by the driver: one empty file
+        carrying the schema, or none for a partitioned table (an
+        unpartitioned part file beside later ``col=value/`` directories
+        would corrupt partition discovery once it carried rows)."""
+        empty = self._batch(meta.schema, [])
         self.store.overwrite(meta.name, empty, meta.partition_by, meta, keep)
+
+    def _batch(
+        self, schema: T.StructType, rows: list[dict[str, Any]]
+    ) -> pa.Table | DataFrame:
+        """Coerced rows under ``schema`` as a pyarrow Table the store
+        writes itself; as a local DataFrame for Spark's writer when a
+        column's type has no Parquet form pyarrow writes as Spark does
+        (intervals, VARIANT, VOID)."""
+        if _arrow_writable(schema):
+            return _arrow_batch(schema, rows)
+        return self.spark.createDataFrame(rows, schema)
 
     def set_default(self, name: str, column: str, value: Any) -> None:
         """ALTER TABLE ... ALTER COLUMN c SET DEFAULT <lit> — catalog-only
@@ -465,15 +561,11 @@ class Engine:
         aligned = df.select(
             *[F.col(c.name).cast(c.spark_type) for c in meta.columns]
         )
-        obs = Observation()
         with _guarded():
             if returning:
                 aligned = aligned.localCheckpoint(eager=True)
-            self.store.append(
-                name,
-                aligned.observe(obs, F.count(F.lit(1)).alias("rows")),
-                meta.partition_by,
-            )
+            counted, obs = self._counted(aligned)
+            self.store.append(name, counted, meta.partition_by)
         n = int(obs.get["rows"] or 0)
         return (n, aligned) if returning else n
 
@@ -534,31 +626,50 @@ class Engine:
     def insert_rows(self, name: str, rows: Iterable[dict[str, Any]]) -> int:
         """INSERT with partial column lists: missing columns become NULL
         (reference allows missing columns implicitly — the row map simply
-        lacks them and projection emits NULL, select.go:588-592)."""
+        lacks them and projection emits NULL, select.go:588-592). The
+        coerced batch is written by the driver, no Spark job, as one file
+        that appears whole or not at all; a partitioned table gets a Spark
+        write of the batch."""
         rows = list(rows)
-        if not rows:
-            return 0
-        meta = self.catalog.get(name)
-        df = self.coerce_rows_df(name, rows)
-        self.store.append(name, df, meta.partition_by)
+        if rows:
+            self._append(name, self.coerce_rows(name, rows))
         return len(rows)
 
     def insert_rows_returning(
         self, name: str, rows: list[dict[str, Any]]
     ) -> tuple[int, DataFrame]:
-        """insert_rows + the coerced batch (round-14 INSERT RETURNING) —
-        the batch is a local relation, stable after the append."""
-        if not rows:
-            return 0, self.coerce_rows_df(name, [])
-        meta = self.catalog.get(name)
-        df = self.coerce_rows_df(name, rows)
-        self.store.append(name, df, meta.partition_by)
-        return len(rows), df
+        """insert_rows + the coerced batch as a DataFrame (INSERT
+        RETURNING): a local relation, stable after the append."""
+        batch = self.coerce_rows(name, rows)
+        if rows:
+            self._append(name, batch)
+        return len(rows), self._frame(name, batch)
+
+    def _append(self, name: str, batch: pa.Table | DataFrame) -> None:
+        partition_by = self.catalog.get(name).partition_by
+        if partition_by:
+            batch = self._frame(name, batch)
+        self.store.append(name, batch, partition_by)
+
+    def _frame(self, name: str, batch: pa.Table | DataFrame) -> DataFrame:
+        """A coerced batch as a DataFrame; a Table becomes a local
+        relation in the JVM, so using it runs no Python worker."""
+        if isinstance(batch, DataFrame):
+            return batch
+        return self.spark.createDataFrame(batch, self.catalog.get(name).schema)
 
     def coerce_rows_df(self, name: str, rows: list[dict[str, Any]]) -> DataFrame:
-        """The INSERT VALUES coercion as a DataFrame builder WITHOUT the
-        append — the ON CONFLICT path (round-13) resolves the batch
-        against the table before anything is written."""
+        """The INSERT VALUES batch as a DataFrame, nothing written: ON
+        CONFLICT resolves it against the table first."""
+        return self._frame(name, self.coerce_rows(name, rows))
+
+    def coerce_rows(
+        self, name: str, rows: list[dict[str, Any]]
+    ) -> pa.Table | DataFrame:
+        """INSERT VALUES rows coerced to ``name``'s declared schema (an
+        omitted column takes its DEFAULT, else NULL; an IMAGE resolves to
+        its file; each value converts to its declared type) as the batch
+        ``store.append`` writes (``_batch``)."""
         meta = self.catalog.get(name)
         declared = {c.name for c in meta.columns}
         coerced = []
@@ -572,8 +683,7 @@ class Engine:
                 if cname in row:
                     val = row[cname]
                 elif col.has_default:
-                    # round-13: an OMITTED column takes its DEFAULT; an
-                    # explicit NULL stays NULL (DuckDB/ANSI, probed)
+                    # an explicit NULL stays NULL (DuckDB/ANSI)
                     val = col.default
                 else:
                     val = None
@@ -588,10 +698,10 @@ class Engine:
                     ) from exc
             coerced.append(out)
         try:
-            return self.spark.createDataFrame(coerced, meta.schema)
-        except TypeError as exc:
-            # Round-14: PySparkTypeError (a TypeError) must not escape
-            # the dialect raw — name the table and declared schema.
+            return self._batch(meta.schema, coerced)
+        except (TypeError, pa.ArrowException) as exc:
+            # A PySparkTypeError (a TypeError) must not escape the dialect
+            # raw: name the table and the declared schema.
             raise ValueError(
                 f"INSERT into '{name}': a value does not fit the declared "
                 f"schema {meta.schema.simpleString()}: {exc}"
@@ -986,11 +1096,34 @@ class Engine:
     def _register_ingested(
         self, name: str, df: DataFrame, partition_by: list[str] | None
     ) -> int:
+        self._check_new(name)
+        return self._write_frame(name, df, partition_by)
+
+    def _check_new(self, name: str) -> None:
         if name in self.catalog:
             raise ValueError(f"table '{name}' already exists")
         if name in self.views:
             raise ValueError(f"'{name}' already exists as a view")
-        return self._write_frame(name, df, partition_by)
+
+    @staticmethod
+    def _frame_meta(
+        name: str, df: DataFrame, partition_by: list[str] | None
+    ) -> TableMeta:
+        """A table whose declared schema is ``df``'s."""
+        return TableMeta(
+            name=name,
+            columns=[
+                ColumnDef(f.name, f.dataType.simpleString())
+                for f in df.schema.fields
+            ],
+            partition_by=partition_by or [],
+        )
+
+    @staticmethod
+    def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+        """``df`` counting its rows into an Observation as it runs."""
+        obs = Observation()
+        return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
     def _write_frame(
         self,
@@ -1004,16 +1137,8 @@ class Engine:
         entry exists only once the write has finished, so a failed ingest
         leaves no phantom entry. The row count rides the write via an
         Observation — no second scan."""
-        meta = TableMeta(
-            name=name,
-            columns=[
-                ColumnDef(f.name, f.dataType.simpleString())
-                for f in df.schema.fields
-            ],
-            partition_by=partition_by or [],
-        )
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        meta = self._frame_meta(name, df, partition_by)
+        df, obs = self._counted(df)
         self.store.overwrite(name, df, meta.partition_by, meta, keep)
         return int(obs.get["rows"] or 0)
 
@@ -1076,10 +1201,24 @@ class Engine:
         """Direct, native, typed Parquet ingestion — the capability the
         reference fakes by shelling out to parquet-tools / a pandas
         subprocess to round-trip through CSV, erasing all types
-        (pkg/importer/importer.go:89-205). One Spark read, zero conversions,
-        full schema fidelity, distributed."""
+        (pkg/importer/importer.go:89-205).
+
+        One regular file with no ``partition_by`` is adopted as it is: one
+        no-op Spark pass reads every value (so a file Spark cannot read is
+        refused here, not at the first query) and counts the rows, then
+        the file is copied unchanged into the new table's first version.
+        A directory, a glob or a partitioned ingest is rewritten by one
+        distributed Spark write, the only path that lays files out
+        again."""
         df = self.spark.read.parquet(path)
-        return self._register_ingested(name, df, partition_by)
+        if partition_by or not os.path.isfile(path):
+            return self._register_ingested(name, df, partition_by)
+        self._check_new(name)
+        meta = self._frame_meta(name, df, None)
+        counted, obs = self._counted(df)
+        counted.write.format("noop").mode("overwrite").save()
+        self.store.overwrite(name, path, None, meta)
+        return int(obs.get["rows"] or 0)
 
     def ingest_orc(
         self, path: str, name: str, partition_by: list[str] | None = None

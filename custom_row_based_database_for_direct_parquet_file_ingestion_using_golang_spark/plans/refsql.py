@@ -4373,6 +4373,9 @@ class SelectSpec:
     distinct_on: list[str] = field(default_factory=list)
     projections: list[tuple[str, str | None]] = field(default_factory=list)  # (item, alias)
     aggregates: list[tuple[str, str, str | None]] = field(default_factory=list)  # (fn, col, alias)
+    # For each SELECT-list aggregate, the number of projections written
+    # before it: without GROUP BY the output keeps the written order.
+    agg_at: list[int] = field(default_factory=list)
     star: bool = False
     # FROM t SAMPLE n PERCENT BY col — deterministic md5-bucket sampling
     # (byte-identical across runs, engines and task retries, unlike
@@ -4801,7 +4804,14 @@ def parse_select(
 
     # projection list until FROM
     scalar_items: list[tuple[int, list[str]]] = []
+
+    def mark_aggregates() -> None:
+        spec.agg_at += [len(spec.projections)] * (
+            len(spec.aggregates) - len(spec.agg_at)
+        )
+
     while cur.peek_kw() != "from":
+        mark_aggregates()
         if (
             cur.done()
             or cur.peek() == ")"
@@ -5197,6 +5207,7 @@ def parse_select(
                 spec.aggregates.append(("_expr", name, alias))
             else:
                 spec.projections.append((name, alias))
+    mark_aggregates()
     cur.expect_kw("from")
     spec.relation = _relation(cur, weak_typing, resolver)
     # ``SELECT t.v FROM t``: a qualified reference to the relation's name
@@ -6162,6 +6173,18 @@ def _window_column(
     return getattr(F, fn)(src).over(w)
 
 
+def _written_order(spec: SelectSpec, group, plain: list, aggs: list) -> list:
+    """The output items ``plain`` (one per projection) and ``aggs`` (one
+    per aggregate; None drops it) in the dialect's output order: as
+    written without GROUP BY, else the projections first."""
+    at = [] if group else spec.agg_at
+    out = list(plain)
+    for j in reversed(range(len(aggs))):
+        if aggs[j] is not None:
+            out.insert(at[j] if j < len(at) else len(plain), aggs[j])
+    return out
+
+
 def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
     if "qualify" in clauses and not spec.windows:
         raise ParseError("QUALIFY requires a window function in the SELECT")
@@ -6243,11 +6266,15 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
         if spec.star:
             out_names = list(df.columns)
         else:
-            out_names = [alias or item for item, alias in spec.projections]
-            out_names += [
-                alias or agg_default_name(fn, col)
-                for fn, col, alias in spec.aggregates
-            ]
+            out_names = _written_order(
+                spec,
+                clauses.get("group_by"),
+                [alias or item for item, alias in spec.projections],
+                [
+                    alias or agg_default_name(fn, col)
+                    for fn, col, alias in spec.aggregates
+                ],
+            )
             out_names += [alias for _, _, alias, _, _, _ in spec.windows]
         resolved_order = []
         for col, desc, nulls in clauses["order_by"]:
@@ -6459,19 +6486,24 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
                 base = F.col(ref)
             elif name in df.columns or (group and name in group):
                 base = F.col(name)
+            elif name.lower() in ("current_date", "current_timestamp"):
+                # SQL's parenthesis-free clock functions
+                base = F.expr(name).alias(name)
             else:
                 base = F.lit(None).alias(name)
             cols.append(base.alias(alias) if alias else base)
         from ..operators.query import agg_default_name
 
         hidden_aggs = set(clauses.get("having_hidden", ()))
-        for fn, col, alias in spec.aggregates:
-            name = alias or agg_default_name(fn, col)
-            if name in hidden_aggs:
-                # round-10: added only so HAVING could reference it —
-                # not part of the declared SELECT list
-                continue
-            cols.append(F.col(name))
+        # an aggregate added only so HAVING could reference it is not
+        # part of the declared SELECT list
+        names = [alias or agg_default_name(fn, col) for fn, col, alias in spec.aggregates]
+        cols = _written_order(
+            spec,
+            group,
+            cols,
+            [None if n in hidden_aggs else F.col(n) for n in names],
+        )
         if group and not spec.aggregates:
             # Lenient GROUP BY: surface the implicit COUNT(*) column
             # (select_negative_test.go:34-68 asserts it appears).

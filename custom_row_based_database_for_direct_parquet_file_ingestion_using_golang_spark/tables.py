@@ -12,15 +12,20 @@ live one. Layout under the engine root::
     tables/<name>-<id>/       TableMeta.path, fixed when the table is created
         v0/ ... v<N>/         immutable Parquet data dirs; v<N> is live
 
-* append  = Spark's own file commit into the live ``v<N>`` — each
-  executor writes its own part files; no global lock. The streaming
-  sink's epoch commit (``append_prefixed``) is the other in-place write:
-  staged files renamed into ``v<N>``.
-* rewrite = write ``v<N+1>`` beside the live version, commit data and
-  schema together in one catalog save (temp file + fsync + ``os.replace``),
-  then delete the versions past ``keep_snapshots``. A kill before the save
-  leaves ``v<N>`` live; after it, ``v<N+1>``. Never a mix, never new files
-  under the old schema.
+* append  = new files in the live ``v<N>``. A batch the driver already
+  holds (a pyarrow Table: literal INSERT rows) is written as one snappy
+  Parquet file staged as ``_insert-<uuid>`` in the table directory and
+  renamed in, so it appears whole or not at all. A DataFrame goes through
+  Spark's own file commit: each executor writes its own part files, no
+  global lock, and a reader during the commit can see some of them. The
+  streaming sink's epoch commit (``append_prefixed``) is the other
+  in-place write: staged files renamed into ``v<N>``.
+* rewrite = write ``v<N+1>`` beside the live version (a Spark job, a
+  driver-held Table, or an uploaded Parquet file copied in unchanged),
+  commit data and schema together in one catalog save (temp file + fsync
+  + ``os.replace``), then delete the versions past ``keep_snapshots``. A
+  kill before the save leaves ``v<N>`` live; after it, ``v<N+1>``. Never
+  a mix, never new files under the old schema.
 * retired versions ``v<k>``, ``k < N``, are the time-travel snapshots
   (``versions``, ``read_version``, ``vacuum``).
 * recovery: opening the store deletes what the catalog does not reference
@@ -50,7 +55,10 @@ from __future__ import annotations
 import dataclasses
 import os
 import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Catalog, TableMeta
@@ -59,6 +67,19 @@ from .commit import fresh_path, remove_path, remove_temp_files, remove_unreferen
 
 def _version_of(entry: str) -> int | None:
     return int(entry[1:]) if entry[:1] == "v" and entry[1:].isdigit() else None
+
+
+def _part_name() -> str:
+    return f"part-{uuid.uuid4().hex}.parquet"
+
+
+def _write_table(table: pa.Table, path: str) -> None:
+    pq.write_table(table, path, compression="snappy")
+
+
+#: What a write puts into a table: a Spark job's output, a batch the driver
+#: holds, or (``overwrite`` only) the path of a Parquet file to copy in.
+Data = DataFrame | pa.Table | str
 
 
 class ParquetTableStore:
@@ -121,8 +142,22 @@ class ParquetTableStore:
             if key[0] == meta.path:
                 self._scans.pop(key, None)
 
-    def append(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
+    def append(self, name: str, df: DataFrame | pa.Table, partition_by: list[str] | None = None) -> None:
+        """Add ``df``'s rows to the live version in place (module
+        docstring). A pyarrow Table needs an unpartitioned table."""
         meta = self.catalog.get(name)
+        if isinstance(df, pa.Table):
+            if partition_by or meta.partition_by:
+                raise ValueError(f"table '{name}' is partitioned: append a DataFrame")
+            stage = os.path.join(self._dir(meta), f"_insert-{uuid.uuid4().hex}")
+            try:
+                _write_table(df, stage)
+                os.rename(stage, os.path.join(self._version_dir(meta, meta.version), _part_name()))
+            except BaseException:
+                remove_path(stage)
+                raise
+            self._wrote(meta)
+            return
         writer = df.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -175,7 +210,7 @@ class ParquetTableStore:
     def overwrite(
         self,
         name: str,
-        df: DataFrame,
+        df: Data,
         partition_by: list[str] | None = None,
         meta: TableMeta | None = None,
         keep: int | None = None,
@@ -185,17 +220,18 @@ class ParquetTableStore:
         schema, in one catalog commit. A table not in the catalog is
         created in a fresh directory as ``v0``. ``keep`` overrides
         ``keep_snapshots`` for this commit (0 for CREATE OR REPLACE, whose
-        history dies with the old definition)."""
+        history dies with the old definition).
+
+        ``df`` is a DataFrame, a pyarrow Table (one file; an empty Table
+        under ``partition_by`` leaves the version empty) or the path of a
+        Parquet file, copied in unchanged (unpartitioned only)."""
         old = self.catalog.get(name) if meta is None or name in self.catalog else None
         if old is None:
             new = dataclasses.replace(meta, path=fresh_path("tables", name), version=0)
         else:
             new = dataclasses.replace(meta or old, path=old.path, version=old.version + 1)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
         try:
-            writer.parquet(self._version_dir(new, new.version))
+            self._fill(self._version_dir(new, new.version), df, partition_by)
             if old is None:
                 self.catalog.add_table(new)
             else:
@@ -206,6 +242,24 @@ class ParquetTableStore:
             raise
         if old is not None:
             self.vacuum(name, self.keep_snapshots if keep is None else keep)
+
+    @staticmethod
+    def _fill(path: str, df: Data, partition_by: list[str] | None) -> None:
+        """Write ``df`` as the new version directory ``path``."""
+        if isinstance(df, DataFrame):
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(path)
+            return
+        if partition_by and not (isinstance(df, pa.Table) and df.num_rows == 0):
+            raise ValueError("a partitioned version is written from a DataFrame")
+        os.makedirs(path)
+        if isinstance(df, pa.Table):
+            if not partition_by:
+                _write_table(df, os.path.join(path, _part_name()))
+        else:
+            shutil.copyfile(df, os.path.join(path, _part_name()))
 
     def drop(self, name: str) -> None:
         """DROP: commit the catalog without the table, then delete its

@@ -137,6 +137,21 @@ def test_dropped_table_directory_and_stage_dirs_removed(spark, tmp_path):
     _assert_clean(e2)
 
 
+def test_staged_insert_file_removed(spark, tmp_path):
+    """Kill after a literal INSERT wrote its staged ``_insert-<uuid>``
+    file, before the rename into the live version: the batch never
+    appears, and reopening deletes the staged file."""
+    root = str(tmp_path / "db")
+    e = _make(spark, root)
+    [live] = glob.glob(os.path.join(e.store.table_path("t"), "part-*.parquet"))[-1:]
+    staged = os.path.join(_table_dir(e), "_insert-0123456789abcdef")
+    shutil.copyfile(live, staged)  # a complete batch file, never renamed in
+    e2 = Engine(spark, root)
+    assert not os.path.exists(staged)
+    assert _rows(e2) == {(1, "one"), (2, "two")}
+    _assert_clean(e2)
+
+
 _CHILD = textwrap.dedent(
     """
     import os, signal, sys

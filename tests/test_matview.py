@@ -47,7 +47,7 @@ def test_mv_create_read_refresh_incremental(eng):
     eng.ref_sql("INSERT INTO sales VALUES ('east', 9.5, 6)")
     eng.ref_sql("INSERT INTO sales VALUES ('north', 1.0, 1)")
     msg = eng.ref_sql("REFRESH MATERIALIZED VIEW smv")
-    assert "incremental" in msg
+    assert "incremental (+2 file(s))" in msg  # one file per INSERT
     assert _mv_rows(eng) == {
         "east": (3, 40.0, 9.5, 20.0, 3.0),
         "west": (1, 5.25, 5.25, 5.25, 3.0),

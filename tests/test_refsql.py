@@ -7153,3 +7153,37 @@ def test_building_subquery_statements_runs_no_job(spark, tmp_path, caplog):
         sc.setLocalProperty("spark.jobGroup.id", None)
         qlog.removeHandler(caplog.handler)
     assert [r for r in caplog.records if r.levelno >= logging.ERROR] == []
+
+
+def test_ungrouped_item_order_and_bare_clocks_vs_duckdb(spark, tmp_path):
+    """Without GROUP BY, a SELECT mixing aggregates and plain items keeps
+    the written column order, also as an INSERT ... SELECT source (columns
+    bind by position); a bare CURRENT_DATE / CURRENT_TIMESTAMP evaluates
+    like its call form instead of projecting NULL."""
+    import datetime
+
+    e, con = _two_engines(
+        spark, str(tmp_path / "order"),
+        "CREATE TABLE t (k INT, v TEXT)",
+        "INSERT INTO t VALUES (1, 'a'), (2, 'b')",
+    )
+    for sql in (
+        "SELECT sum(k) AS s, 'total' AS x FROM t",
+        "SELECT 'total' AS x, count(*) AS n, max(v) AS m, 1 + 1 AS two FROM t",
+        "SELECT sum(k) AS s, 'x' AS x FROM t ORDER BY 2",
+    ):
+        assert e.ref_sql(sql).columns == [d[0] for d in con.execute(sql).description]
+        _assert_matches_duckdb(e, con, sql)
+    sql = "INSERT INTO t SELECT sum(k * 2), 'total' FROM t"
+    e.ref_sql(sql)
+    con.execute(sql)
+    _assert_matches_duckdb(e, con, "SELECT * FROM t")
+
+    sql = "SELECT k, CURRENT_DATE AS d, current_date() AS d2 FROM t ORDER BY k"
+    _assert_matches_duckdb(e, con, sql.replace("current_date()", "current_date"))
+    assert all(r.d == r.d2 for r in e.ref_sql(sql).collect())
+    [row] = e.ref_sql("SELECT CURRENT_TIMESTAMP AS ts, current_timestamp() AS ts2 FROM t WHERE k = 1").collect()
+    now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
+    assert row.ts == row.ts2 and abs(row.ts - now) < datetime.timedelta(minutes=5)
+    [(duck,)] = con.execute("SELECT CURRENT_TIMESTAMP FROM t WHERE k = 1").fetchall()
+    assert abs(duck.astimezone(datetime.timezone.utc).replace(tzinfo=None) - row.ts) < datetime.timedelta(minutes=5)

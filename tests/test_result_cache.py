@@ -143,6 +143,8 @@ def test_changing_statements_are_never_served(engine, builds, tmp_path):
         "SELECT k, UUID() AS u FROM c",
         "SELECT k, NOW() AS ts FROM c",
         "SELECT k, CURRENT_DATE AS d FROM c",
+        "SELECT k, current_date() AS d FROM c",
+        "SELECT k, CURRENT_TIMESTAMP AS ts FROM c",
         "SELECT k FROM c USING SAMPLE 50%",
         "SELECT * FROM c_now",
     ):
