@@ -884,6 +884,7 @@ class Engine:
             sets=update,
             drop=F.col(op).eqNullSafe("d"),
             returning=returning,
+            grows=insert,
         )
 
     def _rewrite(
@@ -895,6 +896,7 @@ class Engine:
         sets: dict[str, Any] | None = None,
         drop: Column | None = None,
         returning: bool = False,
+        grows: bool = False,
     ) -> int | tuple[int, DataFrame]:
         """The copy-on-write step UPDATE, DELETE and MERGE share: ``df`` is
         the live table plus helper columns, ``hit`` marks the rows the
@@ -902,7 +904,9 @@ class Engine:
         the write pass, so the table is scanned once (the reference reads
         everything into memory and counts while rewriting, update.go:87-106).
         ``sets`` rewrites columns of hit rows; ``drop`` marks rows that
-        leave the table. The result commits as the next version."""
+        leave the table; ``grows`` says the statement can add rows. The
+        result commits as the next version, written by the driver when the
+        table is small (:meth:`_driver_rewrite`), else by Spark's writer."""
         meta = self.catalog.get(name)
         declared = {c.name: c for c in meta.columns}
         for cname in sets or {}:
@@ -938,10 +942,27 @@ class Engine:
                 # commit retires the old version's files, so a lazy frame
                 # over them would break after the write.
                 ret = df.filter(hit).select(*cols).localCheckpoint(eager=True)
-            kept = df if drop is None else df.filter(~drop)
-            self.store.overwrite(name, kept.select(*cols), meta.partition_by)
+            kept = (df if drop is None else df.filter(~drop)).select(*cols)
+            if not grows and self._driver_rewrite(meta):
+                # toArrow runs the job Spark's writer would: it fills obs
+                # and raises any guard before anything is written.
+                kept = kept.toArrow().cast(to_arrow_schema(meta.schema))
+            self.store.overwrite(name, kept, meta.partition_by)
         n = next(iter(obs.get.values())) or 0
         return (n, ret) if returning else n
+
+    def _driver_rewrite(self, meta: TableMeta) -> bool:
+        """Whether a rewrite that adds no rows writes ``meta``'s next
+        version from the driver (one pyarrow file) instead of through a
+        Spark write job: the table is unpartitioned, pyarrow writes every
+        column as Spark does, and its live data files total at most
+        ``spark.sql.files.openCostInBytes``, Spark's cost of one file open
+        and the smallest split it cuts, so one file is already the
+        cheapest layout for the new version (tables.py)."""
+        if meta.partition_by or not _arrow_writable(meta.schema):
+            return False
+        limit = self.spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+        return self._parquet_file_stats(meta.name)[1] <= limit
 
     # ---- maintenance ------------------------------------------------------
 

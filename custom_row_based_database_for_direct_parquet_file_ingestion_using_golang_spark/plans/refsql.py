@@ -6173,11 +6173,12 @@ def _window_column(
     return getattr(F, fn)(src).over(w)
 
 
-def _written_order(spec: SelectSpec, group, plain: list, aggs: list) -> list:
+def _written_order(spec: SelectSpec, plain: list, aggs: list) -> list:
     """The output items ``plain`` (one per projection) and ``aggs`` (one
-    per aggregate; None drops it) in the dialect's output order: as
-    written without GROUP BY, else the projections first."""
-    at = [] if group else spec.agg_at
+    per aggregate; None drops it) in the order the SELECT list writes
+    them, with or without GROUP BY. Aggregates only HAVING uses come
+    last."""
+    at = spec.agg_at
     out = list(plain)
     for j in reversed(range(len(aggs))):
         if aggs[j] is not None:
@@ -6237,27 +6238,34 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
     # window aliases are appended to the projections below):
     #   * GROUP BY ALL → every non-aggregate SELECT item becomes a key.
     #   * Integer ordinals in GROUP BY / ORDER BY index the OUTPUT columns
-    #     (projections as written, then aggregates, then window aliases —
-    #     the dialect's output order). A GROUP BY ordinal must land on a
-    #     projection; ORDER BY ordinals may name any output column.
+    #     (the SELECT list as written, then window aliases — the dialect's
+    #     output order). A GROUP BY ordinal must land on a plain item;
+    #     ORDER BY ordinals may name any output column.
     if clauses.get("group_by") == ["__ALL__"]:
         if not spec.projections:
             raise ParseError("GROUP BY ALL needs at least one plain item")
         clauses["group_by"] = [item for item, _ in spec.projections]
     if clauses.get("group_by"):
-        group_items = (
-            [(c, None) for c in df.columns] if spec.star else spec.projections
+        # the SELECT list as written, each aggregate as ``...``
+        written = (
+            list(df.columns)
+            if spec.star
+            else _written_order(
+                spec,
+                [item for item, _ in spec.projections],
+                [...] * len(spec.agg_at),
+            )
         )
         resolved = []
         for g in clauses["group_by"]:
             if g.isdigit():
                 n = int(g)
-                if not 1 <= n <= len(group_items):
+                if not 1 <= n <= len(written) or written[n - 1] is ...:
                     raise ParseError(
                         f"GROUP BY ordinal {n} must reference a "
-                        f"non-aggregate SELECT item (1..{len(group_items)})"
+                        f"non-aggregate SELECT item (1..{len(written)})"
                     )
-                g = group_items[n - 1][0]
+                g = written[n - 1]
             resolved.append(g)
         clauses["group_by"] = resolved
     if clauses.get("order_by"):
@@ -6268,7 +6276,6 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
         else:
             out_names = _written_order(
                 spec,
-                clauses.get("group_by"),
                 [alias or item for item, alias in spec.projections],
                 [
                     alias or agg_default_name(fn, col)
@@ -6500,7 +6507,6 @@ def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
         names = [alias or agg_default_name(fn, col) for fn, col, alias in spec.aggregates]
         cols = _written_order(
             spec,
-            group,
             cols,
             [None if n in hidden_aggs else F.col(n) for n in names],
         )

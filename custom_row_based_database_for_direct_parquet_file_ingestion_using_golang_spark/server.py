@@ -27,10 +27,16 @@ Responses use the reference's envelope: ``{"success": bool, ...}`` with
 ``error`` on failure — its web client (web/static/js/app.js) keys off
 exactly these fields.
 
-Concurrency: one lock around engine mutations (upload/DML), mirroring the
-reference's per-database RWMutex (pkg/schema, storage.go); reads (query/
-tables/conversations) run unlocked — SparkSession is thread-safe for
-concurrent query execution.
+Concurrency: ``ThreadingHTTPServer`` serves each request on its own
+thread, and one readers-writer lock per server (``_RWLock``, writer
+preference) orders them, mirroring the reference's per-database RWMutex
+(pkg/schema, storage.go). A statement whose first word is SELECT, its
+rendering included, ``GET /api/tables`` and NL generation share the lock;
+every other statement (DML, DDL, and a WITH-led query too) and every
+upload holds it exclusively, because a rewrite's commit deletes the
+retired version a concurrent scan could still be reading. Conversation
+files take no part in it: each load-modify-save holds the
+``ConversationStore``'s own lock.
 
 Usage::
 

@@ -25,7 +25,18 @@ live one. Layout under the engine root::
   commit data and schema together in one catalog save (temp file + fsync
   + ``os.replace``), then delete the versions past ``keep_snapshots``. A
   kill before the save leaves ``v<N>`` live; after it, ``v<N+1>``. Never
-  a mix, never new files under the old schema.
+  a mix, never new files under the old schema. The engine hands a small
+  table's UPDATE, DELETE or row-preserving MERGE result over as a Table
+  (``Engine._driver_rewrite``: unpartitioned, pyarrow-writable, live data
+  files at most ``spark.sql.files.openCostInBytes``). That is Spark's
+  cost of one file open, and its planner never splits a file below it,
+  so such a table is read by one task whatever its layout and one file
+  is its cheapest form; a Spark write job would only add its fixed cost.
+* a driver-held Table is written with the encodings Spark's writer
+  picks where pyarrow can follow it: snappy, and a dictionary only for
+  the columns parquet-mr keeps one for (``_dictionary_columns``).
+  DECIMALs stay FIXED_LEN_BYTE_ARRAY (pyarrow 16 cannot store them as
+  INT32/INT64 as Spark does), which any reader accepts.
 * retired versions ``v<k>``, ``k < N``, are the time-travel snapshots
   (``versions``, ``read_version``, ``vacuum``).
 * recovery: opening the store deletes what the catalog does not reference
@@ -58,6 +69,7 @@ import shutil
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
@@ -73,8 +85,40 @@ def _part_name() -> str:
     return f"part-{uuid.uuid4().hex}.parquet"
 
 
+def _dictionary_columns(table: pa.Table) -> list[str]:
+    """The columns of ``table`` Spark's writer (parquet-mr) would store
+    dictionary-encoded. parquet-mr drops the dictionary of a column whose
+    first page comes out no smaller with it than as plain values
+    (``FallbackValuesWriter``); pyarrow keeps every dictionary, which
+    stores a near-unique column (keys, prices) about half again as large.
+    The tables the driver writes fit parquet-mr's 1 MB first page about
+    whole, so the rule is applied to each whole column. Booleans get no
+    dictionary from either writer; nested columns keep pyarrow's."""
+    keep = []
+    for name, col in zip(table.column_names, table.columns):
+        t = col.type
+        if pa.types.is_nested(t):
+            keep.append(name)
+            continue
+        n = len(col) - col.null_count
+        if pa.types.is_boolean(t) or n == 0:
+            continue
+        distinct = pc.unique(col.drop_null())
+        if t in (pa.string(), pa.large_string(), pa.binary(), pa.large_binary()):
+            plain = pc.sum(pc.binary_length(col)).as_py() + 4 * n
+            words = pc.sum(pc.binary_length(distinct)).as_py() + 4 * len(distinct)
+        else:
+            plain, words = n * t.byte_width, len(distinct) * t.byte_width
+        index = n * max(len(distinct) - 1, 0).bit_length() // 8
+        if words + index < plain:
+            keep.append(name)
+    return keep
+
+
 def _write_table(table: pa.Table, path: str) -> None:
-    pq.write_table(table, path, compression="snappy")
+    pq.write_table(
+        table, path, compression="snappy", use_dictionary=_dictionary_columns(table)
+    )
 
 
 #: What a write puts into a table: a Spark job's output, a batch the driver

@@ -2014,33 +2014,32 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         tokenize("text").alias("toks"),
         tokenize(F.lower("text")).alias("toks_lower"),
     )
+    # Materialize the scores ONCE, before the filter: the span stage
+    # consumes the survivors from three subtrees (gram stream, apply
+    # join, feature attach), each of which would otherwise re-run the
+    # full tokenize + lang-ID + quality HOF pipeline. Checkpointing
+    # ahead of the filter also keeps Catalyst from pushing the filter,
+    # with the scoring inlined into it, below the repartition, where it
+    # would run in the scan's single task. One compact row per doc
+    # (id, scores, norm tokens), disk-spillable, same trade-off as
+    # minhash_lsh_pairs; norm_tokens is also computed here exactly once
+    # instead of twice inside the text-level span operator.
+    from ..operators.text import norm_tokens
+
     scored = toked.select(
         "doc_id",
-        "text",
         lang_guess_from_tokens(F.col("toks_lower")).alias("guess"),
         quality_score_from_tokens("text", F.col("toks"), F.col("toks_lower")).alias(
             "quality"
         ),
         F.size("toks").cast("int").alias("n_tokens"),
-    )
-    kept = scored.filter(
+        norm_tokens("text").alias("ntoks"),
+    ).localCheckpoint()
+    kept_t = scored.filter(
         (F.col("quality") >= 0.6)
         & (F.col("guess") != "und")
         & F.col("n_tokens").between(5, 1000)
-    )
-    # Materialize the scored survivors ONCE (round-15, guide §2.4): the
-    # span stage consumes `kept` from three subtrees (gram stream, apply
-    # join, feature attach), each of which would otherwise re-run the
-    # full tokenize + lang-ID + quality HOF pipeline — plan-audited at 3
-    # document scans with zero reuse. One compact row per surviving doc
-    # (id, guess, norm tokens), disk-spillable, same trade-off as
-    # minhash_lsh_pairs; norm_tokens is also computed here exactly once
-    # instead of twice inside the text-level span operator.
-    from ..operators.text import norm_tokens
-
-    kept_t = kept.select(
-        "doc_id", "guess", norm_tokens("text").alias("ntoks")
-    ).localCheckpoint()
+    ).select("doc_id", "guess", "ntoks")
     # Lee et al.'s ExactSubstr cut: every ≥k-token span whose windows
     # also occur elsewhere in the KEPT corpus is removed from the
     # training stream (docs survive with the duplicated substrings cut);

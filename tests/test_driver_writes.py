@@ -1,5 +1,7 @@
 """Literal INSERT batches, empty versions and single-file Parquet ingests
-are written by the driver, without a Spark job (engine.py, tables.py).
+are written by the driver, without a Spark job, and so are the rewrites
+of small tables for UPDATE, DELETE and row-preserving MERGEs, after one
+``toArrow()`` job (engine.py, tables.py).
 
 Each test checks that the driver-written files read back exactly as
 Spark's own writer wrote the same rows, that other readers (DuckDB) read
@@ -9,6 +11,7 @@ file on a 4-core box with a cold JVM, most of it the first test's.
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import decimal
 import filecmp
@@ -18,6 +21,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from custom_row_based_database_for_direct_parquet_file_ingestion_using_golang_spark import (
     Engine,
@@ -275,3 +279,137 @@ def test_types_without_a_pyarrow_form_use_spark_writer(spark, tmp_path):
     assert _sorted_rows(e, "iv") == [
         (1, datetime.timedelta(days=1, seconds=5)), (2, None)
     ]
+
+
+# -- small-table rewrites (UPDATE, DELETE, MERGE) ----------------------------
+
+_OPEN_COST = "spark.sql.files.openCostInBytes"
+
+
+def _spark_wrote(e: Engine, name: str) -> bool:
+    """Whether the live version of ``name`` came from Spark's file commit,
+    which leaves ``_SUCCESS``; the driver writes one Parquet file only."""
+    return os.path.exists(os.path.join(e.store.table_path(name), "_SUCCESS"))
+
+
+@contextlib.contextmanager
+def _open_cost(spark, value: str):
+    old = spark.conf.get(_OPEN_COST)
+    spark.conf.set(_OPEN_COST, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(_OPEN_COST, old)
+
+
+def test_update_delete_read_back_as_spark_wrote_them(spark, tmp_path):
+    """Every declared type through an UPDATE and a DELETE on the driver
+    path reads back equal to the same statements written by Spark's
+    writer (forced by a zero ``openCostInBytes``), and DuckDB reads the
+    driver's file."""
+    import duckdb
+
+    e = Engine(spark, str(tmp_path / "db"))
+    for name in ("driver", "spark"):
+        e.create_table(name, COLUMNS)
+        e.insert_rows(name, ROWS)
+
+    def statements(name: str) -> tuple[int, int]:
+        updated = e.update(
+            name,
+            {"r_text": "changed", "s_big": F.col("s_big") + 1, "s_dec": "7.125"},
+            "k <= 2",
+        )
+        return updated, e.delete(name, "k = 4")
+
+    assert statements("driver") == (2, 1)
+    assert not _spark_wrote(e, "driver")
+    with _open_cost(spark, "0"):
+        assert statements("spark") == (2, 1)
+    assert _spark_wrote(e, "spark")
+    got = _sorted_rows(e, "driver")
+    assert got == _sorted_rows(e, "spark")
+    assert [(r.k, r.r_text, r.s_dec) for r in got] == [
+        (1, "changed", decimal.Decimal("7.13")),
+        (2, "changed", decimal.Decimal("7.13")),
+        (3, None, decimal.Decimal("5.00")),
+    ]
+
+    [file] = _data_files(e, "driver")
+    con = duckdb.connect()
+    assert con.execute(
+        f"SELECT k, r_text, s_big, s_date, s_arr, s_struct.y FROM read_parquet('{file}') ORDER BY k"
+    ).fetchall() == [
+        (1, "changed", 2**62 + 1, datetime.date(1999, 12, 31), [1, None, 3], "seven"),
+        (2, "changed", -4, datetime.date(2020, 2, 2), [], None),
+        (3, None, None, datetime.date(2024, 2, 29), None, None),
+    ]
+
+
+def test_rewrites_that_keep_spark_writer(spark, tmp_path):
+    """Only an unpartitioned, pyarrow-writable table at most
+    ``openCostInBytes`` big, rewritten by a statement that adds no rows,
+    is written by the driver; each other case keeps Spark's writer."""
+    e = Engine(spark, str(tmp_path / "db"))
+    e.ref_sql("CREATE TABLE t (k INT, v TEXT)")
+    e.ref_sql("INSERT INTO t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    e.ref_sql("CREATE TABLE s (k INT, v TEXT)")
+    e.ref_sql("INSERT INTO s VALUES (2, 'B'), (9, 'Z')")
+    merge = "MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE SET *"
+
+    for sql, n in (
+        ("UPDATE t SET v = 'x' WHERE k = 1", 1),
+        ("DELETE FROM t WHERE k = 3", 1),
+        (merge, 1),
+        ("UPDATE t SET v = s.v FROM s WHERE t.k = s.k", 1),
+    ):
+        assert e.ref_sql(sql) == n
+        assert not _spark_wrote(e, "t") and len(_data_files(e, "t")) == 1
+    # a MERGE that can insert
+    assert e.ref_sql(merge + " WHEN NOT MATCHED THEN INSERT *") == 2
+    assert _spark_wrote(e, "t")
+    assert e.ref_sql("INSERT INTO t VALUES (2, 'q') ON CONFLICT (k) DO UPDATE SET v = 'u'") == 1
+    assert _spark_wrote(e, "t")
+    # a live version over the threshold
+    e.ref_sql("DELETE FROM t WHERE k = 9")
+    assert not _spark_wrote(e, "t")
+    size = sum(os.path.getsize(f) for f in _data_files(e, "t"))
+    with _open_cost(spark, f"{size - 1}b"):
+        e.ref_sql("UPDATE t SET v = 'y' WHERE k = 1")
+    assert _spark_wrote(e, "t")
+    assert sorted(tuple(r) for r in e.table("t").collect()) == [(1, "y"), (2, "u")]
+
+    # a partitioned table
+    e.ref_sql("CREATE TABLE p (k INT, g TEXT) PARTITIONED BY (g)")
+    e.ref_sql("INSERT INTO p VALUES (1, 'x'), (2, 'y')")
+    assert e.ref_sql("UPDATE p SET k = 5 WHERE k = 1") == 1
+    assert _spark_wrote(e, "p")
+    # a type pyarrow does not write as Spark does
+    e.create_table("iv", [("k", "INT"), ("d", "interval day to second")])
+    e.insert_rows("iv", [{"k": 1, "d": datetime.timedelta(days=1)}, {"k": 2}])
+    assert e.delete("iv", "k = 2") == 1
+    assert _spark_wrote(e, "iv")
+    assert _sorted_rows(e, "iv") == [(1, datetime.timedelta(days=1))]
+
+
+def test_driver_rewrite_returning_and_guard(spark, tmp_path):
+    """RETURNING and the duplicate-match guard behave on the driver path
+    as on Spark's: the returned rows carry the new values, and a guarded
+    MERGE raises before anything is committed."""
+    e = Engine(spark, str(tmp_path / "db"))
+    e.ref_sql("CREATE TABLE t (k INT, v TEXT)")
+    e.ref_sql("INSERT INTO t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    got = e.ref_sql("UPDATE t SET v = 'x' WHERE k >= 2 RETURNING k, v")
+    assert sorted(tuple(r) for r in got.collect()) == [(2, "x"), (3, "x")]
+    got = e.ref_sql("DELETE FROM t WHERE k = 3 RETURNING k, v")
+    assert [tuple(r) for r in got.collect()] == [(3, "x")]
+    assert not _spark_wrote(e, "t")
+
+    e.ref_sql("CREATE TABLE s (k INT, v TEXT)")
+    e.ref_sql("INSERT INTO s VALUES (1, 'p'), (1, 'q')")
+    live = e.store.table_path("t")
+    with pytest.raises(ValueError, match="multiple source rows"):
+        e.ref_sql("MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE SET *")
+    assert e.store.table_path("t") == live
+    assert os.listdir(os.path.dirname(live)) == [os.path.basename(live)]
+    assert sorted(tuple(r) for r in e.table("t").collect()) == [(1, "a"), (2, "x")]

@@ -793,3 +793,41 @@ def test_round13_bracket_indexing_plan(spark, sf_dir):
     t = plan_text(df)
     assert "element_at" in t and "slice" in t
     assert "Exchange" not in t
+
+
+def _subtree_nodes(plan: str, node: str) -> list[list[str]]:
+    """The node names under each ``node`` in a logical plan's tree string."""
+    rows = []
+    for line in plan.splitlines():
+        body = line.lstrip(" :+-")
+        rows.append((len(line) - len(body), body.split(" ", 1)[0]))
+    out = []
+    for i, (depth, name) in enumerate(rows):
+        if name == node:
+            below = []
+            for d, n in rows[i + 1:]:
+                if d <= depth:
+                    break
+                below.append(n)
+            out.append(below)
+    return out
+
+
+def test_curate_scoring_runs_above_the_repartition(spark, sf_dir, monkeypatch):
+    """The documents file is one row group, so ``ensure_parallelism``
+    round-robins it; the scoring must run above that Repartition. A
+    filter on the scores pushed below it would evaluate tokenize, lang-ID
+    and quality inside the scan's single task."""
+    DataFrame = type(spark.range(1))
+    plans = []
+    real = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(str(self._jdf.queryExecution().optimizedPlan()))
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    w.QUERIES["pipeline_curate_corpus"](spark, sf_dir)
+    below = [b for p in plans for b in _subtree_nodes(p, "Repartition")]
+    assert any("Relation" in b for b in below), plans
+    assert not any("Filter" in b for b in below), plans

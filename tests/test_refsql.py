@@ -7187,3 +7187,24 @@ def test_ungrouped_item_order_and_bare_clocks_vs_duckdb(spark, tmp_path):
     assert row.ts == row.ts2 and abs(row.ts - now) < datetime.timedelta(minutes=5)
     [(duck,)] = con.execute("SELECT CURRENT_TIMESTAMP FROM t WHERE k = 1").fetchall()
     assert abs(duck.astimezone(datetime.timezone.utc).replace(tzinfo=None) - row.ts) < datetime.timedelta(minutes=5)
+
+
+def test_grouped_item_order_and_ordinals_vs_duckdb(spark, tmp_path):
+    """With GROUP BY the output keeps the SELECT list's written order too,
+    and GROUP BY / ORDER BY ordinals index that order; a GROUP BY ordinal
+    naming an aggregate is refused."""
+    e, con = _two_engines(
+        spark, str(tmp_path / "gorder"),
+        "CREATE TABLE t (k INT, v TEXT)",
+        "INSERT INTO t VALUES (1, 'a'), (2, 'b'), (3, 'a')",
+    )
+    for sql in (
+        "SELECT sum(k) AS s, v FROM t GROUP BY v",
+        "SELECT count(*) AS n, v, max(k) AS m FROM t GROUP BY v",
+        "SELECT sum(k) AS s, v FROM t GROUP BY 2 ORDER BY 1 DESC",
+        "SELECT max(k) AS m, v, count(*) AS n FROM t GROUP BY v ORDER BY 3, 2",
+    ):
+        assert e.ref_sql(sql).columns == [d[0] for d in con.execute(sql).description]
+        _assert_matches_duckdb(e, con, sql)
+    with pytest.raises(ParseError, match="non-aggregate SELECT item"):
+        e.ref_sql("SELECT sum(k) AS s, v FROM t GROUP BY 1")
