@@ -13,9 +13,10 @@ streaming epoch, DROP, vacuum) — so it retires every entry, and a commit
 that finishes while a statement runs leaves that statement's entry stale
 at once. Errors are never kept.
 
-Only a single SELECT, WITH ... SELECT, FROM-first or VALUES statement that
-returns a DataFrame is kept, and only when its plan gives the same answer
-on every run over the same files (``reusable``, checked on a miss only):
+Only a read-only statement (``read_only``: a single SELECT, FROM-first or
+VALUES statement, or a WITH list leading to one) is kept, and only when its
+plan gives the same answer on every run over the same files (``reusable``,
+checked on a miss only):
 
 * Catalyst reads the analyzed plan as deterministic (this refuses
   ``random()``, ``uuid()``, ``shuffle()``);
@@ -62,13 +63,24 @@ _CLOCK_CALL = re.compile(
 )
 _SAMPLE = re.compile(r"^[ :|+-]*Sample ", re.M)
 _CONSTANT_LEAVES = frozenset({"LocalRelation", "Range", "OneRowRelation"})
-_READ_ONLY = re.compile(r"\s*(select|with|values|from)\b", re.I)
+_FIRST_WORD = re.compile(r"\s*(\w+)")
 
 
 def read_only(text: str) -> bool:
-    """One SELECT / WITH / FROM-first / VALUES statement (a WITH ... DML
-    statement returns no DataFrame, so the caller never keeps it)."""
-    return ";" not in text and _READ_ONLY.match(text) is not None
+    """Whether ``text`` is one statement that only reads: SELECT, FROM-first
+    or VALUES, or a WITH list leading to one of those. WITH ... INSERT /
+    UPDATE / DELETE / MERGE, a script (any ';') and every other statement
+    are not. The REST server shares its lock on this rule, and the cache
+    keeps only such statements."""
+    head = _FIRST_WORD.match(text)
+    if head is None or ";" in text:
+        return False
+    verb = head.group(1).lower()
+    if verb == "with":
+        from .plans.refsql import with_leads_to
+
+        verb = with_leads_to(text)
+    return verb in ("select", "from", "values")
 
 
 def _under(path: str, root: str) -> bool:

@@ -30,13 +30,14 @@ exactly these fields.
 Concurrency: ``ThreadingHTTPServer`` serves each request on its own
 thread, and one readers-writer lock per server (``_RWLock``, writer
 preference) orders them, mirroring the reference's per-database RWMutex
-(pkg/schema, storage.go). A statement whose first word is SELECT, its
-rendering included, ``GET /api/tables`` and NL generation share the lock;
-every other statement (DML, DDL, and a WITH-led query too) and every
-upload holds it exclusively, because a rewrite's commit deletes the
-retired version a concurrent scan could still be reading. Conversation
-files take no part in it: each load-modify-save holds the
-``ConversationStore``'s own lock.
+(pkg/schema, storage.go). A read-only statement (``results.read_only``:
+SELECT, FROM-first, VALUES, or a WITH list leading to one), its rendering
+included, ``GET /api/tables`` and NL generation share the lock; every
+other statement (DML, DDL, WITH ... INSERT/UPDATE/DELETE/MERGE, a
+multi-statement script) and every upload holds it exclusively, because a
+rewrite's commit deletes the retired version a concurrent scan could
+still be reading. Conversation files take no part in it: each
+load-modify-save holds the ``ConversationStore``'s own lock.
 
 Usage::
 
@@ -60,6 +61,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from .commit import write_json_atomic
 from .engine import Engine
 from .plans import nl
+from .results import read_only
 
 _MAX_UPLOAD = 64 << 20  # reference: r.ParseMultipartForm(64 << 20)
 
@@ -491,14 +493,13 @@ class ApiHandler(BaseHTTPRequestHandler):
         self._json({"success": True, "result": rendered})
 
     def _execute_rendered(self, sql: str) -> str:
-        """Run one RefSQL statement under the lock its verb requires:
-        SELECTs share (concurrent reads), everything else is exclusive.
-        Rendering stays inside the scope — a rewrite's commit deletes the
-        retired version, which must never happen mid-collect."""
-        verb = sql.split(None, 1)[0].upper() if sql else ""
+        """Run one RefSQL statement under the lock its kind requires:
+        read-only statements share (concurrent reads), everything else is
+        exclusive. Rendering stays inside the scope — a rewrite's commit
+        deletes the retired version, which must never happen mid-collect."""
         scope = (
             self.rwlock.read_locked()
-            if verb == "SELECT"
+            if read_only(sql)
             else self.rwlock.write_locked()
         )
         with scope:

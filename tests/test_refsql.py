@@ -5510,6 +5510,52 @@ def test_cte_fronted_dml_vs_duckdb(spark, tmp_path):
     assert got == want_ids
 
 
+def test_cte_column_lists_and_from_first_body_vs_duckdb(spark, tmp_path):
+    """A CTE column list renames the body's columns by position, a
+    recursive CTE's too, and a WITH list may lead to a FROM-first body —
+    each checked against DuckDB on the same SQL."""
+    e, con = _two_engines(
+        spark, str(tmp_path / "ctecols"),
+        "CREATE TABLE t (k INT, v INT)",
+        "INSERT INTO t VALUES (1, 10), (2, 20)",
+    )
+    for sql in (
+        "WITH x (a, b) AS (SELECT 1, 2) SELECT a, b FROM x",
+        "WITH x (a, b) AS (SELECT k, v FROM t), y AS (SELECT a + b AS s "
+        "FROM x) SELECT s FROM y",
+        "WITH RECURSIVE r (n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM r "
+        "WHERE n < 5) SELECT n FROM r",
+        "WITH x AS (SELECT 1 AS a) FROM x",
+        "WITH x AS (SELECT 1 AS a) FROM x SELECT a + 1 AS b",
+        "WITH x (a) AS (FROM t SELECT v) FROM x WHERE a > 10",
+    ):
+        _assert_matches_duckdb(e, con, sql)
+    assert e.ref_sql("WITH x AS (SELECT 1 AS a) FROM x").collect() == [(1,)]
+    assert e.ref_sql(
+        "WITH x AS (SELECT 1 AS a) FROM x SELECT a + 1 AS b"
+    ).collect() == [(2,)]
+    with pytest.raises(ParseError, match="alias lists 1 columns"):
+        e.ref_sql("WITH x (a) AS (SELECT 1, 2) SELECT a FROM x")
+
+
+def test_json_arrow_left_operands_vs_duckdb(spark, tmp_path):
+    """The left operand of '->>' follows the one postfix-capture rule: a
+    struct field, an indexed list and a parenthesized group all work, as
+    in DuckDB."""
+    e, con = _two_engines(
+        spark, str(tmp_path / "jlhs"),
+        "CREATE TABLE jt (j TEXT)",
+        """INSERT INTO jt VALUES ('{"k": 2}')""",
+    )
+    for sql in (
+        "SELECT {'a': j}.a ->> 'k' AS x FROM jt",
+        "SELECT [j][1] ->> 'k' AS x FROM jt",
+        "SELECT (j) ->> 'k' AS x FROM jt",
+    ):
+        _assert_matches_duckdb(e, con, sql)
+    assert e.ref_sql("SELECT [j][1] ->> 'k' AS x FROM jt").collect() == [("2",)]
+
+
 def test_insert_by_name_vs_duckdb(spark, tmp_path):
     """Round-13: ``INSERT INTO t BY NAME SELECT ...`` (DuckDB) — source
     columns bind to target columns by NAME in any order, missing

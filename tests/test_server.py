@@ -639,3 +639,48 @@ def test_round10_dialect_verbs_over_rest(api):
         "ON m.k = d.k2 GROUP BY d.label HAVING COUNT(*) > 1",
     )
     assert j["success"] and "even" in j["result"] and "odd" not in j["result"]
+
+
+@pytest.mark.parametrize(
+    "sql, lock",
+    [
+        ("WITH s AS (SELECT 1 AS a) SELECT a FROM s", "read"),
+        ("FROM t", "read"),
+        ("VALUES (1)", "read"),
+        ("SELECT 1", "read"),
+        ("WITH s AS (SELECT 1 AS k) DELETE FROM t WHERE k IN (SELECT k FROM s)",
+         "write"),
+        ("SELECT 1; DELETE FROM t", "write"),
+        ("DROP TABLE t", "write"),
+    ],
+)
+def test_statement_kind_chooses_the_lock(sql, lock):
+    """Read-only statements (WITH ... SELECT, FROM-first and VALUES too)
+    share the server's lock; a WITH list leading to DML, a script and
+    every other statement take it exclusively."""
+    from contextlib import contextmanager
+    from types import SimpleNamespace
+
+    from custom_row_based_database_for_direct_parquet_file_ingestion_using_golang_spark.server import (
+        ApiHandler,
+    )
+
+    taken = []
+
+    class SpyLock:
+        @contextmanager
+        def read_locked(self):
+            taken.append("read")
+            yield
+
+        @contextmanager
+        def write_locked(self):
+            taken.append("write")
+            yield
+
+    handler = SimpleNamespace(
+        rwlock=SpyLock(),
+        engine=SimpleNamespace(render_sql=lambda text: f"ran {text}"),
+    )
+    assert ApiHandler._execute_rendered(handler, sql) == f"ran {sql}"
+    assert taken == [lock]
