@@ -50,6 +50,7 @@ from .catalog import (
 from .commit import write_json_atomic
 from .functions.format import render_statement_result
 from .results import ResultCache, read_only, reusable
+from .sources import files
 from .tables import ParquetTableStore
 
 IMAGE_EXTENSIONS = (".jpg", ".jpeg", ".png", ".gif", ".bmp", ".tiff", ".webp")
@@ -1216,6 +1217,30 @@ class Engine:
         )
         self._write_empty(meta, keep=0)
 
+    def ingest(
+        self,
+        path: str,
+        name: str,
+        fmt: str | None = None,
+        *,
+        schema=None,
+        all_text: bool = False,
+        partition_by: list[str] | None = None,
+    ) -> int:
+        """Create table ``name`` from a file, directory or glob in the
+        format ``fmt`` spells, else the one ``path``'s extension names
+        (sources/files.py). Parquet goes to ``ingest_parquet``. CSV and
+        JSON Lines infer their types unless ``schema`` (a StructType or
+        DDL string) declares them; ``all_text=True`` keeps every CSV
+        column TEXT, as the reference's import does
+        (pkg/importer/importer.go:37-52). One distributed read, no
+        driver-side row loop."""
+        fmt = files.named(fmt) if fmt else files.format_of(path)
+        if fmt == "parquet":
+            return self.ingest_parquet(path, name, partition_by)
+        df = files.read(self.spark, path, fmt, schema, all_text)
+        return self._register_ingested(name, df, partition_by)
+
     def ingest_parquet(
         self, path: str, name: str, partition_by: list[str] | None = None
     ) -> int:
@@ -1231,7 +1256,7 @@ class Engine:
         A directory, a glob or a partitioned ingest is rewritten by one
         distributed Spark write, the only path that lays files out
         again."""
-        df = self.spark.read.parquet(path)
+        df = files.read(self.spark, path, "parquet")
         if partition_by or not os.path.isfile(path):
             return self._register_ingested(name, df, partition_by)
         self._check_new(name)
@@ -1241,34 +1266,6 @@ class Engine:
         self.store.overwrite(name, path, None, meta)
         return int(obs.get["rows"] or 0)
 
-    def ingest_orc(
-        self, path: str, name: str, partition_by: list[str] | None = None
-    ) -> int:
-        """Native ORC ingestion — the other columnar interchange format
-        Spark reads built-in (vectorized reader, predicate pushdown, column
-        pruning — the same scan-side optimizations as the parquet path).
-        Same contract as ``ingest_parquet``: one distributed read, typed
-        columns, no conversions."""
-        df = self.spark.read.orc(path)
-        return self._register_ingested(name, df, partition_by)
-
-    def export_table(
-        self,
-        name: str,
-        path: str,
-        fmt: str = "parquet",
-        partition_by: list[str] | None = None,
-    ) -> int:
-        """COPY t TO 'path': write a table out as parquet or CSV — the
-        export complement of the reference's import-only surface. Returns
-        the row count written. Distributed write (one file per partition);
-        callers wanting a single CSV file can coalesce afterwards — a
-        forced coalesce(1) here would serialize a 100 TB export through
-        one task. ``partition_by`` writes hive-layout subdirectories
-        (``col=value/``) so downstream scans partition-prune — the layout
-        a 100 TB corpus export needs for selective re-reads."""
-        return self.export_df(self.table(name), path, fmt, partition_by)
-
     def export_df(
         self,
         df: DataFrame,
@@ -1276,47 +1273,26 @@ class Engine:
         fmt: str = "parquet",
         partition_by: list[str] | None = None,
     ) -> int:
-        """Distributed export of an arbitrary DataFrame — the engine of
-        ``export_table`` and the dialect's ``COPY (SELECT ...) TO`` form
-        (export a query result without materializing a table first)."""
-        fmt = fmt.lower()
+        """``COPY t TO 'path'`` and ``COPY (SELECT ...) TO 'path'``: write
+        ``df`` out in the format ``fmt`` spells (sources/files.py), one
+        file per partition. Returns the row count written. No forced
+        ``coalesce(1)``: that would serialize a large export through one
+        task. ``partition_by`` writes hive-layout subdirectories
+        (``col=value/``) that later scans prune."""
+        fmt = files.named(fmt)
         if partition_by:
             missing = [c for c in partition_by if c not in df.columns]
             if missing:
                 raise ValueError(f"unknown PARTITION BY column(s) {missing}")
-        # Round-8 (advice): the row count rides the write pass via an
-        # Observation (as the DML rewrites do) instead of a separate count()
-        # job — one execution of the exported query, and the reported
-        # count is exactly the rows written even for nondeterministic
-        # sources.
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-
-        def _writer(d):
-            w = d.write.mode("overwrite")
-            return w.partitionBy(*partition_by) if partition_by else w
-
-        if fmt == "parquet":
-            _writer(df).parquet(path)
-        elif fmt == "csv":
-            _writer(df).option("header", True).csv(path)
-        elif fmt in ("json", "jsonl"):
-            # JSON Lines: one object per line — the interchange format LLM
-            # data pipelines actually move corpora in. Spark's json writer
-            # is already line-delimited; ``ignoreNullFields=False`` keeps
-            # NULL columns as explicit nulls so a re-ingest round-trips the
-            # schema instead of silently dropping sparse columns.
-            _writer(df).option("ignoreNullFields", False).json(path)
-        elif fmt == "orc":
-            _writer(df).orc(path)
-        else:
-            raise ValueError(
-                f"unsupported export format {fmt!r} (parquet|csv|jsonl|orc)"
-            )
-        return int(obs.get["n"] or 0)
+        # The count rides the write pass, so the exported query runs once
+        # and the count is exactly the rows written, even for a
+        # nondeterministic source.
+        counted, obs = self._counted(df)
+        files.write(counted, path, fmt, partition_by)
+        return int(obs.get["rows"] or 0)
 
     def export_database(self, path: str, fmt: str = "parquet") -> int:
-        """Round-13 ``EXPORT DATABASE 'path' [FORMAT ...]`` (the DuckDB
+        """``EXPORT DATABASE 'path' [FORMAT ...]`` (the DuckDB
         ops statement): every catalog table as one DISTRIBUTED write
         under ``<path>/tables/<name>/`` plus a ``manifest.json`` carrying
         the metadata files alone can't (declared types incl. IMAGE/
@@ -1330,11 +1306,7 @@ class Engine:
         counts ride the write pass as Observations); the manifest is
         metadata-only. The export is a portable snapshot a different
         engine root — or a different cluster — can IMPORT."""
-        fmt = fmt.lower()
-        if fmt not in ("parquet", "csv", "json", "jsonl", "orc"):
-            raise ValueError(
-                f"unsupported export format {fmt!r} (parquet|csv|jsonl|orc)"
-            )
+        fmt = files.named(fmt)
         if os.path.exists(path) and os.listdir(path):
             raise ValueError(
                 f"EXPORT DATABASE target '{path}' exists and is not empty"
@@ -1344,8 +1316,8 @@ class Engine:
         total = 0
         for name in self.catalog.show_tables():
             meta = self.catalog.get(name)
-            total += self.export_table(
-                name, os.path.join(path, "tables", name), fmt, None
+            total += self.export_df(
+                self.table(name), os.path.join(path, "tables", name), fmt
             )
             entry = meta.to_json()
             del entry["path"], entry["version"]  # storage state, not schema
@@ -1358,7 +1330,7 @@ class Engine:
         return total
 
     def import_database(self, path: str) -> int:
-        """Round-13 ``IMPORT DATABASE 'path'``: rebuild every exported
+        """``IMPORT DATABASE 'path'``: rebuild every exported
         table (declared schema, partition layout, PRIMARY KEY) and replay
         the logical views in creation order. ALL names are
         collision-checked against tables/views/matviews BEFORE anything
@@ -1370,7 +1342,7 @@ class Engine:
             raise ValueError(f"no manifest.json under '{path}' — not an export")
         with open(mpath) as f:
             manifest = json.load(f)
-        fmt = manifest.get("format", "parquet")
+        fmt = files.named(manifest.get("format", "parquet"))
         names = list(manifest["tables"]) + [
             v["name"] for v in manifest.get("views", [])
         ]
@@ -1400,16 +1372,7 @@ class Engine:
                 )
                 created_tables.append(name)
                 src = os.path.join(path, "tables", name)
-                if fmt == "parquet":
-                    df = self.spark.read.parquet(src)
-                elif fmt == "orc":
-                    df = self.spark.read.orc(src)
-                elif fmt == "csv":
-                    df = self.spark.read.schema(meta.schema).option(
-                        "header", True
-                    ).csv(src)
-                else:  # json / jsonl
-                    df = self.spark.read.schema(meta.schema).json(src)
+                df = files.read(self.spark, src, fmt, schema=meta.schema)
                 total += self.append_df(name, df)
             for v in manifest.get("views", []):
                 self.views.create(v["name"], v["sql"])
@@ -1467,45 +1430,3 @@ class Engine:
             )
             for c in meta.columns
         ]
-
-    def ingest_csv(
-        self,
-        path: str,
-        name: str,
-        infer_schema: bool = True,
-        all_text: bool = False,
-        partition_by: list[str] | None = None,
-    ) -> int:
-        """CSV ingestion. ``all_text=True`` reproduces the reference's
-        behavior of typing every imported column TEXT
-        (pkg/importer/importer.go:37-52); the default infers real types."""
-        df = self.spark.read.csv(path, header=True, inferSchema=infer_schema and not all_text)
-        if all_text:
-            df = df.select([F.col(c).cast("string").alias(c) for c in df.columns])
-        return self._register_ingested(name, df, partition_by)
-
-    def ingest_jsonl(
-        self,
-        path: str,
-        name: str,
-        schema=None,
-        partition_by: list[str] | None = None,
-    ) -> int:
-        """JSON Lines ingestion (one object per line — jsonl/ndjson, the
-        dominant corpus interchange format). With ``schema`` (a Spark
-        StructType or DDL string) the read is a single pass and malformed
-        lines surface in a ``_corrupt_record``-free FAILFAST error; without
-        it Spark samples the files to infer types (an extra read of the
-        sampled portion — fine for ingestion, avoid in hot loops).
-
-        The reference has no JSON source at all (CSV + Parquet-via-CSV
-        only, pkg/importer/importer.go); this extends the import surface
-        the same way ``ingest_parquet`` does: one distributed read, typed
-        columns, no driver-side row loop."""
-        reader = self.spark.read
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.option("mode", "FAILFAST").json(path)
-        if not df.columns:
-            raise ValueError(f"no JSON objects found under {path!r}")
-        return self._register_ingested(name, df, partition_by)

@@ -203,7 +203,6 @@ Round-12 extensions:
 
 from __future__ import annotations
 
-import os
 import re
 from collections import Counter
 from dataclasses import dataclass, field
@@ -216,6 +215,7 @@ from ..engine import guard
 from ..functions.compat import dual_compare, ref_like, truthy
 from ..operators.query import Query, agg_default_name, agg_spec, arg_col
 from ..results import CLOCK_FUNCTIONS
+from ..sources import files
 
 _TOKEN_RE = re.compile(
     r"""
@@ -3388,6 +3388,19 @@ class _Cursor:
     def done(self) -> bool:
         return self.i >= len(self.toks)
 
+    def end(self, after: str) -> None:
+        """Refuse a token left over after the statement ``after`` names."""
+        if not self.done():
+            raise ParseError(f"unexpected token {self.peek()!r} after {after}")
+
+    def int(self, what: str) -> int:
+        """Consume the integer that ``what`` takes."""
+        tok = self.next()
+        try:
+            return int(tok)
+        except ValueError:
+            raise ParseError(f"{what} takes an integer, got {tok!r}") from None
+
     def group(self) -> list[str]:
         """Consume the ``( ... )`` group at the cursor and return the
         tokens inside it."""
@@ -3694,6 +3707,17 @@ class ExprParser:
         ):
             buf.append(self.cur.next())
 
+    def _case(self) -> list[str]:
+        """Consume ``CASE ... END``, nested ones whole, as raw tokens for
+        Catalyst; its ANDs stay inside it."""
+        buf, depth = [], 0
+        while True:
+            t = self.cur.next()
+            depth += (t.lower() == "case") - (t.lower() == "end")
+            buf.append(_unquote_bare(t))
+            if depth == 0:
+                return buf
+
     def _is_outer(self, tok: str) -> bool:
         return _outer_ref(tok, self.scope)
 
@@ -3734,6 +3758,8 @@ class ExprParser:
         def one_operand() -> "list[str] | Column":
             if self.cur.peek() == "(" and self.cur.peek_kw(1) == "select":
                 return self._scalar_subquery()
+            if self.cur.peek_kw() == "case":
+                return self._case()
             out: list[str] = []
             t = self.cur.peek()
             if t != "(":
@@ -3866,6 +3892,8 @@ class ExprParser:
         t = self.cur.peek()
         if t == "(" and self.cur.peek_kw(1) == "select":
             return self._scalar_subquery(), None, None
+        if self.cur.peek_kw() == "case":
+            return self._raw(self._case()), None, None
         if t == "(":
             exact = not self._bare_group()
             self.cur.next()
@@ -4227,45 +4255,21 @@ def _contains_agg_call(buf: list[str]) -> bool:
     return has_agg
 
 
-def _sniff_file_format(path: str) -> str:
-    """A direct file query's format, from the path's extension."""
-    low = path.lower()
-    if low.endswith((".parquet", ".pq")):
-        return "parquet"
-    if low.endswith(".csv"):
-        return "csv"
-    if low.endswith((".jsonl", ".json", ".ndjson")):
-        return "json"
-    if low.endswith(".orc"):
-        return "orc"
-    raise ParseError(
-        f"can't infer a format from {path!r} — use read_parquet/"
-        "read_csv/read_json('path') to name it"
-    )
+def _file_format(
+    spelling: str | None, path: str = "", default: str | None = None
+) -> str:
+    """The file format a FORMAT name spells, else the one ``path``'s
+    extension names (sources/files.py), refused as a ParseError."""
+    try:
+        return files.named(spelling) if spelling else files.format_of(path, default)
+    except ValueError as ex:
+        raise ParseError(str(ex)) from None
 
 
+# read_<FORMAT name>('path'), plus DuckDB's read_json_auto
 _FILE_TABLE_FNS = {
-    "read_parquet": "parquet",
-    "read_csv": "csv",
-    "read_json": "json",
-    "read_json_auto": "json",
-}
-
-
-def _file_relation_name(path: str) -> str:
-    base = os.path.basename(path.rstrip("/"))
-    return base.rsplit(".", 1)[0] or base
-
-
-def _read_file_df(spark, path: str, fmt: str) -> DataFrame:
-    r = spark.read
-    if fmt == "parquet":
-        return r.parquet(path)
-    if fmt == "orc":
-        return r.orc(path)
-    if fmt == "csv":
-        return r.option("header", True).option("inferSchema", True).csv(path)
-    return r.json(path)
+    f"read_{n}": fmt for fmt, f in files.FORMATS.items() for n in f.names
+} | {"read_json_auto": "json"}
 
 
 # Words that end a relation rather than alias it.
@@ -4321,9 +4325,7 @@ def _relation(
         rel = Relation("series", (fn, args), fn)
     elif cur.peek() is not None and _is_string_lit(cur.peek()):
         path = cur.next()[1:-1]
-        rel = Relation(
-            "file", (path, _sniff_file_format(path)), _file_relation_name(path)
-        )
+        rel = Relation("file", (path, _file_format(None, path)), files.stem(path))
     elif cur.peek_kw() in _FILE_TABLE_FNS and cur.peek(1) == "(":
         fn = cur.next().lower()
         cur.next()
@@ -4331,9 +4333,7 @@ def _relation(
         if not _is_string_lit(ptok) or cur.next() != ")":
             raise ParseError(f"{fn}() takes one quoted path")
         path = ptok[1:-1]
-        rel = Relation(
-            "file", (path, _FILE_TABLE_FNS[fn]), _file_relation_name(path)
-        )
+        rel = Relation("file", (path, _FILE_TABLE_FNS[fn]), files.stem(path))
     else:
         name = _unquote(cur.next())
         rel = Relation("table", name, name)
@@ -5313,10 +5313,10 @@ def parse_select(
                 break
         elif kw == "limit":
             cur.next()
-            clauses["limit"] = int(cur.next())
+            clauses["limit"] = cur.int("LIMIT")
         elif kw == "offset":
             cur.next()
-            clauses["offset"] = int(cur.next())
+            clauses["offset"] = cur.int("OFFSET")
         elif kw in ("union", "intersect", "except"):
             # Set operation — the executor combines
             # this arm with the next SELECT; stop clause parsing here.
@@ -6340,7 +6340,7 @@ class RefSQL:
         elif kind == "file":
             # the native scan: full pushdown/pruning; CSV/JSON infer their
             # schema (ingest for a declared one)
-            df = _read_file_df(self.engine.spark, *src)
+            df = files.read(self.engine.spark, *src)
         elif kind == "values":
             df = self.engine.spark.sql(src)
             if cols is None:  # DuckDB names VALUES columns col0, col1, ...
@@ -7000,13 +7000,11 @@ class RefSQL:
                     "DELETE, or MERGE"
                 )
             out = self._select_df(cur)
-            if not cur.done():
-                raise ParseError(f"unexpected token {cur.peek()!r} after SELECT")
+            cur.end("SELECT")
             return out
         if verb == "select":
             out = self._select_df(cur)
-            if not cur.done():
-                raise ParseError(f"unexpected token {cur.peek()!r} after SELECT")
+            cur.end("SELECT")
             return out
         if verb == "values":
             # Statement-level table constructor — ``VALUES (1, 'a'), (2,
@@ -7032,40 +7030,26 @@ class RefSQL:
                 cur.next()
                 cur.expect_kw("view")
                 name = _unquote(cur.next())
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after DROP "
-                        "MATERIALIZED VIEW"
-                    )
+                cur.end("DROP MATERIALIZED VIEW")
                 self.engine.mviews.drop(name)
                 return None
             if cur.peek_kw() == "vector":
                 cur.next()
                 cur.expect_kw("index")
                 name = _unquote(cur.next())
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after DROP "
-                        "VECTOR INDEX"
-                    )
+                cur.end("DROP VECTOR INDEX")
                 self.engine.vindexes.drop(name)
                 return None
             if cur.peek_kw() == "view":
                 cur.next()
                 name = _unquote(cur.next())
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after DROP VIEW"
-                    )
+                cur.end("DROP VIEW")
                 self.engine.views.drop(name)
                 return None
             if cur.peek_kw() == "macro":
                 cur.next()
                 name = _unquote(cur.next())
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after DROP MACRO"
-                    )
+                cur.end("DROP MACRO")
                 self.engine.macros.drop(name)
                 return None
             cur.expect_kw("table")
@@ -7087,19 +7071,12 @@ class RefSQL:
                 if cur.peek_kw() == "retrain":
                     cur.next()
                     retrain = True
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after REFRESH "
-                        "VECTOR INDEX"
-                    )
+                cur.end("REFRESH VECTOR INDEX")
                 return self.engine.vindexes.refresh(name, retrain=retrain)
             cur.expect_kw("materialized")
             cur.expect_kw("view")
             name = _unquote(cur.next())
-            if not cur.done():
-                raise ParseError(
-                    f"unexpected token {cur.peek()!r} after REFRESH"
-                )
+            cur.end("REFRESH")
             return self.engine.mviews.refresh(name)
         if verb == "diff":
             # ``DIFF t FROM VERSION a TO [VERSION b | CURRENT]``
@@ -7111,10 +7088,7 @@ class RefSQL:
             table = _unquote(cur.next())
             cur.expect_kw("from")
             cur.expect_kw("version")
-            try:
-                v_from = int(cur.next())
-            except ValueError:
-                raise ParseError("DIFF ... FROM VERSION takes an integer")
+            v_from = cur.int("DIFF ... FROM VERSION")
             cur.expect_kw("to")
             v_to: int | None
             if cur.peek_kw() == "current":
@@ -7122,12 +7096,8 @@ class RefSQL:
                 v_to = None
             else:
                 cur.expect_kw("version")
-                try:
-                    v_to = int(cur.next())
-                except ValueError:
-                    raise ParseError("DIFF ... TO VERSION takes an integer")
-            if not cur.done():
-                raise ParseError(f"unexpected token {cur.peek()!r} after DIFF")
+                v_to = cur.int("DIFF ... TO VERSION")
+            cur.end("DIFF")
             return self.engine.diff_versions(table, v_from, v_to)
         if verb == "search":
             # ``SEARCH vi [K n] [PROBE p] USING SELECT <vec> FROM
@@ -7139,10 +7109,10 @@ class RefSQL:
             k, n_probe, mode = 10, 4, "exact"
             if cur.peek_kw() == "k":
                 cur.next()
-                k = int(cur.next())
+                k = cur.int("SEARCH ... K")
             if cur.peek_kw() == "probe":
                 cur.next()
-                n_probe = int(cur.next())
+                n_probe = cur.int("SEARCH ... PROBE")
             if cur.peek_kw() == "mode":
                 cur.next()
                 mode = cur.next().lower()
@@ -7150,10 +7120,7 @@ class RefSQL:
             if cur.peek_kw() != "select":
                 raise ParseError("SEARCH ... USING needs a SELECT")
             qdf = self._select_df(cur)
-            if not cur.done():
-                raise ParseError(
-                    f"unexpected token {cur.peek()!r} after SEARCH"
-                )
+            cur.end("SEARCH")
             if len(qdf.columns) != 1:
                 raise ParseError(
                     "the SEARCH query must select exactly one vector column"
@@ -7171,29 +7138,18 @@ class RefSQL:
                 cur.next()
                 cur.next()
                 cur.expect_kw("views")
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after SHOW "
-                        "MATERIALIZED VIEWS"
-                    )
+                cur.end("SHOW MATERIALIZED VIEWS")
                 return self.engine.mviews.names() or ["(no materialized views)"]
             if len(toks) >= 2 and toks[1].lower() == "vector":
                 cur.next()
                 cur.next()
                 cur.expect_kw("indexes")
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after SHOW "
-                        "VECTOR INDEXES"
-                    )
+                cur.end("SHOW VECTOR INDEXES")
                 return self.engine.vindexes.names() or ["(no vector indexes)"]
             if len(toks) >= 2 and toks[1].lower() == "views":
                 cur.next()
                 cur.next()
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after SHOW VIEWS"
-                    )
+                cur.end("SHOW VIEWS")
                 return self.engine.views.names() or ["(no views)"]
             if len(toks) >= 2 and toks[1].lower() == "versions":
                 # SHOW VERSIONS FOR t: list the retired snapshot numbers a
@@ -7202,10 +7158,7 @@ class RefSQL:
                 cur.next()
                 cur.expect_kw("for")
                 table = _unquote(cur.next())
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after SHOW VERSIONS"
-                    )
+                cur.end("SHOW VERSIONS")
                 self.engine.catalog.get(table)  # raises on unknown table
                 vs = self.engine.store.versions(table)
                 return [f"v{v}" for v in vs] or ["(no snapshots)"]
@@ -7218,18 +7171,13 @@ class RefSQL:
             cur.expect_kw("describe")
             if cur.peek_kw() == "select":
                 df = self._select_df(cur)
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after "
-                        "DESCRIBE SELECT"
-                    )
+                cur.end("DESCRIBE SELECT")
                 return [
                     f"{f.name} {f.dataType.simpleString()}"
                     for f in df.schema.fields
                 ]
             table = _unquote(cur.next())
-            if not cur.done():
-                raise ParseError(f"unexpected token {cur.peek()!r} after DESCRIBE")
+            cur.end("DESCRIBE")
             return [f"{n} {t}" for n, t in self.engine.describe(table)]
         if verb == "summarize":
             # Dialect extension: ``SUMMARIZE t`` — per-column data profile
@@ -7242,20 +7190,14 @@ class RefSQL:
                 from ..operators.profile import profile
 
                 df = self._select_df(cur)
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after "
-                        "SUMMARIZE SELECT"
-                    )
+                cur.end("SUMMARIZE SELECT")
                 return profile(df)
             table = _unquote(cur.next())
-            if not cur.done():
-                raise ParseError(f"unexpected token {cur.peek()!r} after SUMMARIZE")
+            cur.end("SUMMARIZE")
             return self.engine.summarize(table)
         if verb in ("export", "import"):
-            # ``EXPORT DATABASE 'path'
-            # [FORMAT parquet|csv|jsonl|orc]`` — every table as one
-            # distributed write + a manifest (declared schemas incl.
+            # ``EXPORT DATABASE 'path' [FORMAT name]`` — every table as
+            # one distributed write + a manifest (declared schemas incl.
             # PRIMARY KEY, partition layout, view SQL in creation order);
             # ``IMPORT DATABASE 'path'`` rebuilds it all, collision-
             # checked up front. Matviews/vector indexes are derived state
@@ -7271,23 +7213,19 @@ class RefSQL:
                 if cur.peek_kw() == "format":
                     cur.next()
                     fmt = cur.next().lower()
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after EXPORT DATABASE"
-                    )
+                    _file_format(fmt)
+                cur.end("EXPORT DATABASE")
                 n = self.engine.export_database(p, fmt)
                 return f"exported database to {p} ({n} row(s), {fmt})"
-            if not cur.done():
-                raise ParseError(
-                    f"unexpected token {cur.peek()!r} after IMPORT DATABASE"
-                )
+            cur.end("IMPORT DATABASE")
             n = self.engine.import_database(p)
             return f"imported database from {p} ({n} row(s))"
         if verb == "copy":
-            # Dialect extension: ``COPY t TO 'path' [FORMAT
-            # parquet|csv|jsonl|orc] [PARTITION BY (col, ...)]`` — the
-            # export complement of the reference's import surface;
-            # PARTITION BY writes hive-layout subdirectories.
+            # Dialect extension: ``COPY t TO 'path' [FORMAT name]
+            # [PARTITION BY (col, ...)]`` — the export complement of the
+            # reference's import surface; PARTITION BY writes hive-layout
+            # subdirectories. Without FORMAT, the path's extension names
+            # the format, and a path without one is Parquet.
             cur.expect_kw("copy")
             src_df = None
             if cur.peek() == "(":
@@ -7301,11 +7239,12 @@ class RefSQL:
             else:
                 table = _unquote(cur.next())
             if src_df is None and cur.peek_kw() == "from":
-                # ``COPY t FROM 'path' [FORMAT parquet|csv|orc]``
-                # — the ingestion counterpart. Creates the table when it
-                # doesn't exist (schema from the file, the reference's
-                # import behavior); APPENDS when it does (DuckDB's COPY
-                # FROM semantics), aligning columns by name.
+                # ``COPY t FROM 'path' [FORMAT name]`` — the ingestion
+                # counterpart. Creates the table when it doesn't exist
+                # (schema from the file, the reference's import
+                # behavior); APPENDS when it does (DuckDB's COPY FROM
+                # semantics), reading text formats under the declared
+                # schema so inference can't drift the table's types.
                 cur.next()
                 src_path = cur.next()
                 if not _is_string_lit(src_path):
@@ -7314,68 +7253,21 @@ class RefSQL:
                 fmt = None
                 if cur.peek_kw() == "format":
                     cur.next()
-                    fmt = cur.next().lower()
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after COPY FROM"
-                    )
-                if fmt is None:
-                    low = src_path.lower()
-                    fmt = (
-                        "csv" if low.endswith(".csv")
-                        else "orc" if low.endswith(".orc")
-                        else "jsonl" if low.endswith(
-                            (".jsonl", ".json", ".ndjson")
-                        )
-                        else "parquet"
-                    )
-                exists = True
-                try:
-                    self.engine.catalog.get(table)
-                except KeyError:
-                    exists = False
-                if not exists:
-                    if fmt == "csv":
-                        self.engine.ingest_csv(src_path, table)
-                    elif fmt == "orc":
-                        self.engine.ingest_orc(src_path, table)
-                    elif fmt in ("jsonl", "json"):
-                        # jsonl — symmetry with COPY TO (the
-                        # interchange format corpora actually move in)
-                        self.engine.ingest_jsonl(src_path, table)
-                    elif fmt == "parquet":
-                        self.engine.ingest_parquet(src_path, table)
-                    else:
-                        raise ParseError(
-                            f"COPY FROM format {fmt!r} not supported "
-                            "(parquet|csv|jsonl|orc)"
-                        )
+                    fmt = cur.next()
+                cur.end("COPY FROM")
+                fmt = _file_format(fmt, src_path, "parquet")
+                if table not in self.engine.catalog:
+                    self.engine.ingest(src_path, table, fmt)
                     return f"created '{table}' from {src_path}"
-                spark = self.engine.spark
-                if fmt == "csv":
-                    new = spark.read.option("header", True).option(
-                        "inferSchema", True
-                    ).csv(src_path)
-                elif fmt == "orc":
-                    new = spark.read.orc(src_path)
-                elif fmt in ("jsonl", "json"):
-                    # append path: read with the DECLARED schema so jsonl
-                    # type inference can't drift the table's types
-                    new = spark.read.schema(
-                        self.engine.catalog.get(table).schema
-                    ).json(src_path)
-                elif fmt == "parquet":
-                    new = spark.read.parquet(src_path)
-                else:
-                    raise ParseError(
-                        f"COPY FROM format {fmt!r} not supported "
-                        "(parquet|csv|jsonl|orc)"
-                    )
+                new = files.read(
+                    self.engine.spark, src_path, fmt,
+                    schema=self.engine.catalog.get(table).schema,
+                )
                 n = self.engine.append_df(table, new)
                 return f"appended {n} row(s) to '{table}'"
             cur.expect_kw("to")
             path = _unquote(cur.next())
-            fmt = "parquet"
+            fmt = None
             if cur.peek_kw() == "format":
                 cur.next()
                 fmt = cur.next().lower()
@@ -7388,12 +7280,11 @@ class RefSQL:
                 part_cols = cur.names()
                 if not part_cols:
                     raise ParseError("PARTITION BY needs at least one column")
-            if not cur.done():
-                raise ParseError(f"unexpected token {cur.peek()!r} after COPY")
-            if src_df is not None:
-                n = self.engine.export_df(src_df, path, fmt, part_cols)
-            else:
-                n = self.engine.export_table(table, path, fmt, part_cols)
+            cur.end("COPY")
+            fmt = fmt or _file_format(None, path, "parquet")
+            _file_format(fmt)
+            df = src_df if src_df is not None else self.engine.table(table)
+            n = self.engine.export_df(df, path, fmt, part_cols)
             suffix = f", partitioned by {', '.join(part_cols)}" if part_cols else ""
             return f"copied '{table}' to {path} ({n} row(s), {fmt}{suffix})"
         if verb == "alter":
@@ -7411,20 +7302,14 @@ class RefSQL:
                 if cur.peek_kw() == "to":
                     cur.next()
                     new_name = _unquote(cur.next())
-                    if not cur.done():
-                        raise ParseError(
-                            f"unexpected token {cur.peek()!r} after RENAME TO"
-                        )
+                    cur.end("RENAME TO")
                     self.engine.rename_table(table, new_name)
                     return f"renamed '{table}' to '{new_name}'"
                 cur.expect_kw("column")
                 old_col = _unquote(cur.next())
                 cur.expect_kw("to")
                 new_col = _unquote(cur.next())
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after RENAME COLUMN"
-                    )
+                cur.end("RENAME COLUMN")
                 self.engine.rename_column(table, old_col, new_col)
                 return (
                     f"altered '{table}': renamed column {old_col} "
@@ -7442,20 +7327,12 @@ class RefSQL:
                 if sub == "set":
                     cur.expect_kw("default")
                     dval = _default_literal(cur)
-                    if not cur.done():
-                        raise ParseError(
-                            f"unexpected token {cur.peek()!r} after "
-                            "SET DEFAULT"
-                        )
+                    cur.end("SET DEFAULT")
                     self.engine.set_default(table, colname, dval)
                     return f"altered '{table}': {colname} DEFAULT {dval!r}"
                 if sub == "drop":
                     cur.expect_kw("default")
-                    if not cur.done():
-                        raise ParseError(
-                            f"unexpected token {cur.peek()!r} after "
-                            "DROP DEFAULT"
-                        )
+                    cur.end("DROP DEFAULT")
                     self.engine.drop_default(table, colname)
                     return f"altered '{table}': {colname} default dropped"
                 raise ParseError(
@@ -7465,17 +7342,11 @@ class RefSQL:
             colname = _unquote(cur.next())
             if action == "add":
                 decl = cur.next()
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after ADD COLUMN"
-                    )
+                cur.end("ADD COLUMN")
                 self.engine.add_column(table, colname, decl)
                 return f"altered '{table}': added {colname} {decl.upper()}"
             if action == "drop":
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after DROP COLUMN"
-                    )
+                cur.end("DROP COLUMN")
                 self.engine.drop_column(table, colname)
                 return f"altered '{table}': dropped {colname}"
             raise ParseError(
@@ -7509,8 +7380,7 @@ class RefSQL:
             if cur.peek_kw() != "select":
                 raise ParseError("EXPLAIN supports SELECT statements")
             plan_df = self._select_df(cur)
-            if not cur.done():
-                raise ParseError(f"unexpected token {cur.peek()!r} after SELECT")
+            cur.end("SELECT")
             if estimate:
                 return _estimate_report(plan_df)
             if analyze:
@@ -7532,10 +7402,7 @@ class RefSQL:
             if cur.peek_kw() == "table":
                 cur.next()
             table = _unquote(cur.next())
-            if not cur.done():
-                raise ParseError(
-                    f"unexpected token {cur.peek()!r} after TRUNCATE"
-                )
+            cur.end("TRUNCATE")
             self.engine.truncate_table(table)
             return f"truncated '{table}'"
         if verb == "optimize":
@@ -7550,13 +7417,8 @@ class RefSQL:
             keep = 0
             if cur.peek_kw() == "keep":
                 cur.next()
-                ktok = cur.next()
-                try:
-                    keep = int(ktok)
-                except ValueError:
-                    raise ParseError(f"KEEP needs an integer, got {ktok!r}")
-            if not cur.done():
-                raise ParseError(f"unexpected token {cur.peek()!r} after VACUUM")
+                keep = cur.int("KEEP")
+            cur.end("VACUUM")
             dropped = self.engine.store.vacuum(table, keep=keep)
             return (
                 f"vacuumed '{table}': removed "
@@ -7652,10 +7514,7 @@ class RefSQL:
                         if pos > len(params):
                             break
                         bound[params[pos - 1]] = a
-        if not cur.done():
-            raise ParseError(
-                f"unexpected token {cur.peek()!r} after EXECUTE"
-            )
+        cur.end("EXECUTE")
         missing = [p for p in params if p not in bound]
         extra = [b for b in bound if b not in params]
         if missing or extra or len(bound) != len(params):
@@ -7691,8 +7550,7 @@ class RefSQL:
             zcols = cur.names()
             if not zcols:
                 raise ParseError("ZORDER BY needs at least one column")
-        if not cur.done():
-            raise ParseError(f"unexpected token {cur.peek()!r} after OPTIMIZE")
+        cur.end("OPTIMIZE")
         if zcols:
             n = self.engine.optimize(table, zcols)
             return f"optimized '{table}': z-ordered by ({', '.join(zcols)}), {n} file(s)"
@@ -7788,10 +7646,7 @@ class RefSQL:
             # columns fill with NULL. Columns bind by position unless BY
             # NAME, so expression items need no AS.
             src = self._select_df(cur, positional=not by_name)
-            if not cur.done():
-                raise ParseError(
-                    f"unexpected token {cur.peek()!r} after INSERT ... SELECT"
-                )
+            cur.end("INSERT ... SELECT")
             if by_name:
                 src = self._align_by_name(table, src)
                 if ret_items is not None:
@@ -7923,10 +7778,7 @@ class RefSQL:
         meta = self.engine.catalog.get(table)
         if cur.peek_kw() == "select":
             src = self._select_df(cur, positional=not by_name)
-            if not cur.done():
-                raise ParseError(
-                    f"unexpected token {cur.peek()!r} after INSERT ... SELECT"
-                )
+            cur.end("INSERT ... SELECT")
             if by_name:
                 return self._align_by_name(table, src).select(
                     "*", F.lit(None).cast("long").alias("__ord")
@@ -8038,10 +7890,7 @@ class RefSQL:
                 raise ParseError(
                     "expected NOTHING or UPDATE after ON CONFLICT DO"
                 )
-            if not ccur.done():
-                raise ParseError(
-                    f"unexpected token {ccur.peek()!r} after ON CONFLICT"
-                )
+            ccur.end("ON CONFLICT")
         if not keys:
             keys = list(meta.primary_key)
         if not keys:
@@ -8313,12 +8162,13 @@ class RefSQL:
                     out.append(t)
             return out
 
-        # Split the WHERE into top-level AND conjuncts; lift the
+        # Split the WHERE into top-level AND conjuncts (the expression
+        # parser keeps BETWEEN ... AND and CASE ... END whole); lift the
         # target=source equality keys (the join correlation), keep the
         # rest as residual condition text.
-        conjuncts = _split_depth0(cond_toks, {"and"})
-        if not conjuncts[-1]:
-            conjuncts.pop()
+        ccur = _Cursor(cond_toks)
+        conjuncts = [t for t, _, _ in ExprParser(ccur, self.weak).conjuncts()]
+        ccur.end("UPDATE ... FROM WHERE")
         pairs: list[tuple[str, str]] = []  # (target col, source col)
         residual: list[list[str]] = []
         for conj in conjuncts:
@@ -8570,8 +8420,7 @@ class RefSQL:
                 raise ParseError("expected MATCHED or NOT MATCHED")
         if not (has_update or has_delete or has_insert or has_source_delete):
             raise ParseError("MERGE needs at least one WHEN clause")
-        if not cur.done():
-            raise ParseError(f"unexpected token {cur.peek()!r} after MERGE")
+        cur.end("MERGE")
 
         tcols = [c.name for c in self.engine.catalog.get(target).columns]
         if has_update or has_insert:
@@ -8717,10 +8566,7 @@ class RefSQL:
             n_centroids = 16
             if cur.peek_kw() == "centroids":
                 cur.next()
-                try:
-                    n_centroids = int(cur.next())
-                except ValueError:
-                    raise ParseError("CENTROIDS takes an integer")
+                n_centroids = cur.int("CENTROIDS")
             pq_m = None
             pq_k = 32
             if cur.peek_kw() == "pq":
@@ -8728,30 +8574,20 @@ class RefSQL:
                 # the index (m int codes per vector) so ADC search reads
                 # codes, not vectors (SEARCH ... MODE ADC).
                 cur.next()
-                try:
-                    pq_m = int(cur.next())
-                except ValueError:
-                    raise ParseError("PQ takes an integer subspace count")
+                pq_m = cur.int("PQ")
                 nxt = cur.peek()
                 if nxt is not None and nxt.isdigit():
-                    pq_k = int(cur.next())
+                    pq_k = cur.int("PQ")
             n_assign = 1
             if cur.peek_kw() == "assign":
                 # ``ASSIGN n`` — IVF multi-assignment; each
                 # vector spills to its n nearest lists at build (the
                 # partial-probe recall lever, at n× index storage).
                 cur.next()
-                try:
-                    n_assign = int(cur.next())
-                except ValueError:
-                    raise ParseError("ASSIGN takes an integer")
+                n_assign = cur.int("ASSIGN")
                 if n_assign < 1:
                     raise ParseError("ASSIGN must be >= 1")
-            if not cur.done():
-                raise ParseError(
-                    f"unexpected token {cur.peek()!r} after CREATE VECTOR "
-                    "INDEX"
-                )
+            cur.end("CREATE VECTOR INDEX")
             self.engine.vindexes.create(
                 name, table, id_col, vec_col, n_centroids=n_centroids,
                 pq_m=pq_m, pq_k=pq_k, n_assign=n_assign,
@@ -8785,10 +8621,7 @@ class RefSQL:
             if cur.peek_kw() == "as":
                 cur.next()  # AS
                 df = self._select_df(cur)
-                if not cur.done():
-                    raise ParseError(
-                        f"unexpected token {cur.peek()!r} after CREATE TABLE AS"
-                    )
+                cur.end("CREATE TABLE AS")
                 if or_replace:
                     # Atomic replace (engine.replace_table_from): the
                     # result is written as a new version and commits with
@@ -8873,10 +8706,7 @@ class RefSQL:
                     defaults[name] = _default_literal(cur)
             cols.append((name, decl))
         part = _partition_cols()
-        if not cur.done():
-            raise ParseError(
-                f"unexpected token {cur.peek()!r} after CREATE TABLE"
-            )
+        cur.end("CREATE TABLE")
         if part:
             declared = {n for n, _ in cols}
             missing = [c for c in part if c not in declared]

@@ -62,6 +62,7 @@ from .commit import write_json_atomic
 from .engine import Engine
 from .plans import nl
 from .results import read_only
+from .sources import files
 
 _MAX_UPLOAD = 64 << 20  # reference: r.ParseMultipartForm(64 << 20)
 
@@ -542,43 +543,22 @@ class ApiHandler(BaseHTTPRequestHandler):
         if "file" not in fields:
             return self._error("no file received")
         filename, content = fields["file"]
-        low = (filename or "").lower()
-        ext = os.path.splitext(low)[1]
-        if ext == ".gz":
-            # Corpora ship gzipped (.jsonl.gz / .csv.gz); Spark
-            # decompresses by extension, so keep the compound suffix and
-            # route on the inner extension.
-            inner = os.path.splitext(low[:-3])[1]
-            if inner in (".csv", ".jsonl", ".ndjson", ".json"):
-                ext = inner + ".gz"
-        if ext not in (
-            ".csv", ".parquet", ".orc", ".jsonl", ".ndjson", ".json",
-            ".csv.gz", ".jsonl.gz", ".ndjson.gz", ".json.gz",
-        ):
-            return self._error(
-                f"unsupported file type '{ext}' — only .csv[.gz], .parquet, "
-                ".orc and .jsonl/.ndjson[.gz] are supported"
-            )
+        try:
+            ext = files.extension(filename or "")
+        except ValueError as ex:
+            return self._error(str(ex))
         if isinstance(content, str):
             content = content.encode()
+        # Spark picks the decompressor from the suffix, so the temp file
+        # keeps the compound one (.csv.gz).
         tmp = tempfile.NamedTemporaryFile(suffix=ext, delete=False)
         try:
             tmp.write(content)
             tmp.close()
             with self.rwlock.write_locked():
-                if ext in (".csv", ".csv.gz"):
-                    # Reference CSV import types every column TEXT
-                    # (importer.go:37-52); keep that parity on this surface.
-                    self.engine.ingest_csv(tmp.name, table, all_text=True)
-                elif ext in (
-                    ".jsonl", ".ndjson", ".json",
-                    ".jsonl.gz", ".ndjson.gz", ".json.gz",
-                ):
-                    self.engine.ingest_jsonl(tmp.name, table)
-                elif ext == ".orc":
-                    self.engine.ingest_orc(tmp.name, table)
-                else:
-                    self.engine.ingest_parquet(tmp.name, table)
+                # The reference's CSV import types every column TEXT
+                # (importer.go:37-52); keep that parity on this surface.
+                self.engine.ingest(tmp.name, table, all_text=True)
         except Exception as ex:
             return self._error(str(ex))
         finally:

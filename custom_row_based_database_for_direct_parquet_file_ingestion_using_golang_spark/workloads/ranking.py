@@ -652,7 +652,7 @@ def jsonl_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     e.ingest_parquet(f"{sf_dir}/documents.parquet", "docs_src")
     out = os.path.join(root, "export_jsonl")
     e.ref_sql(f"COPY docs_src TO '{out}' FORMAT jsonl")
-    e.ingest_jsonl(out, "docs_rt")
+    e.ingest(out, "docs_rt", "jsonl")
     return (
         e.table("docs_rt")
         .groupBy("source")
@@ -964,7 +964,7 @@ def orc_roundtrip_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     e.ingest_parquet(f"{sf_dir}/lineitem.parquet", "li_src")
     out = os.path.join(root, "export_orc")
     e.ref_sql(f"COPY li_src TO '{out}' FORMAT orc")
-    e.ingest_orc(out, "li_rt")
+    e.ingest(out, "li_rt", "orc")
     return (
         e.table("li_rt")
         .groupBy("l_returnflag", "l_linestatus")

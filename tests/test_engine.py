@@ -152,9 +152,9 @@ def test_ingest_parquet_native_types(engine, sf_dir):
 def test_ingest_csv_infer_and_all_text(engine, spark, tmp_path):
     csv = tmp_path / "people.csv"
     csv.write_text("id,name,score\n1,ann,9.5\n2,bob,7.25\n")
-    engine.ingest_csv(str(csv), "people")
+    engine.ingest(str(csv), "people")
     assert dict(engine.table("people").dtypes)["id"] == "int"
-    engine.ingest_csv(str(csv), "people_text", all_text=True)
+    engine.ingest(str(csv), "people_text", all_text=True)
     # all_text reproduces the reference's every-import-is-TEXT behavior
     # (importer.go:37-52).
     assert set(dict(engine.table("people_text").dtypes).values()) == {"string"}
@@ -166,7 +166,7 @@ def test_ingest_jsonl_roundtrip_and_schema(engine, tmp_path):
         '{"id": 1, "text": "he said \\"hi\\"\\nline2", "score": 1.5}\n'
         '{"id": 2, "text": "plain", "score": null}\n'
     )
-    n = engine.ingest_jsonl(str(jl), "jdocs")
+    n = engine.ingest(str(jl), "jdocs")
     assert n == 2
     dtypes = dict(engine.table("jdocs").dtypes)
     assert dtypes["id"] == "bigint" and dtypes["score"] == "double"
@@ -175,7 +175,7 @@ def test_ingest_jsonl_roundtrip_and_schema(engine, tmp_path):
     assert rows[1].text == 'he said "hi"\nline2'
     assert rows[2].score is None
     # explicit schema: single-pass read, declared types win
-    engine.ingest_jsonl(str(jl), "jdocs_typed", schema="id INT, text STRING, score DOUBLE")
+    engine.ingest(str(jl), "jdocs_typed", schema="id INT, text STRING, score DOUBLE")
     assert dict(engine.table("jdocs_typed").dtypes)["id"] == "int"
 
 
@@ -185,11 +185,11 @@ def test_ingest_jsonl_rejects_empty_and_malformed(engine, tmp_path):
     empty = tmp_path / "empty.jsonl"
     empty.write_text("")
     with pytest.raises(ValueError, match="no JSON objects"):
-        engine.ingest_jsonl(str(empty), "nothing")
+        engine.ingest(str(empty), "nothing")
     bad = tmp_path / "bad.jsonl"
     bad.write_text('{"id": 1}\n{not json at all\n')
     with pytest.raises(Exception):  # FAILFAST surfaces the malformed line
-        engine.ingest_jsonl(str(bad), "bad")
+        engine.ingest(str(bad), "bad")
 
 
 def test_export_jsonl_roundtrips_via_copy(engine, sf_dir, tmp_path):
@@ -197,7 +197,7 @@ def test_export_jsonl_roundtrips_via_copy(engine, sf_dir, tmp_path):
     out = tmp_path / "nation_jsonl"
     msg = engine.ref_sql(f"COPY nation TO '{out}' FORMAT jsonl")
     assert "25 row(s)" in msg and "jsonl" in msg
-    engine.ingest_jsonl(str(out), "nation_rt")
+    engine.ingest(str(out), "nation_rt", "jsonl")
     a = sorted(tuple(r) for r in engine.table("nation").select("n_nationkey", "n_name").collect())
     b = sorted(tuple(r) for r in engine.table("nation_rt").select("n_nationkey", "n_name").collect())
     assert a == b
@@ -390,9 +390,9 @@ def test_orc_export_ingest_roundtrip(spark, tmp_path):
     e = Engine(spark, str(tmp_path / "orcdb"))
     e.ingest_parquet("/root/testdata/sf0.001/nation.parquet", "nation")
     out = str(tmp_path / "nation_orc")
-    n = e.export_table("nation", out, "orc")
+    n = e.export_df(e.table("nation"), out, "orc")
     assert n == e.table("nation").count()
-    e.ingest_orc(out, "nation_rt")
+    e.ingest(out, "nation_rt", "orc")
     # Typed round-trip: schema and content both survive.
     src = e.table("nation")
     rt = e.table("nation_rt")

@@ -403,7 +403,7 @@ def test_describe_and_copy_export(spark, tmp_path):
     back2 = spark.read.csv(out2, header=True)
     assert {(r.id, r.name) for r in back2.collect()} == {("1", "a"), ("2", "b")}
     with pytest.raises(ValueError):
-        e.export_table("d", str(tmp_path / "x"), fmt="xml")
+        e.export_df(e.table("d"), str(tmp_path / "x"), fmt="xml")
     with pytest.raises(ParseError):
         e.ref_sql(f"COPY d TO '{out}' FORMAT csv junk")
 
@@ -1822,6 +1822,25 @@ def test_merge_update_rejects_duplicate_source_keys(merge_engine):
     assert n == 0
 
 
+def test_update_from_where_keeps_between_and_case_whole(spark, tmp_path):
+    # The WHERE splits into conjuncts at its top-level ANDs only: the AND
+    # of a BETWEEN or inside a CASE belongs to its conjunct.
+    e, con = _two_engines(
+        spark, str(tmp_path / "updbc"),
+        "CREATE TABLE t (k INT, v TEXT)",
+        "INSERT INTO t VALUES (1, 'a'), (2, 'b'), (3, 'c')",
+        "CREATE TABLE s (k INT, w INT)",
+        "INSERT INTO s VALUES (1, 5), (2, 50), (3, 500)",
+    )
+    for sql in (
+        "UPDATE t SET v = 'z' FROM s WHERE t.k = s.k AND s.w BETWEEN 1 AND 10",
+        "UPDATE t SET v = 'y' FROM s WHERE t.k = s.k "
+        "AND CASE WHEN s.w > 10 AND s.w < 100 THEN TRUE ELSE FALSE END",
+    ):
+        assert e.ref_sql(sql) == con.execute(sql).fetchone()[0] == 1
+    _assert_matches_duckdb(e, con, "SELECT * FROM t")
+
+
 def test_merge_update_sets_every_duplicate_target_row(merge_engine):
     # One source row matching duplicate-keyed target rows updates each of
     # them (Postgres/Delta): the rows DuckDB's equivalent UPDATE ... FROM
@@ -1980,7 +1999,7 @@ def test_copy_partition_by_export(engine, tmp_path):
     pruned = back.filter(back.course == "Mech")
     assert pruned.count() == 2
     with pytest.raises(ValueError, match="unknown PARTITION BY"):
-        engine.export_table("students", out + "2", "parquet", ["nope"])
+        engine.export_df(engine.table("students"), out + "2", "parquet", ["nope"])
     with pytest.raises(ParseError, match="at least one column"):
         engine.ref_sql(f"COPY students TO '{out}3' PARTITION BY ()")
 

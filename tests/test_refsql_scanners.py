@@ -188,6 +188,10 @@ def sweep_engine(spark, tmp_path_factory):
         "SELECT k FROM t WHERE EXISTS (SELECT 1 FROM t",
         "WITH x (a, b AS (SELECT 1, 2) SELECT a FROM x",
         "CREATE MACRO m(a, b := (1) AS a + b",
+        "SELECT k FROM t LIMIT (1)",
+        "SELECT k FROM t LIMIT x",
+        "SELECT k FROM t OFFSET x",
+        "SEARCH vi K x USING SELECT [1.0, 2.0]",
     ],
 )
 def test_unclosed_group_raises_parse_error(sweep_engine, sql):

@@ -586,6 +586,29 @@ def test_upload_gzipped_jsonl_and_csv(api):
     assert resp["success"] is False and "unsupported file type" in resp["error"]
 
 
+def test_upload_pq_and_ndjson_gz_keep_their_types(api, sf_dir):
+    """Every extension of the file-format table uploads: ``.pq`` is
+    Parquet and ``.ndjson.gz`` gzipped JSON Lines, both typed; only CSV
+    stays all TEXT."""
+    import gzip
+
+    with open(f"{sf_dir}/nation.parquet", "rb") as f:
+        content = f.read()
+    for table, filename, data in (
+        ("nation_pq", "nation.pq", content),
+        ("rows_nd", "rows.NDJSON.GZ", gzip.compress(b'{"id": 1}\n{"id": 2}\n')),
+    ):
+        body, ctype = _multipart(
+            {"table_name": (None, table.encode()), "file": (filename, data)}
+        )
+        resp = _call(api, "/api/upload", body, headers={"Content-Type": ctype})
+        assert resp["success"], resp
+    assert "25" in _query(api, "SELECT COUNT(*) FROM nation_pq")["result"]
+    assert "n_nationkey INT" in _query(api, "DESCRIBE nation_pq")["result"]
+    assert "3" in _query(api, "SELECT SUM(id) FROM rows_nd")["result"]
+    assert "id BIGINT" in _query(api, "DESCRIBE rows_nd")["result"]
+
+
 def test_query_api_round9_dialect_surface(api, tmp_path_factory):
     """Round-9 verbs through /api/query: DISTINCT ON, correlated scalar
     subqueries, selector aggregates, and the snapshot DIFF all route as
