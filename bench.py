@@ -2,44 +2,35 @@
 """Bench harness: run the headline workload queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-"sf": ...}.
+"sf": ..., "contention": [...]}.
 
-Protocol (stated in BASELINE.md): each query is timed over ≥2 passes —
-3 for the shuffle/streaming-heavy shapes that showed 2-4× shared-VM swings
-in past rounds — and the MINIMUM is recorded as the headline number. The
-first (cold) pass pays one-time per-query costs that are pure
-single-JVM-session noise (Catalyst codegen class compilation, C2 JIT of
-that generated code) with measured swings of 3-10× run-to-run; the min is
-the reproducible statistic and the one that scales — on a real cluster
-those per-query costs amortize over minutes-long queries, not sub-second
-ones. Per-pass times for EVERY query ship in the "# detail:" JSON line on
-stderr (pass 0 = cold), so a regression in the min can be distinguished
-from shared-VM noise (noise shows as warm-pass variance; a plan change
-shifts every pass).
-Timing wraps the full action (plan + execute + count); a count keeps
-driver transfer out of the measurement.
+Protocol (stated in BASELINE.md), the same for every query: one cold pass,
+then WARM_PASSES warm passes. The cold pass pays one-time per-query costs
+(Catalyst codegen class compilation, JIT of that generated code) that would
+amortize on any real job, so it is recorded but never counted. A query's
+headline number is the MINIMUM of its warm passes, and the total is the sum
+of those minimums. Timing wraps the full action (plan + execute + count); a
+count keeps driver transfer out of the measurement.
 
-Load sentinel (round 5): the shared VM can be contended by OTHER tenants
-while bench runs — round 4's recorded total was 1.66× polluted by exactly
-that, and the artifact had no way to say so. Each query's pass loop is now
-preceded by a timed fixed-work probe (sum over spark.range(4M), calibrated
-to a floor at startup); the JSON records the contention ratio per query
-(when > 1.2) plus os.getloadavg() snapshots. When a query's floor comes
-out > 1.5× its known warm floor AND the sentinel shows contention, the
-query is automatically re-run (up to 2 extra passes) so transient load
-can't pollute the recorded minimum. Round 16: the final stdout line is a
-compact JSON guaranteed <2000 chars (the driver archives only the final
-2000 chars of stdout, and r14's baseline was lost when the 4-decimal
-64-query line outgrew that window — see render_artifact); full-precision
-detail goes to stderr.
+Each query's passes are preceded by a timed fixed-work probe (sum over
+spark.range(4M), calibrated to a floor at startup). A probe ratio above
+CONTENDED marks the query as measured under machine contention; the query
+is not rerun, the flag only says how far to trust its number.
+
+Everything the compact stdout line drops ships in the "# detail:" JSON line
+on stderr: every pass (cold first), each query's warm median, the contention
+flags and loadavg snapshots, and the machine the run came from.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
+import statistics
 import sys
 import time
+from typing import NamedTuple
 
 import pandas as pd
 
@@ -89,28 +80,24 @@ BENCH_QUERIES = [
     "similar_pairs_top15",
     "multimodal_image_features",
     "pipeline_curate_corpus",
-    # round-6 additions
+    # later operator tiers (ANN, sketches, dialect, skew); list order is
+    # run order, kept fixed so timings stay comparable run to run
     "dedup_semantic_clusters",
     "corpus_vocab_oov",
     "multimodal_jpeg_decode",
     "refsql_setops_orders",
     "refsql_exists_subquery",
-    # round-7 additions
     "bloom_decontaminate_train",
     "classifier_hashed_nb_langid",
     "dedup_embedding_neardup",
-    # round-8 additions
     "skew_salted_join",
     "crossmodal_image_text_neardup",
     "sketch_hll_distinct",
     "sample_weighted_aes",
-    # round-9 additions
     "refsql_correlated_scalar",
     "refsql_in_or_membership",
     "sketch_hist_quantiles_grouped",
-    # round-10 additions
     "ann_multiassign_top10",
-    # round-11 additions
     "ann_multiassign_recall",
     "ann_matryoshka_top10",
     "ann_hard_negatives",
@@ -118,9 +105,7 @@ BENCH_QUERIES = [
     "refsql_unnest_tokens",
     "events_skew_report",
     "stream_append_exactly_once",
-    # round-12 additions
     "refsql_lateral_topk",
-    # round-13 additions
     "refsql_update_from",
     "refsql_lateral_group_by",
     "refsql_json_family",
@@ -131,177 +116,68 @@ BENCH_QUERIES = [
     "stream_session_hll_users",
 ]
 
-# Queries that showed 2-4× run-to-run swings on the shared VM in past
-# rounds (shuffle/streaming-heavy shapes) get a third pass so noise and
-# regression are distinguishable in the per-pass record.
-EXTRA_PASS_QUERIES = {
-    "join_revenue_per_nation",
-    "order_limit_offset",
-    "dedup_ngram_jaccard_top20",
-    "stream_tumbling_counts",
-    "stream_stream_join",
-    # high warm-pass variance observed in round-3 local runs (warm slower
-    # than cold on a shared VM — GC/steal noise, not plan cost):
-    "pipeline_curate_corpus",
-    "dedup_minhash_lsh",
-    "stream_session_windows",
-    "q5_local_supplier_volume",
-    # round-8: Arrow-encode-heavy fixture, Python-stage variance
-    "crossmodal_image_text_neardup",
-    # round-9: streaming-engine startup + memory-sink variance (warm-pass
-    # spreads of 1.3-1.4x observed in the r9 rehearsals)
-    "stream_session_hll_users",
-    "sketch_hist_quantiles_grouped",
-}
-
-# Known warm floors at sf0.1 (sec): BASELINE.md's floor table plus the
-# round-4 verdict's isolated re-measures. Used ONLY to decide when a
-# measured floor is suspicious enough to warrant an automatic re-run under
-# a contended sentinel — never to clamp or replace a measurement. Missing
-# entries fall back to the warm-pass-spread heuristic.
-KNOWN_FLOORS_SF01 = {
-    "q01_pricing_summary": 0.52,
-    "scan_full_table": 0.23,
-    "filter_compare": 0.26,
-    "agg_global": 0.22,
-    "join_revenue_per_nation": 0.65,
-    "q3_shipping_priority": 1.0,
-    "q5_local_supplier_volume": 1.2,
-    "q14_promo_revenue_share": 0.34,
-    "agg_count_distinct": 0.22,
-    "asof_click_to_purchase": 0.33,
-    "text_token_stats": 0.20,
-    "text_quality_scores": 0.27,
-    "text_repetition_ratio": 0.19,
-    # sorted-runs F.aggregate fold, zero exchanges (round-12)
-    "text_dup_ngram_chars": 0.48,
-    # round-13 dialect additions (isolated warm passes on a quiet VM)
-    "refsql_update_from": 4.0,
-    "refsql_lateral_group_by": 0.5,
-    "text_pii_redact": 0.32,
-    "corpus_line_dedup": 0.90,
-    "contamination_eval_train_overlap": 0.98,
-    "dedup_exact_groups": 0.74,
-    "dedup_ngram_jaccard_top20": 2.3,
-    "dedup_minhash_lsh": 2.2,
-    "similar_pairs_top15": 0.86,
-    "multimodal_image_features": 0.39,
-    # round-13: the Lee-et-al span-cut stage composed in (+2 shuffles)
-    "pipeline_curate_corpus": 4.6,
-    "stream_tumbling_counts": 0.99,
-    "stream_session_windows": 1.2,
-    "stream_stream_join": 2.75,
-    # round-5 additions (floors measured this round under a ~1.2-contended
-    # sentinel, so these are conservative):
-    "ts_gapfill_locf": 0.37,
-    "dedup_winnow_top15": 4.4,
-    # round-6 additions (floors re-measured end-of-round on an idle
-    # machine, loadavg 0.2):
-    "dedup_semantic_clusters": 1.7,
-    "corpus_vocab_oov": 0.85,
-    "multimodal_jpeg_decode": 1.98,
-    "refsql_setops_orders": 0.73,
-    "refsql_exists_subquery": 0.49,
-    # round-7 additions (floors from the r7 bench run, sentinel ≤1.2):
-    "bloom_decontaminate_train": 1.32,
-    "classifier_hashed_nb_langid": 1.39,
-    "dedup_embedding_neardup": 0.78,
-    # round-8 additions (floors measured on a quiet VM, sentinel ≤0.51):
-    "skew_salted_join": 0.62,
-    "crossmodal_image_text_neardup": 4.92,
-    # round-8 sketch/sampling additions (3 warm passes, loadavg ~1.2):
-    "sketch_hll_distinct": 0.66,
-    "sample_weighted_aes": 0.29,
-    # round-9 additions (floors from the r9 rehearsal, sentinel 1.00,
-    # loadavg < 1):
-    "refsql_correlated_scalar": 0.36,
-    "refsql_in_or_membership": 0.50,
-    "sketch_hist_quantiles_grouped": 1.66,
-    "stream_session_hll_users": 2.72,
-    # round-12 addition (bench-order warm 0.49 on a quiet run; isolated
-    # probe passes 1.85/0.98/0.86/0.79 — first-lateral-in-session ~1.9):
-    "refsql_lateral_topk": 0.49,
-}
+COLD_PASSES = 1
+WARM_PASSES = 3
+# Sentinel probe time over its calibrated floor above which a query's
+# passes are flagged as contended.
+CONTENDED = 1.2
 
 
-def should_rerun(
-    times: list[float],
-    floor: float | None,
-    post_ratio: float,
-    load_ratio: float,
-) -> bool:
-    """Decide whether a query's measured passes warrant an automatic re-run.
+class Summary(NamedTuple):
+    passes: list[float]  # every pass, cold first
+    min: float  # of the warm passes: the headline number
+    median: float  # of the warm passes
+    contention: float | None  # sentinel ratio, when above CONTENDED
 
-    A floor is *suspicious* when it exceeds 1.5× the known warm floor (or,
-    with no recorded floor, when the warm passes spread >2.5× on a
-    non-trivial query). A suspicious floor is re-run when ANY contention
-    signal fires:
 
-    - the sentinel probe reads contended (post_ratio > 1.2), OR
-    - the query's own passes straddle a load spike (spread > 2.5×), OR
-    - machine loadavg grew >1.5× since the bench started.
-
-    The last two exist because of round 8's miss: dedup_winnow_top15 ran
-    9.0/28.1 s (floor 4.14) while loadavg rose 2.1 → 5.3, yet the sentinel
-    probe — sampled between the spikes — read clean, so the old
-    sentinel-only predicate never re-ran it and the contended 9.0 s became
-    the recorded value.
-    """
-    if not times:
-        return False
-    best = min(times)
-    if floor is not None:
-        suspicious = best > 1.5 * floor
-    else:
-        suspicious = (
-            len(times) > 1 and best > 0.5 and max(times[1:]) > 2.5 * best
-        )
-    if not suspicious:
-        return False
-    if post_ratio > 1.2:
-        return True
-    spread = (max(times) / best) if best > 0 else 1.0
-    return spread > 2.5 or load_ratio > 1.5
+def summarize(passes: list[float], sentinel_ratio: float) -> Summary:
+    """One query's record: the cold pass is excluded, the warm passes give
+    the min and the median, and the sentinel ratio is kept only as a
+    contention flag."""
+    warm = passes[COLD_PASSES:]
+    return Summary(
+        passes,
+        min(warm),
+        statistics.median(warm),
+        round(sentinel_ratio, 2) if sentinel_ratio > CONTENDED else None,
+    )
 
 
 def render_artifact(
-    passes: dict[str, list[float]],
-    timings: dict[str, float],
-    reruns: dict[str, int],
+    summaries: dict[str, Summary],
     sentinel: dict,
-    total: float,
+    machine: dict,
     sf,
 ) -> tuple[str, str]:
     """Returns (stdout_line, stderr_detail_line).
 
-    Truncation-hardened, round 16: the driver archives only the FINAL 2000
-    chars of stdout, and round 14's baseline was LOST because the one-line
-    JSON for 64 queries at 4-decimal precision (plus passes/sentinel)
-    outgrew that window — the front of the line (including ``{"metric"``)
-    was cut and the driver recorded ``parsed: null``, killing the
-    round-over-round comparison. The round-8 "key order puts queries last"
-    hardening no longer suffices at 64 queries.
-
-    Fix (mandated by the r15 verdict): the final stdout line is now a
-    compact JSON guaranteed <2000 chars — contract keys only (metric,
-    unit, sf, queries, value) with per-query seconds rounded to 2 decimals
-    and ``separators=(',', ':')`` (~1.92 KB at 64 queries), plus a compact
-    contention summary ONLY when it still fits under a 1950-char guard.
-    Everything the compact line drops — 4-decimal timings, per-pass arrays
-    for every query, the per-query rerun counts and full sentinel — ships
-    as a second JSON line on stderr (prefix ``# detail:``) so no
-    information is lost, it just lives outside the truncation-prone
-    channel. Timing methodology (passes, min, rerun predicate) unchanged.
+    The stdout line must stay one complete JSON object under 2000 chars,
+    because only the final 2000 chars of bench stdout are archived; a longer
+    line loses its front, ``{"metric"`` included, and no longer parses. So
+    it carries the contract keys only (metric, unit, sf, queries, value),
+    per-query seconds at 2 decimals, compact separators, plus a contention
+    summary while that still fits. Everything else — 4-decimal minimums,
+    medians, every pass, the full sentinel record and the machine — goes
+    to the detail line.
     """
+    timings = {n: round(s.min, 4) for n, s in summaries.items()}
+    total = sum(s.min for s in summaries.values())
+    contended = {
+        n: s.contention for n, s in summaries.items() if s.contention is not None
+    }
     detail = json.dumps(
         {
             "metric": "workload_total_runtime",
             "unit": "sec",
-            "passes": passes,
+            "protocol": {"cold": COLD_PASSES, "warm": WARM_PASSES},
+            "machine": machine,
+            "passes": {
+                n: [round(t, 4) for t in s.passes] for n, s in summaries.items()
+            },
+            "medians": {n: round(s.median, 4) for n, s in summaries.items()},
             "queries": timings,
-            "reruns": reruns,
-            "sentinel": sentinel,
-            "value": total,
+            "sentinel": {**sentinel, "contended": contended},
+            "value": round(total, 4),
             "sf": sf,
         }
     )
@@ -314,19 +190,16 @@ def render_artifact(
     # contention = [n_contended_queries, max_ratio, loadavg_start, loadavg_end]
     extras = {
         "contention": [
-            len(sentinel.get("contended", {})),
-            max(list(sentinel.get("contended", {}).values()) or [1.0]),
+            len(contended),
+            max(contended.values(), default=1.0),
             sentinel.get("load_start", [0])[0],
             sentinel.get("load_end", [0])[0],
         ],
-        "reruns_total": sum(reruns.values()),
     }
-    # Deterministic shrink cascade with a HARD guarantee (r16 review
-    # finding: a single extras-dropping fallback left only ~12 chars of
-    # headroom at pessimistic 2-decimal widths — a 1000+ s contention
-    # blowout or a 65th query would have silently re-broken the artifact).
-    # Each step is strictly smaller; the 0-decimal floor is ~1.85 KB at the
-    # current name set, so the loop always terminates under the cap.
+    # Deterministic shrink cascade with a hard guarantee: each step is
+    # strictly smaller, and the 0-decimal floor is ~1.85 KB at the current
+    # name set, so the loop always ends under the cap even at 1000+ s
+    # per query.
     for attempt in (
         {**base, **extras, "queries": compact_q, "value": round(total, 2)},
         {**base, "queries": compact_q, "value": round(total, 2)},
@@ -350,6 +223,9 @@ def render_artifact(
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    missing = [n for n in BENCH_QUERIES if n not in workload.QUERIES]
+    if missing:
+        raise SystemExit(f"bench queries not in workload registry: {missing}")
     spark = get_spark(app_name="sparkdb-bench")
     # JVM/codegen warm-up outside the timed region: touches no benchmark
     # fact data, only spins up executors and JITs the scan/shuffle/agg code
@@ -402,98 +278,53 @@ def main() -> None:
     sent_floor = min(sentinel_sec() for _ in range(5))
     load_start = os.getloadavg()
 
-    timings: dict[str, float] = {}
-    passes: dict[str, list[float]] = {}
-    sent_ratios: dict[str, float] = {}
-    reruns: dict[str, int] = {}
-    total = 0.0
-    missing = [n for n in BENCH_QUERIES if n not in workload.QUERIES]
-    if missing:
-        raise SystemExit(f"bench queries not in workload registry: {missing}")
-    import gc
-
-    floors = KNOWN_FLOORS_SF01 if sf == "0.1" else {}
-
     def run_pass(fn) -> tuple[float, int]:
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         n = df.count()
         dt = time.perf_counter() - t0
         # Release py4j-held plan/broadcast/checkpoint references so the
-        # JVM ContextCleaner can drop their blocks — over a 33-query
-        # session the accumulated garbage otherwise competes with the
-        # running query for heap (measured as progressive slowdown).
+        # JVM ContextCleaner can drop their blocks — over a long session
+        # the accumulated garbage otherwise competes with the running
+        # query for heap (measured as progressive slowdown).
         gc.collect()
         return dt, n
 
+    summaries: dict[str, Summary] = {}
     for name in BENCH_QUERIES:
         fn = workload.QUERIES[name]
-        n_passes = 3 if name in EXTRA_PASS_QUERIES else 2
         ratio = sentinel_sec() / sent_floor
         times, n = [], 0
-        for _ in range(n_passes):
+        for _ in range(COLD_PASSES + WARM_PASSES):
             dt, n = run_pass(fn)
             times.append(dt)
-        best = min(times)
-        # Auto-rerun: a suspicious floor (vs the known warm floor, or a
-        # >2.5× warm-pass spread on an unknown one) under ANY contention
-        # signal — sentinel, pass spread, or loadavg growth — is
-        # re-measured up to twice; transient co-tenant load must not
-        # become the recorded minimum. Predicate in should_rerun().
-        floor = floors.get(name)
-        extra = 0
-        while extra < 2:
-            # Only pay the sentinel probe when the floor already looks off.
-            pre_suspicious = (
-                best > 1.5 * floor
-                if floor is not None
-                else (
-                    len(times) > 1
-                    and best > 0.5
-                    and max(times[1:]) > 2.5 * best
-                )
-            )
-            post_ratio = sentinel_sec() / sent_floor if pre_suspicious else 1.0
-            ratio = max(ratio, post_ratio)
-            load_ratio = os.getloadavg()[0] / max(load_start[0], 0.5)
-            if not should_rerun(times, floor, post_ratio, load_ratio):
-                break
-            dt, n = run_pass(fn)
-            times.append(dt)
-            best = min(times)
-            extra += 1
-        if extra:
-            reruns[name] = extra
-        if ratio > 1.2:
-            sent_ratios[name] = round(ratio, 2)
-        timings[name] = round(best, 4)
-        passes[name] = [round(t, 4) for t in times]
-        total += best
+        s = summaries[name] = summarize(times, ratio)
         print(
-            f"# {name}: {best:.3f}s ({n} rows; passes "
-            f"{'/'.join(f'{t:.3f}' for t in times)}; sentinel x{ratio:.2f}"
-            f"{f'; reran {extra}' if extra else ''})",
+            f"# {name}: {s.min:.3f}s (median {s.median:.3f}; {n} rows; passes "
+            f"{'/'.join(f'{t:.3f}' for t in times)}; sentinel x{ratio:.2f})",
             file=sys.stderr,
         )
 
     line, detail = render_artifact(
-        passes,
-        timings,
-        reruns,
+        summaries,
         {
             "floor_sec": round(sent_floor, 4),
-            "contended": sent_ratios,
             "load_start": [round(x, 2) for x in load_start],
             "load_end": [round(x, 2) for x in os.getloadavg()],
-            # r15 verdict #3: record where the bounded streaming runs place
-            # their EPHEMERAL checkpoints (streaming/ops.py), so streaming
-            # numbers are comparable across machines/rounds on that axis.
+            # where the bounded streaming runs place their ephemeral
+            # checkpoints (streaming/ops.py): streaming numbers are only
+            # comparable across machines on the same kind of storage.
             "stream_ckpt": (
                 os.environ.get("SPARKDB_STREAM_CHECKPOINT_DIR")
                 or ("/dev/shm" if os.path.isdir("/dev/shm") else "tmpdir")
             ),
         },
-        round(total, 4),
+        {
+            "cpu_count": os.cpu_count(),
+            "master": spark.sparkContext.master,
+            "driver_memory": spark.conf.get("spark.driver.memory"),
+            "spark": spark.version,
+        },
         float(sf) if sf.replace(".", "").isdigit() else sf,
     )
     print(f"# detail: {detail}", file=sys.stderr)

@@ -59,6 +59,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # The console progress bar writes \r[Stage N: ...] over stderr,
+        # interleaving with whatever a caller logs there.
+        .config("spark.ui.showConsoleProgress", "false")
         # In local mode the driver heap IS the executor heap: all local[N]
         # task threads, every broadcast, and every localCheckpoint block
         # live in this one JVM, so the default takes half the machine's

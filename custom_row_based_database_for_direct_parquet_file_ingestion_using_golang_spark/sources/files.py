@@ -157,8 +157,12 @@ def write(
     df: DataFrame, path: str, fmt: str, partition_by: list[str] | None = None
 ) -> None:
     """Write ``df`` as ``fmt`` under the directory ``path``, replacing it;
-    one file per partition."""
-    w = df.write.mode("overwrite").format(fmt).options(**FORMATS[fmt].write)
+    one file per partition. A text format under a ``.gz`` name
+    (``x.csv.gz``) is written gzip-compressed."""
+    f = FORMATS[fmt]
+    w = df.write.mode("overwrite").format(fmt).options(**f.write)
+    if f.text and (_split(path)[1] or "").endswith(".gz"):
+        w = w.option("compression", "gzip")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)

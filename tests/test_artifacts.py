@@ -76,17 +76,25 @@ def test_bench_artifact_tail_is_self_contained():
 
     # Pessimistic: every query takes 99.99 s (wider than anything ever
     # recorded — BENCH_r15's worst contended query was 9.6 s).
+    def summaries(best):
+        return {
+            n: bench.summarize(
+                [321.4567, best, best + 11.2469, best + 23.4691],
+                31.46 if i < 19 else 1.0,
+            )
+            for i, n in enumerate(bench.BENCH_QUERIES)
+        }
+
     timings = {n: 99.9876 for n in bench.BENCH_QUERIES}
-    passes = {n: [321.4567, 99.9876, 111.2345] for n in bench.BENCH_QUERIES}
-    reruns = {n: 2 for n in list(bench.BENCH_QUERIES)[:12]}
     sentinel = {
         "floor_sec": 0.1941,
-        "contended": {n: 31.46 for n in list(bench.BENCH_QUERIES)[:19]},
         "load_start": [13.35, 20.61, 11.85],
         "load_end": [3.56, 6.59, 8.75],
     }
+    machine = {"cpu_count": 4, "master": "local[4]", "driver_memory": "7g",
+               "spark": "4.1.2"}
     line, detail = bench.render_artifact(
-        passes, timings, reruns, sentinel, 6399.2064, 0.1
+        summaries(99.9876), sentinel, machine, 0.1
     )
     assert len(line) < 2000, (
         f"stdout artifact line is {len(line)} chars — the driver's "
@@ -103,61 +111,43 @@ def test_bench_artifact_tail_is_self_contained():
     det = json.loads(detail)
     assert set(det["passes"]) == set(bench.BENCH_QUERIES)
     assert det["queries"] == timings
-    assert det["reruns"] == reruns
+    assert det["medians"] == {n: 111.2345 for n in bench.BENCH_QUERIES}
     assert det["sentinel"]["contended"]
+    assert det["machine"] == machine
     # Degenerate widths (a 1000+s contention blowout on every query) must
     # still fit via the shrink cascade — lower precision, never truncation.
     line3, _ = bench.render_artifact(
-        passes,
-        {n: 9999.9876 for n in bench.BENCH_QUERIES},
-        reruns,
-        sentinel,
-        639999.2064,
-        0.1,
+        summaries(9999.9876), sentinel, machine, 0.1
     )
     assert len(line3) < 2000
     parsed3 = json.loads(line3)
     assert set(parsed3["queries"]) == set(bench.BENCH_QUERIES)
     assert parsed3["value"] >= 639999
     # Typical-values case: the compact contention summary fits too.
-    line2, _ = bench.render_artifact(
-        passes,
-        {n: 3.4567 for n in bench.BENCH_QUERIES},
-        reruns,
-        sentinel,
-        221.2288,
-        0.1,
-    )
+    line2, _ = bench.render_artifact(summaries(3.4567), sentinel, machine, 0.1)
     assert len(line2) < 2000
     parsed2 = json.loads(line2)
+    assert parsed2["value"] == 221.23
     assert parsed2["contention"][0] == 19
     assert parsed2["contention"][1] == 31.46
-    assert parsed2["reruns_total"] == 24
 
 
-def test_bench_rerun_predicate_fires_on_spread_and_loadavg():
-    """Round-9 (verdict item 3): the rerun predicate must fire on pass
-    spread or loadavg growth even when the sentinel probe reads clean —
-    round 8's dedup_winnow_top15 (passes 9.0/28.1 vs floor 4.14, loadavg
-    2.1→5.3, sentinel silent) slipped through the sentinel-only rule."""
+def test_bench_summary_counts_warm_passes_only():
+    """A query's headline number is the min of its warm passes and never
+    its cold pass, even when the cold pass happened to be the fastest
+    (ann_hard_negatives once recorded its cold 0.434 s that way); the
+    sentinel ratio is a flag only above 1.2."""
     import sys
 
     sys.path.insert(0, str(REPO))
-    from bench import should_rerun
+    from bench import summarize
 
-    # The exact r8 miss: suspicious floor, clean sentinel, 3.1× spread.
-    assert should_rerun([9.01, 28.1], floor=4.14, post_ratio=1.0, load_ratio=1.0)
-    # Loadavg growth alone also triggers (spread clean, sentinel clean).
-    assert should_rerun([9.01, 9.5], floor=4.14, post_ratio=1.0, load_ratio=2.5)
-    # Contended sentinel still triggers as before.
-    assert should_rerun([9.01, 9.5], floor=4.14, post_ratio=1.4, load_ratio=1.0)
-    # Not suspicious (inside 1.5× floor) → never rerun, whatever the signals.
-    assert not should_rerun([5.0, 30.0], floor=4.14, post_ratio=3.0, load_ratio=3.0)
-    # Suspicious but every contention signal clean → accept the measurement
-    # (a real regression must be recordable, not rerun forever).
-    assert not should_rerun([9.01, 9.5], floor=4.14, post_ratio=1.0, load_ratio=1.0)
-    # No known floor: spread heuristic on a non-trivial query.
-    assert should_rerun([1.0, 3.0], floor=None, post_ratio=1.3, load_ratio=1.0)
-    # No known floor, trivial query (<0.5 s): noise-band, never rerun.
-    assert not should_rerun([0.1, 0.4], floor=None, post_ratio=3.0, load_ratio=3.0)
-    assert not should_rerun([], floor=None, post_ratio=3.0, load_ratio=3.0)
+    s = summarize([0.434, 0.590, 0.612, 0.571], 1.0)
+    assert (s.min, s.median, s.contention) == (0.571, 0.590, None)
+    assert s.passes == [0.434, 0.590, 0.612, 0.571]
+    s = summarize([9.0, 4.2, 28.1, 4.4], 1.2)
+    assert (s.min, s.median, s.contention) == (4.2, 4.4, None)
+    assert summarize([1.0, 0.5, 0.5, 0.5], 1.2345).contention == 1.23
+    # the median of the warm passes ignores one slow outlier the min hides
+    s = summarize([2.0, 1.0, 3.0, 1.1], 0.9)
+    assert (s.min, s.median) == (1.0, 1.1)

@@ -7,6 +7,7 @@ rows with the same declared types for every extension, ``.gz`` and
 from __future__ import annotations
 
 import csv
+import glob
 import gzip
 import io
 import json
@@ -121,6 +122,13 @@ def test_every_surface_reads_every_extension(fe, surface, ext):
     else:
         out = str(root / f"out_{tag}{ext}")
         assert "2 row(s)" in e.ref_sql(f"COPY src TO '{out}'")
+        if ext.endswith(".gz"):
+            # a .gz name promises gzip: every part file carries its magic
+            parts = glob.glob(os.path.join(out, "**", "part-*"), recursive=True)
+            assert parts
+            for part in parts:
+                with open(part, "rb") as f:
+                    assert f.read(2) == b"\x1f\x8b", part
         e.ref_sql(f"COPY {tag} FROM '{out}'")
         df = e.table(tag)
     assert _result(df) == (sorted(ROWS), TYPES)
