@@ -938,16 +938,31 @@ class Engine:
         cols = [F.col(c) for c in declared]
         ret: DataFrame | None = None
         with _guarded():
-            if returning:
-                # RETURNING: the hit rows, materialized EAGERLY — the
-                # commit retires the old version's files, so a lazy frame
-                # over them would break after the write.
-                ret = df.filter(hit).select(*cols).localCheckpoint(eager=True)
-            kept = (df if drop is None else df.filter(~drop)).select(*cols)
             if not grows and self._driver_rewrite(meta):
                 # toArrow runs the job Spark's writer would: it fills obs
-                # and raises any guard before anything is written.
-                kept = kept.toArrow().cast(to_arrow_schema(meta.schema))
+                # and raises any guard before anything is written. It
+                # carries the keep and hit flags, so the kept rows and the
+                # RETURNING rows are cut from the one Table it collects.
+                flags = [] if drop is None else [(~drop).alias("__keep")]
+                if returning:
+                    flags.append(hit.alias("__hit"))
+                table = df.select(*cols, *flags).toArrow()
+                arrow_schema = to_arrow_schema(meta.schema)
+                if returning:
+                    hits = table.filter(table["__hit"]).select(list(declared))
+                    ret = self.spark.createDataFrame(
+                        hits.cast(arrow_schema), schema=meta.schema
+                    )
+                if drop is not None:
+                    table = table.filter(table["__keep"])
+                kept = table.select(list(declared)).cast(arrow_schema)
+            else:
+                if returning:
+                    # RETURNING: the hit rows, materialized EAGERLY — the
+                    # commit retires the old version's files, so a lazy
+                    # frame over them would break after the write.
+                    ret = df.filter(hit).select(*cols).localCheckpoint(eager=True)
+                kept = (df if drop is None else df.filter(~drop)).select(*cols)
             self.store.overwrite(name, kept, meta.partition_by)
         n = next(iter(obs.get.values())) or 0
         return (n, ret) if returning else n

@@ -245,7 +245,7 @@ class MaterializedViews(ArtifactRegistry):
         for k, (fn, col, alias) in enumerate(spec.aggregates):
             # Output names follow the reference defaults (count/sum_c/...)
             # exactly as a direct dialect query would produce them
-            # (operators.query.agg_spec's naming rule).
+            # (operators.query.agg_default_name).
             name = alias or (
                 "count"
                 if (fn == "count" and col == "*")

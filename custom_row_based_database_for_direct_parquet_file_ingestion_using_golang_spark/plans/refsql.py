@@ -1,46 +1,40 @@
-"""Reference SQL dialect: parser + executor.
+"""Reference SQL dialect: parser + compiler to Spark SQL.
 
 A user of the reference drives it with a small SQL subset (reference
 ``pkg/parser/parser.go`` tokenizer + clause indexing in
 ``pkg/handlers/select.go:24-135`` and the WHERE expression language of
 ``pkg/expr/expr.go``). This module accepts that exact dialect — so every
-query runnable against the reference runs here unchanged — and compiles it
-to DataFrame plans (Catalyst executes; nothing is interpreted row-by-row).
+query runnable against the reference runs here unchanged — plus the
+DuckDB-style extensions listed below.
 
-Written from scratch: a tokenizer, a recursive-descent predicate parser with
-the reference's precedence (OR < AND < NOT < comparison,
-``expr.go:411-518``), and clause assembly onto the Query builder.
+Front end: a tokenizer, token-level rewrite passes (function spellings,
+JSON/struct/list sugar, temporal and scalar families, named windows,
+QUALIFY window hoisting, macros, COLUMNS()), a recursive-descent parser
+for SELECT into ``SelectSpec`` and a predicate parser with the reference's
+precedence (OR < AND < NOT < comparison, ``expr.go:411-518``). Every
+ParseError is raised here, before Spark sees the statement.
 
-Subqueries (scalar ``(SELECT ...)`` in any value position, ``x [NOT] IN
-(SELECT ...)``, ``[NOT] EXISTS (SELECT ...)``, ``x <op> ANY|ALL|SOME
-(SELECT ...)``) compile while parsing to Spark subquery Columns —
-``DataFrame.scalar()``, ``DataFrame.exists()``, ``Column.isin(DataFrame)``
-— anywhere in a WHERE or UPDATE/DELETE predicate (conjuncts, OR, NOT,
-parentheses); uncorrelated scalars also in HAVING, JOIN ... ON, QUALIFY
-and MERGE's WHEN ... AND, and scalars as SELECT items and UPDATE SET
-values. A scalar under arithmetic folds into the expression with Column
-operators. The parser's resolver returns each subquery's
-DataFrame; nothing runs until the statement does.
-Inside a subquery a qualified column whose qualifier names no relation of
-that subquery's FROM is an outer reference (``Column.outer()``), and
-Catalyst decorrelates: top-level [NOT] EXISTS plans as LeftSemi/LeftAnti,
-correlated scalars as an aggregate + left join with its own COUNT-bug
-guard. ``IN`` is a bare ``isin`` where NULL acts as FALSE (a top-level
-conjunct plans as a semi or null-aware anti join) and the exact ANSI
-three-valued form (_in_subquery) under NOT or in a compared group; the
-order-decidable ANY/ALL pairs fold through one aggregate
-(_quantified_fold), and SELECT-list scalars over the same FROM/WHERE share
-one struct-valued subquery (_bind_select_scalars). A correlated scalar's
-correlation must be ``inner = outer`` equalities; a multi-row scalar fails
-when the statement runs (SCALAR_SUBQUERY_TOO_MANY_ROWS).
+Back end: each SELECT — with its CTEs, derived tables, set-operation
+arms, subqueries (correlated ones too) and LATERAL bodies — compiles to
+ONE Spark SQL statement, run by one ``spark.sql(text, **frames)`` call, so
+Spark parses and analyzes each query once. Relations with no text form
+bind as DataFrame arguments: catalog tables, views and matviews (read
+through ``Engine.table``, so the scan cache applies), files, series,
+VALUES, recursive-CTE and ASOF results, and the first FROM item after its
+SAMPLE / USING SAMPLE / PIVOT / UNPIVOT clauses. DML and DDL run through
+the Engine; their WHERE / SET / MERGE predicates are Columns from the same
+SQL text, their relation arguments registered until the statement ends.
 
-Reference semantics preserved:
+Reference semantics preserved (the text the compiler emits;
+functions/compat.py holds the shared rules):
   * restricted LIKE shapes (%x%, %x, x% — no '_', no interior %)
   * IN / BETWEEN (inclusive) / NOT / parenthesized sub-expressions
   * bare-operand truthiness (``WHERE active`` ⇒ active = true)
   * default aggregate output names: count, count_c, sum_c, avg_c, min_c,
     max_c (``select.go:103-121``), overridable with AS
   * implicit COUNT(*) for agg-free GROUP BY ("lenient", select.go:187-192)
+  * a bare SELECT item naming no column projects NULL (select.go:588-592)
+  * the SELECT list's written order, with or without GROUP BY
   * case-insensitive keywords, backtick/quote-stripped identifiers
   * optional weak typing (``weak_typing=True``): dual numeric/string
     comparison for all-TEXT imported tables (``expr.go:90-156``)
@@ -49,8 +43,7 @@ Relations. The reference reads one bare table (select.go:49-54). Here
 six positions read a relation: the first FROM item, a JOIN, comma-join or
 ASOF side, a LATERAL body, the UPDATE ... FROM source and the MERGE ...
 USING source. All of them parse one grammar (_relation) into one record
-(Relation) and build it one way (RefSQL._relation_df), so every position
-accepts every form::
+(Relation), so every position accepts every form::
 
     relation := name                        catalog table, CTE or view
               | 'path.ext'                  direct file query (.parquet,
@@ -66,139 +59,59 @@ accepts every form::
 
 A relation binds qualified references by its alias, else by the table's
 name, the function's name or the file's basename sans extension; the
-column list renames its columns positionally. SAMPLE, USING SAMPLE /
-TABLESAMPLE, PIVOT and UNPIVOT stay clauses of the first FROM item.
+column list renames its columns positionally.
 
-Joins: ``[INNER|LEFT|RIGHT|FULL [OUTER]|LEFT SEMI|LEFT ANTI|CROSS] JOIN
-<relation> [ON <predicate> | USING (cols)]`` with qualified ``x.col``
-references; ANSI-89 comma joins (``FROM a, b WHERE a.k = b.k``) are cross
-joins whose WHERE equalities Catalyst folds into hash-join conditions;
-``[CROSS | INNER | LEFT] JOIN LATERAL (SELECT ...) AS x [ON TRUE]`` (also
-``FROM a, LATERAL (...)``) parses the body like a subquery (qualified names
-outside its FROM are ``Column.outer()`` references) and joins through
-``DataFrame.lateralJoin``; Catalyst decorrelates it (count-bug guard,
-WindowGroupLimit for a per-row LIMIT). A grouped body's ``inner = outer``
-conjuncts become grouping keys (_lateral_body).
-
-Documented upgrades (SURVEY.md §7.4): LIMIT/OFFSET apply on every path,
-UPDATE/DELETE accept the full predicate language, multi-column GROUP BY,
-multi-assignment SET. Round-5 extensions (the reference has none of these —
-select.go:49-54 is single-table, bare-column only):
-  * Window functions: ``fn(args) OVER ([PARTITION BY ...] [ORDER BY ...])``.
-  * Value expressions in projections, aggregate/window arguments, WHERE/
-    HAVING comparison sides, and ORDER BY keys — captured as raw token
-    runs and compiled by Catalyst's own expression parser.
-  * CTAS, set-based ``INSERT INTO t [(cols)] SELECT``, ``SUMMARIZE t``,
-    ``EXPLAIN [ANALYZE]``, and CREATE/REFRESH/DROP MATERIALIZED VIEW
-    (matview.py).
-
-Round-6 extensions:
-  * CTEs: ``WITH name AS (SELECT ...) [, ...] SELECT ...`` — statement-
-    local DataFrame bindings resolved before the catalog; later CTEs see
-    earlier ones.
-  * Set operations: ``UNION [ALL]`` / ``INTERSECT`` / ``EXCEPT [ALL]``
-    chains — positional arms named by the first arm, left-associative
-    fold, trailing ORDER BY/LIMIT/OFFSET on the combined result; accepted
-    wherever a SELECT is (CTAS, INSERT...SELECT, EXPLAIN, CTE bodies).
-  * ``GROUP BY ROLLUP(a, b)`` / ``CUBE(a, b)`` — one Expand pass — with
-    ``GROUPING(col)`` to flag super-aggregate rows.
-  * DISTINCT aggregates (``COUNT/SUM/AVG(DISTINCT col)``) and the
-    statistical aggregates (``PERCENTILE/MEDIAN/STDDEV/VARIANCE/CORR/
-    COVAR/APPROX_COUNT_DISTINCT`` — verbatim-captured, AS required).
-  * ``x IS [NOT] NULL``; ``ORDER BY ... NULLS FIRST/LAST``;
-    ``FROM t SAMPLE n PERCENT BY col`` (deterministic md5-bucket sample).
-  * ``ROWS BETWEEN <bound> AND <bound>`` frames in OVER clauses for
-    aggregate window functions; windows compose with GROUP BY (standard
-    evaluation order — the window runs OVER the aggregated frame, so
-    ``RANK() OVER (ORDER BY sum_v DESC)`` ranks groups by their totals);
-    ``QUALIFY <pred>`` filters on window results (top-k-per-group in one
-    statement).
-  * Bare numeric literal projections (``SELECT 1``), named by their text.
-
-Round-7 extensions:
-  * ``MERGE INTO t USING s [AS a] ON t.k = a.k [AND ...]`` with
-    ``WHEN MATCHED [AND <pred>] THEN UPDATE SET * | DELETE``,
-    ``WHEN NOT MATCHED [BY TARGET] THEN INSERT *``, and
-    ``WHEN NOT MATCHED BY SOURCE [AND <pred>] THEN DELETE`` — the full
-    Delta-style CDC triad over copy-on-write storage (``Engine.merge``:
-    one left join against the key-grouped source, one commit,
-    snapshot-retiring); the source is any relation.
-    UPDATE SET * raises when a target row matches several source rows;
-    a source row matching duplicate-keyed target rows updates each.
-  * ``GROUP BY ALL`` (group on every non-aggregate SELECT item) and
-    integer ordinals in GROUP BY / ORDER BY indexing the output columns.
-  * ``RANGE BETWEEN <bound> AND <bound>`` frames (logical value offsets
-    over exactly one numeric ORDER BY key — Spark's rangeBetween).
-  * ``FIRST_VALUE / LAST_VALUE / NTH_VALUE`` window functions.
-  * ``CREATE TABLE ... PARTITIONED BY (...)`` (both forms) and
-    ``COPY (SELECT ...) TO 'path'`` query export.
-  * ``FROM t PIVOT (agg(expr) FOR col [IN (lit [AS name], ...)])`` —
-    standard-SQL pivot; round-14: the IN list is OPTIONAL — without it
-    the values are inferred via one bounded distinct pass (sorted,
-    ≤1000, Spark's own DataFrame two-pass ``.pivot(col)`` behavior);
-    compiles to ``groupBy(implicit keys).pivot(col, values).agg(...)``
-    — one Expand-free aggregation pass, the implicit keys are every
-    column not consumed by the aggregate or the FOR column (standard
-    semantics). ``UNPIVOT [INCLUDE NULLS] (val FOR name IN (c, ...))``
-    is the inverse (scan-stage Expand, no shuffle); NULL measures drop
-    by default (ANSI), INCLUDE NULLS keeps them.
-  * ``ASOF [LEFT] JOIN t ON l.k = r.k [AND ...] AND l.ts >= r.ts`` —
-    one or more key equalities (composite keys allowed) plus one
-    time inequality (``<=`` = forward lookup); compiles to the
-    union-tag single-shuffle window plan (operators/joins.asof_join),
-    never a theta join. Plain ASOF is INNER; LEFT keeps unmatched.
-  * ``PERCENT_RANK`` / ``CUME_DIST`` window verbs, and the named
-    ``WINDOW w AS (...)`` clause (``fn() OVER w``; definitions parse
-    after the references, resolved post-clause-loop).
-  * ``SELECT * EXCLUDE (c1, ...)`` — star minus named columns,
-    validated, folded into the scan as column pruning.
-  * ``GROUP BY GROUPING SETS ((a, b), (a), ())`` — the general
-    grouping-set form (DataFrame.groupingSets, one Expand pass).
-  * ``WITH RECURSIVE name AS (anchor UNION [ALL] recursive-arm)`` —
-    driver-side fixpoint with frontier semantics (see _recursive_cte).
-
-Round-12 extensions:
-  * ``ORDER BY ALL [ASC|DESC]`` — every output column left-to-right
-    (DuckDB ergonomic), star-modifier-aware.
-  * ``string_split(s, '<literal>')`` (aliases ``str_split``,
-    ``string_to_array``) — rewritten to Spark ``split`` with the
-    separator regex-escaped, closing the literal-vs-regex drift for
-    literal separators (_rewrite_string_split); non-literal/empty
-    separators stay un-rewritten by design.
-  * JSON text extraction (round-13, every value form probed vs DuckDB
-    before entry — see test_json_functions_vs_duckdb):
-    ``json_extract_string(j, path)`` / ``json_extract_path_text`` and
-    the ``j ->> 'key' | n | '$.path'`` operator → Spark
-    ``get_json_object`` (IDENTICAL on every probed case incl. number
-    re-serialization ``1.50``→``1.5``, ``1e3``→``1000.0``, escape and
-    unicode passthrough, object/array minification); ``json_valid``,
-    ``json_keys`` and ``json_array_length`` close their object/scalar
-    edge drifts via try_parse_json-backed CASE wrappers
-    (_rewrite_json_calls). ``json_extract`` / ``->`` (JSON-quoted
-    results, no Spark twin) reject loudly. Malformed JSON yields NULL
-    here where DuckDB raises (Spark's lenient read — documented).
-  * 1-based bracket indexing/slicing (round-13, _rewrite_brackets):
-    ``arr[n]`` / ``arr[i:j]`` / ``arr[i:]`` / ``arr[:j]`` +
-    list_extract/list_element — closes the ACTIVE drift of Spark's
-    0-based native ``arr[i]`` (try_element_at + nullif(.., 0) for the
-    index-0 edge, slice with inclusive-bounds arithmetic).
-  * ``INSERT ... ON CONFLICT [(cols)] DO NOTHING | DO UPDATE SET ...
-    [WHERE ...]`` / ``INSERT OR REPLACE|IGNORE`` (_insert_on_conflict):
-    Postgres/DuckDB upserts over declared PRIMARY KEYs (parsed in CREATE
-    TABLE, informational on plain appends); DO NOTHING = anti-join +
-    append-only write, DO UPDATE = ``Engine.merge`` (one left join + COW
-    swap); key checks are guards inside the write. Plus ``INSERT INTO t
-    BY NAME SELECT`` (name-bound set inserts) and column DEFAULTs
-    (omitted columns take them; explicit NULL stays NULL).
-  * CTE-fronted DML (round-13): ``WITH ... INSERT|UPDATE|DELETE|MERGE``
-    — bound CTE frames resolve before the catalog in every relation
-    read; a CTE over the DML's own target sees the pre-statement
-    snapshot.
-  * ``EXPORT DATABASE 'path' [FORMAT ...]`` / ``IMPORT DATABASE`` —
-    whole-catalog snapshot + all-or-nothing rebuild (tables, declared
-    types/PKs/defaults, partition layout, view SQL in creation order).
-  * ``DESCRIBE SELECT ...`` / ``SUMMARIZE SELECT ...`` — query-shaped
-    schema preflight (analysis-only) and query-result profiling.
+Beyond the reference (documented upgrades, SURVEY.md §7.4: LIMIT/OFFSET
+on every path, the full predicate language in UPDATE/DELETE,
+multi-column GROUP BY, multi-assignment SET):
+  * Joins: ``[INNER|LEFT|RIGHT|FULL [OUTER]|LEFT SEMI|LEFT ANTI|CROSS]
+    JOIN r [ON <predicate> | USING (cols)]``, comma joins, ``[CROSS |
+    INNER | LEFT] JOIN LATERAL (SELECT ...) AS x [ON TRUE]`` (Catalyst
+    decorrelates; a grouped body correlates only through ``inner =
+    outer`` WHERE conjuncts), and ``ASOF [LEFT] JOIN r ON l.k = r.k [AND
+    ...] AND l.ts >= r.ts`` (operators/joins.asof_join, never a theta
+    join).
+  * Subqueries: scalar ``(SELECT ...)`` in any value position, ``x [NOT]
+    IN (SELECT ...)`` (a semi / null-aware anti join as a top-level
+    conjunct, the exact three-valued form under NOT or in a compared
+    group), ``[NOT] EXISTS``, ``x <op> ANY|ALL|SOME (SELECT ...)`` (one
+    aggregate for the order-decidable pairs). A qualified column whose
+    qualifier names no relation of the subquery's FROM is an outer
+    reference; a correlated scalar's correlation must be ``inner =
+    outer`` equalities. SELECT-list correlated aggregate scalars over the
+    same FROM/WHERE share one LATERAL join (_bind_select_scalars).
+  * CTEs (``WITH [RECURSIVE]``; a recursive body runs as a driver-side
+    fixpoint, see _recursive_cte), set operations (``UNION [ALL] [BY
+    NAME]``, ``INTERSECT [ALL]``, ``EXCEPT [ALL]``) with a trailing ORDER
+    BY/LIMIT on the combined result, FROM-first and FROM-less SELECTs,
+    ``VALUES`` statements.
+  * Aggregation: ``GROUP BY ALL``, ordinals, expression keys, ``ROLLUP``,
+    ``CUBE``, ``GROUPING SETS`` with ``GROUPING(col)``, DISTINCT
+    aggregates, ``FILTER (WHERE ...)``, the statistical and selector
+    aggregates (EXPR_AGG_FUNCS, AS required), ``string_agg``/``array_agg``
+    with in-call ORDER BY, HAVING over any aggregate.
+  * Windows: ``fn(args) OVER ([PARTITION BY ...] [ORDER BY ...] [ROWS |
+    RANGE BETWEEN ...])`` including INTERVAL RANGE frames over a
+    timestamp key, the WINDOW clause, ranking, lag/lead (3-arg, IGNORE
+    NULLS), first/last/nth_value, percent_rank, cume_dist; windows over a
+    grouped SELECT see the aggregated rows; ``QUALIFY``; ``SELECT
+    DISTINCT ON (cols)``.
+  * Star modifiers ``* EXCLUDE / REPLACE / RENAME``, ``COLUMNS(...)``,
+    ``ORDER BY ALL``, NULLS FIRST/LAST, ``SAMPLE n PERCENT BY col``
+    (deterministic md5-bucket sample), ``USING SAMPLE`` / TABLESAMPLE,
+    ``PIVOT`` (IN list optional) / ``UNPIVOT [INCLUDE NULLS]``.
+  * Scalar surface: JSON extraction and ``->>``, 1-based bracket
+    indexing/slicing, struct/map/list literals, string_split, the
+    temporal family (date_part, date_diff, time_bucket, strftime), typed
+    literals, ``::`` casts, macros (CREATE MACRO), PREPARE/EXECUTE.
+  * DML and DDL: INSERT VALUES / SELECT / BY NAME / ON CONFLICT / OR
+    REPLACE|IGNORE, UPDATE [... FROM], DELETE, RETURNING, MERGE (the
+    Delta-style CDC triad through ``Engine.merge``), CTE-fronted DML,
+    CREATE TABLE [AS] with PRIMARY KEY / DEFAULT / PARTITIONED BY, views,
+    materialized views (matview.py), vector indexes, ALTER, TRUNCATE,
+    OPTIMIZE [ZORDER BY], VACUUM, COPY TO/FROM, EXPORT/IMPORT DATABASE,
+    DESCRIBE / SUMMARIZE [SELECT], EXPLAIN [ANALYZE | ESTIMATE], SHOW,
+    DIFF ... FROM VERSION, SEARCH.
 """
 
 from __future__ import annotations
@@ -212,8 +125,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..catalog import parse_date as _parse_date, parse_timestamp as _parse_timestamp
 from ..engine import guard
-from ..functions.compat import dual_compare, ref_like, truthy
-from ..operators.query import Query, agg_default_name, agg_spec, arg_col
+from ..functions.compat import dual_compare, ref_like, sql_literal, truthy
+from ..operators.query import agg_default_name, is_value_expr
 from ..results import CLOCK_FUNCTIONS
 from ..sources import files
 
@@ -274,10 +187,6 @@ WINDOW_FUNCS = {
     "row_number", "rank", "dense_rank", "lag", "lead", "ntile",
     "first_value", "last_value", "nth_value",  # round-7
     "percent_rank", "cume_dist",  # round-8
-}
-KEYWORDS_STOP = {
-    "from", "where", "group", "having", "order", "limit", "offset", "by",
-    "and", "or", "not", "in", "between", "like", "as", "desc", "asc",
 }
 
 
@@ -3470,52 +3379,70 @@ def _with_main(toks: list[str]) -> int | None:
 
 def _output_width(spec: "SelectSpec", clauses: dict) -> "int | None":
     """Column count of a parsed SELECT's output, or None for ``*`` —
-    read off the parse so a correlated subquery (whose DataFrame only
-    analyzes inside its outer query) is checked without analysis."""
+    read off the parse, so a LATERAL body's alias list is checked before
+    the statement compiles."""
     if spec.star:
         return None
-    hidden = set(clauses.get("having_hidden", ()))
-    n = len(spec.projections) + sum(
-        1
-        for fn, col, alias in spec.aggregates
-        if (alias or (fn != "_expr" and agg_default_name(fn, col))) not in hidden
-    )
+    n = len(spec.projections) + len(spec.aggregates)
     n += sum(1 for w in spec.windows if not w[2].startswith(_QUALIFY_HIDDEN))
     if clauses.get("group_by") and not spec.aggregates:
         n += 1  # the lenient GROUP BY's implicit COUNT(*)
     return n
 
 
+_QUALIFIED = re.compile(r"[\w$`\"]+(?:\.[\w$`\"]+)+")
+
+
 def _outer_ref(tok: str, scope: "frozenset[str] | None") -> bool:
     """Whether ``tok`` is a qualified column whose qualifier names none of
     the relations in ``scope`` (a subquery's FROM) — an outer reference."""
-    if scope is None or "." not in tok or _is_string_lit(tok):
+    if scope is None or not _QUALIFIED.fullmatch(tok) or _is_string_lit(tok):
         return False
     if _literal_value(tok) is not None:  # 1.5 etc.
         return False
     return _unquote(tok).split(".", 1)[0].lower() not in scope
 
 
-def _in_subquery(left: Column, sub: DataFrame) -> Column:
-    """ANSI three-valued ``left IN (subquery)`` from subquery Columns
-    alone: FALSE over an empty subquery (even for a NULL left side), TRUE
-    on a match, NULL when the left side is NULL or the subquery holds a
-    NULL, FALSE otherwise. Valid in a Filter and in a projection alike —
-    a bare ``isin(sub)`` below the top of a predicate plans a two-valued
-    ExistenceJoin, which only a NULL-as-FALSE position tolerates."""
-    sub = sub.toDF("__subq_v")
+def _q(name: str) -> str:
+    """``name`` as one quoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _col_sql(name: str) -> str:
+    """A column reference read the way ``F.col`` reads ``name``: dots
+    separate the qualifier, and ``t.*`` is one relation's star."""
+    return ".".join(p if p == "*" else _q(p) for p in name.split("."))
+
+
+def _arg_sql(text: str) -> str:
+    """An argument, key or item: a plain (qualified) name is a column
+    reference, anything else is expression text for Catalyst's parser."""
+    return text if is_value_expr(text) else _col_sql(text)
+
+
+def _and_all(preds: list[str]) -> str:
+    return preds[0] if len(preds) == 1 else "(" + " AND ".join(preds) + ")"
+
+
+_NULL_BOOL = "CAST(NULL AS BOOLEAN)"
+
+
+def _in_subquery(left: str, sub: str) -> str:
+    """ANSI three-valued ``left IN (subquery)``: FALSE over an empty
+    subquery (even for a NULL left side), TRUE on a match, NULL when the
+    left side is NULL or the subquery holds a NULL, FALSE otherwise.
+    Valid in a Filter and in a projection alike — a bare IN below the top
+    of a predicate plans a two-valued ExistenceJoin, which only a
+    NULL-as-FALSE position tolerates."""
+    s = f"SELECT __subq_v FROM ({sub}) AS __subq(__subq_v)"
     return (
-        F.when(~sub.exists(), F.lit(False))
-        .when(left.isin(sub), F.lit(True))
-        .when(
-            left.isNull() | sub.filter(F.col("__subq_v").isNull()).exists(),
-            F.lit(None).cast("boolean"),
-        )
-        .otherwise(F.lit(False))
+        f"(CASE WHEN NOT EXISTS ({s}) THEN false WHEN {left} IN ({s}) "
+        f"THEN true WHEN {left} IS NULL OR EXISTS ({s} WHERE __subq_v IS "
+        f"NULL) THEN {_NULL_BOOL} ELSE false END)"
     )
 
 
-def _quantified_fold(left: Column, op: str, quant: str, sub: DataFrame) -> Column:
+def _quantified_fold(left: str, op: str, quant: str, sub: str) -> str:
     """``left <op> ANY|ALL (subquery)`` for the order-decidable pairs:
     one aggregate over the subquery (row count, non-NULL count, min, max)
     read from a single struct scalar subquery, folded into a CASE — no
@@ -3526,69 +3453,54 @@ def _quantified_fold(left: Column, op: str, quant: str, sub: DataFrame) -> Colum
     makes ANY FALSE and ALL TRUE (even for a NULL x); otherwise a NULL x
     gives NULL, and a NULL element gives NULL wherever the non-NULL
     elements cannot decide."""
-    v = F.col(sub.columns[0])
-    st = sub.select(
-        F.struct(
-            F.count(F.lit(1)).alias("n"),
-            F.count(v).alias("nn"),
-            F.min(v).alias("lo"),
-            F.max(v).alias("hi"),
-        )
-    ).scalar()
-    n, nn, lo, hi = (st.getField(f) for f in ("n", "nn", "lo", "hi"))
-    null_b = F.lit(None).cast("boolean")
+    st = (
+        "(SELECT struct(count(1) AS n, count(__subq_v) AS nn, "
+        "min(__subq_v) AS lo, max(__subq_v) AS hi) "
+        f"FROM ({sub}) AS __subq(__subq_v))"
+    )
+    n, nn, lo, hi = (f"{st}.{f}" for f in ("n", "nn", "lo", "hi"))
+    either = f"(({left} != {lo}) OR ({left} != {hi}))"
     if quant == "any":
         hit = {
-            "!=": (left != lo) | (left != hi),
-            ">": left > lo,
-            ">=": left >= lo,
-            "<": left < hi,
-            "<=": left <= hi,
+            "!=": either,
+            ">": f"({left} > {lo})",
+            ">=": f"({left} >= {lo})",
+            "<": f"({left} < {hi})",
+            "<=": f"({left} <= {hi})",
         }[op]
-        empty, decided, undecided = F.lit(False), F.lit(True), F.lit(False)
+        empty, decided, undecided = "false", "true", "false"
     else:
         # ALL is decided FALSE by any non-NULL element failing the test
         hit = {
-            "=": (left != lo) | (left != hi),
-            ">": left <= hi,
-            ">=": left < hi,
-            "<": left >= lo,
-            "<=": left > lo,
+            "=": either,
+            ">": f"({left} <= {hi})",
+            ">=": f"({left} < {hi})",
+            "<": f"({left} >= {lo})",
+            "<=": f"({left} > {lo})",
         }[op]
-        empty, decided, undecided = F.lit(True), F.lit(False), F.lit(True)
+        empty, decided, undecided = "true", "false", "true"
     return (
-        F.when(n == 0, empty)
-        .when(left.isNull(), null_b)
-        .when(hit, decided)
-        .when(nn < n, null_b)
-        .otherwise(undecided)
+        f"(CASE WHEN {n} = 0 THEN {empty} WHEN {left} IS NULL THEN "
+        f"{_NULL_BOOL} WHEN {hit} THEN {decided} WHEN {nn} < {n} THEN "
+        f"{_NULL_BOOL} ELSE {undecided} END)"
     )
 
 
-#: Words a raw expression run may contain besides column references.
-_RAW_WORDS = frozenset(
-    {
-        "and", "or", "not", "null", "true", "false", "is", "in", "like",
-        "between", "case", "when", "then", "else", "end", "as", "cast",
-        "distinct", "interval", "div", "year", "years", "month", "months",
-        "week", "weeks", "day", "days", "hour", "hours", "minute",
-        "minutes", "second", "seconds",
-    }
-)
-
-
 class ExprParser:
-    """WHERE/HAVING predicate → Spark Column (precedence per expr.go).
+    """WHERE/HAVING/ON/QUALIFY predicate → Spark SQL text, with the
+    reference's precedence (OR < AND < NOT < comparison, expr.go:411-518)
+    and its rules: restricted LIKE, bare-operand truthiness and, with
+    ``weak_typing``, the dual numeric/string comparison
+    (functions/compat.py).
 
-    Subqueries compile to Spark subquery Columns (``DataFrame.scalar()``,
-    ``DataFrame.exists()``, ``Column.isin(DataFrame)``); Catalyst
-    decorrelates and plans them. ``resolver`` builds a parsed subquery's
-    DataFrame — contexts without one reject subqueries. ``scope`` is set
+    Subqueries stay SQL: ``resolver`` compiles a parsed subquery to its
+    ``(text, columns)`` (contexts without one reject subqueries), and
+    Catalyst resolves outer references and decorrelates. ``scope`` is set
     while parsing inside a subquery: the lower-cased relation names of
     its FROM. A qualified column whose qualifier names none of them is an
-    outer reference (``F.col(q).outer()``). ``scalar`` marks a scalar
-    subquery's WHERE, whose correlation must be ``inner = outer``
-    equalities (an equi-join once decorrelated).
+    outer reference. ``scalar`` marks a scalar subquery's WHERE, whose
+    correlation must be ``inner = outer`` equalities (an equi-join once
+    decorrelated).
 
     ``subqueries`` counts what the parse saw, by kind: ``scalar``,
     ``in``, ``exists``, ``quantified``, ``correlated`` (a subquery with
@@ -3598,7 +3510,7 @@ class ExprParser:
     or UPDATE/DELETE's ``coalesce(pred, FALSE)``). ``exact`` counts the
     enclosing NOTs and the parenthesized groups whose value is compared
     or tested (``(x IN (...)) IS NULL``): with none, ``x [NOT] IN
-    (SELECT ...)`` is a bare ``isin`` — Catalyst plans it as a semi or
+    (SELECT ...)`` is a bare IN — Catalyst plans it as a semi or
     null-aware anti join, and its NULL/FALSE merge cannot change the
     outcome through AND/OR alone — otherwise the exact helper."""
 
@@ -3619,26 +3531,20 @@ class ExprParser:
         self.scalar = scalar
         self.subqueries: Counter = Counter()
         self.exact = 0
-        # Round-10: aggregate calls seen while parsing (``COUNT(*)`` /
-        # ``SUM(x)`` ... mapped to their default output names) — the
-        # HAVING handler uses these to add HIDDEN aggregates for calls
-        # that don't appear in the SELECT list (standard SQL allows
-        # HAVING over any aggregate; the hidden column drops post-filter).
-        self.agg_calls: list[tuple[str, str, str]] = []
 
-    def parse(self) -> Column:
+    def parse(self) -> str:
         return self._or()
 
-    def conjuncts(self) -> list[tuple[list[str], Column, bool]]:
+    def conjuncts(self) -> list[tuple[list[str], str, bool]]:
         """Parse a predicate as its top-level AND conjuncts: ``(tokens,
-        column, references the outer query)`` each. A predicate with a
+        text, references the outer query)`` each. A predicate with a
         top-level OR is one conjunct."""
         start, first, out = self.cur.i, self.subqueries["outer"], []
         while True:
             i, seen = self.cur.i, self.subqueries["outer"]
-            col = self._not()
+            text = self._not()
             out.append(
-                (self.cur.toks[i:self.cur.i], col,
+                (self.cur.toks[i:self.cur.i], text,
                  self.subqueries["outer"] > seen)
             )
             if self.cur.peek_kw() != "and":
@@ -3646,37 +3552,37 @@ class ExprParser:
             self.cur.next()
         if self.cur.peek_kw() != "or":
             return out
-        col = _and_all([c for _, c, _ in out])
+        text = _and_all([t for _, t, _ in out])
         while self.cur.peek_kw() == "or":
             self.cur.next()
-            col = col | self._and()
+            text = f"({text} OR {self._and()})"
         return [
-            (self.cur.toks[start:self.cur.i], col,
+            (self.cur.toks[start:self.cur.i], text,
              self.subqueries["outer"] > first)
         ]
 
-    def _or(self) -> Column:
+    def _or(self) -> str:
         left = self._and()
         while self.cur.peek_kw() == "or":
             self.cur.next()
-            left = left | self._and()
+            left = f"({left} OR {self._and()})"
         return left
 
-    def _and(self) -> Column:
+    def _and(self) -> str:
         left = self._not()
         while self.cur.peek_kw() == "and":
             self.cur.next()
-            left = left & self._not()
+            left = f"({left} AND {self._not()})"
         return left
 
-    def _not(self) -> Column:
+    def _not(self) -> str:
         if self.cur.peek_kw() == "not" and self.cur.peek_kw(1) == "exists":
             # NOT EXISTS is one predicate form — _predicate consumes both.
             return self._predicate()
         if self.cur.peek_kw() == "not":
             self.cur.next()
             self.exact += 1
-            out = ~self._not()
+            out = f"(NOT {self._not()})"
             self.exact -= 1
             return out
         return self._predicate()
@@ -3721,43 +3627,26 @@ class ExprParser:
     def _is_outer(self, tok: str) -> bool:
         return _outer_ref(tok, self.scope)
 
-    def _raw(self, buf: list[str]) -> Column:
-        """Compile a raw token run with Catalyst's expression parser.
-        Inside a subquery, a run whose column references are all outer
-        is marked outer as a whole; a run mixing inner and outer columns
-        resolves its outer ones through Catalyst's own outer scope."""
-        col = F.expr(" ".join(buf))
-        outer = [t for t in buf if self._is_outer(t)]
-        if not outer:
-            return col
-        self.subqueries["outer"] += 1
-        names = [
-            t
-            for i, t in enumerate(buf)
-            if re.fullmatch(r"[A-Za-z_][\w$.]*", t)
-            and t.lower() not in _RAW_WORDS
-            and (i + 1 == len(buf) or buf[i + 1] != "(")
-            and (i == 0 or buf[i - 1].lower() != "as")
-        ]
-        return col.outer() if len(names) == len(outer) else col
+    def _raw(self, buf: list[str]) -> str:
+        """A raw token run as one expression for Catalyst's parser; an
+        outer reference in it is counted."""
+        if any(self._is_outer(t) for t in buf):
+            self.subqueries["outer"] += 1
+        return buf[0] if len(buf) == 1 else "(" + " ".join(buf) + ")"
 
     # round-10: || (string concat) joins the arithmetic re-lex set, so
     # ``WHERE a || 'X' = ...`` compiles like any computed comparison side
     _ARITH_OPS = ("+", "-", "*", "/", "%", "||")
 
-    def _arith(self) -> Column:
-        """Compile one arithmetic run: operand (token or balanced paren
-        group) followed by (op operand)*. The run's RAW text goes to
-        Catalyst's expression parser (string literals keep quotes,
-        backticks stripped from bare identifiers). A run with a scalar
-        subquery operand — ``2 * (SELECT AVG(x) FROM t)`` — folds its
-        operands with Column operators instead, at Spark SQL's two
-        left-associative levels, so the subquery Column sits inside the
-        expression Catalyst decorrelates."""
+    def _arith(self) -> str:
+        """One arithmetic run: operand (token, balanced paren group, CASE
+        or scalar subquery) followed by (op operand)*, as one expression
+        (string literals keep quotes, backticks stripped from bare
+        identifiers)."""
 
-        def one_operand() -> "list[str] | Column":
+        def one_operand() -> list[str]:
             if self.cur.peek() == "(" and self.cur.peek_kw(1) == "select":
-                return self._scalar_subquery()
+                return [self._scalar_subquery()]
             if self.cur.peek_kw() == "case":
                 return self._case()
             out: list[str] = []
@@ -3773,44 +3662,17 @@ class ExprParser:
             self._field_suffixes(out)
             return out
 
-        operands, ops = [one_operand()], []
+        toks = one_operand()
         while self.cur.peek() in self._ARITH_OPS:
-            ops.append(self.cur.next())
-            operands.append(one_operand())
-        if not any(isinstance(o, Column) for o in operands):
-            toks = list(operands[0])
-            for op, o in zip(ops, operands[1:]):
-                toks += [op, *o]
-            return self._raw(toks)
-        cols = [
-            o if isinstance(o, Column) else self._raw(o) for o in operands
-        ]
-        apply = {
-            "+": lambda a, b: a + b,
-            "-": lambda a, b: a - b,
-            "*": lambda a, b: a * b,
-            "/": lambda a, b: a / b,
-            "%": lambda a, b: a % b,
-            "||": F.concat,
-        }
-        terms, outer_ops = [cols[0]], []
-        for op, col in zip(ops, cols[1:]):
-            if op in ("*", "/", "%"):
-                terms[-1] = apply[op](terms[-1], col)
-            else:
-                outer_ops.append(op)
-                terms.append(col)
-        out = terms[0]
-        for op, col in zip(outer_ops, terms[1:]):
-            out = apply[op](out, col)
-        return out
+            toks += [self.cur.next(), *one_operand()]
+        return self._raw(toks)
 
-    def _value_operand(self) -> tuple[Column | None, Any, str | None]:
+    def _value_operand(self) -> tuple[str | None, Any, str | None]:
         """Comparison-side operand with arithmetic support: if the operand
-        is followed by +,-,*,/,% the whole run is re-lexed raw and handed
-        to Catalyst (``WHERE price * (1 - disc) > 100``). Plain operands
-        keep the reference path (literal typing, weak-mode dual compare,
-        HAVING aggregate-call names)."""
+        is followed by +,-,*,/,% the whole run is re-lexed as one
+        expression (``WHERE price * (1 - disc) > 100``). Plain operands
+        keep the reference path (literal typing, weak-mode dual
+        compare)."""
         start = self.cur.i
         seen = self.subqueries.copy()
         expr, lit, name = self._operand()
@@ -3822,9 +3684,9 @@ class ExprParser:
         self.subqueries = seen
         return self._arith(), None, None
 
-    def _subquery(self, kind: str) -> DataFrame:
+    def _subquery(self, kind: str) -> str:
         """Parse the ``SELECT ...`` at the cursor (the caller consumes the
-        enclosing parentheses) into its DataFrame. ``kind`` is one of
+        enclosing parentheses) into its SQL text. ``kind`` is one of
         ``scalar``, ``in``, ``exists``, ``quantified``."""
         what = {
             "scalar": "scalar subquery",
@@ -3862,33 +3724,30 @@ class ExprParser:
                     "empty input) — drop the aggregate or compare the "
                     "scalar subquery's value instead"
                 )
-        # read the width before building: build_select appends the window
-        # aliases to spec.projections
         width = _output_width(spec, clauses)
-        sub = self.resolver(spec, clauses)
+        sub, names = self.resolver(spec, clauses)
         if kind != "exists":
             if width is None and not spec.correlated:
-                width = len(sub.columns)
+                width = len(names)
             if width not in (None, 1):
                 raise ParseError(f"{what} must select exactly one column")
         return sub
 
-    def _scalar_subquery(self, name: str | None = None) -> Column:
-        """Consume ``( SELECT ... )`` positioned ON the '(' and return its
-        value as a scalar subquery Column: NULL over zero rows (ANSI);
-        more than one row fails the statement when it runs
-        (SCALAR_SUBQUERY_TOO_MANY_ROWS). ``name`` names the subquery's
-        output column — a hidden binding's name, so plans show it."""
+    def _scalar_subquery(self) -> str:
+        """Consume ``( SELECT ... )`` positioned ON the '(' and return it
+        as a scalar subquery: NULL over zero rows (ANSI); more than one
+        row fails the statement when it runs
+        (SCALAR_SUBQUERY_TOO_MANY_ROWS)."""
         self.cur.next()  # '('
         sub = self._subquery("scalar")
         if self.cur.next() != ")":
             raise ParseError("expected ')' after scalar subquery")
-        return (sub.toDF(name) if name else sub).scalar()
+        return f"({sub})"
 
-    def _operand(self) -> tuple[Column | None, Any, str | None]:
-        """Returns (column_expr, literal_value, column_name). Exactly one of
-        column_expr / literal_value is meaningful; parenthesized
-        sub-expressions return a boolean column_expr."""
+    def _operand(self) -> tuple[str | None, Any, str | None]:
+        """Returns (expression_text, literal_value, column_name). Exactly
+        one of expression_text / literal_value is meaningful;
+        parenthesized sub-expressions return a boolean expression."""
         t = self.cur.peek()
         if t == "(" and self.cur.peek_kw(1) == "select":
             return self._scalar_subquery(), None, None
@@ -3907,72 +3766,42 @@ class ExprParser:
         if tok.upper() == "NULL":
             # A literal NULL operand (``WHERE NULL = ANY (SELECT ...)``)
             # is the NULL literal, not a column reference.
-            return F.lit(None), None, None
+            return "NULL", None, None
         lit = _literal_value(tok)
         if lit is not None:
             return None, lit, None
-        # Aggregate-call syntax in HAVING (standard-SQL convenience over
-        # the reference's output-name style): COUNT(*) / SUM(x) / ... maps
-        # to the aggregated column's reference default name ("count" /
-        # "sum_x"), so `HAVING COUNT(*) > 3` and `HAVING count > 3` are
-        # the same predicate. The named column must exist post-aggregation
-        # (i.e. the aggregate appears in the SELECT list or is the lenient
-        # implicit COUNT(*)), same contract as the name form.
-        if tok.lower() in ("count", "sum", "avg", "min", "max") and self.cur.peek() == "(":
-            fn = tok.lower()
-            self.cur.next()
-            arg = self.cur.next()
-            if self.cur.next() != ")":
-                raise ParseError(f"expected ')' after {fn}(")
-            name = (
-                "count"
-                if (fn == "count" and arg == "*")
-                else f"{fn}_{_unquote(arg).rsplit('.', 1)[-1]}"
-            )
-            self.agg_calls.append((fn, arg, name))
-            return F.col(name), None, name
         if tok.lower() in ("timestamp", "date", "interval") and (
             self.cur.peek() is not None and _is_string_lit(self.cur.peek())
         ):
             # Typed literals in predicate position — ``WHERE ts >
             # TIMESTAMP '2024-01-02 00:00:00'`` / ``DATE '...'`` /
-            # ``INTERVAL '...'`` — compiled by Catalyst verbatim.
-            return F.expr(f"{tok} {self.cur.next()}"), None, None
+            # ``INTERVAL '...'``.
+            return f"{tok} {self.cur.next()}", None, None
         if self.cur.peek() == "(" and re.fullmatch(r"[A-Za-z_][\w$]*", tok):
-            # A scalar FUNCTION-CALL operand — ``WHERE CAST(x AS BIGINT) >
-            # 1``, ``WHERE round(x, 2) = 0.5`` (and the ``::`` shorthand,
-            # which expands to CAST). The balanced call is captured raw
-            # and compiled by Catalyst — the same strategy the arithmetic
-            # re-lex uses; subqueries are not supported inside the call.
+            # A FUNCTION-CALL operand — ``WHERE CAST(x AS BIGINT) > 1``,
+            # ``WHERE round(x, 2) = 0.5``, ``HAVING COUNT(*) > 3`` (and
+            # the ``::`` shorthand, which expands to CAST): the balanced
+            # call is one expression.
             buf = [tok, "(", *map(_unquote_bare, self.cur.group()), ")"]
             self._field_suffixes(buf)
             return self._raw(buf), None, None
         name = _unquote(tok)
         if self._is_outer(tok):
             self.subqueries["outer"] += 1
-            return F.col(name).outer(), None, name
-        return F.col(name), None, name
+        return _col_sql(name), None, name
 
-    def _compare(self, left: Column | None, lname: str | None, op: str) -> Column:
+    def _compare(self, left: str, lname: str | None, op: str) -> str:
         subq = self.cur.peek() == "(" and self.cur.peek_kw(1) == "select"
         rexpr, rlit, _ = self._value_operand()
         op = "!=" if op == "<>" else op
         if self.weak and lname is not None and (rexpr is None or subq):
             # weak typing compares against a literal or a scalar
             # subquery's value numerically when both sides parse
-            return dual_compare(left, op, rexpr if subq else rlit)
-        right = rexpr if rexpr is not None else F.lit(rlit)
-        ops = {
-            "=": lambda a, b: a == b,
-            "!=": lambda a, b: a != b,
-            "<": lambda a, b: a < b,
-            "<=": lambda a, b: a <= b,
-            ">": lambda a, b: a > b,
-            ">=": lambda a, b: a >= b,
-        }
-        return ops[op](left if left is not None else F.lit(None), right)
+            return dual_compare(left, op, rexpr if subq else sql_literal(rlit))
+        right = rexpr if rexpr is not None else sql_literal(rlit)
+        return f"({left} {op} {right})"
 
-    def _quantified(self, left: Column, op: str) -> Column:
+    def _quantified(self, left: str, op: str) -> str:
         """Round-13: ``expr <op> ANY|ALL|SOME (SELECT col ...)`` — the
         ANSI quantified comparison (DuckDB runs the identical syntax),
         positioned ON the quantifier keyword. SOME is the ANSI synonym
@@ -3996,15 +3825,13 @@ class ExprParser:
             return self._in(left, sub, negate=True)
         return _quantified_fold(left, op, quant, sub)
 
-    def _in(self, left: Column, sub: DataFrame, negate: bool) -> Column:
-        """``left [NOT] IN (subquery)``: a bare ``isin`` where NULL acts
-        as FALSE (see ``exact``), else the exact three-valued helper."""
-        if self.exact:
-            out = _in_subquery(left, sub)
-            return ~out if negate else out
-        return ~left.isin(sub) if negate else left.isin(sub)
+    def _in(self, left: str, sub: str, negate: bool) -> str:
+        """``left [NOT] IN (subquery)``: a bare IN where NULL acts as
+        FALSE (see ``exact``), else the exact three-valued helper."""
+        out = _in_subquery(left, sub) if self.exact else f"({left} IN ({sub}))"
+        return f"(NOT {out})" if negate else out
 
-    def _predicate(self) -> Column:
+    def _predicate(self) -> str:
         k0 = self.cur.peek_kw()
         neg_exists = False
         if k0 == "not" and self.cur.peek_kw(1) == "exists":
@@ -4021,11 +3848,11 @@ class ExprParser:
             sub = self._subquery("exists")
             if self.cur.next() != ")":
                 raise ParseError("expected ')' after EXISTS subquery")
-            return ~sub.exists() if neg_exists else sub.exists()
+            return f"({'NOT ' * neg_exists}EXISTS ({sub}))"
         outer0 = self.subqueries["outer"]
         grouped = self.cur.peek() == "(" and self.cur.peek_kw(1) != "select"
         expr, lit, name = self._value_operand()
-        left = expr if expr is not None else F.lit(lit)
+        left = expr if expr is not None else sql_literal(lit)
 
         nxt = self.cur.peek_kw()
         negate = False
@@ -4066,7 +3893,11 @@ class ExprParser:
                     continue
                 lit_v = _literal_value(tok)
                 vals.append(lit_v if lit_v is not None else _unquote(tok))
-            out = left.isin(vals)
+            out = (
+                f"({left} IN ({', '.join(map(sql_literal, vals))}))"
+                if vals
+                else f"(CASE WHEN {left} IS NOT NULL THEN false END)"
+            )
         elif nxt == "is":
             # Round-6 extension: ``x IS [NOT] NULL`` — the standard null
             # test (the reference can't express it: its storage rewrites
@@ -4081,12 +3912,11 @@ class ExprParser:
                 # Round-13: ``x IS [NOT] DISTINCT FROM y`` — the ANSI
                 # null-safe comparison (DuckDB/Postgres). Always
                 # TWO-valued: NULLs compare EQUAL to each other and
-                # DISTINCT from every value. Spark's eqNullSafe (the
-                # ``<=>`` operator) IS ``IS NOT DISTINCT FROM``; the
-                # plain form is its negation (safe to negate — the
-                # operand is never NULL). The right side takes the full
-                # comparison-operand grammar (literals, columns,
-                # arithmetic runs, typed literals, scalar subqueries).
+                # DISTINCT from every value — Spark's ``<=>`` is ``IS NOT
+                # DISTINCT FROM``; the plain form is its negation. The
+                # right side takes the full comparison-operand grammar
+                # (literals, columns, arithmetic runs, typed literals,
+                # scalar subqueries).
                 self.cur.next()
                 self.cur.expect_kw("from")
                 if self.cur.peek_kw() == "null":
@@ -4095,15 +3925,15 @@ class ExprParser:
                     # ``=`` where it's always UNKNOWN), so the bare
                     # keyword must not parse as a column name.
                     self.cur.next()
-                    right: Column = F.lit(None)
+                    right = "NULL"
                 else:
                     rexpr, rlit, _ = self._value_operand()
-                    right = rexpr if rexpr is not None else F.lit(rlit)
-                eq = left.eqNullSafe(right)
-                out = eq if not_null else ~eq
+                    right = rexpr if rexpr is not None else sql_literal(rlit)
+                eq = f"({left} <=> {right})"
+                out = eq if not_null else f"(NOT {eq})"
             else:
                 self.cur.expect_kw("null")
-                out = left.isNotNull() if not_null else left.isNull()
+                out = f"({left} IS {'NOT ' * not_null}NULL)"
         elif nxt == "between":
             self.cur.next()
             le, lo, _ = self._operand()
@@ -4111,10 +3941,9 @@ class ExprParser:
             he, hi, _ = self._operand()
             # Round-10: bounds may be column EXPRESSIONS (typed literals
             # like TIMESTAMP '...', function calls), not just literals.
-            out = left.between(
-                le if le is not None else F.lit(lo),
-                he if he is not None else F.lit(hi),
-            )
+            lo = le if le is not None else sql_literal(lo)
+            hi = he if he is not None else sql_literal(hi)
+            out = f"(({left} >= {lo}) AND ({left} <= {hi}))"
         elif nxt == "like":
             self.cur.next()
             pat = self.cur.next()
@@ -4129,7 +3958,7 @@ class ExprParser:
             pat = self.cur.next()
             if not _is_string_lit(pat):
                 raise ParseError("ILIKE pattern must be a quoted string")
-            out = ref_like(F.lower(left), pat[1:-1].lower())
+            out = ref_like(f"lower({left})", pat[1:-1].lower())
         else:
             # Bare operand ⇒ truthiness (expr.go:515-517); parenthesized
             # boolean sub-expressions pass through unchanged.
@@ -4145,7 +3974,7 @@ class ExprParser:
                 "equalities 'inner_col = outer.col' (an equi-join once "
                 "decorrelated, never a nested-loop join)"
             )
-        return ~out if negate else out
+        return f"(NOT {out})" if negate else out
 
 
 @dataclass
@@ -4201,21 +4030,15 @@ class SelectSpec:
     # DuckDB USING SAMPLE / TABLESAMPLE — (kind, value, unit, seed): kind
     # in bernoulli|system|reservoir, unit in percent|rows
     using_sample: "tuple[str, float, str, int | None] | None" = None
-    # Dialect extension: fn(args) OVER ([PARTITION BY ...] [ORDER BY ...])
-    windows: list[tuple[str, list, str, list, list]] = field(
+    # Dialect extension: fn(args) OVER (...) AS alias — (fn, args,
+    # alias, the OVER body's tokens or a WINDOW-clause name)
+    windows: list[tuple[str, list, str, "list[str] | str"]] = field(
         default_factory=list
-    )  # (fn, args, alias, partition_cols, [(order_col, desc)])
-    # SELECT-list scalar subqueries, bound as hidden ``__subq_scalar_<n>``
-    # columns on the FROM frame and projected from there.
-    hidden: list[tuple[str, Column]] = field(default_factory=list)
-    # True when qualified references must resolve against the FROM
-    # relation's name — the SELECT has subqueries, is one, or names the
-    # relation in a qualified reference.
-    scoped: bool = False
+    )
     # A subquery whose WHERE references columns of an enclosing query.
     correlated: bool = False
     # Dialect extension: [INNER|LEFT|RIGHT|FULL [OUTER]] JOIN r ON cond —
-    # (how, relation, condition); the condition is a Column, a USING
+    # (how, relation, condition); the condition is SQL text, a USING
     # column tuple, the ASOF conjunct list, or None (CROSS, LATERAL)
     joins: list[tuple[str, Relation, Any]] = field(default_factory=list)
     # FROM t PIVOT (agg(expr) FOR col IN (lit [AS name], ...)) —
@@ -4433,69 +4256,14 @@ def _alias_column_list(cur: _Cursor) -> "list[str] | None":
     return cols
 
 
-def _over_body(cur: _Cursor) -> tuple[list, list, "tuple | None"]:
-    """Parse the body of an OVER clause (the opening '(' already
-    consumed, consumes through the closing ')'): ``[PARTITION BY c, ...]
-    [ORDER BY c [ASC|DESC], ...] [ROWS|RANGE BETWEEN <bound> AND
-    <bound>]``. Shared by inline ``OVER (...)`` and the round-8 named
-    ``WINDOW w AS (...)`` clause. ROWS frames take physical offsets;
-    RANGE (round-7) takes logical value offsets over exactly one numeric
-    ORDER BY key (Spark's rangeBetween contract)."""
-    part: list[str] = []
-    order: list[tuple[str, bool]] = []
-    if cur.peek_kw() == "partition":
-        cur.next()
-        cur.expect_kw("by")
-        part.append(_unquote(cur.next()))
-        while cur.peek() == ",":
-            cur.next()
-            part.append(_unquote(cur.next()))
-    if cur.peek_kw() == "order":
-        cur.next()
-        cur.expect_kw("by")
-        while True:
-            c = _unquote(cur.next())
-            desc = False
-            if cur.peek_kw() in ("asc", "desc"):
-                desc = cur.next().lower() == "desc"
-            order.append((c, desc))
-            if cur.peek() != ",":
-                break
-            cur.next()
-    frame = None
-    if cur.peek_kw() == "groups":
-        # DuckDB itself rejects GROUPS mode ("not implemented") — so do
-        # we, by name (round-14)
-        raise ParseError("GROUPS frame mode is not supported (DuckDB "
-                         "rejects it too) — use ROWS or RANGE")
-    if cur.peek_kw() in ("rows", "range"):
-        kind = cur.next().lower()
-        cur.expect_kw("between")
-        lo = _frame_bound(cur)
-        cur.expect_kw("and")
-        hi = _frame_bound(cur)
-        frame = (kind, lo, hi)
-    if cur.peek_kw() == "exclude":
-        # Round-14: named rejection — Spark window frames have no
-        # EXCLUDE; spell the exclusion into the aggregate (e.g.
-        # sum(...) OVER frame - x for EXCLUDE CURRENT ROW)
-        raise ParseError(
-            "frame EXCLUDE is not supported (no Spark twin) — subtract "
-            "the excluded rows from the windowed aggregate instead"
-        )
-    if cur.next() != ")":
-        raise ParseError("expected ')' to close the window definition")
-    return part, order, frame
-
-
 def parse_select(
     cur: _Cursor, weak_typing: bool = False, resolver=None,
     subquery: str | None = None, positional: bool = False,
-) -> tuple[SelectSpec, Query | None, dict]:
-    """Parse SELECT ... and return (spec, clauses) — assembly happens in
-    build_select where the DataFrame is available. ``resolver`` (optional)
-    builds a parsed subquery's DataFrame (RefSQL supplies it; contexts
-    without an engine reject subqueries). ``subquery`` names the form
+) -> tuple[SelectSpec, None, dict]:
+    """Parse SELECT ... and return (spec, None, clauses); RefSQL compiles
+    them to SQL. ``resolver`` (optional) compiles a parsed subquery to its
+    ``(text, columns)`` (RefSQL supplies it; contexts without an engine
+    reject subqueries). ``subquery`` names the form
     this SELECT is the body of (``scalar``, ``in``, ``exists``,
     ``quantified``, ``lateral``): its WHERE then marks references to other
     relations as outer. Except in a LATERAL body, whose columns the outer
@@ -4506,7 +4274,7 @@ def parse_select(
     (the source of ``INSERT INTO t SELECT ...``, whose columns bind by
     position) relaxes it the same way."""
     cur.expect_kw("select")
-    spec = SelectSpec(scoped=bool(subquery))
+    spec = SelectSpec()
     unnamed_ok = positional or subquery not in (None, "lateral")
 
     def unnamed(error: str) -> str:
@@ -4532,7 +4300,6 @@ def parse_select(
 
     # projection list until FROM
     scalar_items: list[tuple[int, list[str]]] = []
-
     def mark_aggregates() -> None:
         spec.agg_at += [len(spec.projections)] * (
             len(spec.aggregates) - len(spec.agg_at)
@@ -4560,7 +4327,7 @@ def parse_select(
         if cur.peek() == "(" and cur.peek_kw(1) == "select":
             # Scalar subquery in the SELECT list — ``SELECT a, (SELECT
             # max(x) FROM t) AS m FROM ...``, correlated or not. AS alias
-            # mandatory (a subquery has no natural output name); bound
+            # mandatory (a subquery has no natural output name); compiled
             # after the clauses parse (_bind_select_scalars).
             if resolver is None:
                 raise ParseError(
@@ -4588,7 +4355,7 @@ def parse_select(
                     raise ParseError(f"expected '(' after {mod.upper()}")
                 if mod == "exclude":
                     # ``* EXCLUDE (c1, ...)`` — star minus named columns
-                    # (resolved and validated in build_select).
+                    # (validated against the FROM columns at compile).
                     spec.star_exclude += cur.names()
                     if not spec.star_exclude:
                         raise ParseError("EXCLUDE needs at least one column")
@@ -4677,8 +4444,7 @@ def parse_select(
         elif (low in AGG_FUNCS or low in WINDOW_FUNCS) and cur.peek() == "(":
             # Top-level commas split the argument list; everything else
             # is kept verbatim so computed arguments (``SUM(price * (1 -
-            # disc))``) reach Catalyst's expression parser intact
-            # (operators/query.arg_col).
+            # disc))``) reach Catalyst's expression parser intact.
             args = [_raw_text(a) for a in _split_depth0(cur.group()) if a]
             if cur.peek_kw() == "over":
                 # Dialect extension: window functions — ``fn(args) OVER
@@ -4689,12 +4455,11 @@ def parse_select(
                 # HAVING, textually later than the SELECT list).
                 cur.next()
                 if cur.peek() == "(":
-                    cur.next()
-                    part, order, frame = _over_body(cur)
+                    over: "list[str] | str" = cur.group()
                 else:
-                    # Named-window reference: `part` carries the name (a
-                    # str, unlike the inline list) until resolution.
-                    part, order, frame = _unquote(cur.next()), None, None
+                    # Named-window reference: the name (a str, unlike the
+                    # inline token list) until resolution.
+                    over = _unquote(cur.next())
                 if low == "grouping":
                     raise ParseError("grouping() cannot take an OVER clause")
                 if cur.peek_kw() != "as":
@@ -4703,7 +4468,7 @@ def parse_select(
                     )
                 cur.next()
                 alias = _unquote(cur.next())
-                spec.windows.append((low, args, alias, part, order, frame))
+                spec.windows.append((low, args, alias, over))
             else:
                 if low not in AGG_FUNCS:
                     raise ParseError(f"{low}(...) requires an OVER clause")
@@ -4753,11 +4518,9 @@ def parse_select(
                 if cur.peek_kw() == "as":
                     cur.next()
                     alias = _unquote(cur.next())
-                from ..operators.query import is_value_expr
-
                 # DISTINCT aggregates: the arg keeps its
-                # "DISTINCT <col>" text; agg_spec compiles it via Spark
-                # SQL's own DISTINCT-aggregate planning.
+                # "DISTINCT <col>" text; Spark SQL plans the
+                # DISTINCT aggregate.
                 check = (
                     args[0][9:].strip()
                     if args[0].lower().startswith("distinct ")
@@ -4772,9 +4535,9 @@ def parse_select(
         else:
             # Value-expression projections (dialect extension): capture
             # tokens to the next top-level comma / AS / FROM; a multi-token
-            # or operator-bearing item compiles via Catalyst's expression
-            # parser in build_select. Single plain identifiers keep the
-            # reference's missing-column-tolerant path.
+            # or operator-bearing item is Catalyst expression text. Single
+            # plain identifiers keep the reference's missing-column-
+            # tolerant path.
             # A ')' at depth 0 ends a FROM-less SUBQUERY's select list
             # (``... = ANY (SELECT 1)``) — the caller consumes it; at top
             # level it's an error the caller reports.
@@ -4812,8 +4575,6 @@ def parse_select(
             if cur.peek_kw() == "as":
                 cur.next()
                 alias = _unquote(cur.next())
-            from ..operators.query import is_value_expr
-
             if (len(buf) > 1 or is_value_expr(name)) and alias is None:
                 try:
                     # Bare numeric literal (``SELECT 1`` — the idiomatic
@@ -4829,8 +4590,8 @@ def parse_select(
                 # ``round(AVG(x), 2) AS a``, ``CAST(SUM(x) AS BIGINT)``,
                 # ``MAX(a) - MIN(a)`` — is an AGGREGATE item, not a
                 # post-aggregation projection (where the input columns no
-                # longer exist). The whole text compiles via Catalyst in
-                # the agg list (the _expr path); window forms (any OVER
+                # longer exist). The whole text is one item of the
+                # aggregate list (the _expr path); window forms (any OVER
                 # inside) stay projections. Standard SQL allows arbitrary
                 # expressions over aggregates; this closes the old
                 # "ROUND around an aggregate needs a CTE" limitation.
@@ -4840,11 +4601,6 @@ def parse_select(
     mark_aggregates()
     cur.expect_kw("from")
     spec.relation = _relation(cur, weak_typing, resolver)
-    # ``SELECT t.v FROM t``: a qualified reference to the relation's name
-    # anywhere in the statement needs the name on the frame
-    qual = spec.relation.name.lower() + "."
-    if spec.relation.name and any(t.lower().startswith(qual) for t in cur.toks):
-        spec.scoped = True
     if cur.peek_kw() == "sample":
         # ``SAMPLE n PERCENT BY col`` — a narrow md5-bucket
         # filter evaluated in the scan stage (keep = floor(256·n/100)
@@ -5016,7 +4772,7 @@ def parse_select(
     # [ON <predicate> | USING (col, ...)]``, where r is any relation
     # (_relation). ON reuses the full WHERE expression language, with
     # qualified ``name.column`` references resolving against the
-    # DataFrame aliases the executor assigns; USING is equi-join sugar
+    # relation names; USING is equi-join sugar
     # (one output column per USING name); CROSS JOIN takes no condition.
     # ``FROM a, b`` is a cross product whose WHERE equalities Catalyst
     # folds back into hash-join conditions. ``ASOF [LEFT] JOIN r ON l.k =
@@ -5026,7 +4782,7 @@ def parse_select(
     # join. ``[CROSS | INNER | LEFT] JOIN LATERAL (SELECT ...) AS x [ON
     # TRUE]`` (also ``FROM a, LATERAL (...)``) joins a body whose
     # qualified names outside its own FROM reference the columns joined
-    # so far (``Column.outer()``), through DataFrame.lateralJoin.
+    # so far (Catalyst decorrelates the body).
     _JOIN_KWS = ("join", "inner", "left", "right", "full", "cross", "asof")
     while cur.peek_kw() in _JOIN_KWS or cur.peek() == ",":
         if cur.peek() == ",":
@@ -5102,7 +4858,7 @@ def parse_select(
             r.name.lower() for r in (spec.relation, *[j[1] for j in spec.joins])
         )
     clauses: dict[str, Any] = {}
-    conjuncts: list[tuple[list[str], Column, bool]] = []
+    conjuncts: list[tuple[list[str], str, bool]] = []
     while not cur.done():
         kw = cur.peek_kw()
         if kw == "where":
@@ -5117,13 +4873,12 @@ def parse_select(
             else:
                 clauses["where"] = wp.parse()
             spec.correlated = wp.subqueries["outer"] > 0
-            spec.scoped = spec.scoped or sum(wp.subqueries.values()) > 0
         elif kw == "group":
             cur.next()
             cur.expect_kw("by")
             # GROUP BY ALL — group on every
             # non-aggregate SELECT item (the DuckDB ergonomic; resolved
-            # against the projection list in build_select).
+            # against the projection list at compile).
             if cur.peek_kw() == "all":
                 cur.next()
                 clauses["group_by"] = ["__ALL__"]
@@ -5166,7 +4921,7 @@ def parse_select(
                 clauses["group_by"] = union_cols
                 continue
             # GROUP BY ROLLUP(a, b) / CUBE(a, b) —
-            # grouping-set aggregation in one Expand pass (Query mode).
+            # grouping-set aggregation in one Expand pass.
             if cur.peek_kw() in ("rollup", "cube") and cur.peek(1) == "(":
                 clauses["group_mode"] = cur.next().lower()
                 cur.next()  # (
@@ -5198,26 +4953,6 @@ def parse_select(
                     "IN/EXISTS/ANY/ALL and correlated subqueries are not "
                     "supported in HAVING"
                 )
-            # HAVING over an aggregate NOT in the SELECT list
-            # (``SELECT g, MAX(v) AS m ... HAVING COUNT(*) > 2``) —
-            # standard SQL. Add each missing call as a HIDDEN aggregate
-            # under its default output name; build_select drops the
-            # hidden columns after the filter applies.
-            from ..operators.query import agg_default_name
-
-            present = {
-                a if a is not None else agg_default_name(fn, col)
-                for fn, col, a in spec.aggregates
-                if fn != "_expr"
-            } | {a for fn, _c, a in spec.aggregates if a is not None}
-            hidden = []
-            for fn, arg, name in hp.agg_calls:
-                if name not in present:
-                    spec.aggregates.append((fn, arg, None))
-                    present.add(name)
-                    hidden.append(name)
-            if hidden:
-                clauses["having_hidden"] = hidden
         elif kw == "order":
             # Multi-column ORDER BY, each key with its own ASC/DESC — the
             # reference parses a single sort key (select.go); multi-key is
@@ -5235,8 +4970,8 @@ def parse_select(
             ):
                 # ORDER BY ALL (DuckDB ergonomic) — sort by
                 # every output column left-to-right, one shared
-                # ASC/DESC/NULLS. Resolved against the output list in
-                # build_select (the GROUP BY ALL pattern).
+                # ASC/DESC/NULLS. Resolved against the output list at
+                # compile (the GROUP BY ALL pattern).
                 cur.next()
                 desc = False
                 if cur.peek_kw() in ("asc", "desc"):
@@ -5304,9 +5039,9 @@ def parse_select(
                 if wname in defs:
                     raise ParseError(f"duplicate WINDOW name {wname!r}")
                 cur.expect_kw("as")
-                if cur.next() != "(":
+                if cur.peek() != "(":
                     raise ParseError("expected '(' after WINDOW name AS")
-                defs[wname] = _over_body(cur)
+                defs[wname] = cur.group()
                 if cur.peek() == ",":
                     cur.next()
                     continue
@@ -5326,21 +5061,17 @@ def parse_select(
             break
         else:
             raise ParseError(f"unexpected token {cur.peek()!r}")
-    # Resolve named-window references (``OVER w`` left the name string in
-    # the partition slot) against the WINDOW clause definitions.
+    # Resolve named-window references (``OVER w`` left the name) against
+    # the WINDOW clause definitions.
     defs = clauses.pop("window_defs", {})
-    if any(isinstance(p, str) for _, _, _, p, _, _ in spec.windows):
-        resolved_w = []
-        for fn, args, alias, part, order, frame in spec.windows:
-            if isinstance(part, str):
-                if part not in defs:
-                    raise ParseError(
-                        f"unknown window name {part!r} — define it with "
-                        f"WINDOW {part} AS (...)"
-                    )
-                part, order, frame = defs[part]
-            resolved_w.append((fn, args, alias, part, order, frame))
-        spec.windows = resolved_w
+    for k, (fn, args, alias, over) in enumerate(spec.windows):
+        if isinstance(over, str):
+            if over not in defs:
+                raise ParseError(
+                    f"unknown window name {over!r} — define it with "
+                    f"WINDOW {over} AS (...)"
+                )
+            spec.windows[k] = (fn, args, alias, defs[over])
     if subquery == "lateral":
         _lateral_body(spec, clauses, conjuncts, scope)
     if scalar_items:
@@ -5348,30 +5079,17 @@ def parse_select(
     return spec, None, clauses
 
 
-def _and_all(cols: list[Column]) -> Column:
-    out = cols[0]
-    for c in cols[1:]:
-        out = out & c
-    return out
-
-
 def _lateral_body(
     spec: SelectSpec,
     clauses: dict,
-    conjuncts: list[tuple[list[str], Column, bool]],
+    conjuncts: list[tuple[list[str], str, bool]],
     scope: frozenset,
 ) -> None:
-    """Shape a parsed LATERAL body for ``DataFrame.lateralJoin``.
-
-    A plain item naming an outer column compiles whole as ``outer()``
-    (Catalyst still resolves its inner names first), so the body analyzes
-    only inside the join. A grouped body cannot filter on outer columns
-    before its aggregate: classic PySpark's ``groupBy`` analyzes its
-    input. Its top-level ``inner = outer`` WHERE conjuncts become extra
-    grouping keys matched to the outer columns after the aggregate, the
-    plan Spark SQL builds for a grouped LATERAL; any other outer reference
-    there is an error. SQL that is invalid on its own fails here, not when
-    the statement runs."""
+    """Check a parsed LATERAL body; Catalyst decorrelates it. A grouped
+    body references the outer query only in top-level ``inner = outer``
+    WHERE conjuncts (extra grouping keys once decorrelated) and its items
+    are aggregates or bare keys; SQL that is invalid on its own fails
+    here, not when the statement runs."""
     if spec.distinct or spec.distinct_on or spec.windows:
         raise ParseError(
             "SELECT DISTINCT and window functions in a LATERAL body are "
@@ -5384,16 +5102,6 @@ def _lateral_body(
                 "LATERAL body mixes aggregate and plain items without "
                 "GROUP BY"
             )
-        outer = {}
-        for i, (name, alias) in enumerate(spec.projections):
-            if name and any(_outer_ref(t, scope) for t in tokenize(name)):
-                ph = f"__lateral_outer_{i}"
-                outer[ph] = F.expr(name).outer()
-                spec.projections[i] = (
-                    ph, alias or _unquote(name).rsplit(".", 1)[-1]
-                )
-        if outer:
-            clauses["outer_items"] = outer
         return
     if group == ["__ALL__"]:
         group = [item for item, _ in spec.projections]
@@ -5410,15 +5118,13 @@ def _lateral_body(
                 f"LATERAL item '{name}' must be an aggregate or a bare "
                 "GROUP BY key"
             )
-    where, having = [], [clauses["having"]] if "having" in clauses else []
-    for toks, col, correlated in conjuncts:
+    for toks, _, correlated in conjuncts:
         if not correlated:
-            where.append(col)
             continue
         sides = [toks[0], toks[2]] if len(toks) == 3 and toks[1] == "=" else []
         refs = [t for t in sides if _outer_ref(t, scope)]
         inner = [
-            _unquote(t)
+            t
             for t in sides
             if t not in refs and re.fullmatch(r"[A-Za-z_`\"][\w$.`\"]*", t)
         ]
@@ -5428,10 +5134,6 @@ def _lateral_body(
                 "in top-level '<inner col> = <outer>.col' WHERE conjuncts "
                 "of a plain GROUP BY"
             )
-        if inner[0] not in group:
-            group = [*group, inner[0]]
-        key = F.col(inner[0].rsplit(".", 1)[-1])
-        having.append(key == F.col(_unquote(refs[0])).outer())
     if any(
         _outer_ref(t, scope) for _, text, _ in spec.aggregates
         for t in tokenize(text)
@@ -5440,18 +5142,13 @@ def _lateral_body(
             "a grouped LATERAL body's aggregates cannot reference the "
             "outer query"
         )
-    clauses["group_by"] = group
-    clauses.pop("where", None)
-    if where:
-        clauses["where"] = _and_all(where)
-    if having:
-        clauses["having"] = _and_all(having)
 
 
-def _predicate_subqueries(ep: ExprParser) -> int:
-    """How many IN/EXISTS/ANY/ALL or correlated subqueries a parse saw."""
-    kinds = ("in", "exists", "quantified", "correlated")
-    return sum(ep.subqueries[k] for k in kinds)
+#: Clauses after which a subquery body can yield several rows.
+_MULTI_ROW = frozenset({
+    "group", "having", "order", "limit", "offset", "qualify", "union",
+    "intersect", "except",
+})
 
 
 def _bind_select_scalars(
@@ -5461,59 +5158,102 @@ def _bind_select_scalars(
     weak_typing: bool,
     resolver,
 ) -> None:
-    """Bind the SELECT list's scalar subqueries (``(position, body
-    tokens)``) as hidden columns and point their projection slots at
-    them. In an ungrouped SELECT, bodies whose single item is a call and
-    whose FROM/WHERE tails match share ONE struct-valued scalar subquery
-    — ``(SELECT count(*) ...), (SELECT sum(v) ...)`` become ``struct(
-    count(*) AS f0, sum(v) AS f1)`` read back field by field — because
-    Catalyst merges uncorrelated scalar subqueries but not correlated
-    ones, and each correlated scalar would otherwise cost its own
-    aggregate and join."""
+    """Compile the SELECT list's scalar subqueries (``(position, body
+    tokens)``) into their projection slots. In an ungrouped SELECT,
+    correlated bodies whose single item is an aggregate call and whose
+    FROM/WHERE tails match share ONE LATERAL join — ``(SELECT count(*)
+    ...), (SELECT sum(v) ...)`` become ``LATERAL (SELECT count(*) AS f0,
+    sum(v) AS f1 ...) AS __subq_scalar_<n>`` read back field by field —
+    because Catalyst merges uncorrelated scalar subqueries but not
+    correlated ones, and each correlated scalar would otherwise cost its
+    own aggregate and join. An ungrouped aggregate yields exactly one
+    row, so the join keeps every row, as the scalars would."""
     batches: dict[tuple, list[tuple[int, list[str], list[str]]]] = {}
     bodies = dict(items)
-    grouped = bool(spec.aggregates or clauses.get("group_by"))
+    shared = not (spec.star or spec.aggregates or clauses.get("group_by"))
     for pos, body in items:
-        depth, fi = 0, None
-        for i, t in enumerate(body):
-            depth += (t == "(") - (t == ")")
-            if depth == 0 and t.lower() == "from":
-                fi = i
-                break
+        fi = _find_depth0(body, {"from"})
         head = body[1:fi]
         if len(head) > 2 and head[-2].lower() == "as":
             head = head[:-2]
-        depth, batchable = 0, fi is not None and head[-1:] == [")"]
-        for t in head:
-            depth += (t == "(") - (t == ")")
-            batchable = batchable and not (depth == 0 and t == ",")
-        if batchable and not grouped and head[0].lower() != "distinct":
-            key: tuple = tuple(body[fi:])
+        tail = body[fi:] if fi is not None else []
+        if (
+            shared
+            and fi is not None
+            and head[-1:] == [")"]
+            and head[0].lower() != "distinct"
+            and _find_depth0(head, {","}) is None
+            and _contains_agg_call(head)
+            and _find_depth0(tail, _MULTI_ROW) is None
+        ):
+            key: tuple = tuple(tail)
         else:
             key = ("__solo__", pos)
-        batches.setdefault(key, []).append((pos, head, body[fi:] if fi else []))
+        batches.setdefault(key, []).append((pos, head, tail))
     for members in batches.values():
-        ph = f"__subq_scalar_{len(spec.hidden)}"
-        if len(members) == 1:
-            pos = members[0][0]
+        if len(members) > 1:
+            toks = ["select"]
+            for i, (_, head, _) in enumerate(members):
+                toks += [","] * bool(i) + [*head, "as", f"f{i}"]
+            cur = _Cursor(toks + members[0][2])
+            sub_spec, _, sub_clauses = parse_select(
+                cur, weak_typing, resolver, subquery="scalar"
+            )
+            if sub_spec.correlated and cur.done():
+                name = f"__subq_scalar_{len(spec.joins)}"
+                spec.joins.append((
+                    "lateral_inner",
+                    Relation("lateral", (sub_spec, sub_clauses), name),
+                    None,
+                ))
+                for i, (pos, _, _) in enumerate(members):
+                    alias = spec.projections[pos][1]
+                    spec.projections[pos] = (f"{name}.f{i}", alias)
+                continue
+        for pos, _, _ in members:
             cur = _Cursor(["(", *bodies[pos], ")"])
-            col = ExprParser(cur, weak_typing, resolver)._scalar_subquery(ph)
-            spec.hidden.append((ph, col))
-            spec.projections[pos] = (ph, spec.projections[pos][1])
-            continue
-        toks = ["select"]
-        for i, (_, head, _) in enumerate(members):
-            toks += [","] * bool(i) + [*head, "as", f"f{i}"]
-        cur = _Cursor(toks + members[0][2])
-        sub_spec, _, sub_clauses = parse_select(
-            cur, weak_typing, resolver, subquery="scalar"
-        )
-        fields = [F.col(f"f{i}") for i in range(len(members))]
-        sub = resolver(sub_spec, sub_clauses).select(F.struct(*fields))
-        spec.hidden.append((ph, sub.scalar()))
-        for i, (pos, _, _) in enumerate(members):
-            spec.projections[pos] = (f"{ph}.f{i}", spec.projections[pos][1])
-    spec.scoped = True
+            text = ExprParser(cur, weak_typing, resolver)._scalar_subquery()
+            spec.projections[pos] = (text, spec.projections[pos][1])
+
+
+def _predicate_subqueries(ep: ExprParser) -> int:
+    """How many IN/EXISTS/ANY/ALL or correlated subqueries a parse saw."""
+    kinds = ("in", "exists", "quantified", "correlated")
+    return sum(ep.subqueries[k] for k in kinds)
+
+
+def _agg_sql(fn: str, col: str, alias: "str | None") -> tuple[str, str]:
+    """One SELECT-list aggregate as ``(SQL item, output name)``, named by
+    its alias or the reference's default (select.go:103-121, see
+    operators/query.agg_default_name): ``COUNT(*)`` → ``count``,
+    ``SUM(c)`` → ``sum_c``, ``COUNT(DISTINCT c)`` → ``count_distinct_c``,
+    ``GROUPING(c)`` → ``grouping_c`` (an INT flag). ``_expr`` items are
+    Catalyst text the parser always names."""
+    if fn == "_expr":
+        return f"{col} AS {_q(alias)}", alias
+    name = alias or agg_default_name(fn, col)
+    if fn == "grouping":
+        call = f"CAST(grouping({_arg_sql(col)}) AS INT)"
+    elif col.lower().startswith("distinct "):
+        call = f"{fn}(DISTINCT {col[9:].strip()})"
+    elif fn == "count" and col == "*":
+        call = "count(1)"
+    else:
+        call = f"{fn}({_arg_sql(col)})"
+    return f"{call} AS {_q(name)}", name
+
+
+def _order_sql(keys: list[tuple[str, bool, "str | None"]], strip: bool = False) -> str:
+    """``ORDER BY`` over ``(key, desc, nulls)`` triples (NULLs first
+    ascending and last descending unless placed). ``strip`` drops the
+    qualifier of a plain key, for a frame that carries output names."""
+    out = []
+    for col, desc, nulls in keys:
+        if strip and not is_value_expr(col):
+            col = col.rsplit(".", 1)[-1]
+        key = f"{_arg_sql(col)} {'DESC' if desc else 'ASC'}"
+        out.append(f"{key} NULLS {nulls.upper()}" if nulls else key)
+    return "ORDER BY " + ", ".join(out)
 
 
 _INTERVAL_MICROS = {
@@ -5523,87 +5263,128 @@ _INTERVAL_MICROS = {
     "day": 86_400_000_000,
 }
 
+_RANKING = ("row_number", "rank", "dense_rank", "percent_rank", "cume_dist")
 
-def _frame_bound(cur: _Cursor) -> "int | tuple":
-    """One frame bound → Spark rowsBetween/rangeBetween offset. Round-9:
-    ``INTERVAL '<n> <unit>' PRECEDING/FOLLOWING`` (or the unquoted
-    ``INTERVAL <n> <unit>`` spelling) returns ``("interval", micros)`` —
-    only valid in a RANGE frame over one timestamp ORDER BY key, where
-    _window_column desugars the sort key to unix epoch microseconds (the
-    rolling-time-window primitive; DuckDB runs the same frame natively)."""
-    from pyspark.sql import Window as W
 
-    t = cur.next().lower()
-    if t == "interval":
-        v = cur.next()
-        if _is_string_lit(v):
-            parts = v[1:-1].split()
-            if len(parts) != 2:
+def _window_sql(fn: str, args: list, over: list[str]) -> str:
+    """``fn(args) OVER (<over>)`` as Spark SQL. The OVER body is
+    ``[PARTITION BY c, ...] [ORDER BY c [ASC|DESC], ...] [ROWS|RANGE
+    BETWEEN <bound> AND <bound>]`` (named windows are inlined before
+    parsing). ROWS frames take physical offsets; RANGE takes logical
+    value offsets over exactly one ORDER BY key, and INTERVAL bounds
+    (``INTERVAL '<n> <unit>' PRECEDING``, or unquoted ``INTERVAL <n>
+    <unit>``) make it a rolling time window: the (timestamp) key becomes
+    epoch microseconds and the bounds micro offsets, which matches
+    DuckDB's native timestamp RANGE frame exactly. In-call ``IGNORE
+    NULLS`` (DuckDB's ``last_value(x IGNORE NULLS)``, ``lag(x, 1 IGNORE
+    NULLS)``) becomes Spark's IGNORE NULLS clause."""
+    cur = _Cursor(list(over))
+
+    def names() -> list[str]:
+        out = [_unquote(cur.next())]
+        while cur.peek() == ",":
+            cur.next()
+            out.append(_unquote(cur.next()))
+        return out
+
+    part: list[str] = []
+    order: list[tuple[str, bool]] = []
+    if cur.peek_kw() == "partition":
+        cur.next()
+        cur.expect_kw("by")
+        part = names()
+    if cur.peek_kw() == "order":
+        cur.next()
+        cur.expect_kw("by")
+        while True:
+            c = _unquote(cur.next())
+            desc = False
+            if cur.peek_kw() in ("asc", "desc"):
+                desc = cur.next().lower() == "desc"
+            order.append((c, desc))
+            if cur.peek() != ",":
+                break
+            cur.next()
+
+    def bound() -> "int | str | tuple":
+        # an offset (negative preceding), a keyword bound, or
+        # ("interval", micros)
+        t = cur.next().lower()
+        if t == "interval":
+            v = cur.next()
+            if _is_string_lit(v):
+                parts = v[1:-1].split()
+                if len(parts) != 2:
+                    raise ParseError(
+                        f"INTERVAL literal must be '<n> <unit>', got {v}"
+                    )
+                qty_s, unit = parts
+            else:
+                qty_s, unit = v, cur.next()
+            try:
+                qty = int(qty_s)
+            except ValueError:
                 raise ParseError(
-                    f"INTERVAL literal must be '<n> <unit>', got {v}"
+                    f"INTERVAL quantity must be an integer, got {qty_s!r}"
                 )
-            qty_s, unit = parts
-        else:
-            qty_s, unit = v, cur.next()
+            unit = unit.lower().rstrip("s")
+            if unit not in _INTERVAL_MICROS:
+                raise ParseError(
+                    f"unsupported INTERVAL unit {unit!r} in a frame bound "
+                    f"(supported: {sorted(_INTERVAL_MICROS)})"
+                )
+            micros = qty * _INTERVAL_MICROS[unit]
+            d = cur.next().lower()
+            if d not in ("preceding", "following"):
+                raise ParseError(
+                    f"expected PRECEDING/FOLLOWING after INTERVAL, got {d!r}"
+                )
+            return ("interval", -micros if d == "preceding" else micros)
+        if t == "unbounded":
+            d = cur.next().lower()
+            if d not in ("preceding", "following"):
+                raise ParseError(
+                    f"expected PRECEDING/FOLLOWING after UNBOUNDED, got {d!r}"
+                )
+            return f"UNBOUNDED {d.upper()}"
+        if t == "current":
+            if cur.next().lower() != "row":
+                raise ParseError("expected ROW after CURRENT")
+            return 0
         try:
-            qty = int(qty_s)
+            n = int(t)
         except ValueError:
-            raise ParseError(f"INTERVAL quantity must be an integer, got {qty_s!r}")
-        unit = unit.lower().rstrip("s")
-        if unit not in _INTERVAL_MICROS:
-            raise ParseError(
-                f"unsupported INTERVAL unit {unit!r} in a frame bound "
-                f"(supported: {sorted(_INTERVAL_MICROS)})"
-            )
-        micros = qty * _INTERVAL_MICROS[unit]
+            raise ParseError(f"expected a frame bound, got {t!r}")
         d = cur.next().lower()
-        if d == "preceding":
-            return ("interval", -micros)
-        if d == "following":
-            return ("interval", micros)
+        if d not in ("preceding", "following"):
+            raise ParseError(f"expected PRECEDING/FOLLOWING after {t}, got {d!r}")
+        return -n if d == "preceding" else n
+
+    frame = None
+    if cur.peek_kw() == "groups":
+        # DuckDB itself rejects GROUPS mode ("not implemented") — so do
+        # we, by name (round-14)
+        raise ParseError("GROUPS frame mode is not supported (DuckDB "
+                         "rejects it too) — use ROWS or RANGE")
+    if cur.peek_kw() in ("rows", "range"):
+        kind = cur.next().lower()
+        cur.expect_kw("between")
+        lo = bound()
+        cur.expect_kw("and")
+        frame = (kind, lo, bound())
+    if cur.peek_kw() == "exclude":
+        # Round-14: named rejection — Spark window frames have no
+        # EXCLUDE; spell the exclusion into the aggregate (e.g.
+        # sum(...) OVER frame - x for EXCLUDE CURRENT ROW)
         raise ParseError(
-            f"expected PRECEDING/FOLLOWING after INTERVAL, got {d!r}"
+            "frame EXCLUDE is not supported (no Spark twin) — subtract "
+            "the excluded rows from the windowed aggregate instead"
         )
-    if t == "unbounded":
-        d = cur.next().lower()
-        if d == "preceding":
-            return W.unboundedPreceding
-        if d == "following":
-            return W.unboundedFollowing
-        raise ParseError(f"expected PRECEDING/FOLLOWING after UNBOUNDED, got {d!r}")
-    if t == "current":
-        if cur.next().lower() != "row":
-            raise ParseError("expected ROW after CURRENT")
-        return W.currentRow
-    try:
-        n = int(t)
-    except ValueError:
-        raise ParseError(f"expected a frame bound, got {t!r}")
-    d = cur.next().lower()
-    if d == "preceding":
-        return -n
-    if d == "following":
-        return n
-    raise ParseError(f"expected PRECEDING/FOLLOWING after {t}, got {d!r}")
+    if not cur.done():
+        raise ParseError("expected ')' to close the window definition")
 
-
-def _lag_ignore_nulls(arg: str) -> tuple[str, bool]:
-    """In-call IGNORE NULLS detection shared by the lag/lead path."""
-    if arg.lower().endswith(" ignore nulls"):
-        return arg[: -len(" ignore nulls")].strip(), True
-    return arg, False
-
-
-def _window_column(
-    fn: str, args: list, part: list, order: list, frame=None
-) -> Column:
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*[F.col(c) for c in part])
-    if order:
-        w = w.orderBy(
-            *[(F.col(c).desc() if d else F.col(c).asc()) for c, d in order]
-        )
+    keys = [f"{_col_sql(c)} {'DESC' if d else 'ASC'}" for c, d in order]
+    frame_sql = ""
     if frame is not None:
         kind, lo, hi = frame
         if fn not in AGG_FUNCS and fn not in (
@@ -5620,488 +5401,109 @@ def _window_column(
         interval_frame = isinstance(lo, tuple) or isinstance(hi, tuple)
         if interval_frame and kind != "range":
             raise ParseError("INTERVAL frame bounds require a RANGE frame")
-        if kind == "range":
-            if len(order) != 1:
+        if kind == "range" and len(order) != 1:
+            raise ParseError("a RANGE frame requires exactly one ORDER BY key")
+        if interval_frame:
+            # ASC only: a descending rolling-time frame inverts the
+            # offset signs differently per engine
+            c, d = order[0]
+            if d:
                 raise ParseError(
-                    "a RANGE frame requires exactly one ORDER BY key"
+                    "INTERVAL RANGE frames support ASC ORDER BY only"
                 )
-            if interval_frame:
-                # Round-9: RANGE over INTERVAL bounds — the rolling
-                # time window. Desugar the (timestamp) sort key to unix
-                # epoch microseconds and the bounds to micro offsets;
-                # Spark's rangeBetween then matches DuckDB's native
-                # timestamp RANGE frame exactly (micros are exact
-                # integers). ASC only: a descending rolling-time frame
-                # inverts the offset signs differently per engine.
-                c, d = order[0]
-                if d:
+            keys = [f"unix_micros(CAST({_col_sql(c)} AS TIMESTAMP)) ASC"]
+            # A finite NUMERIC bound beside an INTERVAL bound would be
+            # read as epoch microseconds (5 would mean 5 µs); DuckDB
+            # rejects numeric RANGE bounds over a timestamp key — so do
+            # we. UNBOUNDED and CURRENT ROW remain valid companions.
+            for b in (lo, hi):
+                if isinstance(b, int) and b != 0:
                     raise ParseError(
-                        "INTERVAL RANGE frames support ASC ORDER BY only"
+                        "an INTERVAL RANGE frame cannot mix a plain "
+                        "numeric bound — use INTERVAL on both bounds, "
+                        "or UNBOUNDED/CURRENT ROW"
                     )
-                w = W.partitionBy(*[F.col(p) for p in part]).orderBy(
-                    F.unix_micros(F.col(c).cast("timestamp")).asc()
-                )
-                # Round-10 (advice): a finite NUMERIC bound alongside an
-                # INTERVAL bound would silently be reinterpreted as an
-                # epoch-microsecond offset after the unix_micros desugar
-                # (5 would mean 5 µs); DuckDB rejects numeric RANGE
-                # bounds over a timestamp key — so do we. UNBOUNDED and
-                # CURRENT ROW remain valid companions.
-                ok_plain = (
-                    W.unboundedPreceding, W.unboundedFollowing, W.currentRow
-                )
-                for b in (lo, hi):
-                    if not isinstance(b, tuple) and b not in ok_plain:
-                        raise ParseError(
-                            "an INTERVAL RANGE frame cannot mix a plain "
-                            "numeric bound — use INTERVAL on both bounds, "
-                            "or UNBOUNDED/CURRENT ROW"
-                        )
-                lo = lo[1] if isinstance(lo, tuple) else lo
-                hi = hi[1] if isinstance(hi, tuple) else hi
-            w = w.rangeBetween(lo, hi)
-        else:
-            w = w.rowsBetween(lo, hi)
-    if fn in ("row_number", "rank", "dense_rank", "percent_rank", "cume_dist"):
+
+        def bound_sql(b) -> str:
+            if isinstance(b, tuple):
+                b = b[1]
+            if isinstance(b, str):
+                return b
+            if b == 0:
+                return "CURRENT ROW"
+            return f"{-b} PRECEDING" if b < 0 else f"{b} FOLLOWING"
+
+        frame_sql = f"{kind.upper()} BETWEEN {bound_sql(lo)} AND {bound_sql(hi)}"
+    spec = " ".join(
+        s for s in (
+            part and "PARTITION BY " + ", ".join(map(_col_sql, part)),
+            keys and "ORDER BY " + ", ".join(keys),
+            frame_sql,
+        ) if s
+    )
+    w = f"OVER ({spec})"
+
+    def ignore_nulls(arg: str) -> tuple[str, str]:
+        if arg.lower().endswith(" ignore nulls"):
+            return arg[: -len(" ignore nulls")].strip(), " IGNORE NULLS"
+        return arg, ""
+
+    if fn in _RANKING:
         if args:
             raise ParseError(f"{fn}() takes no arguments")
-        return getattr(F, fn)().over(w)
+        return f"{fn}() {w}"
     if fn in ("lag", "lead"):
         # Round-10: the full 3-arg form — fn(col, offset, default) — the
-        # standard boundary-fill spelling (shared with DuckDB).
+        # standard boundary-fill spelling (shared with DuckDB); round-14:
+        # in-call IGNORE NULLS rides on the LAST argument.
         if not 1 <= len(args) <= 3:
             raise ParseError(
                 f"{fn}(col [, offset [, default]]) takes 1-3 arguments"
             )
-        # Round-14: in-call IGNORE NULLS for lag/lead (the LOCF
-        # neighbor form; DuckDB attaches it inside the LAST argument) —
-        # pyspark's F.lag has no ignoreNulls param, but Spark SQL's
-        # Lag/Lead do; emit the SQL spelling and attach the window
         args = list(args)
-        args[-1], ign = _lag_ignore_nulls(args[-1])
+        args[-1], ign = ignore_nulls(args[-1])
         off = int(args[1]) if len(args) >= 2 else 1
         if ign:
             tail = f", {args[2]}" if len(args) == 3 else ""
-            return F.expr(
-                f"{fn}({args[0]}, {off}{tail}) IGNORE NULLS"
-            ).over(w)
+            return f"{fn}({args[0]}, {off}{tail}) IGNORE NULLS {w}"
+        tail = ""
         if len(args) == 3:
             default = _literal_value(args[2])
             if default is None and args[2].lower() != "null":
                 raise ParseError(
                     f"{fn}() default must be a literal, got {args[2]!r}"
                 )
-            return getattr(F, fn)(arg_col(args[0]), off, default).over(w)
-        return getattr(F, fn)(arg_col(args[0]), off).over(w)
+            tail = f", {sql_literal(default)}"
+        return f"{fn}({_arg_sql(args[0])}, {off}{tail}) {w}"
     if fn == "ntile":
         if len(args) != 1:
             raise ParseError("ntile(n) takes exactly one argument")
-        return F.ntile(int(args[0])).over(w)
-    def _ignore_nulls(arg: str) -> tuple[str, bool]:
-        # Round-9: in-call ``IGNORE NULLS`` (the DuckDB-portable spelling:
-        # ``last_value(x IGNORE NULLS)``) for the value window functions
-        # — the LOCF primitive. Spark exposes it as the ignoreNulls param.
-        low_a = arg.lower()
-        if low_a.endswith(" ignore nulls"):
-            return arg[: -len(" ignore nulls")].strip(), True
-        return arg, False
-
+        return f"ntile({int(args[0])}) {w}"
     if fn in ("first_value", "last_value"):
         if len(args) != 1:
             raise ParseError(f"{fn}(col) takes exactly one argument")
-        a0, ign = _ignore_nulls(args[0])
-        col = (
-            getattr(F, fn)(arg_col(a0), ignoreNulls=True)
-            if ign
-            else getattr(F, fn)(arg_col(a0))
-        )
-        return col.over(w)
+        a0, ign = ignore_nulls(args[0])
+        return f"{fn}({_arg_sql(a0)}){ign} {w}"
     if fn == "nth_value":
         if len(args) != 2:
             raise ParseError("nth_value(col, n) takes exactly two arguments")
-        a0, ign = _ignore_nulls(args[0])
-        col = (
-            F.nth_value(arg_col(a0), int(args[1]), ignoreNulls=True)
-            if ign
-            else F.nth_value(arg_col(a0), int(args[1]))
-        )
-        return col.over(w)
+        a0, ign = ignore_nulls(args[0])
+        return f"nth_value({_arg_sql(a0)}, {int(args[1])}){ign} {w}"
     # aggregate-over-window: count/sum/avg/min/max
     if len(args) != 1:
         raise ParseError(f"{fn}() takes exactly one argument")
-    src = F.lit(1) if (fn == "count" and args[0] == "*") else arg_col(args[0])
-    return getattr(F, fn)(src).over(w)
+    arg = "1" if (fn == "count" and args[0] == "*") else _arg_sql(args[0])
+    return f"{fn}({arg}) {w}"
 
 
 def _written_order(spec: SelectSpec, plain: list, aggs: list) -> list:
     """The output items ``plain`` (one per projection) and ``aggs`` (one
-    per aggregate; None drops it) in the order the SELECT list writes
-    them, with or without GROUP BY. Aggregates only HAVING uses come
-    last."""
+    per aggregate) in the order the SELECT list writes them, with or
+    without GROUP BY."""
     at = spec.agg_at
     out = list(plain)
     for j in reversed(range(len(aggs))):
-        if aggs[j] is not None:
-            out.insert(at[j] if j < len(at) else len(plain), aggs[j])
-    return out
-
-
-def build_select(df: DataFrame, spec: SelectSpec, clauses: dict) -> DataFrame:
-    if "qualify" in clauses and not spec.windows:
-        raise ParseError("QUALIFY requires a window function in the SELECT")
-    hidden = dict(spec.hidden)
-    if hidden:
-        df = df.withColumns(hidden)
-    if spec.distinct_on:
-        # Round-9: DISTINCT ON (cols) — keep the FIRST row per group
-        # under the statement's ORDER BY (DuckDB/Postgres semantics),
-        # compiled to row_number over (partition by cols order by keys)
-        # = 1. One shuffle on the ON columns; the final ORDER BY then
-        # sorts the survivors as written. Ambiguity guard: ORDER BY must
-        # be present (without it "first" is arbitrary in both engines)
-        # and must extend beyond the ON columns so the pick is defined.
-        if spec.aggregates or clauses.get("group_by") or spec.distinct:
-            raise ParseError(
-                "DISTINCT ON cannot combine with GROUP BY/aggregates/"
-                "plain DISTINCT"
-            )
-        order = clauses.get("order_by")
-        extra = [
-            (c, d, n) for c, d, n in (order or [])
-            if c not in spec.distinct_on
-        ]
-        if not extra:
-            raise ParseError(
-                "DISTINCT ON requires an ORDER BY with at least one key "
-                "beyond the ON columns (it defines which row is 'first')"
-            )
-        if "where" in clauses:
-            df = df.filter(clauses.pop("where"))
-        from pyspark.sql import Window as W
-
-        keys = []
-        for c, d, n in order:
-            col = arg_col(c)
-            if n == "first":
-                keys.append(col.desc_nulls_first() if d else col.asc_nulls_first())
-            elif n == "last":
-                keys.append(col.desc_nulls_last() if d else col.asc_nulls_last())
-            else:
-                keys.append(col.desc() if d else col.asc())
-        w = W.partitionBy(*[F.col(c) for c in spec.distinct_on]).orderBy(*keys)
-        df = (
-            df.withColumn("__subq_rn", F.row_number().over(w))
-            .filter(F.col("__subq_rn") == 1)
-            .drop("__subq_rn")
-        )
-    # Round-7 ergonomics, resolved against the ORIGINAL spec lists (before
-    # window aliases are appended to the projections below):
-    #   * GROUP BY ALL → every non-aggregate SELECT item becomes a key.
-    #   * Integer ordinals in GROUP BY / ORDER BY index the OUTPUT columns
-    #     (the SELECT list as written, then window aliases — the dialect's
-    #     output order). A GROUP BY ordinal must land on a plain item;
-    #     ORDER BY ordinals may name any output column.
-    if clauses.get("group_by") == ["__ALL__"]:
-        if not spec.projections:
-            raise ParseError("GROUP BY ALL needs at least one plain item")
-        clauses["group_by"] = [item for item, _ in spec.projections]
-    if clauses.get("group_by"):
-        # the SELECT list as written, each aggregate as ``...``
-        written = (
-            list(df.columns)
-            if spec.star
-            else _written_order(
-                spec,
-                [item for item, _ in spec.projections],
-                [...] * len(spec.agg_at),
-            )
-        )
-        resolved = []
-        for g in clauses["group_by"]:
-            if g.isdigit():
-                n = int(g)
-                if not 1 <= n <= len(written) or written[n - 1] is ...:
-                    raise ParseError(
-                        f"GROUP BY ordinal {n} must reference a "
-                        f"non-aggregate SELECT item (1..{len(written)})"
-                    )
-                g = written[n - 1]
-            resolved.append(g)
-        clauses["group_by"] = resolved
-    if clauses.get("order_by"):
-        from ..operators.query import agg_default_name
-
-        if spec.star:
-            out_names = list(df.columns)
-        else:
-            out_names = _written_order(
-                spec,
-                [alias or item for item, alias in spec.projections],
-                [
-                    alias or agg_default_name(fn, col)
-                    for fn, col, alias in spec.aggregates
-                ],
-            )
-            out_names += [alias for _, _, alias, _, _, _ in spec.windows]
-        resolved_order = []
-        for col, desc, nulls in clauses["order_by"]:
-            if col == "__ALL__":
-                # Round-12: ORDER BY ALL — every OUTPUT column
-                # left-to-right (DuckDB semantics), so star modifiers
-                # apply first: excluded columns don't sort, renamed ones
-                # sort under their new name (both exist on the frame at
-                # sort time — rename runs before ORDER BY, exclusion
-                # drops after it).
-                names = [
-                    c
-                    for c in out_names
-                    if not c.startswith(("__subq_", _QUALIFY_HIDDEN))
-                ]
-                if spec.star and spec.star_exclude:
-                    names = [c for c in names if c not in spec.star_exclude]
-                if spec.star and spec.star_rename:
-                    ren = dict(spec.star_rename)
-                    names = [ren.get(c, c) for c in names]
-                resolved_order.extend((n2, desc, nulls) for n2 in names)
-                continue
-            if col.isdigit():
-                n = int(col)
-                if not 1 <= n <= len(out_names):
-                    raise ParseError(
-                        f"ORDER BY ordinal {n} out of range "
-                        f"(1..{len(out_names)})"
-                    )
-                col = out_names[n - 1]
-            resolved_order.append((col, desc, nulls))
-        clauses["order_by"] = resolved_order
-    grouped_windows = bool(spec.windows) and bool(
-        spec.aggregates or clauses.get("group_by")
-    )
-    if spec.windows and not grouped_windows:
-        # Standard SQL evaluation order: windows compute AFTER the WHERE
-        # filter, at SELECT stage.
-        if "where" in clauses:
-            df = df.filter(clauses["where"])
-            clauses = {k: v for k, v in clauses.items() if k != "where"}
-        for fn, args, alias, part, order, frame in spec.windows:
-            df = df.withColumn(
-                alias, _window_column(fn, args, part, order, frame)
-            )
-        # Window aliases become plain projectable columns downstream.
-        spec.projections = spec.projections + [
-            (alias, None)
-            for _, _, alias, _, _, _ in spec.windows
-            if not alias.startswith(_QUALIFY_HIDDEN)
-        ]
-        if "qualify" in clauses:
-            df = df.filter(clauses["qualify"])
-    q = Query(df)
-    if "where" in clauses:
-        q.where(clauses["where"])
-    group = clauses.get("group_by", [])
-    if group:
-        from ..operators.query import arg_col as _ac
-        from ..operators.query import is_value_expr as _ive
-
-        q.group_by(
-            *[
-                _ac(g).alias(f"_g{i}") if _ive(g) else g
-                for i, g in enumerate(group)
-            ],
-            mode=clauses.get("group_mode", "groupby"),
-            sets=clauses.get("group_sets"),
-        )
-    if spec.aggregates:
-        q.agg(*[agg_spec(fn, col, alias) for fn, col, alias in spec.aggregates])
-    if "having" in clauses:
-        q.having(clauses["having"])
-    if grouped_windows:
-        # Round-6: windows OVER the aggregated frame — standard SQL
-        # evaluation (GROUP BY → HAVING → window functions), so ``RANK()
-        # OVER (ORDER BY sum_v DESC)`` ranks the groups by their
-        # aggregates. Window partition/order/args reference GROUP keys or
-        # aggregate OUTPUT names (the reference defaults or AS aliases).
-        # Materialize the grouped pipeline built so far, then continue
-        # (order/limit/projection) on the windowed frame.
-        df = q.df()
-        for fn, args, alias, part, order, frame in spec.windows:
-            df = df.withColumn(
-                alias, _window_column(fn, args, part, order, frame)
-            )
-        spec.projections = spec.projections + [
-            (alias, None)
-            for _, _, alias, _, _, _ in spec.windows
-            if not alias.startswith(_QUALIFY_HIDDEN)
-        ]
-        if "qualify" in clauses:
-            df = df.filter(clauses["qualify"])
-        q = Query(df)
-    if spec.star and (spec.star_replace or spec.star_rename):
-        # Round-12 (advice): SELECT * REPLACE (expr AS col) / RENAME
-        # (col AS new) — swap/rename named columns in place, BEFORE
-        # ORDER BY / DISTINCT / LIMIT bind, so ordering and dedup see the
-        # replaced/renamed output (the DuckDB contract: the SELECT list
-        # evaluates before ORDER BY / DISTINCT). All replacement
-        # expressions are computed against the PRE-replace frame in one
-        # select — mutually-referencing items (* REPLACE (b AS a, a AS
-        # b)) each see the original columns, and the star's column ORDER
-        # is unchanged (each slot keeps its position). A column both
-        # replaced/renamed and excluded, replaced/renamed twice, renamed
-        # onto a surviving name, or not present is an error.
-        df_r = q.df()
-        repl: dict[str, str] = {}
-        for expr_text, col in spec.star_replace:
-            if col not in df_r.columns:
-                raise ParseError(f"REPLACE column not found: {col!r}")
-            if col in spec.star_exclude:
-                raise ParseError(
-                    f"column {col!r} is both REPLACEd and EXCLUDEd"
-                )
-            if col in repl:
-                raise ParseError(f"duplicate REPLACE of column {col!r}")
-            repl[col] = expr_text
-        ren: dict[str, str] = {}
-        for old, new in spec.star_rename:
-            if old not in df_r.columns:
-                raise ParseError(f"RENAME column not found: {old!r}")
-            if old in spec.star_exclude:
-                raise ParseError(
-                    f"column {old!r} is both RENAMEd and EXCLUDEd"
-                )
-            if old in ren:
-                raise ParseError(f"duplicate RENAME of column {old!r}")
-            ren[old] = new
-        # a rename target colliding with a surviving output name would
-        # make downstream references ambiguous — reject
-        targets = list(ren.values())
-        survivors = [ren.get(c, c) for c in df_r.columns]
-        for t in targets:
-            if survivors.count(t) > 1:
-                raise ParseError(f"RENAME target {t!r} is not unique")
-        q = Query(
-            df_r.select(
-                *[
-                    (
-                        F.expr(repl[c]) if c in repl else F.col(c)
-                    ).alias(ren.get(c, c))
-                    for c in df_r.columns
-                ]
-            )
-        )
-    if spec.star and spec.star_exclude and spec.distinct:
-        # Round-12: DISTINCT dedups the post-EXCLUDE output (DuckDB) —
-        # drop the columns BEFORE the distinct, or rows differing only
-        # in an excluded column would survive as duplicates. Without
-        # DISTINCT the drop stays post-ORDER BY (below) so ordering may
-        # still reference an excluded column — also the DuckDB contract
-        # (its DISTINCT conversely rejects ordering by a non-output
-        # column, which the dropped frame reproduces as an unresolved-
-        # column error).
-        df_e = q.df()
-        missing = [c for c in spec.star_exclude if c not in df_e.columns]
-        if missing:
-            raise ParseError(f"EXCLUDE columns not found: {missing}")
-        if len(spec.star_exclude) >= len(df_e.columns):
-            raise ParseError("EXCLUDE cannot remove every column")
-        q = Query(df_e.drop(*spec.star_exclude))
-    if "order_by" in clauses:
-        for col, desc, nulls in clauses["order_by"]:
-            q.order_by(col, desc=desc, nulls=nulls)
-    if "offset" in clauses:
-        q.offset(clauses["offset"])
-    if "limit" in clauses:
-        q.limit(clauses["limit"])
-    if spec.distinct:
-        q.distinct()
-    if not spec.star and (spec.projections or spec.aggregates):
-        cols: list[Column | str] = []
-        from ..operators.query import is_value_expr
-
-        # Expression group keys were aliased _g<i> in the aggregation (see
-        # below); projections repeating the same text map to that column.
-        gmap = {
-            g: f"_g{i}"
-            for i, g in enumerate(group)
-            if is_value_expr(g)
-        }
-        grouped = bool(group) or bool(spec.aggregates)
-        outer_items = clauses.get("outer_items", {})
-        for name, alias in spec.projections:
-            if name in outer_items:
-                # a LATERAL body item over outer columns (_lateral_body)
-                cols.append(outer_items[name].alias(alias))
-                continue
-            # Missing-column-tolerant projection (P3, select.go:588-592):
-            # unknown columns project as NULL instead of erroring. Value
-            # expressions (dialect extension) compile via Catalyst's
-            # parser. Qualified x.col references (join extension) bypass
-            # the tolerance — but post-aggregation the frame carries
-            # UNQUALIFIED output names, so grouped queries reference the
-            # simple name.
-            if grouped and name in gmap:
-                base = F.col(gmap[name]).alias(name if alias is None else alias)
-                cols.append(base)
-                continue
-            if grouped and name in hidden:
-                # a scalar subquery evaluates over the aggregated rows
-                cols.append(hidden[name].alias(alias))
-                continue
-            if is_value_expr(name):
-                base = F.expr(name)
-            elif "." in name:
-                ref = name.rsplit(".", 1)[-1] if grouped else name
-                base = F.col(ref)
-            elif name in df.columns or (group and name in group):
-                base = F.col(name)
-            elif name.lower() in ("current_date", "current_timestamp"):
-                # SQL's parenthesis-free clock functions
-                base = F.expr(name).alias(name)
-            else:
-                base = F.lit(None).alias(name)
-            cols.append(base.alias(alias) if alias else base)
-        from ..operators.query import agg_default_name
-
-        hidden_aggs = set(clauses.get("having_hidden", ()))
-        # an aggregate added only so HAVING could reference it is not
-        # part of the declared SELECT list
-        names = [alias or agg_default_name(fn, col) for fn, col, alias in spec.aggregates]
-        cols = _written_order(
-            spec,
-            cols,
-            [None if n in hidden_aggs else F.col(n) for n in names],
-        )
-        if group and not spec.aggregates:
-            # Lenient GROUP BY: surface the implicit COUNT(*) column
-            # (select_negative_test.go:34-68 asserts it appears).
-            cols.append(F.col("count"))
-        if spec.projections or group or hidden_aggs:
-            # (an aggregate-only SELECT already has exactly this output;
-            # a projection over its Aggregate would make Catalyst
-            # decorrelate a correlated scalar through a domain join)
-            q.select(*cols)
-    out = q.df()
-    if spec.star and spec.star_exclude and not spec.distinct:
-        # Round-8: SELECT * EXCLUDE (c1, ...) — the wide-table ergonomic
-        # (DuckDB/Snowflake/Databricks). Validated against the frame so a
-        # typo errors instead of silently excluding nothing. (With
-        # DISTINCT the drop already happened pre-dedup above.)
-        missing = [c for c in spec.star_exclude if c not in out.columns]
-        if missing:
-            raise ParseError(f"EXCLUDE columns not found: {missing}")
-        if len(spec.star_exclude) >= len(out.columns):
-            raise ParseError("EXCLUDE cannot remove every column")
-        out = out.drop(*spec.star_exclude)
-    # Hidden scalar-subquery and QUALIFY-only window columns are internal;
-    # a SELECT * must not surface them. (Checked only when some exist: a
-    # correlated subquery's frame cannot list its columns on its own.)
-    if hidden or any(w[2].startswith(_QUALIFY_HIDDEN) for w in spec.windows):
-        leak = [
-            c
-            for c in out.columns
-            if c.startswith("__subq_") or c.startswith(_QUALIFY_HIDDEN)
-        ]
-        if leak:
-            out = out.drop(*leak)
+        out.insert(at[j] if j < len(at) else len(plain), aggs[j])
     return out
 
 
@@ -6278,6 +5680,14 @@ def _renamed(df: DataFrame, cols: "list[str] | None", name: str) -> DataFrame:
     return df.toDF(*cols)
 
 
+_JOIN_SQL = {
+    "inner": "JOIN", "left": "LEFT JOIN", "right": "RIGHT JOIN",
+    "full": "FULL JOIN", "left_semi": "LEFT SEMI JOIN",
+    "left_anti": "LEFT ANTI JOIN", "cross": "CROSS JOIN",
+    "lateral_inner": "JOIN", "lateral_left": "LEFT JOIN",
+}
+
+
 class RefSQL:
     """Executor binding the dialect to an Engine (DDL/DML) or any table
     resolver (SELECT)."""
@@ -6285,19 +5695,60 @@ class RefSQL:
     def __init__(self, engine, weak_typing: bool = False):
         self.engine = engine
         self.weak = weak_typing
-        # WITH-clause bindings for the current statement (round-6): CTE
-        # name → DataFrame, consulted before the engine catalog. Reset per
-        # execute().
-        self._ctes: dict[str, DataFrame] = {}
+        # Per statement (reset by execute): CTE name → its column names
+        # (a WITH definition in the statement's SQL) or its DataFrame (a
+        # recursive CTE's result, or a CTE in front of DML); the WITH
+        # definitions in order; the relation arguments the SQL binds; and
+        # the formatters that registered them for DML predicates.
+        self._ctes: dict[str, "list[str] | DataFrame"] = {}
+        self._with: list[str] = []
+        self._args: dict[str, DataFrame] = {}
+        self._formatters: list = []
+
+    # -- binding: one spark.sql call per query ------------------------------
+
+    def _bind(self, df: DataFrame) -> str:
+        """The text naming ``df`` as a relation argument of this
+        statement's SQL (PySpark's ``spark.sql(text, **frames)`` binding
+        registers it as a temporary view for the one call)."""
+        for key, frame in self._args.items():
+            if frame is df:
+                break
+        else:
+            key = f"r{len(self._args)}"
+            self._args[key] = df
+        return f"\x00{key}\x00"
+
+    @staticmethod
+    def _template(text: str) -> str:
+        """``text`` as a ``str.format`` template over its arguments."""
+        text = text.replace("{", "{{").replace("}", "}}")
+        return re.sub("\x00(r\\d+)\x00", r"{\1}", text)
+
+    def _run(self, text: str) -> DataFrame:
+        """One query's SQL text, behind the statement's WITH definitions,
+        compiled by ONE ``spark.sql`` call."""
+        if self._with:
+            text = f"WITH {', '.join(self._with)} {text}"
+        if not self._args:
+            return self.engine.spark.sql(text)
+        return self.engine.spark.sql(self._template(text), **self._args)
+
+    def _column(self, text: str) -> Column:
+        """A DML predicate or SET value as a Column from the same text;
+        its relation arguments stay registered until the statement ends
+        (execute), so the engine's plan analyzes against them."""
+        if not self._args:
+            return F.expr(text)
+        from pyspark.sql.sql_formatter import SQLStringFormatter
+
+        fmt = SQLStringFormatter(self.engine.spark)
+        self._formatters.append(fmt)
+        return F.expr(fmt.format(self._template(text), **self._args))
+
+    # -- relations -----------------------------------------------------------
 
     def _table_df(self, name: str) -> DataFrame:
-        if name in self._ctes:
-            return self._ctes[name]
-        if name == DUAL_TABLE:
-            # The FROM-less SELECT relation: one row, zero columns — a
-            # plan-time constant (Catalyst folds literal projections over
-            # it to a LocalRelation; nothing is scanned).
-            return self.engine.spark.range(1).select()
         views = getattr(self.engine, "views", None)
         if (
             views is not None
@@ -6319,9 +5770,9 @@ class RefSQL:
             return sub.execute(views.get(name))
         return self.engine.table(name)
 
-    def _relation_df(self, rel: Relation) -> DataFrame:
-        """Build a parsed relation (see ``Relation``); the caller aliases
-        it by its name where qualified references need one."""
+    def _relation_frame(self, rel: Relation) -> "DataFrame | None":
+        """The DataFrame a parsed relation binds as, or None for one with
+        a text form (a derived table, LATERAL body or WITH definition)."""
         kind, src = rel.kind, rel.source
         if rel.version is not None and (kind != "table" or src in self._ctes):
             what = {
@@ -6332,11 +5783,14 @@ class RefSQL:
             raise ParseError(f"VERSION AS OF applies to tables, not {what}")
         cols = rel.columns
         if kind == "table":
-            df = (
-                self.engine.table_at(src, rel.version)
-                if rel.version is not None
-                else self._table_df(src)
-            )
+            if rel.version is not None:
+                df = self.engine.table_at(src, rel.version)
+            elif src in self._ctes:
+                df = self._ctes[src]
+                if not isinstance(df, DataFrame):
+                    return None
+            else:
+                df = self._table_df(src)
         elif kind == "file":
             # the native scan: full pushdown/pruning; CSV/JSON infer their
             # schema (ingest for a declared one)
@@ -6347,12 +5801,42 @@ class RefSQL:
                 cols = [f"col{i}" for i in range(len(df.columns))]
         elif kind == "series":
             df = self._series_df(*src, cols[0] if cols else src[0])
-        elif kind == "lateral":
-            df = self._build(*src)
-            return df.toDF(*cols) if cols else df
         else:
-            df = self._query_df(*src)
+            return None
         return _renamed(df, cols, rel.name)
+
+    def _relation_sql(self, rel: Relation) -> tuple[str, list[str]]:
+        """A parsed relation as FROM-item text under its name, and its
+        columns."""
+        df = self._relation_frame(rel)
+        if df is not None:
+            return f"{self._bind(df)} AS {_q(rel.name)}", list(df.columns)
+        if rel.kind == "table":
+            body, cols = _q(rel.source), self._ctes[rel.source]
+        elif rel.kind == "lateral":
+            body, cols = self._select_sql(*rel.source)
+            body = f"LATERAL ({body})"
+        else:
+            body, cols = self._query_sql(*rel.source)
+            body = f"({body})"
+        alias = _q(rel.name)
+        if rel.columns:
+            if len(rel.columns) != len(cols):
+                raise ParseError(
+                    f"alias lists {len(rel.columns)} columns but "
+                    f"{rel.name!r} has {len(cols)}"
+                )
+            cols = list(rel.columns)
+            alias += "(" + ", ".join(map(_q, cols)) + ")"
+        return f"{body} AS {alias}", cols
+
+    def _relation_df(self, rel: Relation) -> DataFrame:
+        """A parsed relation as a DataFrame (DML sources, and the FROM
+        items an ASOF join or a SAMPLE/PIVOT/UNPIVOT clause reshapes)."""
+        df = self._relation_frame(rel)
+        if df is None:
+            df = self._run(f"SELECT * FROM {self._relation_sql(rel)[0]}")
+        return df
 
     def _series_df(self, fn: str, args: list, name: str) -> DataFrame:
         """``range`` (end-exclusive) or ``generate_series`` (end-inclusive)
@@ -6380,13 +5864,7 @@ class RefSQL:
             re.IGNORECASE,
         )
         if m:
-            unit_us = {
-                "second": 1_000_000,
-                "minute": 60_000_000,
-                "hour": 3_600_000_000,
-                "day": 86_400_000_000,
-            }[m.group(2).lower()]
-            step_us = int(m.group(1)) * unit_us
+            step_us = int(m.group(1)) * _INTERVAL_MICROS[m.group(2).lower()]
             # One plan-time LocalRelation probe folds the bound literals to
             # micros (metadata-sized, never a scan).
             row = spark.sql(
@@ -6409,12 +5887,9 @@ class RefSQL:
             df = df.filter(F.col(name) != F.expr(f"CAST({hi} AS TIMESTAMP)"))
         return df
 
-    def _from_df(self, spec: "SelectSpec") -> DataFrame:
-        """The FROM clause: the first relation with its SAMPLE, PIVOT and
-        UNPIVOT clauses, then each join in order; Catalyst picks broadcast
-        vs shuffle per side as usual."""
-        rel = spec.relation
-        df = self._relation_df(rel)
+    def _shaped(self, spec: "SelectSpec", df: DataFrame) -> DataFrame:
+        """The first FROM item after its SAMPLE, USING SAMPLE, PIVOT and
+        UNPIVOT clauses."""
         if spec.sample is not None:
             pct, scol = spec.sample
             keep = (256 * pct) // 100
@@ -6499,28 +5974,59 @@ class RefSQL:
             df = df.unpivot(ids, ucols, name_col, val_col)
             if not keep_nulls:
                 df = df.filter(F.col(val_col).isNotNull())
-        if spec.joins or spec.scoped or rel.name != rel.source:
-            # qualified references (``x.col``, and a subquery's outer
-            # references) resolve against the relation's name; a bare
-            # table read by a plain SELECT stays unaliased
-            df = df.alias(rel.name)
-        for how, jrel, cond in spec.joins:
-            jdf = self._relation_df(jrel).alias(jrel.name)
-            if how in ("lateral_inner", "lateral_left"):
-                df = df.lateralJoin(jdf, how=how[len("lateral_"):])
-            elif how in ("asof", "asof_left"):
-                df = self._asof(
-                    df, rel.name, jdf, jrel.name, cond, inner=how == "asof"
-                )
-            elif how == "cross":
-                df = df.crossJoin(jdf)
-            elif isinstance(cond, tuple):
-                # USING (cols): Spark's join-on-names — one output column
-                # per USING name, standard semantics.
-                df = df.join(jdf, list(cond), how)
-            else:
-                df = df.join(jdf, cond, how)
         return df
+
+    def _from_sql(
+        self, spec: "SelectSpec"
+    ) -> tuple[str, list[str], dict[str, list[str]]]:
+        """The FROM clause as text (empty for a FROM-less SELECT), its
+        columns, and each relation's columns by lower-cased name: the
+        first relation, reshaped by its SAMPLE/PIVOT/UNPIVOT clauses, then
+        each join in order; Catalyst picks broadcast vs shuffle per side
+        as usual."""
+        rel = spec.relation
+        if rel.kind == "table" and rel.source == DUAL_TABLE:
+            return "", [], {}
+        frame = None
+        if spec.sample or spec.using_sample or spec.pivot or spec.unpivot:
+            frame = self._shaped(spec, self._relation_df(rel))
+            text = f"{self._bind(frame)} AS {_q(rel.name)}"
+            cols = list(frame.columns)
+        else:
+            text, cols = self._relation_sql(rel)
+        rels = {rel.name.lower(): cols}
+        for how, jrel, cond in spec.joins:
+            if how in ("asof", "asof_left"):
+                if frame is None:
+                    frame = self._run(f"SELECT * FROM {text}")
+                frame = self._asof(
+                    frame, rel.name, self._relation_df(jrel), jrel.name,
+                    cond, inner=how == "asof",
+                )
+                text = f"{self._bind(frame)} AS {_q(rel.name)}"
+                cols = list(frame.columns)
+                rels = {rel.name.lower(): cols}
+                continue
+            frame = None
+            jtext, jcols = self._relation_sql(jrel)
+            rels[jrel.name.lower()] = jcols
+            text = f"{text} {_JOIN_SQL[how]} {jtext}"
+            if how == "lateral_left":
+                text += " ON true"
+            elif isinstance(cond, tuple):
+                # USING (cols): one output column per USING name, first
+                text += " USING (" + ", ".join(map(_q, cond)) + ")"
+                cols = [
+                    *cond,
+                    *(c for c in cols if c not in cond),
+                    *(c for c in jcols if c not in cond),
+                ]
+                continue
+            elif cond is not None:
+                text += f" ON {cond}"
+            if how not in ("left_semi", "left_anti"):
+                cols = [*cols, *jcols]
+        return f"FROM {text}", cols, rels
 
     def _asof(
         self, left: DataFrame, lname: str, right: DataFrame, rname: str,
@@ -6603,10 +6109,315 @@ class RefSQL:
             out = out.filter(F.col(f"asof_{tr}").isNotNull())
         return out
 
-    def _build(self, spec: "SelectSpec", clauses: dict) -> DataFrame:
-        """One parsed SELECT arm as a DataFrame — also the parser's
-        resolver, so a subquery's DataFrame becomes a subquery Column."""
-        return build_select(self._from_df(spec), spec, clauses)
+    # -- SELECT --------------------------------------------------------------
+
+    @staticmethod
+    def _item(
+        name: str, alias: "str | None", cols: list[str],
+        rels: dict[str, list[str]], gmap: "dict[str, str] | None" = None,
+    ) -> tuple[str, list[str]]:
+        """One plain SELECT item as ``(SQL, output names)`` over a frame
+        whose columns are ``cols``. A value expression is Catalyst text,
+        a qualified name a column reference (``t.*`` all of ``t``), and a
+        bare name missing from the frame projects NULL (the reference's
+        missing-column tolerance, select.go:588-592). ``gmap`` is set over
+        an aggregated frame: expression keys read their ``_g<i>`` column
+        and qualified names their output name."""
+        if gmap is not None:
+            if name in gmap:
+                out = alias or name
+                return f"{_q(gmap[name])} AS {_q(out)}", [out]
+            if not is_value_expr(name) and not name.endswith(".*"):
+                name = name.rsplit(".", 1)[-1]
+        if is_value_expr(name):
+            base, out = name, name
+        elif name.endswith(".*"):
+            return _col_sql(name), list(rels.get(name[:-2].lower(), []))
+        elif "." in name:
+            base, out = _col_sql(name), name.rsplit(".", 1)[-1]
+        elif name in cols:
+            base, out = _col_sql(name), name
+        elif name.lower() in ("current_date", "current_timestamp"):
+            # SQL's parenthesis-free clock functions
+            base, out = name, name
+            alias = alias or name
+        else:
+            base, out = "NULL", name
+            alias = alias or name
+        if alias:
+            return f"{base} AS {_q(alias)}", [alias]
+        return base, [out]
+
+    def _star(
+        self, spec: "SelectSpec", cols: list[str], windows: list[str],
+        hidden: list[str],
+    ) -> tuple[str, list[str]]:
+        """``*`` with its EXCLUDE / REPLACE / RENAME modifiers over the
+        columns ``cols`` (``windows``: the window items' names, which the
+        modifiers may name too; ``hidden``: columns the star leaves out),
+        as ``(SQL, output names)``. REPLACE and RENAME keep each slot's
+        position and compute every replacement from the pre-replace
+        columns, so ``* REPLACE (b AS a, a AS b)`` swaps; the SELECT list
+        evaluates before ORDER BY and DISTINCT, as in DuckDB."""
+        present = [*cols, *windows]
+        repl: dict[str, str] = {}
+        for expr_text, col in spec.star_replace:
+            if col not in present:
+                raise ParseError(f"REPLACE column not found: {col!r}")
+            if col in spec.star_exclude:
+                raise ParseError(
+                    f"column {col!r} is both REPLACEd and EXCLUDEd"
+                )
+            if col in repl:
+                raise ParseError(f"duplicate REPLACE of column {col!r}")
+            repl[col] = expr_text
+        ren: dict[str, str] = {}
+        for old, new in spec.star_rename:
+            if old not in present:
+                raise ParseError(f"RENAME column not found: {old!r}")
+            if old in spec.star_exclude:
+                raise ParseError(
+                    f"column {old!r} is both RENAMEd and EXCLUDEd"
+                )
+            if old in ren:
+                raise ParseError(f"duplicate RENAME of column {old!r}")
+            ren[old] = new
+        # a rename target colliding with a surviving output name would
+        # make downstream references ambiguous — reject
+        survivors = [ren.get(c, c) for c in present]
+        for t in ren.values():
+            if survivors.count(t) > 1:
+                raise ParseError(f"RENAME target {t!r} is not unique")
+        excl = spec.star_exclude
+        if excl:
+            missing = [c for c in excl if c not in present]
+            if missing:
+                raise ParseError(f"EXCLUDE columns not found: {missing}")
+            if len(excl) >= len(present):
+                raise ParseError("EXCLUDE cannot remove every column")
+        kept = [c for c in cols if c not in excl and c not in hidden]
+        names = [ren.get(c, c) for c in kept]
+        if not (repl or ren):
+            out = [*excl, *hidden]
+            if not out:
+                return "*", names
+            return "* EXCEPT (" + ", ".join(map(_q, out)) + ")", names
+        items = [
+            f"{repl.get(c, _col_sql(c))} AS {_q(ren.get(c, c))}"
+            for c in kept
+        ]
+        return ", ".join(items), names
+
+    def _select_sql(
+        self, spec: "SelectSpec", clauses: dict
+    ) -> tuple[str, list[str]]:
+        """One parsed SELECT arm as ONE Spark SQL query and its output
+        column names (also the parser's resolver: a subquery's text sits
+        inside the statement that reads it).
+
+        The SELECT list keeps the written order; window items come last.
+        WHERE filters before windows compute; with GROUP BY or aggregates
+        the windows run over the aggregated rows (standard evaluation
+        order, so ``RANK() OVER (ORDER BY sum_v DESC)`` ranks groups by
+        their totals, naming aggregates by their output names), which
+        takes a derived table. QUALIFY and DISTINCT ON (first row per
+        group by the ORDER BY) filter a derived table that carries the
+        window items."""
+        if "qualify" in clauses and not spec.windows:
+            raise ParseError("QUALIFY requires a window function in the SELECT")
+        from_sql, cols, rels = self._from_sql(spec)
+        group = list(clauses.get("group_by") or [])
+        order = list(clauses.get("order_by") or [])
+        if spec.distinct_on:
+            # Ambiguity guard: ORDER BY must be present (without it
+            # "first" is arbitrary in both engines) and must extend
+            # beyond the ON columns so the pick is defined.
+            if spec.aggregates or group or spec.distinct:
+                raise ParseError(
+                    "DISTINCT ON cannot combine with GROUP BY/aggregates/"
+                    "plain DISTINCT"
+                )
+            if not [k for k in order if k[0] not in spec.distinct_on]:
+                raise ParseError(
+                    "DISTINCT ON requires an ORDER BY with at least one key "
+                    "beyond the ON columns (it defines which row is 'first')"
+                )
+        # GROUP BY ALL → every non-aggregate SELECT item is a key; integer
+        # ordinals in GROUP BY / ORDER BY index the output columns (the
+        # SELECT list as written, then window items). A GROUP BY ordinal
+        # must land on a plain item; ORDER BY ordinals may name any
+        # output column.
+        if group == ["__ALL__"]:
+            if not spec.projections:
+                raise ParseError("GROUP BY ALL needs at least one plain item")
+            group = [item for item, _ in spec.projections]
+        if group:
+            written = (
+                list(cols)
+                if spec.star
+                else _written_order(
+                    spec,
+                    [item for item, _ in spec.projections],
+                    [...] * len(spec.agg_at),
+                )
+            )
+            for k, g in enumerate(group):
+                if g.isdigit():
+                    n = int(g)
+                    if not 1 <= n <= len(written) or written[n - 1] is ...:
+                        raise ParseError(
+                            f"GROUP BY ordinal {n} must reference a "
+                            f"non-aggregate SELECT item (1..{len(written)})"
+                        )
+                    group[k] = written[n - 1]
+        aggs = [_agg_sql(fn, col, alias) for fn, col, alias in spec.aggregates]
+        if spec.star:
+            out_names = list(cols)
+        else:
+            out_names = _written_order(
+                spec,
+                [alias or item for item, alias in spec.projections],
+                [name for _, name in aggs],
+            )
+            out_names += [w[2] for w in spec.windows]
+        resolved = []
+        for col, desc, nulls in order:
+            if col == "__ALL__":
+                # ORDER BY ALL — every OUTPUT column left-to-right
+                # (DuckDB semantics): star modifiers apply first, so
+                # excluded columns don't sort and renamed ones sort under
+                # their new name.
+                names = [
+                    c for c in out_names
+                    if not c.startswith(("__subq_", _QUALIFY_HIDDEN))
+                ]
+                if spec.star:
+                    ren = dict(spec.star_rename)
+                    names = [
+                        ren.get(c, c) for c in names
+                        if c not in spec.star_exclude
+                    ]
+                resolved.extend((c, desc, nulls) for c in names)
+                continue
+            if col.isdigit():
+                n = int(col)
+                if not 1 <= n <= len(out_names):
+                    raise ParseError(
+                        f"ORDER BY ordinal {n} out of range "
+                        f"(1..{len(out_names)})"
+                    )
+                col = out_names[n - 1]
+            resolved.append((col, desc, nulls))
+        grouped = bool(spec.aggregates or group)
+        layered = grouped and bool(spec.windows)
+        where = f" WHERE {clauses['where']}" if "where" in clauses else ""
+        having = f" HAVING {clauses['having']}" if grouped and "having" in clauses else ""
+        gsql = f" {self._group_sql(group, clauses)}" if group else ""
+        count = [("count(1) AS `count`", ["count"])] if group and not aggs else []
+        gmap = None
+        if layered:
+            # the aggregated rows as a derived table: plain keys under
+            # their names, expression keys as _g<i>, every aggregate
+            gmap = {g: f"_g{i}" for i, g in enumerate(group) if is_value_expr(g)}
+            keys = [
+                f"{g} AS {_q(gmap[g])}" if g in gmap else _col_sql(g)
+                for g in group
+            ]
+            inner = ", ".join([*keys, *(s for s, _ in aggs), *(s for s, _ in count)])
+            frame = f"FROM (SELECT {inner} {from_sql}{where}{gsql}{having}) AS __grouped"
+            cols = [
+                gmap.get(g, g.rsplit(".", 1)[-1]) for g in group
+            ] + [n for _, n in aggs] + (["count"] if count else [])
+            aggs = [(_q(n), n) for _, n in aggs]
+            count = [("`count`", ["count"])] if count else []
+            where = gsql = having = ""
+            from_sql = frame
+        windows = [
+            (_window_sql(fn, args, over), alias)
+            for fn, args, alias, over in spec.windows
+        ]
+        hidden = [a for _, a in windows if a.startswith(_QUALIFY_HIDDEN)]
+        shown = [a for _, a in windows if a not in hidden]
+        base = f"{from_sql}{where}{gsql}{having}"
+        qualify = clauses.get("qualify")
+        if qualify:
+            # the window items join the rows as columns of a derived
+            # table, which QUALIFY then filters; over one relation it
+            # keeps that relation's name
+            derived = "__derived"
+            if not (layered or spec.joins):
+                derived = _q(spec.relation.name)
+            level = ", ".join(["*", *(f"{w} AS {_q(a)}" for w, a in windows)])
+            base = f"FROM (SELECT {level} {base}) AS {derived} WHERE {qualify}"
+            gmap = {} if gmap is None else gmap
+            if spec.star:
+                items = [self._star(spec, cols + shown, [], hidden)]
+            cols = cols + [a for _, a in windows]
+        elif spec.star:
+            items = [self._star(spec, cols, shown, [])]
+        if not spec.star:
+            items = _written_order(
+                spec,
+                [
+                    self._item(name, alias, cols + group, rels, gmap)
+                    for name, alias in spec.projections
+                ],
+                [(s, [n]) for s, n in aggs],
+            ) + count
+            if qualify:
+                items += [(_q(a), [a]) for a in shown]
+        if not qualify:
+            items += [(f"{w} AS {_q(a)}", [a]) for w, a in windows]
+        names = [n for _, ns in items for n in ns]
+        select = ", ".join(s for s, _ in items)
+        strip = gmap is not None
+        if spec.distinct_on:
+            # DISTINCT ON keeps the first row per ON group by the ORDER
+            # BY, after the SELECT list (and its windows) evaluate: a
+            # row_number() item filtered over a derived table, the sort
+            # keys that are not output columns carried as hidden items
+            keys = ", ".join(_col_sql(c) for c in spec.distinct_on)
+            select += (
+                f", row_number() OVER (PARTITION BY {keys} "
+                f"{_order_sql(order)}) AS __subq_rn"
+            )
+            hidden, sort = ["__subq_rn"], []
+            for i, (col, desc, nulls) in enumerate(resolved):
+                if col not in names:
+                    select += f", {_arg_sql(col)} AS __subq_o{i}"
+                    hidden.append(col := f"__subq_o{i}")
+                sort.append((col, desc, nulls))
+            base = (
+                f"FROM (SELECT {select} {base}) AS __derived "
+                "WHERE __subq_rn = 1"
+            )
+            select = "* EXCEPT (" + ", ".join(hidden) + ")"
+            resolved, strip = sort, True
+        tail = ""
+        if resolved:
+            tail += " " + _order_sql(resolved, strip=strip)
+        if "limit" in clauses:
+            tail += f" LIMIT {clauses['limit']}"
+        if "offset" in clauses:
+            tail += f" OFFSET {clauses['offset']}"
+        distinct = "DISTINCT " if spec.distinct else ""
+        return f"SELECT {distinct}{select} {base}{tail}", names
+
+    @staticmethod
+    def _group_sql(group: list[str], clauses: dict) -> str:
+        """GROUP BY keys, ROLLUP/CUBE, or explicit GROUPING SETS — one
+        Expand + aggregate pass for the grouping-set forms."""
+        mode = clauses.get("group_mode", "groupby")
+        keys = ", ".join(map(_arg_sql, group))
+        if mode == "sets":
+            sets = ", ".join(
+                "(" + ", ".join(map(_arg_sql, s)) + ")"
+                for s in clauses["group_sets"]
+            )
+            return f"GROUP BY GROUPING SETS ({sets})"
+        if mode in ("rollup", "cube"):
+            return f"GROUP BY {mode.upper()}({keys})"
+        return f"GROUP BY {keys}"
 
     def _expand_columns_fn(self, toks: list[str]) -> list[str]:
         """DuckDB's COLUMNS() star function — COLUMNS('regex')
@@ -6782,50 +6593,52 @@ class RefSQL:
         return out
 
     def _select_df(self, cur: _Cursor, positional: bool = False) -> DataFrame:
-        """Parse + build one full SELECT or set-operation chain
+        """Parse + compile one full SELECT or set-operation chain
         (``positional``: see parse_select)."""
-        return self._query_df(
-            *parse_query(cur, self.weak, self._build, positional)
+        text, _ = self._query_sql(
+            *parse_query(cur, self.weak, self._select_sql, positional)
         )
+        return self._run(text)
 
-    def _query_df(self, arms: list, ops: list, trailing: dict) -> DataFrame:
-        """Build ``parse_query``'s result: the arms combine left to right,
-        then the trailing ORDER BY/LIMIT/OFFSET apply to the result."""
+    def _query_sql(
+        self, arms: list, ops: list, trailing: dict
+    ) -> tuple[str, list[str]]:
+        """``parse_query``'s result as SQL and its column names: the arms
+        combine left to right (positionally, named by the first arm;
+        UNION BY NAME matches names and NULL-fills missing ones), then the
+        trailing ORDER BY/LIMIT/OFFSET apply to the result."""
+        text, names = self._select_sql(*arms[0])
         if not ops:
-            return self._build(*arms[0])
-        frames = [self._build(s, c) for s, c in arms]
-        acc = frames[0]
-        for (op, keep_dups, by_name), nxt in zip(ops, frames[1:]):
+            return text, names
+        for (op, keep_dups, by_name), arm in zip(ops, arms[1:]):
+            nxt, nnames = self._select_sql(*arm)
+            quant = " ALL" if keep_dups else ""
             if by_name:
-                acc = acc.unionByName(nxt, allowMissingColumns=True)
-                if not keep_dups:
-                    acc = acc.dropDuplicates()
-                continue
-            if len(nxt.columns) != len(acc.columns):
-                raise ParseError(
-                    f"set operation arms select {len(acc.columns)} vs "
-                    f"{len(nxt.columns)} columns — counts must match"
-                )
-            nxt = nxt.toDF(*acc.columns)  # positional, first arm names
-            if op == "union":
-                acc = acc.union(nxt)
-                if not keep_dups:
-                    acc = acc.dropDuplicates()
-            elif op == "intersect":
-                # INTERSECT ALL: multiset semantics (min multiplicity per
-                # row), Spark's intersectAll ≡ ANSI.
-                acc = acc.intersectAll(nxt) if keep_dups else acc.intersect(nxt)
-            else:  # except
-                acc = acc.exceptAll(nxt) if keep_dups else acc.subtract(nxt)
-        q = Query(acc)
-        for col, desc, nulls in trailing.get("order_by", []):
-            q.order_by(col, desc=desc, nulls=nulls)
-        if "offset" in trailing:
-            q.offset(trailing["offset"])
-        if "limit" in trailing:
-            q.limit(trailing["limit"])
-        return q.df()
+                every = names + [n for n in nnames if n not in names]
 
+                def pick(sql: str, have: list[str]) -> str:
+                    cols = ", ".join(
+                        _q(n) if n in have else f"NULL AS {_q(n)}"
+                        for n in every
+                    )
+                    return f"SELECT {cols} FROM ({sql}) AS __arm"
+
+                text = f"({pick(text, names)}) UNION{quant} ({pick(nxt, nnames)})"
+                names = every
+                continue
+            if len(nnames) != len(names):
+                raise ParseError(
+                    f"set operation arms select {len(names)} vs "
+                    f"{len(nnames)} columns — counts must match"
+                )
+            # INTERSECT ALL: multiset semantics (min multiplicity per row)
+            text = f"({text}) {op.upper()}{quant} ({nxt})"
+        tail = [_order_sql(trailing["order_by"])] if trailing.get("order_by") else []
+        if "limit" in trailing:
+            tail.append(f"LIMIT {trailing['limit']}")
+        if "offset" in trailing:
+            tail.append(f"OFFSET {trailing['offset']}")
+        return " ".join([text, *tail]), names
     _RECURSION_CAP = 100
 
     def _recursive_cte(
@@ -6904,6 +6717,14 @@ class RefSQL:
     def execute(self, sql: str):
         """Run one statement. SELECT returns a DataFrame; DML returns an
         affected-row count; DDL returns None (SHOW TABLES returns a list)."""
+        try:
+            return self._execute(sql)
+        finally:
+            for fmt in self._formatters:
+                fmt.clear()
+            self._formatters = []
+
+    def _execute(self, sql: str):
         head = sql.lstrip().split(None, 1)
         verb0 = head[0].lower().rstrip(";") if head else ""
         if verb0 in ("prepare", "execute", "deallocate"):
@@ -6942,20 +6763,22 @@ class RefSQL:
             toks = _hoist_qualify_windows(toks)
         verb = toks[0].lower()
         cur = _Cursor(toks)
-        self._ctes = {}
+        self._ctes, self._with, self._args = {}, [], {}
         if verb == "with":
             # Common table expressions — ``WITH name AS (SELECT ...) [,
-            # name2 AS (...)] SELECT ...``. Each CTE binds its (lazy)
-            # DataFrame; later CTEs and the main SELECT resolve it before
-            # the catalog. Set-op chains and every SELECT feature work
-            # inside a CTE body; re-references recompute (standard
-            # lazy-plan semantics — Catalyst reuses exchanges where it
-            # can). ``WITH RECURSIVE name AS (anchor UNION [ALL]
+            # name2 AS (...)] SELECT ...``: the statement's SQL carries
+            # them as its WITH clause, and later CTEs and the main SELECT
+            # resolve them before the catalog. Set-op chains and every
+            # SELECT feature work inside a CTE body. In front of DML each
+            # CTE is a DataFrame instead, bound wherever the statement
+            # reads it. ``WITH RECURSIVE name AS (anchor UNION [ALL]
             # recursive) ...``: a self-referencing body runs as a
-            # driver-side fixpoint loop (_recursive_cte). Spark 4.1 plans
-            # WITH RECURSIVE ... UNION ALL natively but refuses recursive
-            # UNION (distinct), which the loop also covers.
+            # driver-side fixpoint loop (_recursive_cte) whose result
+            # binds as a DataFrame. Spark 4.1 plans WITH RECURSIVE ...
+            # UNION ALL natively but refuses recursive UNION (distinct),
+            # which the loop also covers.
             recursive, ctes = _with_list(cur)
+            frames = cur.peek_kw() in ("insert", "update", "delete", "merge")
             for name, columns, body_toks in ctes:
                 # A recursive body cannot be built eagerly (it references
                 # the not-yet-bound name); a plain one parses from its
@@ -6969,13 +6792,28 @@ class RefSQL:
                 sub = _Cursor(body_toks)
                 # a column list names the body's columns by position, so
                 # its items need no aliases
-                df = self._select_df(sub, columns is not None)
+                body, cols = self._query_sql(
+                    *parse_query(sub, self.weak, self._select_sql,
+                                 columns is not None)
+                )
                 if not sub.done():
                     raise ParseError(
                         f"unexpected token {sub.peek()!r} in the "
                         f"body of CTE {name!r}"
                     )
-                self._ctes[name] = _renamed(df, columns, name)
+                if columns is not None and len(columns) != len(cols):
+                    raise ParseError(
+                        f"alias lists {len(columns)} columns but {name!r} "
+                        f"has {len(cols)}"
+                    )
+                if frames:
+                    self._ctes[name] = _renamed(self._run(body), columns, name)
+                    continue
+                head = _q(name)
+                if columns is not None:
+                    head += "(" + ", ".join(map(_q, columns)) + ")"
+                self._with.append(f"{head} AS ({body})")
+                self._ctes[name] = list(columns or cols)
             nxt = cur.peek_kw()
             if nxt in ("insert", "update", "delete", "merge"):
                 # CTE-fronted DML (Postgres/DuckDB) — ``WITH staged AS
@@ -8013,8 +7851,10 @@ class RefSQL:
             # is a string, update.go). A scalar subquery is a scalar
             # subquery Column.
             if cur.peek() == "(" and cur.peek_kw(1) == "select":
-                sp = ExprParser(cur, self.weak, self._build)
-                entries.append((col, "scalar", sp._scalar_subquery()))
+                sp = ExprParser(cur, self.weak, self._select_sql)
+                entries.append(
+                    (col, "scalar", self._column(sp._scalar_subquery()))
+                )
                 self._dml_guard(sp, "UPDATE")
                 if cur.peek() == ",":
                     cur.next()
@@ -8067,8 +7907,8 @@ class RefSQL:
         where = None
         if cur.peek_kw() == "where":
             cur.next()
-            up = ExprParser(cur, self.weak, self._build)
-            where = up.parse()
+            up = ExprParser(cur, self.weak, self._select_sql)
+            where = self._column(up.parse())
             self._dml_guard(up, "UPDATE")
         if ret_items is not None:
             # UPDATE ... RETURNING: matched rows, NEW values
@@ -8105,7 +7945,7 @@ class RefSQL:
         equality conjunct; other conjuncts may reference either side; no
         subqueries in the FROM form's WHERE or SET."""
         cur.expect_kw("from")
-        rel = _relation(cur, self.weak, self._build)
+        rel = _relation(cur, self.weak, self._select_sql)
         src, src_alias = self._relation_df(rel), rel.name
         if src_alias == table:
             raise ParseError(
@@ -8259,8 +8099,8 @@ class RefSQL:
             # Mandatory WHERE — reference safety guard (delete.go:33).
             raise ParseError("DELETE without WHERE is not allowed for safety")
         cur.next()
-        dp = ExprParser(cur, self.weak, self._build)
-        where = dp.parse()
+        dp = ExprParser(cur, self.weak, self._select_sql)
+        where = self._column(dp.parse())
         self._dml_guard(dp, "DELETE")
         if ret_items is not None:
             # Round-14 DELETE ... RETURNING: the doomed rows
@@ -8316,7 +8156,7 @@ class RefSQL:
             cur.next()
             tgt_alias = _unquote(cur.next())
         cur.expect_kw("using")
-        rel = _relation(cur, self.weak, self._build)
+        rel = _relation(cur, self.weak, self._select_sql)
         src, src_alias = self._relation_df(rel), rel.name
         cur.expect_kw("on")
 
@@ -8353,8 +8193,8 @@ class RefSQL:
             if cur.peek_kw() != "and":
                 return None
             cur.next()
-            pp = ExprParser(cur, self.weak, self._build)
-            pred = pp.parse()
+            pp = ExprParser(cur, self.weak, self._select_sql)
+            pred = self._column(pp.parse())
             if _predicate_subqueries(pp):
                 raise ParseError(
                     "only uncorrelated scalar subqueries are supported in "

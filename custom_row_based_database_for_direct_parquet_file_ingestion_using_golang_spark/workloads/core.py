@@ -232,13 +232,11 @@ def agg_group_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_group_implicit_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.query import Query
-
     return (
-        Query(load(spark, sf_dir, "customer"))
-        .group_by("c_mktsegment")
-        .order_by("c_mktsegment")
-        .df()
+        load(spark, sf_dir, "customer")
+        .groupBy("c_mktsegment")
+        .agg(F.count(F.lit(1)).alias("count"))
+        .orderBy(F.col("c_mktsegment").asc())
     )
 
 

@@ -2089,7 +2089,9 @@ def weak_typing_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.col("n_chars").cast("string").alias("s")
     )
-    return docs.filter(dual_compare("s", ">", 300.0)).select("doc_id", "lang")
+    return docs.filter(F.expr(dual_compare("s", ">", "300.0D"))).select(
+        "doc_id", "lang"
+    )
 
 
 @query("embedding_similarity_join")  # rows-only: LSH recall is probabilistic

@@ -32,7 +32,10 @@ def textdf(spark):
 
 
 def test_try_num(textdf):
-    out = {r.id: r.n for r in textdf.select("id", try_num("v").alias("n")).collect()}
+    out = {
+        r.id: r.n
+        for r in textdf.select("id", F.expr(try_num("v")).alias("n")).collect()
+    }
     assert out == {"1": 10.0, "2": 9.0, "3": None, "4": None}
 
 
@@ -40,13 +43,17 @@ def test_dual_compare_numeric_vs_string(textdf):
     # '9' vs 10: numeric compare (9 < 10); 'x' vs 10: string compare
     out = {
         r.id: r.m
-        for r in textdf.select("id", dual_compare("v", "<", 10).alias("m")).collect()
+        for r in textdf.select(
+            "id", F.expr(dual_compare("v", "<", "10")).alias("m")
+        ).collect()
     }
     assert out["1"] is False and out["2"] is True
     assert out["3"] is False  # 'x' < '10' is False lexicographically
     out = {
         r.id: r.m
-        for r in textdf.select("id", dual_compare("v", ">=", "9").alias("m")).collect()
+        for r in textdf.select(
+            "id", F.expr(dual_compare("v", ">=", "'9'")).alias("m")
+        ).collect()
     }
     assert out["2"] is True and out["1"] is True  # numeric: 10 >= 9
 

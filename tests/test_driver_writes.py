@@ -394,15 +394,34 @@ def test_rewrites_that_keep_spark_writer(spark, tmp_path):
 
 def test_driver_rewrite_returning_and_guard(spark, tmp_path):
     """RETURNING and the duplicate-match guard behave on the driver path
-    as on Spark's: the returned rows carry the new values, and a guarded
-    MERGE raises before anything is committed."""
+    as on Spark's: the returned rows carry the new values and match
+    DuckDB's, the statement runs ONE job (the RETURNING rows are cut from
+    the Table the rewrite collects), and a guarded MERGE raises before
+    anything is committed."""
+    import duckdb
+
     e = Engine(spark, str(tmp_path / "db"))
-    e.ref_sql("CREATE TABLE t (k INT, v TEXT)")
-    e.ref_sql("INSERT INTO t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
-    got = e.ref_sql("UPDATE t SET v = 'x' WHERE k >= 2 RETURNING k, v")
-    assert sorted(tuple(r) for r in got.collect()) == [(2, "x"), (3, "x")]
-    got = e.ref_sql("DELETE FROM t WHERE k = 3 RETURNING k, v")
-    assert [tuple(r) for r in got.collect()] == [(3, "x")]
+    con = duckdb.connect()
+    sc = spark.sparkContext
+    for sql in (
+        "CREATE TABLE t (k INT, v TEXT)",
+        "INSERT INTO t VALUES (1, 'a'), (2, 'b'), (3, 'c')",
+    ):
+        e.ref_sql(sql)
+        con.execute(sql)
+    for group, sql in (
+        ("returning-update", "UPDATE t SET v = 'x' WHERE k >= 2 RETURNING k, v"),
+        ("returning-delete", "DELETE FROM t WHERE k = 3 RETURNING k, v"),
+    ):
+        sc.setJobGroup(group, sql)
+        try:
+            got = e.ref_sql(sql)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        want = sorted(con.execute(sql).fetchall())
+        assert sorted(tuple(r) for r in got.collect()) == want
+    assert want == [(3, "x")]
     assert not _spark_wrote(e, "t")
 
     e.ref_sql("CREATE TABLE s (k INT, v TEXT)")

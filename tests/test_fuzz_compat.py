@@ -68,7 +68,8 @@ def test_ref_like_fuzz(spark):
     )
     df = spark.createDataFrame([(v,) for v in values], ["v"])
     checks = df.select(
-        "v", *[ref_like("v", p).alias(f"p{i}") for i, p in enumerate(patterns)]
+        "v",
+        *[F.expr(ref_like("v", p)).alias(f"p{i}") for i, p in enumerate(patterns)],
     ).collect()
     for row in checks:
         for i, p in enumerate(patterns):
@@ -84,7 +85,7 @@ def test_dual_compare_fuzz(spark):
     checks = df.select(
         "l",
         "r",
-        *[dual_compare(F.col("l"), op, F.col("r")).alias(f"o{i}") for i, op in enumerate(ops)],
+        *[F.expr(dual_compare("l", op, "r")).alias(f"o{i}") for i, op in enumerate(ops)],
     ).collect()
     mismatches = []
     for row in checks:
